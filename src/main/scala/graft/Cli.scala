@@ -903,7 +903,7 @@ object Cli {
     */
   private def dsirCmd(spark: SparkSession,
                       opts: Map[String, String]): String = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     val model = required(opts, "model")
     val nBuckets = intOpt(opts, "n_buckets", 256)
     if (nBuckets < 2) throw CliError(

@@ -1,25 +1,42 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.engine.Compactor.swapLock
 
 /** Parquet-backed backup-metadata catalog — the Spark-native stand-in
   * for the reference's MySQL/SimpleDB store
   * (/root/reference/lib/hbacker/mysql.rb, db.rb.old).
   *
   * Layout: `<root>/sessions`, `<root>/tables`, `<root>/descriptors`,
-  * one Parquet dir each, on ANY Hadoop-supported filesystem (existence
-  * probes go through the scheme-aware FileSystem API, not java.io).
-  * The catalog is metadata-scale (one row per table per run), so
-  * driver-side read-modify-write for session finalization is
-  * deliberate — this is the control plane, not the data plane.
+  * `<root>/purges`, one Parquet append log each, plus `<root>/_staging`
+  * for appends in flight, on ANY Hadoop-supported filesystem (every
+  * probe goes through the scheme-aware FileSystem API, not java.io).
+  * The catalog is metadata-scale (one row per table per run), so each
+  * log lives on the driver as a snapshot: its rows plus the names of
+  * the committed part files they came from (Spark part-file names are
+  * unique, and a file keeps its name until a compaction folds it away).
+  * A read lists each log it touches once; an unchanged listing serves
+  * the snapshot, and any other listing (an append or compaction by
+  * another instance or process) reloads that log whole. Reads are
+  * `spark.createDataset(snapshot)` fed to the shared [[CatalogOps]]
+  * predicates, so a warm lookup runs no Spark job.
   *
-  * Concurrency: reads AND writes serialize on the instance. Writers
-  * racing in the shared `_temporary/` staging dir was the obvious
-  * hazard, but an unsynchronized read can also observe a directory
-  * that exists with no committed files yet (only `_temporary/`) and
-  * fail schema inference — so `exists` during a concurrent export must
-  * take the same lock.
+  * Concurrency: an append writes exactly one part file into a private
+  * `<root>/_staging/<uuid>` dir with no lock held, then renames it into
+  * its log under the instance lock and the JVM-wide
+  * [[graft.engine.Compactor.swapLock]] and adds its rows to the
+  * snapshot — so a log dir only ever holds complete files, and a
+  * concurrent reader can never see a half-written append. The instance
+  * lock covers listings, reloads, renames and compactions; append
+  * writes run outside it, so concurrent table jobs record in parallel
+  * and wait only for each other's renames. Compactions (rare: one per
+  * `compactAfterFiles` appends to a log) fold, write and swap under the
+  * lock. Across instances and processes the catalog assumes one writer
+  * per root.
   *
   * Unlike the reference, which marks a session "ended" when the last
   * job is *enqueued* (export.rb:96 — a real quirk, see SURVEY.md §3.1
@@ -29,60 +46,133 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 final class BackupCatalog(spark: SparkSession, root: String,
                           compactAfterFiles: Int = 64) {
   import spark.implicits._
+  import BackupCatalog.inFlight
 
-  private val sessionsDir = s"$root/sessions"
-  private val tablesDir = s"$root/tables"
-  private val descsDir = s"$root/descriptors"
-  private val purgesDir = s"$root/purges"
+  private def fs =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def fs(dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** One append log's driver-resident snapshot: `rows` are exactly the
+    * rows of the part files in `files`. Guarded by the instance lock.
+    */
+  private final class Log[T](val dir: String)(implicit val enc: Encoder[T]) {
+    var files: Set[String] = Set.empty
+    var rows: Vector[T] = Vector.empty
+  }
 
-  private def hasCommittedFiles(dir: String): Boolean = {
+  private val sessionsLog = new Log[BackupSession](s"$root/sessions")
+  private val tablesLog = new Log[TableRecord](s"$root/tables")
+  private val descsLog = new Log[ColumnDescriptor](s"$root/descriptors")
+  private val purgesLog = new Log[PurgeRecord](s"$root/purges")
+  private val stagingDir = s"$root/_staging"
+
+  private def isCommitted(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  private def committedIn(dir: String): Set[String] = {
     val p = new Path(dir)
-    val f = fs(dir)
-    f.exists(p) && f.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
+    if (!fs.exists(p)) Set.empty
+    else fs.listStatus(p).iterator.filter(isCommitted)
+      .map(_.getPath.getName).toSet
+  }
+
+  /** Crash recovery for a compaction swap: if a crash left a log with
+    * `<dir>__old` (the previous copy) but no live dir, the old copy is
+    * the truth — restore it before the log is read or appended to.
+    * Callers hold the JVM-wide swap lock: two catalog INSTANCES on one
+    * root would otherwise race a recovery against an in-flight swap.
+    */
+  private def recoverIfNeeded(dir: String): Unit = {
+    val (p, pOld) = (new Path(dir), new Path(dir + "__old"))
+    if (!fs.exists(p) && fs.exists(pOld))
+      require(fs.rename(pOld, p),
+        s"catalog recovery failed: cannot restore $pOld to $p")
+  }
+
+  /** The log's rows, brought up to date with its dir by one listing:
+    * if the listing differs from the snapshot's files, the listed files
+    * are reloaded whole with the log's schema (no inference job). List
+    * and reload run under the JVM-wide swap lock, so no swap in this JVM
+    * can land between them and the rows always match the listed files.
+    * Caller holds the instance lock.
+    */
+  private def rowsOf[T](log: Log[T]): Vector[T] = swapLock.synchronized {
+    recoverIfNeeded(log.dir)
+    val listed = committedIn(log.dir)
+    if (listed != log.files) {
+      log.rows =
+        if (listed.isEmpty) Vector.empty
+        else spark.read.schema(log.enc.schema)
+          .parquet(listed.toSeq.map(n => new Path(log.dir, n).toString): _*)
+          .as[T](log.enc).collect().toVector
+      log.files = listed
     }
+    log.rows
   }
 
-  /** Materialized read: rows are collected INSIDE the lock and
-    * returned as a local Dataset. A lazy Dataset would snapshot a file
-    * index under the lock but scan after release — racing endInfo's
-    * rename could then read deleted part-files. Catalog data is
-    * metadata-scale, so materializing costs KBs.
+  /** Rows written to a private staging dir as exactly one part file,
+    * not yet visible in their log.
     */
-  private def readOrEmpty[T <: Product : org.apache.spark.sql.Encoder](
-      dir: String): Dataset[T] = {
-    recoverIfNeeded()
-    val rows: Seq[T] =
-      if (hasCommittedFiles(dir)) spark.read.parquet(dir).as[T]
-        .collect().toSeq
-      else Seq.empty
-    spark.createDataset(rows)
-  }
+  private final class Staged[T](log: Log[T], val dir: String,
+                                rows: Seq[T]) {
+    private val part: Path = {
+      val parts = fs.listStatus(new Path(dir)).filter(isCommitted)
+      require(parts.length == 1,
+        s"staged append in $dir wrote ${parts.length} part files, not 1")
+      parts.head.getPath
+    }
 
-  /** Crash recovery for a compaction swap: if a crash left a store
-    * with `<dir>__old` (the previous copy) but no live dir, the old
-    * copy is the truth — restore it before any read or write. All
-    * three append logs compact through the same swap, so all three
-    * are checked.
-    */
-  private def recoverIfNeeded(): Unit =
-    // the JVM-wide swap lock: two catalog INSTANCES on one root would
-    // otherwise race a recovery against an in-flight compaction swap
-    // (instance-level synchronized cannot see the other instance)
-    graft.engine.Compactor.swapLock.synchronized {
-      val f = fs(root)
-      Seq(sessionsDir, tablesDir, descsDir, purgesDir).foreach { dir =>
-        val (p, pOld) = (new Path(dir), new Path(dir + "__old"))
-        if (!f.exists(p) && f.exists(pOld)) {
-          require(f.rename(pOld, p),
-            s"catalog recovery failed: cannot restore $pOld to $p")
-        }
+    /** Rename the part file into its log and add its rows to the
+      * snapshot. Caller holds the instance lock.
+      */
+    def publish(): Unit = {
+      val dst = new Path(log.dir, part.getName)
+      swapLock.synchronized {
+        recoverIfNeeded(log.dir)
+        fs.mkdirs(new Path(log.dir))
+        require(fs.rename(part, dst), s"cannot publish $part to $dst")
       }
+      log.files += dst.getName
+      log.rows ++= rows
     }
+  }
+
+  /** A fresh staging dir, registered as in flight until [[unstage]]. */
+  private def newStagingDir(): String = {
+    val id = UUID.randomUUID().toString
+    inFlight.add(id)
+    s"$stagingDir/$id"
+  }
+
+  private def unstage(dir: String): Unit = {
+    val p = new Path(dir)
+    if (fs.exists(p)) fs.delete(p, true)
+    inFlight.remove(p.getName)
+  }
+
+  private def stage[T](log: Log[T], rows: Seq[T]): Staged[T] = {
+    val dir = newStagingDir()
+    try {
+      spark.createDataset(rows)(log.enc).coalesce(1).write.parquet(dir)
+      new Staged(log, dir, rows)
+    } catch { case e: Throwable => unstage(dir); throw e }
+  }
+
+  /** Write each batch to staging with no lock held, then publish them
+    * in order under the instance lock.
+    */
+  private def append(batches: (() => Staged[_])*): Unit = {
+    val staged = scala.collection.mutable.ArrayBuffer.empty[Staged[_]]
+    try {
+      batches.foreach(b => staged += b())
+      synchronized { staged.foreach(_.publish()) }
+    } finally staged.foreach(s => unstage(s.dir))
+  }
+
+  private def fileCount(log: Log[_]): Int = synchronized {
+    rowsOf(log); log.files.size
+  }
 
   /** The sessions store is an append-structured log: [[startInfo]] and
     * [[endInfo]] only ever APPEND rows, and this read resolves the log
@@ -92,11 +182,12 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * folded back to one row per session by [[compactSessions]] once
     * enough close rows accrue.
     */
-  def sessions: Dataset[BackupSession] = synchronized {
+  def sessions: Dataset[BackupSession] = spark.createDataset(sessionRows)
+
+  private def sessionRows: Seq[BackupSession] = synchronized {
     val purged = purgedKeys()
-    spark.createDataset(resolveSessions(
-      readOrEmpty[BackupSession](sessionsDir).collect().toSeq
-        .filterNot(s => purged((s.mode, s.session_name)))))
+    resolveSessions(rowsOf(sessionsLog)
+      .filterNot(s => purged((s.mode, s.session_name))))
   }
 
   private def resolveSessions(rows: Seq[BackupSession]): Seq[BackupSession] =
@@ -111,32 +202,33 @@ final class BackupCatalog(spark: SparkSession, root: String,
           else g.map(_.error_info).filter(_.nonEmpty).sorted
             .lastOption.getOrElse(""))
     }.toSeq
-  def tables: Dataset[TableRecord] = synchronized {
+
+  def tables: Dataset[TableRecord] = spark.createDataset(tableRows)
+
+  private def tableRows: Seq[TableRecord] = synchronized {
     val purged = purgedKeys()
-    spark.createDataset(readOrEmpty[TableRecord](tablesDir)
-      .collect().toSeq
-      .filterNot(t => purged((t.mode, t.session_name))))
+    rowsOf(tablesLog).filterNot(t => purged((t.mode, t.session_name)))
   }
-  def descriptors: Dataset[ColumnDescriptor] = synchronized {
+
+  def descriptors: Dataset[ColumnDescriptor] =
+    spark.createDataset(descriptorRows)
+
+  private def descriptorRows: Seq[ColumnDescriptor] = synchronized {
     // descriptors are export-side rows (only exportedTableInfo writes
     // them), so an export-mode purge is what forgets them
     val purged = purgedKeys()
-    spark.createDataset(readOrEmpty[ColumnDescriptor](descsDir)
-      .collect().toSeq
-      .filterNot(d => purged(("export", d.session_name))))
+    rowsOf(descsLog).filterNot(d => purged(("export", d.session_name)))
   }
 
   /** The purge facts folded to keys — KB-scale (a takedown list). */
   private def purgedKeys(): Set[(String, String)] =
-    readOrEmpty[PurgeRecord](purgesDir).collect()
-      .map(p => (p.mode, p.session_name)).toSet
+    rowsOf(purgesLog).iterator.map(p => (p.mode, p.session_name)).toSet
 
   // ---- writes (mysql.rb:143-267) ----
 
   /** Session start row (mysql.rb:226-239). */
-  def startInfo(s: BackupSession): Unit = synchronized {
-    Seq(s).toDS().write.mode(SaveMode.Append).parquet(sessionsDir)
-  }
+  def startInfo(s: BackupSession): Unit =
+    append(() => stage(sessionsLog, Seq(s)))
 
   /** Session end: a keyed update of (mode, session_name)
     * (mysql.rb:246-267), recorded as an APPENDED close row — the
@@ -155,57 +247,51 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * already restores.
     */
   def endInfo(mode: String, sessionName: String, endedAt: Long,
-              error: Boolean = false, errorInfo: String = ""): Unit =
-    synchronized {
-      val resolved = resolveSessions(
-        readOrEmpty[BackupSession](sessionsDir).collect().toSeq)
-      val closes = resolved
+              error: Boolean = false, errorInfo: String = ""): Unit = {
+    val closes = synchronized {
+      resolveSessions(rowsOf(sessionsLog))
         .filter(s => s.mode == mode && s.session_name == sessionName)
         .map(s => s.copy(ended_at = endedAt, error = s.error || error,
           error_info = if (errorInfo.nonEmpty) errorInfo else s.error_info))
-      if (closes.nonEmpty)
-        closes.toDS().write.mode(SaveMode.Append).parquet(sessionsDir)
-      if (dataFileCount(sessionsDir) > compactAfterFiles) compactSessions()
     }
-
-  private def dataFileCount(dir: String): Int = {
-    val p = new Path(dir)
-    val f = fs(dir)
-    if (!f.exists(p)) 0
-    else f.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    if (closes.nonEmpty) append(() => stage(sessionsLog, closes))
+    if (fileCount(sessionsLog) > compactAfterFiles) compactSessions()
   }
 
-  /** Fold a compacted copy of a store into place. The rewrite goes
-    * through a temp dir + two renames so a crash can lose at most the
-    * in-flight fold, never the existing catalog (a plain Overwrite
-    * deletes-then-writes, leaving a destroyed store dir if killed
-    * mid-way — fatal for a catalog whose whole job is surviving
-    * crashed runs). `writeCompacted` receives the temp path; every
-    * rename is checked, and [[recoverIfNeeded]] restores `<dir>__old`
-    * if a crash lands between the renames.
+  /** Replace a log with `fold` of its rows, all under the instance
+    * lock: the fold is written to a staging dir, then swapped in by
+    * checked renames (dir → __old, staged → dir, drop __old) under the
+    * swap lock, so a crash can lose at most the in-flight fold, never
+    * the existing catalog (a plain Overwrite deletes-then-writes,
+    * leaving a destroyed store dir if killed mid-way — fatal for a
+    * catalog whose whole job is surviving crashed runs), and
+    * [[recoverIfNeeded]] restores `<dir>__old` if a crash lands between
+    * the renames.
     */
-  private def swapCompacted(dir: String)(
-      writeCompacted: String => Unit): Unit = {
-    val tmp = dir + "__tmp"
-    writeCompacted(tmp)
-    val f = fs(root)
-    // rename pair under the JVM-wide swap lock — see recoverIfNeeded
-    graft.engine.Compactor.swapLock.synchronized {
-      val (pDir, pTmp, pOld) =
-        (new Path(dir), new Path(tmp), new Path(dir + "__old"))
-      if (f.exists(pOld)) require(f.delete(pOld, true), s"cannot clear $pOld")
-      if (f.exists(pDir))
-        require(f.rename(pDir, pOld), s"cannot stage $pDir to $pOld")
-      if (!f.rename(pTmp, pDir)) {
-        // roll back so the catalog is never left without a live dir
-        if (f.exists(pOld)) f.rename(pOld, pDir)
-        throw new IllegalStateException(s"cannot swap $pTmp into $pDir")
+  private def compact[T](log: Log[T])(fold: => Seq[T]): Unit = synchronized {
+    val folded = fold
+    val staged = newStagingDir()
+    try {
+      spark.createDataset(folded)(log.enc).coalesce(1).write.parquet(staged)
+      val written = committedIn(staged)
+      val (p, pStaged, pOld) =
+        (new Path(log.dir), new Path(staged), new Path(log.dir + "__old"))
+      swapLock.synchronized {
+        recoverIfNeeded(log.dir)
+        if (fs.exists(pOld))
+          require(fs.delete(pOld, true), s"cannot clear $pOld")
+        if (fs.exists(p))
+          require(fs.rename(p, pOld), s"cannot stage $p to $pOld")
+        if (!fs.rename(pStaged, p)) {
+          // roll back so the catalog is never left without a live dir
+          if (fs.exists(pOld)) fs.rename(pOld, p)
+          throw new IllegalStateException(s"cannot swap $pStaged into $p")
+        }
+        fs.delete(pOld, true) // old copy only removed after a full swap
       }
-      f.delete(pOld, true) // old copy only removed after a complete swap
-    }
+      log.files = written
+      log.rows = folded.toVector
+    } finally unstage(staged)
   }
 
   /** Purge a session — the takedown path the append-only logs
@@ -222,32 +308,39 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * physically gone).
     */
   def purgeSession(mode: String, sessionName: String,
-                   purgedAt: Long): Unit = synchronized {
-    val known = readOrEmpty[BackupSession](sessionsDir).collect()
-      .exists(s => s.mode == mode && s.session_name == sessionName)
-    require(known || purgedKeys()((mode, sessionName)),
-      s"no $mode session '$sessionName' in the catalog to purge")
-    Seq(PurgeRecord(mode, sessionName, purgedAt)).toDS()
-      .coalesce(1).write.mode(SaveMode.Append).parquet(purgesDir)
-    if (dataFileCount(purgesDir) > compactAfterFiles) compactPurges()
+                   purgedAt: Long): Unit = {
+    val known = synchronized {
+      rowsOf(sessionsLog)
+        .exists(s => s.mode == mode && s.session_name == sessionName) ||
+        purgedKeys()((mode, sessionName))
+    }
+    require(known, s"no $mode session '$sessionName' in the catalog to purge")
+    append(() => stage(purgesLog, Seq(PurgeRecord(mode, sessionName,
+      purgedAt))))
+    if (fileCount(purgesLog) > compactAfterFiles) compactPurges()
   }
 
   /** Run every threshold compaction NOW — the ops hook that makes a
     * purge PHYSICAL without waiting for the file-count thresholds
     * (the folds already read through the purge filter, so purged
-    * rows are dropped from the rewritten logs).
+    * rows are dropped from the rewritten logs) — and clear the staging
+    * dirs a crashed append or fold left behind (any not in flight in
+    * this JVM).
     */
-  def compactAll(): Unit = synchronized {
+  def compactAll(): Unit = {
     compactSessions(); compactTables(); compactDescriptors()
     compactPurges()
+    val staging = new Path(stagingDir)
+    if (fs.exists(staging))
+      fs.listStatus(staging).map(_.getPath)
+        .filterNot(p => inFlight.contains(p.getName))
+        .foreach(p => fs.delete(p, true))
   }
 
   /** Fold the sessions log back to one row per session (purged
     * sessions drop out — the folds read through the purge filter). */
   private def compactSessions(): Unit =
-    swapCompacted(sessionsDir) { tmp =>
-      sessions.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
+    compact(sessionsLog)(sessionRows)
 
   /** Fold the tables/descriptors logs to one part file each, dropping
     * the bit-identical duplicate rows a retried record op can append
@@ -259,16 +352,10 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * recorded table forever.
     */
   private def compactTables(): Unit =
-    swapCompacted(tablesDir) { tmp =>
-      tables.collect().toSeq.distinct
-        .toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
+    compact(tablesLog)(tableRows.distinct)
 
   private def compactDescriptors(): Unit =
-    swapCompacted(descsDir) { tmp =>
-      descriptors.collect().toSeq.distinct
-        .toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
+    compact(descsLog)(descriptorRows.distinct)
 
   /** Fold the purge log to one row per (mode, session_name) — unlike
     * the other three logs it previously grew one small file per
@@ -279,16 +366,13 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * compactions. No-op when no purge fact has ever landed — compaction
     * must not conjure an empty store dir.
     */
-  private def compactPurges(): Unit = {
-    if (!hasCommittedFiles(purgesDir)) return
-    swapCompacted(purgesDir) { tmp =>
-      readOrEmpty[PurgeRecord](purgesDir).collect().toSeq
-        .groupBy(p => (p.mode, p.session_name)).values
-        .map(g => g.minBy(_.purged_at)).toSeq
-        .sortBy(p => (p.mode, p.session_name))
-        .toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-  }
+  private def compactPurges(): Unit =
+    if (fileCount(purgesLog) > 0)
+      compact(purgesLog) {
+        rowsOf(purgesLog).groupBy(p => (p.mode, p.session_name)).values
+          .map(g => g.minBy(_.purged_at)).toSeq
+          .sortBy(p => (p.mode, p.session_name))
+      }
 
   /** Per-table record, export side (mysql.rb:154-190). Descriptors
     * land FIRST and the table row — the row `exists()` and every
@@ -297,19 +381,18 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * descriptor rows, which [[columnDescriptorRows]] dedupes on read,
     * never the keyed table record.
     */
-  def exportedTableInfo(t: TableRecord,
-                        descs: Seq[ColumnDescriptor]): Unit = synchronized {
+  def exportedTableInfo(t: TableRecord, descs: Seq[ColumnDescriptor]): Unit = {
     require(t.mode == "export", s"mode=${t.mode}")
-    if (descs.nonEmpty)
-      descs.toDS().write.mode(SaveMode.Append).parquet(descsDir)
-    Seq(t).toDS().write.mode(SaveMode.Append).parquet(tablesDir)
+    val descBatch: Seq[() => Staged[_]] =
+      if (descs.isEmpty) Nil else Seq(() => stage(descsLog, descs))
+    append(descBatch :+ (() => stage(tablesLog, Seq(t))): _*)
     compactIfAccreted()
   }
 
   /** Per-table record, import side (mysql.rb:200-215). */
-  def importedTableInfo(t: TableRecord): Unit = synchronized {
+  def importedTableInfo(t: TableRecord): Unit = {
     require(t.mode == "import", s"mode=${t.mode}")
-    Seq(t).toDS().write.mode(SaveMode.Append).parquet(tablesDir)
+    append(() => stage(tablesLog, Seq(t)))
     compactIfAccreted()
   }
 
@@ -319,8 +402,8 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * part-file set per recorded table forever.
     */
   private def compactIfAccreted(): Unit = {
-    if (dataFileCount(tablesDir) > compactAfterFiles) compactTables()
-    if (dataFileCount(descsDir) > compactAfterFiles) compactDescriptors()
+    if (fileCount(tablesLog) > compactAfterFiles) compactTables()
+    if (fileCount(descsLog) > compactAfterFiles) compactDescriptors()
   }
 
   // ---- reads: delegate to the shared CatalogOps logic ----
@@ -349,13 +432,20 @@ final class BackupCatalog(spark: SparkSession, root: String,
                            tableName: String): Seq[ColumnDescriptor] =
     // distinct: a retried exportedTableInfo can legitimately re-append
     // descriptor rows (see its doc) — identical duplicates, dropped here
-    descriptors.filter(d => d.session_name == sessionName &&
-      d.table_name == tableName).collect().toSeq.distinct.sortBy(_.ordinal)
+    descriptorRows.filter(d => d.session_name == sessionName &&
+      d.table_name == tableName).distinct.sortBy(_.ordinal)
 
   def lastEndTime(mode: String, tableName: String): Long = {
     val rows = CatalogOps.lastEndTimes(tables.toDF(), mode)
-      .filter(org.apache.spark.sql.functions.col("table_name") === tableName)
+      .filter(col("table_name") === tableName)
       .collect()
     if (rows.isEmpty) 0L else rows(0).getAs[Long]("last_end")
   }
+}
+
+object BackupCatalog {
+  /** Staging dir names (UUIDs) of the appends and folds in flight in
+    * this JVM — the ones [[BackupCatalog.compactAll]] must not clear.
+    */
+  private val inFlight = ConcurrentHashMap.newKeySet[String]()
 }

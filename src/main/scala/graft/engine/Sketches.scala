@@ -174,7 +174,7 @@ object Sketches {
     * candidate set is ~{items with share > minShare − eps}. Choose
     * eps ≪ minShare.
     */
-  def heavyHittersCms(spark: SparkSession, items: DataFrame,
+  def heavyHittersCms(items: DataFrame,
                       itemCol: String, minShare: Double,
                       eps: Double = 1e-4, confidence: Double = 0.99,
                       seed: Int = 42): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Source/sink utility operators (SURVEY.md §2.1 S3/S4/S5/S7/S8).

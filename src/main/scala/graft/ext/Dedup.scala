@@ -607,18 +607,20 @@ object Dedup {
           else parent.update(ra, rb)         // component's MIN id
         }
       }
-      val spark = pairs.sparkSession
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.types._
-      return spark.createDataFrame(
+      val nullableIds = edges.schema("src").nullable
+      return pairs.sparkSession.createDataFrame(
         nodes.toSeq.map { id =>
           val root = find(id)
           org.apache.spark.sql.Row(id, root, id == root)
         }.asJava,
-        StructType(Seq(
-          StructField("doc_id", LongType, nullable = false),
-          StructField("cluster_id", LongType, nullable = false),
-          StructField("survivor", BooleanType, nullable = false))))
+        // the loop's plan derives every column's nullability from the
+        // edge ids (a null-keyed edge keeps its nulls); the fold declares
+        // the same, so both paths return one StructType
+        StructType(Seq(StructField("doc_id", LongType, nullableIds),
+          StructField("cluster_id", LongType, nullableIds),
+          StructField("survivor", BooleanType, nullableIds))))
     }
     clustersLoop(edges, maxIters)
   }

@@ -177,11 +177,11 @@ object Pca {
     * keeps the all-ones start vector: no direction is better than
     * another, and every projection is 0 (spec-pinned).
     */
-  private[graft] def modelFromStats(spark: SparkSession,
-                                    sums: Map[Int, (java.math.BigDecimal, Long)],
-                                    moments: Map[(Int, Int), Long],
-                                    iters: Int): PcaModel = {
-    val (mu, comps) = componentsFromStats(spark, sums, moments, 1, iters)
+  private[graft] def modelFromStats(
+      sums: Map[Int, (java.math.BigDecimal, Long)],
+      moments: Map[(Int, Int), Long],
+      iters: Int): PcaModel = {
+    val (mu, comps) = componentsFromStats(sums, moments, 1, iters)
     PcaModel(mu, comps.head)
   }
 
@@ -189,7 +189,6 @@ object Pca {
     * directions (power iteration + deflation, [[componentsOf]]).
     */
   private[graft] def componentsFromStats(
-      spark: SparkSession,
       sums: Map[Int, (java.math.BigDecimal, Long)],
       moments: Map[(Int, Int), Long],
       nComponents: Int,
@@ -322,13 +321,12 @@ object Pca {
     */
   def pcaModel(embeddings: DataFrame, iters: Int = 4): PcaModel = {
     require(iters >= 1, s"power iteration needs at least 1 step, got $iters")
-    val spark = embeddings.sparkSession
     val e = prep(embeddings)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val sums = foldSums(dimSums(e).collect())
       val moments = foldMoments(rawMoments(e).collect())
-      modelFromStats(spark, sums, moments, iters)
+      modelFromStats(sums, moments, iters)
     } finally e.unpersist()
   }
 
@@ -376,7 +374,7 @@ object Pca {
       .groupBy(col("i"), col("j"))
       .agg(sum(col("s")).as("s"))
       .collect())
-    modelFromStats(spark, sums, moments, iters)
+    modelFromStats(sums, moments, iters)
   }
 
   /** Project every vector onto a trained component — the ORACLE-
@@ -438,14 +436,13 @@ object Pca {
     * 2-D embedding-map / drift-plane output.
     */
   def pcaProject2(embeddings: DataFrame, iters: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
     val e = prep(embeddings)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (mu, comps) =
       try {
         val sums = foldSums(dimSums(e).collect())
         val moments = foldMoments(rawMoments(e).collect())
-        componentsFromStats(spark, sums, moments, 2, iters)
+        componentsFromStats(sums, moments, 2, iters)
       } finally e.unpersist()
     val muArr = array(mu.map(lit).toIndexedSeq: _*)
     val aggs = comps.zipWithIndex.map { case (v, ci) =>

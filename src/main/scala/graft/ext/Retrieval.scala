@@ -569,7 +569,6 @@ object Retrieval {
     */
   def initIndexIfStale(docs: DataFrame, indexStore: String): Boolean = {
     val spark = docs.sparkSession
-    import spark.implicits._
     def fingerprint(): (Long, Long, Long, Long) = {
       val r = docs.agg(count(lit(1)).as("n"),
         coalesce(sum(col("doc_id")), lit(0L)).as("s"),

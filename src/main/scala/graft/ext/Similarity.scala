@@ -1363,7 +1363,7 @@ object Similarity {
     * instead of leaking it into the returned lazy plan.
     */
   private def pqTrainOn(e: DataFrame, svs: DataFrame, ksub: Int,
-                        m: Int, dsub: Int, iters: Int = 1): DataFrame = {
+                        m: Int, dsub: Int, iters: Int): DataFrame = {
     require(iters >= 1,
       s"PQ training needs at least one Lloyd pass, got $iters")
     // ksub seed vectors (mod-prime sample); sliced per subspace their

@@ -730,8 +730,8 @@ object TextAnalysis {
     * decimal sum over the same tf·r terms — the x35 oracle (which
     * replays the training) pins it.
     */
-  private def qualityGrads(tfb: DataFrame, w: Array[Double],
-                           nBuckets: Int): Map[Long, Double] = {
+  private def qualityGrads(tfb: DataFrame,
+                           w: Array[Double]): Map[Long, Double] = {
     val wArr = weightArray(w)
     val resid = tfb.withColumn("wb", get(wArr, col("b").cast("int")))
       .groupBy(col("doc_id"), col("y"))
@@ -798,7 +798,7 @@ object TextAnalysis {
     require(nDocs > 0, "cannot train a quality probe on an empty corpus")
     val w = Array.fill(nBuckets + 1)(0.0d)
     for (_ <- 1 to epochs) {
-      val g = qualityGrads(tfb, w, nBuckets)
+      val g = qualityGrads(tfb, w)
       var b = 0
       while (b <= nBuckets) {
         w(b) = round6(w(b) + (lr * g.getOrElse(b.toLong, 0.0d)) / nDocs)

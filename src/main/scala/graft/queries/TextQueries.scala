@@ -374,7 +374,7 @@ object TextQueries {
       import org.apache.spark.sql.functions.{col, explode}
       val toks = Tables.documents(s, d)
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-      graft.engine.Sketches.heavyHittersCms(s, toks, "token",
+      graft.engine.Sketches.heavyHittersCms(toks, "token",
         minShare = 0.01, eps = 1e-4)
     },
     "x12_repetition" -> { (s, d) =>

@@ -601,7 +601,7 @@ object StreamingOps {
   /** Drive a streaming query to completion over static files (memory
     * sink), returning the sink table name.
     */
-  def runToCompletion(spark: SparkSession, df: DataFrame, name: String,
+  def runToCompletion(df: DataFrame, name: String,
                       mode: OutputMode = OutputMode.Complete()): StreamingQuery = {
     val q = df.writeStream
       .outputMode(mode)

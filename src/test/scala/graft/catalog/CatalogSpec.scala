@@ -17,6 +17,21 @@ class CatalogSpec extends SparkTestBase {
     TableRecord("export", table, session, 0L, 1000L, 100000L,
       empty = false, error = false, "", 42L)
 
+  private def descOf(table: String, ord: Int,
+                     session: String = "20240101_000000") =
+    ColumnDescriptor(session, table, ord, s"c$ord", "bigint",
+      nullable = true, 3, "SNAPPY", in_memory = false, block_cache = true,
+      ttl = 100L, blocksize = 65536L, bloomfilter = "NONE")
+
+  /** Committed part files of one log dir; every name under a dir. */
+  private def partFiles(root: String, log: String): Int =
+    Option(new java.io.File(root, log).listFiles()).toSeq.flatten
+      .count(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+  private def allNames(d: java.io.File): Seq[String] =
+    Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+      f.getName +: (if (f.isDirectory) allNames(f) else Nil))
+
   test("startInfo/endInfo round-trip with keyed update") {
     val cat = freshCat()
     cat.startInfo(sess)
@@ -147,37 +162,27 @@ class CatalogSpec extends SparkTestBase {
     "descriptor appends dedupe at rest; reads identical") {
     val root = tmpDir("graft-cat")
     val cat = new BackupCatalog(spark, root, compactAfterFiles = 4)
-    def dataFiles(sub: String): Int = {
-      val d = new java.io.File(root, sub)
-      if (!d.exists()) 0
-      else d.listFiles().count(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
-    }
-    def desc(table: String, ord: Int) =
-      ColumnDescriptor("20240101_000000", table, ord, s"c$ord", "bigint",
-        nullable = true, 3, "SNAPPY", in_memory = false, block_cache = true,
-        ttl = 100L, blocksize = 65536L, bloomfilter = "NONE")
     // a retried record op re-appends the SAME descriptor rows (the
     // documented failure mode): compaction must fold them away at rest
-    cat.exportedTableInfo(rec("t0"), Seq(desc("t0", 0)))
-    cat.exportedTableInfo(rec("t0"), Seq(desc("t0", 0))) // retry
+    cat.exportedTableInfo(rec("t0"), Seq(descOf("t0", 0)))
+    cat.exportedTableInfo(rec("t0"), Seq(descOf("t0", 0))) // retry
     (1 to 10).foreach(i =>
-      cat.exportedTableInfo(rec(s"t$i"), Seq(desc(s"t$i", 0))))
+      cat.exportedTableInfo(rec(s"t$i"), Seq(descOf(s"t$i", 0))))
     cat.importedTableInfo(rec("t0").copy(mode = "import"))
     // both logs stay BOUNDED by the threshold instead of accreting one
     // part-file set per record (13 appends each would otherwise leave
     // 13+ files); the fold runs as soon as a write crosses it
-    assert(dataFiles("tables") <= 4,
-      s"tables log not compacted: ${dataFiles("tables")} files")
-    assert(dataFiles("descriptors") <= 4,
-      s"descriptors log not compacted: ${dataFiles("descriptors")} files")
+    assert(partFiles(root, "tables") <= 4,
+      s"tables log not compacted: ${partFiles(root, "tables")} files")
+    assert(partFiles(root, "descriptors") <= 4,
+      s"descriptors log not compacted: ${partFiles(root, "descriptors")} files")
     // reads identical after the fold: 11 distinct export records + the
     // import record; the retried t0 append folded to one row
     assert(cat.tables.count() == 12)
     assert(cat.tables.filter(_.table_name == "t0").count() == 2) // exp+imp
     assert(cat.descriptors.count() == 11)
     assert(cat.columnDescriptorRows("20240101_000000", "t3") ==
-      Seq(desc("t3", 0)))
+      Seq(descOf("t3", 0)))
     // crash between the two renames of the TABLES swap: recovery
     // restores the old copy exactly like sessions
     val f = new java.io.File(root)
@@ -300,6 +305,159 @@ class CatalogSpec extends SparkTestBase {
     cat2.compactAll()
     assert(!new java.io.File(s"$root2/purges").exists(),
       "compactAll conjured an empty purge store")
+  }
+
+  test("concurrent recorders: every row lands exactly once, one part " +
+    "file per append, no staging leftovers, a reader runs throughout") {
+    val root = tmpDir("graft-cat-conc")
+    val cat = new BackupCatalog(spark, root, compactAfterFiles = 1000)
+    cat.startInfo(sess)
+    val (writers, perWriter) = (6, 4)
+    val names = for (w <- 0 until writers; i <- 0 until perWriter)
+      yield s"w${w}_t$i"
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val readerError =
+      new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val reader = new Thread(() =>
+      try while (!done.get) {
+        cat.exists("export", "w0_t0", sess.session_name)
+        // rows never appear twice, even mid-append
+        val seen = cat.tables.collect().map(_.table_name)
+        require(seen.distinct.length == seen.length,
+          s"duplicate rows mid-append: ${seen.toSeq.sorted}")
+        reads.incrementAndGet()
+      } catch { case e: Throwable => readerError.set(e) })
+    reader.start()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    try {
+      val jobs = (0 until writers).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until perWriter).foreach { i =>
+            val t = s"w${w}_t$i"
+            cat.exportedTableInfo(rec(t), Seq(descOf(t, 0), descOf(t, 1)))
+          }
+        })
+      }
+      jobs.foreach(_.get())
+    } finally {
+      done.set(true); reader.join(); pool.shutdown()
+    }
+    assert(readerError.get == null, s"reader failed: ${readerError.get}")
+    assert(reads.get > 0)
+    // this instance and a cold one on the same root see the same rows
+    for (c <- Seq(cat, new BackupCatalog(spark, root))) {
+      assert(c.tables.collect().map(_.table_name).toSeq.sorted ==
+        names.sorted)
+      assert(c.descriptors.collect().map(d => (d.table_name, d.ordinal))
+        .toSeq.sorted == names.flatMap(t => Seq((t, 0), (t, 1))).sorted)
+      assert(names.forall(t => c.exists("export", t, sess.session_name)))
+    }
+    assert(partFiles(root, "tables") == names.size)
+    assert(partFiles(root, "descriptors") == names.size)
+    assert(partFiles(root, "sessions") == 1)
+    assert(!allNames(new java.io.File(root)).contains("_temporary"))
+    assert(allNames(new java.io.File(root, "_staging")).isEmpty,
+      "staging leftovers after every append committed")
+  }
+
+  test("a second instance sees the first's appends on its next read; " +
+    "a compactAll on one makes the other reload, rows identical") {
+    val root = tmpDir("graft-cat-two")
+    val a = new BackupCatalog(spark, root)
+    val b = new BackupCatalog(spark, root)
+    a.startInfo(sess)
+    a.exportedTableInfo(rec("lineitem"), Seq(descOf("lineitem", 0)))
+    assert(b.exists("export", "lineitem", sess.session_name))
+    assert(b.columnDescriptorRows(sess.session_name, "lineitem") ==
+      Seq(descOf("lineitem", 0)))
+    // appends from either side show up on the other's next read
+    b.exportedTableInfo(rec("orders"), Nil)
+    assert(a.exists("export", "orders", sess.session_name))
+    a.endInfo("export", sess.session_name, endedAt = 777L)
+    assert(b.sessions.collect().map(_.ended_at).toSeq == Seq(777L))
+    a.purgeSession("export", sess.session_name, 9000L)
+    assert(b.sessions.isEmpty && b.tables.isEmpty)
+    a.startInfo(sess.copy(session_name = "s2"))
+    a.exportedTableInfo(rec("events", "s2"), Seq(descOf("events", 0, "s2")))
+    def state(c: BackupCatalog) = (
+      c.sessions.collect().toSeq.sortBy(_.session_name),
+      c.tables.collect().toSeq.sortBy(_.table_name),
+      c.descriptors.collect().toSeq.sortBy(_.table_name))
+    val before = state(b)
+    assert(before == state(a))
+    a.compactAll()
+    assert(partFiles(root, "tables") == 1 &&
+      partFiles(root, "sessions") == 1 && partFiles(root, "purges") == 1)
+    assert(state(b) == before, "the other instance's reload changed rows")
+    assert(state(a) == before)
+    // and appends after the compaction still cross over
+    b.exportedTableInfo(rec("orders", "s2"), Nil)
+    assert(a.tables.collect().map(_.table_name).toSeq.sorted ==
+      Seq("events", "orders"))
+  }
+
+  test("a part file a crashed append left under _staging is never " +
+    "read, and compactAll removes it") {
+    import spark.implicits._
+    val root = tmpDir("graft-cat-staging")
+    val cat = new BackupCatalog(spark, root)
+    cat.startInfo(sess)
+    cat.exportedTableInfo(rec("lineitem"), Nil)
+    // a crash after the staged write, before the rename into the log
+    Seq(rec("ghost")).toDS().coalesce(1).write
+      .parquet(s"$root/_staging/crashed-append")
+    for (c <- Seq(cat, new BackupCatalog(spark, root))) {
+      assert(c.tables.collect().map(_.table_name).toSeq == Seq("lineitem"))
+      assert(!c.exists("export", "ghost", sess.session_name))
+    }
+    cat.compactAll()
+    assert(!new java.io.File(s"$root/_staging/crashed-append").exists(),
+      "compactAll left the crashed staging dir")
+    assert(new BackupCatalog(spark, root).tables.collect()
+      .map(_.table_name).toSeq == Seq("lineitem"))
+  }
+
+  test("warm reads run no Spark job: exists, columnDescriptorRows, " +
+    "sessions, tables, descriptors") {
+    val cat = freshCat()
+    cat.startInfo(sess)
+    cat.exportedTableInfo(rec("lineitem"), Seq(descOf("lineitem", 0)))
+    // warm: each log read once
+    cat.sessions.collect(); cat.tables.collect(); cat.descriptors.collect()
+    val (group, sentinel) = ("catalog-warm-reads", "catalog-warm-sentinel")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(`sentinel`) => sentinelSeen.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "warm catalog reads")
+      assert(cat.exists("export", "lineitem", sess.session_name))
+      assert(!cat.exists("export", "orders", sess.session_name))
+      assert(cat.columnDescriptorRows(sess.session_name, "lineitem") ==
+        Seq(descOf("lineitem", 0)))
+      assert(cat.sessions.collect().length == 1)
+      assert(cat.tables.collect().length == 1)
+      assert(cat.descriptors.collect().length == 1)
+      // the listener bus is ordered: once the sentinel job is seen, any
+      // job the reads started has been counted
+      sc.setJobGroup(sentinel, "listener sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"warm catalog reads ran ${jobs.get} Spark jobs")
   }
 
   test("purgeSessionData: payload takedown is staged (atomic rename, " +

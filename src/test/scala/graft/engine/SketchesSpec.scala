@@ -45,7 +45,7 @@ class SketchesSpec extends SparkTestBase {
       .withColumn("total", sum($"count").over())
       .filter($"count" > $"total" * 0.01)
       .select($"v", $"count").as[(String, Long)].collect().toMap
-    val cms = Sketches.heavyHittersCms(spark, stream, "v", minShare = 0.01)
+    val cms = Sketches.heavyHittersCms(stream, "v", minShare = 0.01)
       .select($"token", $"n_occurrences").as[(String, Long)].collect().toMap
     assert(cms == exact, s"cms=$cms exact=$exact")
     assert(exact.nonEmpty && exact.size < 60, "threshold should prune the tail")
@@ -57,10 +57,10 @@ class SketchesSpec extends SparkTestBase {
     val stream = (1 to 40).flatMap(i => Seq.fill(1000 / i)(s"w$i")).toDF("v")
     // eps of 5% >> minShare 2%: the candidate set is sloppy, the
     // answer must not be
-    val loose = Sketches.heavyHittersCms(spark, stream, "v",
+    val loose = Sketches.heavyHittersCms(stream, "v",
       minShare = 0.02, eps = 0.05)
       .select($"token").as[String].collect().toSet
-    val tight = Sketches.heavyHittersCms(spark, stream, "v",
+    val tight = Sketches.heavyHittersCms(stream, "v",
       minShare = 0.02, eps = 1e-4)
       .select($"token").as[String].collect().toSet
     assert(loose == tight, "answer must be independent of sketch precision")

@@ -256,20 +256,28 @@ class DedupSpec extends SparkTestBase {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(p => p._1 != p._2)
     } :+ (0L until 40L).map(i => (i, i + 1)) // pathological chain
-    for (pairs <- graphs) {
-      val df = pairs.toDF("doc_a", "doc_b")
+    // the first graph once more with nullable id columns: the schema
+    // both paths return follows the input's nullability
+    val inputs = graphs.map(_.toDF("doc_a", "doc_b")) :+
+      graphs.head.map { case (a, b) => (Option(a), Option(b)) }
+        .toDF("doc_a", "doc_b")
+    for (df <- inputs) {
       // public entry: under the edge valve, the driver union-find
-      val fold = Dedup.clusters(df).collect()
+      val foldDf = Dedup.clusters(df)
+      val fold = foldDf.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       // the past-the-valve path, forced on the same symmetric edges
       val edges = df.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(df.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .repartition(col("src"))
         .localCheckpoint(true)
-      val loop = Dedup.clustersLoop(edges, maxIters = 25).collect()
+      val loopDf = Dedup.clustersLoop(edges, maxIters = 25)
+      val loop = loopDf.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      assert(foldDf.schema == loopDf.schema,
+        s"fold schema ${foldDf.schema} != loop schema ${loopDf.schema}")
       assert(fold == loop,
-        s"cc fold diverged from the loop on ${pairs.take(8)}…:\n" +
+        s"cc fold diverged from the loop on ${df.take(8).toSeq}…:\n" +
           s"  fold: ${fold.toSeq.sortBy(_._1).take(10)}\n" +
           s"  loop: ${loop.toSeq.sortBy(_._1).take(10)}")
     }

@@ -100,7 +100,7 @@ class RetrievalSpec extends SparkTestBase {
     val scoredStream = Retrieval.bm25Score(stream, model)
     assert(scoredStream.isStreaming,
       "bm25 scoring must stay a stateless streaming transform")
-    graft.streaming.StreamingOps.runToCompletion(spark, scoredStream,
+    graft.streaming.StreamingOps.runToCompletion(scoredStream,
       "bm25_stream", org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("bm25_stream")
       .select("doc_id", "n_terms", "score").collect()

@@ -131,7 +131,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val stream = spark.readStream.schema(schema).parquet(srcDir)
     val cleaned = Dedup.despanContaminatedMap(spark, stream, eval_, n = 5)
     assert(cleaned.isStreaming, "transform must preserve streaming-ness")
-    StreamingOps.runToCompletion(spark, cleaned, "despan_stream",
+    StreamingOps.runToCompletion(cleaned, "despan_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("despan_stream")
       .as[(Long, String, Long, Long)].collect().toSet
@@ -158,7 +158,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val assigned = TextAnalysis.shardAssign(stream, nShards = 4)
     assert(assigned.isStreaming,
       "shard assignment must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, assigned, "shuffle_stream",
+    StreamingOps.runToCompletion(assigned, "shuffle_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val finalized = TextAnalysis
       .shardPositions(spark.table("shuffle_stream")).collect()
@@ -192,7 +192,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val deduped = TextAnalysis.dedupLines(stream)
     assert(deduped.isStreaming,
       "line dedup must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, deduped, "linededup_stream",
+    StreamingOps.runToCompletion(deduped, "linededup_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("linededup_stream").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_lines"),
@@ -239,7 +239,7 @@ class StreamingDedupSpec extends SparkTestBase {
         ("c4_stream", df => TextAnalysis.c4Clean(df)))) {
       val out = op(stream)
       assert(out.isStreaming, s"$name must stay a stateless transform")
-      StreamingOps.runToCompletion(spark, out, name,
+      StreamingOps.runToCompletion(out, name,
         org.apache.spark.sql.streaming.OutputMode.Append())
       val streamed = spark.table(name).collect()
         .map(r => r.getAs[Long]("doc_id") -> r.toSeq.toList).toMap
@@ -278,7 +278,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val scoredStream = TextAnalysis.qualityProbeScoreMap(stream, model)
     assert(scoredStream.isStreaming,
       "probe scoring must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, scoredStream, "qprobe_stream",
+    StreamingOps.runToCompletion(scoredStream, "qprobe_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("qprobe_stream").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("margin"),
@@ -325,7 +325,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val scoredStream = TextAnalysis.dsirScore(stream, ratios)
     assert(scoredStream.isStreaming,
       "dsir scoring must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, scoredStream, "dsir_stream",
+    StreamingOps.runToCompletion(scoredStream, "dsir_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("dsir_stream").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_features"),
@@ -366,7 +366,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val countedStream = TextAnalysis.bpeTokenCounts(stream, merges)
     assert(countedStream.isStreaming,
       "bpe counting must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, countedStream, "bpe_stream",
+    StreamingOps.runToCompletion(countedStream, "bpe_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("bpe_stream").collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_tokens"))
@@ -403,7 +403,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val taggedStream = TextAnalysis.keywordTags(stream, patterns)
     assert(taggedStream.isStreaming,
       "keyword tagging must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, taggedStream, "kw_stream",
+    StreamingOps.runToCompletion(taggedStream, "kw_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("doc_id"), r.getAs[String]("tags"),
@@ -435,7 +435,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val encodedStream = Similarity.pqEncode(stream, model)
     assert(encodedStream.isStreaming,
       "pq encoding must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, encodedStream, "pq_stream",
+    StreamingOps.runToCompletion(encodedStream, "pq_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("pq_stream").collect()
       .map(r => r.getAs[Long]("vec_id") ->
@@ -464,7 +464,7 @@ class StreamingDedupSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val capped = StreamingOps.domainCapStream(spark, stream, cap = 5)
     assert(capped.isStreaming, "cap maintenance must be a streaming transform")
-    StreamingOps.runToCompletion(spark, capped, "cap_stream",
+    StreamingOps.runToCompletion(capped, "cap_stream",
       org.apache.spark.sql.streaming.OutputMode.Update())
     val emitted = spark.table("cap_stream")
     // bounded emission: no (source, rev) group ever exceeds cap rows —
@@ -500,7 +500,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val sampled = StreamingOps.weightedSampleStream(spark, stream, k = 3)
     assert(sampled.isStreaming,
       "weighted-sample maintenance must be a streaming transform")
-    StreamingOps.runToCompletion(spark, sampled, "ws_stream",
+    StreamingOps.runToCompletion(sampled, "ws_stream",
       org.apache.spark.sql.streaming.OutputMode.Update())
     val emitted = spark.table("ws_stream")
     assert(emitted.groupBy("source", "rev").count()
@@ -529,7 +529,7 @@ class StreamingDedupSpec extends SparkTestBase {
     val scored = Pca.pcaScoreMap(stream, model)
     assert(scored.isStreaming,
       "pca scoring must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, scored, "pca_stream",
+    StreamingOps.runToCompletion(scored, "pca_stream",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val streamed = spark.table("pca_stream").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap

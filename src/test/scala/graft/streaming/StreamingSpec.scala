@@ -22,7 +22,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming tumbling window agrees with batch ev01") {
     val stream = StreamingOps.readEvents(spark, eventsDir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.tumblingCounts(stream), "stream_ev01")
     q.stop()
     val got = spark.table("stream_ev01")
@@ -34,7 +34,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("stateful sessionization agrees with batch ev02") {
     val stream = StreamingOps.readEvents(spark, eventsDir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.sessionize(spark, stream), "stream_ev02",
       org.apache.spark.sql.streaming.OutputMode.Update())
     q.stop()
@@ -54,7 +54,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.expressions.Window
     val gapUs = 1800000000L
     val stream = StreamingOps.readEvents(spark, eventsDir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.sessionEmit(spark, stream, gapUs), "stream_sess_emit",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.stop()
@@ -115,7 +115,7 @@ class StreamingSpec extends SparkTestBase {
       java.nio.file.Paths.get(dir, "zz_sentinel.parquet"))
 
     val stream = StreamingOps.readEvents(spark, dir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.sessionPathEmit(spark, stream), "stream_paths",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.stop()
@@ -152,7 +152,7 @@ class StreamingSpec extends SparkTestBase {
     java.nio.file.Files.copy(src,
       java.nio.file.Paths.get(dir, "b.parquet"))
     val stream = StreamingOps.readEvents(spark, dir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.dedupEvents(stream).select("event_id"), "stream_dedup",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.stop()
@@ -166,7 +166,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("stream-stream interval join agrees with the batch join") {
     val stream = StreamingOps.readEvents(spark, eventsDir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.purchaseViewJoin(stream), "stream_ssj",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.stop()
@@ -192,7 +192,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming as-of enrichment agrees with batch ev07") {
     val stream = StreamingOps.readEvents(spark, eventsDir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.asofEnrich(spark, stream), "stream_ev07",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.stop()
@@ -220,7 +220,7 @@ class StreamingSpec extends SparkTestBase {
     }
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(dir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.asofEnrich(spark,
         StreamingOps.readEvents(spark, dir)), "stream_hot_asof",
       org.apache.spark.sql.streaming.OutputMode.Append())
@@ -249,7 +249,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming funnel agrees with batch ev14") {
     import spark.implicits._
     val stream = StreamingOps.readEvents(spark, eventsDir)
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.funnel(spark, stream), "stream_ev14",
       org.apache.spark.sql.streaming.OutputMode.Update())
     q.stop()
@@ -299,7 +299,7 @@ class StreamingSpec extends SparkTestBase {
       copied.toFile.setLastModified(System.currentTimeMillis()
         - 60000L + i * 30000L)
     }
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.funnel(spark, StreamingOps.readEvents(spark, flat)),
       "stream_funnel_late",
       org.apache.spark.sql.streaming.OutputMode.Update())
@@ -328,7 +328,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     val stream = StreamingOps.readEvents(spark, eventsDir)
     val k = 64
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.overlapSketch(spark, stream, k = k, buckets = 8),
       "stream_kmv",
       org.apache.spark.sql.streaming.OutputMode.Update())
@@ -410,7 +410,7 @@ class StreamingSpec extends SparkTestBase {
     assume(isNtz, "corpus is on the legacy nanos encoding")
     java.nio.file.Files.copy(src,
       java.nio.file.Paths.get(dir, "events.parquet"))
-    val q = StreamingOps.runToCompletion(spark,
+    val q = StreamingOps.runToCompletion(
       StreamingOps.tumblingCounts(stream), "stream_empty_start")
     q.stop()
     val n = spark.table("stream_empty_start")

@@ -46,7 +46,7 @@ class StreamingWarcSpec extends SparkTestBase {
     val facts = Warc.recordFactsGz(spark, stream).toDF()
     assert(facts.isStreaming,
       "the gz walk must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, facts, "warc_facts_stream",
+    StreamingOps.runToCompletion(facts, "warc_facts_stream",
       OutputMode.Append())
     val streamed = spark.table("warc_facts_stream").collect()
       .map(_.toSeq).toSet
@@ -75,7 +75,7 @@ class StreamingWarcSpec extends SparkTestBase {
       "blocks" -> (df => Html.blockFactsDf(spark, df)))) {
       val out = fn(stream())
       assert(out.isStreaming, s"$name must stream statelessly")
-      StreamingOps.runToCompletion(spark, out, s"pages_${name}_stream",
+      StreamingOps.runToCompletion(out, s"pages_${name}_stream",
         OutputMode.Append())
       val streamed = spark.table(s"pages_${name}_stream").collect()
         .map(_.toSeq).toSet
@@ -102,7 +102,7 @@ class StreamingWarcSpec extends SparkTestBase {
     val out = chain(stagedArchiveStream(archives))
     assert(out.isStreaming,
       "the extraction chain must stay a stateless streaming transform")
-    StreamingOps.runToCompletion(spark, out, "crawl_extract_stream",
+    StreamingOps.runToCompletion(out, "crawl_extract_stream",
       OutputMode.Append())
     val streamed = spark.table("crawl_extract_stream").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
