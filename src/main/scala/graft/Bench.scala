@@ -212,7 +212,7 @@ object Bench {
     *
     * The capture keeps only the LAST 2000 chars of output and sbt's
     * trailing "[success] Total time ..." line eats ~75 of those, so a
-    * printed line must stay ≤ ~1880 chars or its head is cut and the
+    * printed line must stay ≤ 1880 chars or its head is cut and the
     * JSON becomes unparseable. A full-name per-query seconds map is
     * ~3.5 KB; even the short-id 2-decimal map stopped fitting when the
     * suite grew past ~160 queries (r14 finding: the map silently
@@ -283,6 +283,11 @@ object Bench {
         line("queries_ds", mapOf(scaledInt(10))),
         famTop,
         bare)
-      .find(_.length <= 1900).getOrElse(bare)
+      .find(_.length <= SummaryLineMaxChars).getOrElse(bare)
   }
+
+  /** The longest summary line the tail capture keeps whole (see
+    * [[summaryLine]]).
+    */
+  private[graft] val SummaryLineMaxChars = 1880
 }

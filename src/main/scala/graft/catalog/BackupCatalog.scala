@@ -2,10 +2,10 @@ package graft.catalog
 
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
-import graft.engine.Compactor.swapLock
+import graft.engine.DirSnapshot
 
 /** Parquet-backed backup-metadata catalog — the Spark-native stand-in
   * for the reference's MySQL/SimpleDB store
@@ -16,12 +16,11 @@ import graft.engine.Compactor.swapLock
   * for appends in flight, on ANY Hadoop-supported filesystem (every
   * probe goes through the scheme-aware FileSystem API, not java.io).
   * The catalog is metadata-scale (one row per table per run), so each
-  * log lives on the driver as a snapshot: its rows plus the names of
-  * the committed part files they came from (Spark part-file names are
-  * unique, and a file keeps its name until a compaction folds it away).
-  * A read lists each log it touches once; an unchanged listing serves
-  * the snapshot, and any other listing (an append or compaction by
-  * another instance or process) reloads that log whole. Reads are
+  * log lives on the driver as a [[graft.engine.DirSnapshot]]: its rows
+  * plus the names of the committed part files they came from. A read
+  * lists each log it touches once; an unchanged listing serves the
+  * snapshot, and any other listing (an append or compaction by another
+  * instance or process) reloads that log whole. Reads are
   * `spark.createDataset(snapshot)` fed to the shared [[CatalogOps]]
   * predicates, so a warm lookup runs no Spark job.
   *
@@ -51,73 +50,26 @@ final class BackupCatalog(spark: SparkSession, root: String,
   private def fs =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** One append log's driver-resident snapshot: `rows` are exactly the
-    * rows of the part files in `files`. Guarded by the instance lock.
-    */
-  private final class Log[T](val dir: String)(implicit val enc: Encoder[T]) {
-    var files: Set[String] = Set.empty
-    var rows: Vector[T] = Vector.empty
-  }
-
-  private val sessionsLog = new Log[BackupSession](s"$root/sessions")
-  private val tablesLog = new Log[TableRecord](s"$root/tables")
-  private val descsLog = new Log[ColumnDescriptor](s"$root/descriptors")
-  private val purgesLog = new Log[PurgeRecord](s"$root/purges")
+  // the four append logs; a snapshot restores a compaction swap's
+  // `__old` copy before any read or append of its log
+  private val sessionsLog =
+    new DirSnapshot[BackupSession](s"$root/sessions")
+  private val tablesLog = new DirSnapshot[TableRecord](s"$root/tables")
+  private val descsLog =
+    new DirSnapshot[ColumnDescriptor](s"$root/descriptors")
+  private val purgesLog = new DirSnapshot[PurgeRecord](s"$root/purges")
   private val stagingDir = s"$root/_staging"
 
-  private def isCommitted(s: FileStatus): Boolean = {
-    val n = s.getPath.getName
-    s.isFile && !n.startsWith("_") && !n.startsWith(".")
-  }
-
-  private def committedIn(dir: String): Set[String] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.filter(isCommitted)
-      .map(_.getPath.getName).toSet
-  }
-
-  /** Crash recovery for a compaction swap: if a crash left a log with
-    * `<dir>__old` (the previous copy) but no live dir, the old copy is
-    * the truth — restore it before the log is read or appended to.
-    * Callers hold the JVM-wide swap lock: two catalog INSTANCES on one
-    * root would otherwise race a recovery against an in-flight swap.
-    */
-  private def recoverIfNeeded(dir: String): Unit = {
-    val (p, pOld) = (new Path(dir), new Path(dir + "__old"))
-    if (!fs.exists(p) && fs.exists(pOld))
-      require(fs.rename(pOld, p),
-        s"catalog recovery failed: cannot restore $pOld to $p")
-  }
-
-  /** The log's rows, brought up to date with its dir by one listing:
-    * if the listing differs from the snapshot's files, the listed files
-    * are reloaded whole with the log's schema (no inference job). List
-    * and reload run under the JVM-wide swap lock, so no swap in this JVM
-    * can land between them and the rows always match the listed files.
-    * Caller holds the instance lock.
-    */
-  private def rowsOf[T](log: Log[T]): Vector[T] = swapLock.synchronized {
-    recoverIfNeeded(log.dir)
-    val listed = committedIn(log.dir)
-    if (listed != log.files) {
-      log.rows =
-        if (listed.isEmpty) Vector.empty
-        else spark.read.schema(log.enc.schema)
-          .parquet(listed.toSeq.map(n => new Path(log.dir, n).toString): _*)
-          .as[T](log.enc).collect().toVector
-      log.files = listed
-    }
-    log.rows
-  }
+  private def rowsOf[T](log: DirSnapshot[T]): Vector[T] = log.rows(spark)
 
   /** Rows written to a private staging dir as exactly one part file,
     * not yet visible in their log.
     */
-  private final class Staged[T](log: Log[T], val dir: String,
+  private final class Staged[T](log: DirSnapshot[T], val dir: String,
                                 rows: Seq[T]) {
     private val part: Path = {
-      val parts = fs.listStatus(new Path(dir)).filter(isCommitted)
+      val parts = fs.listStatus(new Path(dir))
+        .filter(DirSnapshot.isCommitted)
       require(parts.length == 1,
         s"staged append in $dir wrote ${parts.length} part files, not 1")
       parts.head.getPath
@@ -128,13 +80,10 @@ final class BackupCatalog(spark: SparkSession, root: String,
       */
     def publish(): Unit = {
       val dst = new Path(log.dir, part.getName)
-      swapLock.synchronized {
-        recoverIfNeeded(log.dir)
+      log.commit(spark, dst.getName, rows) {
         fs.mkdirs(new Path(log.dir))
         require(fs.rename(part, dst), s"cannot publish $part to $dst")
       }
-      log.files += dst.getName
-      log.rows ++= rows
     }
   }
 
@@ -151,7 +100,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
     inFlight.remove(p.getName)
   }
 
-  private def stage[T](log: Log[T], rows: Seq[T]): Staged[T] = {
+  private def stage[T](log: DirSnapshot[T], rows: Seq[T]): Staged[T] = {
     val dir = newStagingDir()
     try {
       spark.createDataset(rows)(log.enc).coalesce(1).write.parquet(dir)
@@ -170,8 +119,8 @@ final class BackupCatalog(spark: SparkSession, root: String,
     } finally staged.foreach(s => unstage(s.dir))
   }
 
-  private def fileCount(log: Log[_]): Int = synchronized {
-    rowsOf(log); log.files.size
+  private def fileCount(log: DirSnapshot[_]): Int = synchronized {
+    log.fileCount(spark)
   }
 
   /** The sessions store is an append-structured log: [[startInfo]] and
@@ -243,8 +192,8 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * Once the log holds more than `compactAfterFiles` part files,
     * [[compactSessions]] folds it back to one row per session so read
     * cost stays bounded; a crash can lose at most the in-flight
-    * append or leave the swap mid-rename, which [[recoverIfNeeded]]
-    * already restores.
+    * append or leave the swap mid-rename, whose `__old` copy the
+    * log's snapshot restores before its next read.
     */
   def endInfo(mode: String, sessionName: String, endedAt: Long,
               error: Boolean = false, errorInfo: String = ""): Unit = {
@@ -264,20 +213,20 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * swap lock, so a crash can lose at most the in-flight fold, never
     * the existing catalog (a plain Overwrite deletes-then-writes,
     * leaving a destroyed store dir if killed mid-way — fatal for a
-    * catalog whose whole job is surviving crashed runs), and
-    * [[recoverIfNeeded]] restores `<dir>__old` if a crash lands between
-    * the renames.
+    * catalog whose whole job is surviving crashed runs), and the log's
+    * snapshot restores `<dir>__old` if a crash lands between the
+    * renames.
     */
-  private def compact[T](log: Log[T])(fold: => Seq[T]): Unit = synchronized {
+  private def compact[T](log: DirSnapshot[T])(fold: => Seq[T])
+      : Unit = synchronized {
     val folded = fold
     val staged = newStagingDir()
     try {
       spark.createDataset(folded)(log.enc).coalesce(1).write.parquet(staged)
-      val written = committedIn(staged)
+      val written = DirSnapshot.committed(fs, staged)
       val (p, pStaged, pOld) =
         (new Path(log.dir), new Path(staged), new Path(log.dir + "__old"))
-      swapLock.synchronized {
-        recoverIfNeeded(log.dir)
+      log.replace(spark, written, folded) {
         if (fs.exists(pOld))
           require(fs.delete(pOld, true), s"cannot clear $pOld")
         if (fs.exists(p))
@@ -289,8 +238,6 @@ final class BackupCatalog(spark: SparkSession, root: String,
         }
         fs.delete(pOld, true) // old copy only removed after a full swap
       }
-      log.files = written
-      log.rows = folded.toVector
     } finally unstage(staged)
   }
 

@@ -45,23 +45,25 @@ object Compactor {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def dataFiles(f: FileSystem, dir: Path) =
-    f.listStatus(dir).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    f.listStatus(dir).filter(DirSnapshot.isCommitted)
 
   private def partitionDirs(f: FileSystem, dir: Path): Seq[Path] =
     f.listStatus(dir).filter(s => s.isDirectory &&
       s.getPath.getName.contains("=")).map(_.getPath).toSeq
 
   /** Crash recovery: a swap that died after staging leaves
-    * `<dir>__old` with no `<dir>` — the old copy is the truth.
+    * `<dir>__old` with no `<dir>` — the old copy is the truth. Runs
+    * under [[swapLock]], so it never mistakes a live swap for a crash.
     */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
+  def recover(spark: SparkSession, dir: String): Unit =
+    swapLock.synchronized { restoreOld(fs(spark, dir), dir) }
+
+  /** [[recover]]'s restore, for callers already holding [[swapLock]]. */
+  private[graft] def restoreOld(f: FileSystem, dir: String): Unit = {
     val (p, pOld) = (new Path(dir), new Path(dir + "__old"))
     if (!f.exists(p) && f.exists(pOld))
-      require(f.rename(pOld, p), s"compaction recovery failed for $dir")
+      require(f.rename(pOld, p),
+        s"recovery failed: cannot restore $pOld to $p")
   }
 
   /** Compact one directory (recursing into Hive partition dirs) to
@@ -121,7 +123,7 @@ object Compactor {
   }
 
   /** JVM-wide lock serializing every checked-rename swap against every
-    * crash recovery (the `recoverIfSwapped` family): without it, a
+    * crash recovery ([[recover]], [[DirSnapshot]]): without it, a
     * reader thread probing between [[swapInto]]'s two renames sees
     * "root missing, __old present" — the crashed-swap signature — and
     * renames `__old` BACK, making the live swap's tmp→root rename fail

@@ -1,0 +1,99 @@
+package graft.engine
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Encoder, SparkSession}
+
+/** A driver-resident snapshot of one metadata-scale parquet dir: its
+  * rows plus the names of the committed part files they came from.
+  * Spark part-file names are unique, and a file keeps its name until a
+  * rewrite replaces it, so the set of names says whether the dir
+  * changed.
+  *
+  * [[rows]] lists the dir once per call. An unchanged listing serves
+  * the held rows; any other listing (an append, delete, in-place
+  * rewrite, swap or `__old` restore, by this or another process)
+  * reloads the listed files whole with the encoder's schema, so no
+  * schema-inference job runs. Listing and reload hold
+  * [[Compactor.swapLock]]: no swap in this JVM lands between them, and
+  * the held rows always match the listed files. A failed reload throws
+  * and keeps the previous snapshot.
+  *
+  * The whole dir is collected to the driver, so only dirs whose rows
+  * the caller would collect anyway belong here. A caller that writes
+  * the dir itself can apply its own appends and swaps through
+  * [[commit]] and [[replace]], which update the snapshot without a
+  * reload.
+  */
+final class DirSnapshot[T](val dir: String)(implicit val enc: Encoder[T]) {
+  private var files: Set[String] = Set.empty
+  private var held: Vector[T] = Vector.empty
+
+  private def fs(spark: SparkSession): FileSystem = Compactor.fs(spark, dir)
+
+  /** The dir's rows, brought up to date by one listing. */
+  def rows(spark: SparkSession): Vector[T] = synchronized {
+    Compactor.swapLock.synchronized {
+      val f = fs(spark)
+      Compactor.restoreOld(f, dir)
+      val listed = DirSnapshot.committed(f, dir)
+      if (listed != files) {
+        held =
+          if (listed.isEmpty) Vector.empty
+          else spark.read.schema(enc.schema)
+            .parquet(listed.toSeq.map(n => new Path(dir, n).toString): _*)
+            .as[T](enc).collect().toVector
+        files = listed
+      }
+      held
+    }
+  }
+
+  /** The number of committed part files, after one listing. */
+  def fileCount(spark: SparkSession): Int = synchronized {
+    rows(spark); files.size
+  }
+
+  /** Move one part file holding exactly `added` into the dir (`move`
+    * runs under the swap lock, after any `__old` restore) and add its
+    * rows to the snapshot.
+    */
+  def commit(spark: SparkSession, file: String, added: Seq[T])(
+      move: => Unit): Unit = synchronized {
+    Compactor.swapLock.synchronized {
+      Compactor.restoreOld(fs(spark), dir)
+      move
+    }
+    files += file
+    held ++= added
+  }
+
+  /** Swap a rewrite holding exactly `rewritten` in the part files
+    * `rewrittenFiles` into place (`swap` runs under the swap lock, after
+    * any `__old` restore) and make it the snapshot.
+    */
+  def replace(spark: SparkSession, rewrittenFiles: Set[String],
+              rewritten: Seq[T])(swap: => Unit): Unit = synchronized {
+    Compactor.swapLock.synchronized {
+      Compactor.restoreOld(fs(spark), dir)
+      swap
+    }
+    files = rewrittenFiles
+    held = rewritten.toVector
+  }
+}
+
+object DirSnapshot {
+  /** A committed data file: not a `_`/`.` sidecar or in-flight dir. */
+  def isCommitted(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** The names of the committed part files directly under `dir`. */
+  def committed(f: FileSystem, dir: String): Set[String] = {
+    val p = new Path(dir)
+    if (!f.exists(p)) Set.empty
+    else f.listStatus(p).iterator.filter(isCommitted)
+      .map(_.getPath.getName).toSet
+  }
+}

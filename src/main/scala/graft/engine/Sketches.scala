@@ -42,13 +42,6 @@ object Sketches {
     (((Hashing.As(i) * (h % Hashing.P) + Hashing.Bs(i)) % Hashing.P)
       % m).toInt
 
-  /** DuckDB text of [[bloomPos]] with position params inlined —
-    * `hExpr` a BIGINT hash expression, `mExpr` the filter width. */
-  private[graft] def bloomPosSql(i: Int, hExpr: String,
-                                 mExpr: String): String =
-    s"(((${Hashing.As(i)} * ($hExpr % ${Hashing.P}) + ${Hashing.Bs(i)})" +
-      s" % ${Hashing.P}) % $mExpr)"
-
   /** Distributed bitmap build: per-partition Array[Long] partials,
     * OR-merged (commutative ⇒ deterministic under any partitioning —
     * the same argument as the KMV set-minima). The buffer is the

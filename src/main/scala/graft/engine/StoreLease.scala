@@ -33,7 +33,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    second process would.
   *
   * What this does NOT cover (documented contract, unchanged): READERS
-  * never take leases — crash-recovery renames (`recoverIfSwapped`)
+  * never take leases — crash-recovery renames ([[Compactor.recover]])
   * are reader-side and serialize only in-process via `swapLock`; a
   * reader in another process during a writer's swap window remains
   * out of contract. The lease closes the WRITER-vs-WRITER hole — the

@@ -36,11 +36,6 @@ object TableOps {
       .toDF("name", "data_type", "nullable")
   }
 
-  /** S5 — `table_has_rows?` (hbase.rb:64-68): limit-1 probe;
-    * LocalLimit(1) short-circuits the scan.
-    */
-  def tableHasRows(df: DataFrame): Boolean = !df.limit(1).isEmpty
-
   /** S7 — `list_bucket_contents` (s3.rb:38-48): children of a storage
     * root via the scheme-appropriate Hadoop FileSystem. The
     * reference's pagination loop (s3.rb:39-47) is subsumed by
@@ -101,7 +96,7 @@ object TableOps {
     * operation, so a reader never lists a half-deleted session — and
     * only the staged dir is deleted recursively. A crash mid-delete
     * leaves `__purging`, which the NEXT invocation resumes deleting
-    * (the recoverIfSwapped discipline, inverted: here the orphan dir
+    * (the Compactor.recover discipline, inverted: here the orphan dir
     * is garbage, not truth); a replay with everything already gone is
     * a clean no-op. Returns true if any payload was removed (live or
     * a crashed stage), false for the nothing-to-do replay.

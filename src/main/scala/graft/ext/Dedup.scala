@@ -940,7 +940,7 @@ object Dedup {
   def initSignaturesIfStale(docs: DataFrame, path: String,
                             n: Int = 3): Boolean = {
     val spark = docs.sparkSession
-    recoverIfSwapped(spark, path)
+    graft.engine.Compactor.recover(spark, path)
     val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh = fs.exists(bp) && {
@@ -963,22 +963,11 @@ object Dedup {
     */
   def storeExists(spark: org.apache.spark.sql.SparkSession,
                   path: String): Boolean = {
-    recoverIfSwapped(spark, path)
+    graft.engine.Compactor.recover(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p)
   }
-
-  private def recoverIfSwapped(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Unit =
-    graft.engine.Compactor.swapLock.synchronized {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pOld = new org.apache.hadoop.fs.Path(path + "__old")
-      if (!fs.exists(p) && fs.exists(pOld))
-        require(fs.rename(pOld, p),
-          s"signature store recovery failed: cannot restore $pOld to $p")
-    }
 
   /** Read the signature store. Appends are made idempotent HERE, not
     * at write time: a retried [[updateSignatures]] may leave duplicate
@@ -990,7 +979,7 @@ object Dedup {
     */
   def readSignatures(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = {
-    recoverIfSwapped(spark, path)
+    graft.engine.Compactor.recover(spark, path)
     spark.read.parquet(path).dropDuplicates("doc_id")
       .join(sigTombstones(spark, path).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
@@ -1038,7 +1027,7 @@ object Dedup {
   def compactSignatures(spark: org.apache.spark.sql.SparkSession,
                         path: String,
                         targetBytes: Long = 512L << 20): Unit = {
-    recoverIfSwapped(spark, path)
+    graft.engine.Compactor.recover(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no signature store at $path")
@@ -1080,7 +1069,7 @@ object Dedup {
     * stays taken down until a re-bootstrap.
     */
   def updateSignatures(newDocs: DataFrame, path: String, n: Int = 3): Unit = {
-    recoverIfSwapped(newDocs.sparkSession, path)
+    graft.engine.Compactor.recover(newDocs.sparkSession, path)
     requireDlSchema(newDocs.sparkSession, path)
     signatureRowsWithDl(newDocs, n)
       .join(sigTombstones(newDocs.sparkSession, path)
@@ -1121,7 +1110,7 @@ object Dedup {
     // baseline gate FIRST: a pre-r13 store has neither the baseline
     // nor the dl column, and the stats aggregate below would throw an
     // analysis error instead of the actionable message
-    recoverIfSwapped(spark, path)
+    graft.engine.Compactor.recover(spark, path)
     val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
     val bfs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(bfs.exists(bp),
@@ -1146,7 +1135,7 @@ object Dedup {
     val spark = docs.sparkSession
     // re-shingle with the STORE's own width (recorded at init) — a
     // twin at a different n would compare incomparable pair masses
-    recoverIfSwapped(spark, path)
+    graft.engine.Compactor.recover(spark, path)
     val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
     val bfs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(bfs.exists(bp),
@@ -1224,7 +1213,7 @@ object Dedup {
     */
   def updatePairs(newDocs: DataFrame, path: String, n: Int = 3): DataFrame = {
     val spark = newDocs.sparkSession
-    recoverIfSwapped(spark, path)
+    graft.engine.Compactor.recover(spark, path)
     requireDlSchema(spark, path)
     // the tombstone gate sits on BOTH legs: the append (no dead rows
     // re-enter the store) and the delta band side below (a tombstoned

@@ -68,7 +68,4 @@ object Hashing {
 
   def simBandKey(fp: Column, band: Int): Column =
     shiftright(fp, band * SimBandBits) % lit(1L << SimBandBits)
-
-  def simBandKeySql(fpExpr: String, band: Int): String =
-    s"(($fpExpr >> ${band * SimBandBits}) % ${1L << SimBandBits})"
 }

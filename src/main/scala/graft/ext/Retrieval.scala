@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.engine.{Compactor, DirSnapshot}
 
 /** [EXT] Lexical retrieval — Okapi BM25 (Robertson & Zaragoza 2009,
   * "The Probabilistic Relevance Framework: BM25 and Beyond" — public).
@@ -225,7 +227,9 @@ object Retrieval {
     val known = liveStore(spark, indexStore, "lengths", LengthsSchema)
       .select(col("doc_id"))
       .unionByName(tombstones(spark, indexStore).select(col("doc_id")))
-    val b0 = batch.select(col("doc_id"), col("text")).distinct()
+    // doc ids are stored as BIGINT (the declared store schemas)
+    val b0 = batch.select(col("doc_id").cast("long").as("doc_id"),
+        col("text")).distinct()
       .join(known, Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
     if (b0.isEmpty) return
@@ -238,7 +242,8 @@ object Retrieval {
       if (!f.exists(pPost))
         spark.emptyDataFrame.selectExpr(
           "CAST(0 AS BIGINT) AS doc_id", "CAST(0 AS INT) AS dl").limit(0)
-      else spark.read.parquet(s"$indexStore/postings")
+      else spark.read.schema(PostingsSchema)
+        .parquet(s"$indexStore/postings")
         .select(col("doc_id"), col("dl"))
         .join(b0.select(col("doc_id")), Seq("doc_id"), "left_semi")
         .distinct()
@@ -262,21 +267,23 @@ object Retrieval {
       .write.mode("append").parquet(s"$indexStore/lengths")
   }
 
+  /** A store table's folded rows, read with its declared schema (no
+    * inference job) — empty when the table has never been written.
+    */
   private def readStore(spark: org.apache.spark.sql.SparkSession,
-                        path: String, schema: String): DataFrame = {
+                        path: String, schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) spark.emptyDataFrame.selectExpr(
-      schema.split(",").map(_.trim): _*).limit(0)
-    else spark.read.parquet(path).distinct()
+    if (!fs.exists(p))
+      spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).parquet(path).distinct()
   }
 
   /** The deletion facts (doc_id, deleted_at) — empty when none. */
   private def tombstones(spark: org.apache.spark.sql.SparkSession,
                          indexStore: String): DataFrame = {
-    recoverIfSwapped(spark, indexStore)
-    readStore(spark, s"$indexStore/tombstones",
-      "CAST(0 AS BIGINT) AS doc_id, CAST(0 AS BIGINT) AS deleted_at")
+    Compactor.recover(spark, indexStore)
+    readStore(spark, s"$indexStore/tombstones", TombstonesSchema)
   }
 
   /** Delete documents from the persisted index — the takedown path an
@@ -304,18 +311,21 @@ object Retrieval {
     */
   private def liveStore(spark: org.apache.spark.sql.SparkSession,
                         indexStore: String, sub: String,
-                        schema: String): DataFrame = {
-    recoverIfSwapped(spark, indexStore)
+                        schema: StructType): DataFrame = {
+    Compactor.recover(spark, indexStore)
     readStore(spark, s"$indexStore/$sub", schema)
       .join(tombstones(spark, indexStore).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
   }
 
-  private val PostingsSchema: String =
-    "CAST(0 AS BIGINT) AS doc_id, CAST(0 AS INT) AS dl, " +
-      "CAST('' AS STRING) AS token, CAST(0 AS BIGINT) AS tf"
-  private val LengthsSchema: String =
-    "CAST(0 AS BIGINT) AS doc_id, CAST(0 AS BIGINT) AS dl"
+  // the store tables' schemas, declared once: [[updateIndex]] and
+  // [[deleteFromIndex]] write exactly these, every read passes them
+  private[graft] val PostingsSchema: StructType = StructType.fromDDL(
+    "doc_id BIGINT, dl INT, token STRING, tf BIGINT")
+  private[graft] val LengthsSchema: StructType =
+    StructType.fromDDL("doc_id BIGINT, dl BIGINT")
+  private[graft] val TombstonesSchema: StructType =
+    StructType.fromDDL("doc_id BIGINT, deleted_at BIGINT")
 
   final case class IndexCompactReport(postingsBefore: Long,
     postingsAfter: Long, filesBefore: Int, filesAfter: Int)
@@ -331,25 +341,22 @@ object Retrieval {
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    indexStore: String,
                    targetBytes: Long = 512L << 20): IndexCompactReport = {
-    def one(sub: String, schema: String): (Long, Long, Int, Int) = {
+    def one(sub: String, schema: StructType): (Long, Long, Int, Int) = {
       val dir = s"$indexStore/$sub"
       val p = new org.apache.hadoop.fs.Path(dir)
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       require(f.exists(p), s"no $sub store at $indexStore")
-      def dataFiles = f.listStatus(p).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      def dataFiles = f.listStatus(p).filter(DirSnapshot.isCommitted)
       val before = dataFiles
-      val rowsBefore = spark.read.parquet(dir).count()
+      val rowsBefore = spark.read.schema(schema).parquet(dir).count()
       val bytes = before.map(_.getLen).sum
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       val tmp = dir + "__compact_tmp"
       f.delete(new org.apache.hadoop.fs.Path(tmp), true)
       liveStore(spark, indexStore, sub, schema).coalesce(nOut)
         .write.mode("overwrite").parquet(tmp)
-      graft.engine.Compactor.swapInto(f, dir, tmp)
-      (rowsBefore, spark.read.parquet(dir).count(),
+      Compactor.swapInto(f, dir, tmp)
+      (rowsBefore, spark.read.schema(schema).parquet(dir).count(),
         before.length, dataFiles.length)
     }
     // leased on the STORE root across BOTH sub-store rewrites, so a
@@ -578,7 +585,7 @@ object Retrieval {
         .collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     }
-    recoverIfSwapped(spark, indexStore)
+    Compactor.recover(spark, indexStore)
     val metaPath = new org.apache.hadoop.fs.Path(s"$indexStore/meta")
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fp = fingerprint()
@@ -648,7 +655,7 @@ object Retrieval {
   private[graft] def rebuildIndex(docs: DataFrame, indexStore: String,
                                   beforeSwap: () => Unit): Unit = {
     val spark = docs.sparkSession
-    recoverIfSwapped(spark, indexStore)
+    Compactor.recover(spark, indexStore)
     val p = new org.apache.hadoop.fs.Path(indexStore)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(p),
@@ -680,27 +687,11 @@ object Retrieval {
     */
   def indexExists(spark: org.apache.spark.sql.SparkSession,
                   indexStore: String): Boolean = {
-    recoverIfSwapped(spark, indexStore)
+    Compactor.recover(spark, indexStore)
     val p = new org.apache.hadoop.fs.Path(indexStore)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.exists(p)
   }
-
-  /** Crash recovery for an interrupted [[rebuildIndex]] swap — the
-    * [[graft.ext.VectorIndex]] discipline: a missing root with a
-    * surviving `__old` restores the previous copy before any read or
-    * write. Called from [[liveStore]]'s consumers via [[readStore]].
-    */
-  private def recoverIfSwapped(spark: org.apache.spark.sql.SparkSession,
-                               indexStore: String): Unit =
-    graft.engine.Compactor.swapLock.synchronized {
-      val p = new org.apache.hadoop.fs.Path(indexStore)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pOld = new org.apache.hadoop.fs.Path(indexStore + "__old")
-      if (!f.exists(p) && f.exists(pOld))
-        require(f.rename(pOld, p),
-          s"index store recovery failed: cannot restore $pOld to $p")
-    }
 
   /** Lexical drift advisory, fed ENTIRELY from the persisted stores —
     * the [[graft.ext.VectorIndex.driftReportFromStats]] discipline on
@@ -792,7 +783,7 @@ object Retrieval {
     // a drift report after an interrupted swap failed with the
     // misleading "predates drift baselines" error instead of serving
     // the restored previous copy
-    recoverIfSwapped(spark, indexStore)
+    Compactor.recover(spark, indexStore)
     val p = new org.apache.hadoop.fs.Path(s"$indexStore/baseline/vocab")
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(p),

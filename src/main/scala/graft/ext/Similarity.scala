@@ -22,12 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Embedding cast to double with its L2 norm precomputed. */
-  def withNorm(df: DataFrame, embCol: String = "embedding"): DataFrame =
-    df.withColumn("emb", col(embCol).cast("array<double>"))
-      .withColumn("norm",
-        sqrt(aggregate(col("emb"), lit(0.0), (acc, x) => acc + x * x)))
-
   /** Sequential-order dot product of two double arrays. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
@@ -103,6 +97,16 @@ object Similarity {
         col("sim"), col("rank"))
   }
 
+  /** The mechanical ceiling on [[mmrRerank]]'s one-job pool collect
+    * (r15, VERDICT r14 item 7): pools are |Q|·poolSize rows BY
+    * CONTRACT (KB at any corpus scale), so the bound exists only to
+    * turn "a caller handed us a corpus" from a silent driver OOM into
+    * an immediate, named failure. 65 536 rows is orders of magnitude
+    * above any serving request and, at the family's 64-dim
+    * embeddings, ~35 MB collected — far below driver heap.
+    */
+  private[graft] val MmrMaxPoolRows: Int = 1 << 16
+
   /** MMR diversified top-k [EXT] (Maximal Marginal Relevance,
     * Carbonell & Goldstein, SIGIR 1998 — public): greedy reranking
     * that trades relevance against redundancy — pick_t = argmax of
@@ -143,17 +147,14 @@ object Similarity {
     * form; SimilaritySpec pins the fold against an expression-form
     * reference on adversarial pools (ties, ±0.0, null rel/emb, short
     * pools) and the s14/s18/s19/s24/s28 oracles replay the rounds.
+    *
+    * Pool contract: at most [[MmrMaxPoolRows]] rows, and no null
+    * `query_id` or `vec_id` — a pool breaking either fails with an
+    * `IllegalArgumentException` before any pick. (The r14 expression
+    * form ranked null-id rows; every engine pool generator derives its
+    * ids from non-null corpus and query ids, so only a malformed
+    * external pool can hit this.)
     */
-  /** The mechanical ceiling on [[mmrRerank]]'s one-job pool collect
-    * (r15, VERDICT r14 item 7): pools are |Q|·poolSize rows BY
-    * CONTRACT (KB at any corpus scale), so the bound exists only to
-    * turn "a caller handed us a corpus" from a silent driver OOM into
-    * an immediate, named failure. 65 536 rows is orders of magnitude
-    * above any serving request and, at the family's 64-dim
-    * embeddings, ~35 MB collected — far below driver heap.
-    */
-  private[graft] val MmrMaxPoolRows: Int = 1 << 16
-
   def mmrRerank(pool: DataFrame, k: Int, lambda: Double): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(lambda >= 0.0 && lambda <= 1.0,

@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.engine.{Compactor, DirSnapshot}
 
 /** Persisted vector ANN index [EXT] — the BM25 inverted-index
   * lifecycle ([[Retrieval.updateIndex]] / [[Retrieval.queryIndex]])
@@ -37,6 +39,15 @@ import org.apache.spark.sql.functions._
   *    [[initIfStale]] rebuilds rather than a silently half-written
   *    one; an UNREADABLE meta (crash mid-commit) also reads as stale.
   *
+  * Every dir the serving and write paths read has its schema declared
+  * once below ([[MetaSchema]] … [[TombstonesSchema]]); its writer
+  * produces exactly that schema (spec-pinned) and its readers pass it,
+  * so no store read runs a schema-inference job. The KB-scale dirs
+  * (meta, and centroids + codebooks while the model fits
+  * [[Similarity.LitAssignMaxBytes]]) are held on the driver as
+  * listing-validated [[graft.engine.DirSnapshot]]s, so a warm read on
+  * an unchanged store collects none of them again.
+  *
   * The model (centroids + codebooks) is FROZEN at init — [[update]]
   * encodes new vectors under it without retraining (a production PQ
   * index re-trains on a schedule, not per batch), as a PURE NARROW
@@ -58,6 +69,61 @@ object VectorIndex {
                              iters: Int, coarseIters: Int,
                              nRows: Long, idSum: Long, embSum: Long)
 
+  private[graft] val MetaSchema: StructType = StructType.fromDDL(
+    "nlist INT, m INT, ksub INT, dim INT, iters INT, coarse_iters INT, " +
+      "n_rows BIGINT, id_sum BIGINT, emb_sum BIGINT")
+  private[graft] val CentroidsSchema: StructType =
+    StructType.fromDDL("coarse_id BIGINT, c_emb ARRAY<DOUBLE>")
+  private[graft] val CodebooksSchema: StructType =
+    StructType.fromDDL("sub INT, cell BIGINT, c_sv ARRAY<DOUBLE>")
+  private[graft] val CodesSchema: StructType = StructType.fromDDL(
+    "vec_id BIGINT, sub INT, cell BIGINT, coarse_id BIGINT")
+  private[graft] val TombstonesSchema: StructType =
+    StructType.fromDDL("vec_id BIGINT, deleted_at BIGINT")
+
+  /** The held snapshots of the KB-scale store dirs, one per dir this
+    * JVM has read, keyed by the qualified dir path.
+    */
+  private val snapshots =
+    new java.util.concurrent.ConcurrentHashMap[String, DirSnapshot[Row]]()
+
+  /** A KB-scale store dir's rows: from its held snapshot when `keep`
+    * (reloaded only when the dir's listing changed), else read whole
+    * and not kept.
+    */
+  private def dirRows(spark: SparkSession, dir: String, schema: StructType,
+                      keep: Boolean): Vector[Row] = {
+    val key = Compactor.fs(spark, dir)
+      .makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
+    def fresh = new DirSnapshot[Row](dir)(Encoders.row(schema))
+    val snap =
+      if (keep) snapshots.computeIfAbsent(key, _ => fresh)
+      else { snapshots.remove(key); fresh }
+    snap.rows(spark)
+  }
+
+  /** Whether the frozen model (centroids + codebooks), sized from META
+    * without a collect, fits the driver-side valve
+    * [[Similarity.LitAssignMaxBytes]]: [[query]]'s local fold and the
+    * held model snapshots both need it.
+    */
+  private def modelFitsDriver(meta: IndexMeta): Boolean = {
+    val dsub = meta.dim / meta.m
+    val centroidBytesEst = meta.nlist.toLong * (8L + 8L * meta.dim)
+    val cbBytesEst = meta.m.toLong * meta.ksub * (12L + 8L * dsub)
+    centroidBytesEst + cbBytesEst <= Similarity.LitAssignMaxBytes
+  }
+
+  /** The model's (centroids, codebooks) rows, held between calls only
+    * while it fits the driver.
+    */
+  private def modelRows(spark: SparkSession, store: String,
+                        meta: IndexMeta): (Vector[Row], Vector[Row]) = {
+    val keep = modelFitsDriver(meta)
+    (dirRows(spark, s"$store/centroids", CentroidsSchema, keep),
+      dirRows(spark, s"$store/codebooks", CodebooksSchema, keep))
+  }
+
   /** Above this raw-model size, [[update]] switches the in-row encode
     * from planted plan literals to a closure-based mapPartitions (the
     * KeywordMatch 4 MiB TorrentBroadcast precedent): a production
@@ -72,39 +138,28 @@ object VectorIndex {
     (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
+  /** Whether a store is at `store`, after crash recovery for an
+    * interrupted [[rebuild]] swap: if a crash landed between the two
+    * renames, the store root is missing and `<store>__old` holds the
+    * previous copy — the truth — which [[graft.engine.Compactor
+    * .recover]] restores before any read or write. It runs under
+    * [[graft.engine.Compactor.swapLock]]: "root missing, __old present"
+    * is ALSO what a healthy in-flight swap looks like between its two
+    * renames, and an unserialized recovery would rename `__old` back
+    * mid-swap, aborting the live rebuild (r13; in-process only — across
+    * processes the store assumes a SINGLE writer, see [[rebuild]]).
+    * Gates every entry point.
+    */
   def exists(spark: SparkSession, store: String): Boolean = {
-    recoverIfSwapped(spark, store)
+    Compactor.recover(spark, store)
     val (p, f) = fs(spark, s"$store/meta")
     f.exists(p)
   }
 
-  /** Crash recovery for an interrupted [[rebuild]] swap: if a crash
-    * landed between the two renames, the store root is missing and
-    * `<store>__old` holds the previous copy — the truth. Restore it
-    * before any read or write (the BackupCatalog.recoverIfNeeded
-    * discipline). Called from [[exists]], which gates every entry
-    * point.
-    *
-    * The probe-then-rename pair runs under [[graft.engine.Compactor
-    * .swapLock]]: "root missing, __old present" is ALSO what a healthy
-    * in-flight swap looks like between its two renames, and an
-    * unserialized recovery would rename `__old` back mid-swap,
-    * aborting the live rebuild (r13; in-process only — across
-    * processes the store assumes a SINGLE writer, see [[rebuild]]).
-    */
-  private def recoverIfSwapped(spark: SparkSession, store: String): Unit =
-    graft.engine.Compactor.swapLock.synchronized {
-      val (p, f) = fs(spark, store)
-      val pOld = new org.apache.hadoop.fs.Path(store + "__old")
-      if (!f.exists(p) && f.exists(pOld))
-        require(f.rename(pOld, p),
-          s"store recovery failed: cannot restore $pOld to $p")
-    }
-
   private def readMeta(spark: SparkSession, store: String): IndexMeta = {
     require(exists(spark, store),
       s"no vector index store at $store (run init first)")
-    val r = spark.read.parquet(s"$store/meta").collect()(0)
+    val r = dirRows(spark, s"$store/meta", MetaSchema, keep = true)(0)
     IndexMeta(r.getAs[Int]("nlist"), r.getAs[Int]("m"),
       r.getAs[Int]("ksub"), r.getAs[Int]("dim"), r.getAs[Int]("iters"),
       r.getAs[Int]("coarse_iters"), r.getAs[Long]("n_rows"),
@@ -292,16 +347,19 @@ object VectorIndex {
 
   /** The frozen model, collected: centroids sorted by id and the
     * (sub, cell) → subvector codebook map — KB-to-MB scale by the
-    * store contract (the pqCodebook collect discipline).
+    * store contract (the pqCodebook collect discipline), held between
+    * calls while it fits the driver ([[modelRows]]).
     */
-  private def readModel(spark: SparkSession, store: String)
+  private def readModel(spark: SparkSession, store: String,
+                        meta: IndexMeta)
       : (Array[(Long, Array[Double])], Map[(Int, Long), Array[Double]]) = {
-    val centroids = spark.read.parquet(s"$store/centroids").collect()
+    val (centRows, cbRows) = modelRows(spark, store, meta)
+    val centroids = centRows.toArray
       .map(r => (r.getAs[Long]("coarse_id"),
         r.getAs[Seq[Double]]("c_emb").toArray))
       .sortBy(_._1)
     require(centroids.nonEmpty, s"empty centroid table at $store")
-    val model = spark.read.parquet(s"$store/codebooks").collect()
+    val model = cbRows
       .map(r => (r.getAs[Int]("sub"), r.getAs[Long]("cell")) ->
         r.getAs[Seq[Double]]("c_sv").toArray)
       .toMap
@@ -437,7 +495,7 @@ object VectorIndex {
   private[graft] def encodeForStore(spark: SparkSession, store: String,
       batch: DataFrame, litMaxBytes: Long = LitEncodeMaxBytes): DataFrame = {
     val meta = readMeta(spark, store)
-    val (centroids, model) = readModel(spark, store)
+    val (centroids, model) = readModel(spark, store, meta)
     encodeUnderModel(prep(batch), meta, centroids, model, litMaxBytes)
   }
 
@@ -469,7 +527,7 @@ object VectorIndex {
                             litMaxBytes: Long): Unit = {
     val spark = batch.sparkSession
     val meta = readMeta(spark, store)
-    val (centroids, model) = readModel(spark, store)
+    val (centroids, model) = readModel(spark, store, meta)
     val b0 = prep(batch).distinct()
     val dims = b0.agg(min(size(col("emb"))).as("mn"),
       max(size(col("emb"))).as("mx")).collect()(0)
@@ -478,7 +536,7 @@ object VectorIndex {
       s"update batch carries ${dims.getInt(0)}..${dims.getInt(1)}-dim " +
         s"embeddings where the store at $store is trained on " +
         s"${meta.dim}-dim vectors (re-init to change the model)")
-    val known = spark.read.parquet(s"$store/codes")
+    val known = spark.read.schema(CodesSchema).parquet(s"$store/codes")
       .select(col("vec_id")).distinct()
       .unionByName(tombstones(spark, store).select(col("vec_id")))
     val fresh = b0.join(known, Seq("vec_id"), "left_anti")
@@ -629,7 +687,7 @@ object VectorIndex {
     if (!f.exists(p))
       spark.range(0).select(col("id").as("vec_id"),
         lit(0L).as("deleted_at"))
-    else spark.read.parquet(s"$store/tombstones")
+    else spark.read.schema(TombstonesSchema).parquet(s"$store/tombstones")
   }
 
   /** Delete vectors from the store — the takedown path an append-only
@@ -715,7 +773,7 @@ object VectorIndex {
     * and tombstoned ids removed — ONE definition for every read path.
     */
   private def liveCodes(spark: SparkSession, store: String): DataFrame =
-    spark.read.parquet(s"$store/codes")
+    spark.read.schema(CodesSchema).parquet(s"$store/codes")
       .join(tombstones(spark, store).select(col("vec_id")),
         Seq("vec_id"), "left_anti")
       .distinct()
@@ -740,15 +798,12 @@ object VectorIndex {
       s"no vector index store at $store (run init first)")
     val dir = s"$store/codes"
     val (p, f) = fs(spark, dir)
-    def dataFiles = f.listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    def dataFiles = f.listStatus(p).filter(DirSnapshot.isCommitted)
     val before = dataFiles
     // leased on the STORE root (not the codes subdir), so a compact
     // and a rebuild of the same store exclude each other cross-process
     graft.engine.StoreLease.withLease(f, store) {
-      val rowsBefore = spark.read.parquet(dir).count()
+      val rowsBefore = spark.read.schema(CodesSchema).parquet(dir).count()
       val bytes = before.map(_.getLen).sum
       val nOut =
         math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -757,7 +812,8 @@ object VectorIndex {
       liveCodes(spark, store).coalesce(nOut)
         .write.mode("overwrite").parquet(tmp)
       graft.engine.Compactor.swapInto(f, dir, tmp)
-      CompactReport(rowsBefore, spark.read.parquet(dir).count(),
+      CompactReport(rowsBefore,
+        spark.read.schema(CodesSchema).parquet(dir).count(),
         before.length, dataFiles.length)
     }
   }
@@ -914,14 +970,20 @@ object VectorIndex {
     * collected-KB by contract (a candidate pool), so the codes scan
     * prunes on vec_id (PushedFilters) and the codebook/centroid joins
     * broadcast — corpus never read, work proportional to |vecIds|·m.
+    * A model that fits the driver broadcasts from its held snapshot.
     */
   def reconstruct(spark: SparkSession, store: String,
                   vecIds: Seq[Long]): DataFrame = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
-    val cb1 = spark.read.parquet(s"$store/codebooks")
-    val cents = spark.read.parquet(s"$store/centroids")
-    val codes = spark.read.parquet(s"$store/codes")
+    val meta = readMeta(spark, store)
+    val (cents, cb1) =
+      if (modelFitsDriver(meta)) {
+        import scala.jdk.CollectionConverters._
+        val (centRows, cbRows) = modelRows(spark, store, meta)
+        (spark.createDataFrame(centRows.asJava, CentroidsSchema),
+          spark.createDataFrame(cbRows.asJava, CodebooksSchema))
+      } else (spark.read.schema(CentroidsSchema).parquet(s"$store/centroids"),
+        spark.read.schema(CodebooksSchema).parquet(s"$store/codebooks"))
+    val codes = spark.read.schema(CodesSchema).parquet(s"$store/codes")
       .filter(col("vec_id").isin(vecIds: _*))
       .join(tombstones(spark, store).select(col("vec_id")),
         Seq("vec_id"), "left_anti")
@@ -1136,18 +1198,17 @@ object VectorIndex {
     // and the dtable's posexplode/join subtree cost ~10 pool-bounded
     // jobs + their Catalyst planning per call, the measured majority
     // of every serving query's wall time. Fold them driver-side over
-    // the collected query/centroid/codebook tables when the model
-    // fits the literal valve (sized from META — no collect needed to
-    // decide; a 100 TB autoNlist model keeps the distributed form)
-    // and the request is serving-sized. Arithmetic is replicated op
-    // for op in [[Similarity.ivfPqProbesLocal]]/[[ivfPqDtableLocal]]
-    // (spec-pinned against the expression forms); the corpus-sized
-    // codes scan + rank tail is UNCHANGED either way.
+    // the collected query table and the held centroid/codebook
+    // snapshots when the model fits the literal valve
+    // ([[modelFitsDriver]] — sized from META; a 100 TB autoNlist model
+    // keeps the distributed form) and the request is serving-sized.
+    // Arithmetic is replicated op for op in
+    // [[Similarity.ivfPqProbesLocal]]/[[ivfPqDtableLocal]] (spec-pinned
+    // against the expression forms); the corpus-sized codes scan +
+    // rank tail is UNCHANGED either way.
     val dsub = meta.dim / meta.m
-    val centroidBytesEst = meta.nlist.toLong * (8L + 8L * meta.dim)
-    val cbBytesEst = meta.m.toLong * meta.ksub * (12L + 8L * dsub)
     val qRows: Option[IndexedSeq[(Option[Long], Seq[Any])]] =
-      if (centroidBytesEst + cbBytesEst <= Similarity.LitAssignMaxBytes) {
+      if (modelFitsDriver(meta)) {
         val collected = q.limit(Similarity.LocalFoldMaxQueryRows + 1)
           .collect()
         if (collected.length <= Similarity.LocalFoldMaxQueryRows)
@@ -1158,16 +1219,12 @@ object VectorIndex {
       } else None
     val (probes, dtable, cells) = qRows match {
       case Some(rows) =>
-        val cents = spark.read.parquet(s"$store/centroids")
-          .select(col("coarse_id").cast("long"),
-            col("c_emb").cast("array<double>"))
-          .collect().toIndexedSeq.map(r =>
-            (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-              if (r.isNullAt(1)) null else r.getSeq[Any](1)))
-        val cb = spark.read.parquet(s"$store/codebooks")
-          .select(col("sub").cast("int"), col("cell").cast("long"),
-            col("c_sv").cast("array<double>"))
-          .collect().toIndexedSeq
+        // declared (coarse_id, c_emb) and (sub, cell, c_sv) rows
+        val (centRows, cbRows) = modelRows(spark, store, meta)
+        val cents = centRows.map(r =>
+          (if (r.isNullAt(0)) None else Some(r.getLong(0)),
+            if (r.isNullAt(1)) null else r.getSeq[Any](1)))
+        val cb = cbRows
           .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
           .map(r => (r.getInt(0), r.getLong(1),
             if (r.isNullAt(2)) null else r.getSeq[Any](2)))
@@ -1190,8 +1247,10 @@ object VectorIndex {
             StructField("pd", DoubleType))))
         (pDf, dDf, pl.flatMap(_._2).distinct.toIndexedSeq)
       case None =>
-        val centroids = spark.read.parquet(s"$store/centroids")
-        val cb1 = spark.read.parquet(s"$store/codebooks")
+        val centroids =
+          spark.read.schema(CentroidsSchema).parquet(s"$store/centroids")
+        val cb1 =
+          spark.read.schema(CodebooksSchema).parquet(s"$store/codebooks")
         // coalesce(1): |Q|·nprobe rows by construction (KB at any
         // scale) — single-partition checkpoint keeps the collect and
         // the rank join's probe side 1-task (guide §2.2)
@@ -1202,7 +1261,7 @@ object VectorIndex {
           .collect().map(_.getLong(0)).toIndexedSeq
         (probes, Similarity.ivfPqDtable(q, cb1, meta.m, dsub), cells)
     }
-    val codes = spark.read.parquet(s"$store/codes")
+    val codes = spark.read.schema(CodesSchema).parquet(s"$store/codes")
       .filter(col("coarse_id").isin(cells: _*))
       .join(tombstones(spark, store).select(col("vec_id")),
         Seq("vec_id"), "left_anti")

@@ -53,7 +53,7 @@ class BenchAuditSpec extends AnyFunSuite {
       else if (r < 90) 0.5 + (r - 60) / 12.0
       else 3.0 + (r - 90)
     }
-    assert(typical.length <= 1900,
+    assert(typical.length <= Bench.SummaryLineMaxChars,
       s"summary line overflows the capture: ${typical.length} chars")
     val mapKey = Seq("queries", "queries_cs", "queries_ds")
       .find(k => typical.contains("\"" + k + "\":"))
@@ -70,7 +70,7 @@ class BenchAuditSpec extends AnyFunSuite {
     // can no longer fit, but the line must still parse, still fit, and
     // still carry families (full coverage) + the slowest queries
     val slow = build(_ => 99.94)
-    assert(slow.length <= 1900,
+    assert(slow.length <= Bench.SummaryLineMaxChars,
       s"pathological summary line overflows: ${slow.length} chars")
     val slowParsed = org.json4s.jackson.JsonMethods.parse(slow)
     val fams = (slowParsed \ "families")

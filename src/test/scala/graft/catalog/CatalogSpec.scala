@@ -425,22 +425,7 @@ class CatalogSpec extends SparkTestBase {
     cat.exportedTableInfo(rec("lineitem"), Seq(descOf("lineitem", 0)))
     // warm: each log read once
     cat.sessions.collect(); cat.tables.collect(); cat.descriptors.collect()
-    val (group, sentinel) = ("catalog-warm-reads", "catalog-warm-sentinel")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
-          case Some(`sentinel`) => sentinelSeen.countDown()
-          case _ => ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "warm catalog reads")
+    val jobs = jobsDuring {
       assert(cat.exists("export", "lineitem", sess.session_name))
       assert(!cat.exists("export", "orders", sess.session_name))
       assert(cat.columnDescriptorRows(sess.session_name, "lineitem") ==
@@ -448,16 +433,8 @@ class CatalogSpec extends SparkTestBase {
       assert(cat.sessions.collect().length == 1)
       assert(cat.tables.collect().length == 1)
       assert(cat.descriptors.collect().length == 1)
-      // the listener bus is ordered: once the sentinel job is seen, any
-      // job the reads started has been counted
-      sc.setJobGroup(sentinel, "listener sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
-    assert(jobs.get == 0, s"warm catalog reads ran ${jobs.get} Spark jobs")
+    assert(jobs.isEmpty, s"warm catalog reads ran ${jobs.size} Spark jobs")
   }
 
   test("purgeSessionData: payload takedown is staged (atomic rename, " +

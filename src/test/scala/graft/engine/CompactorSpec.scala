@@ -186,7 +186,6 @@ class CompactorSpec extends SparkTestBase {
   test("store writer lease (r14): a double-launched vector-index " +
     "rebuild refuses, the store keeps serving its OLD model, and the " +
     "swap-publishing compaction refuses under the same lease") {
-    import spark.implicits._
     import graft.ext.VectorIndex
     val e = Tables.embeddings(spark, sf0001)
     val store = tmpDir("lease-vidx") + "/idx"

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.{SparkTestBase, Tables}
+import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 class SkewJoinSpec extends SparkTestBase {

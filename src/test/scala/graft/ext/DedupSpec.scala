@@ -715,7 +715,6 @@ class DedupSpec extends SparkTestBase {
     "pair_delta, doc-length shift trips avgdl, text-distinct growth " +
     "does not trip, pre-baseline stores fail loudly, initIfStale " +
     "rebuilds on a changed corpus only") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{concat, lit}
     val base = docs.filter(col("doc_id") < 300).select("doc_id", "text")
     val path = tmpDir("sig-drift") + "/sigs"

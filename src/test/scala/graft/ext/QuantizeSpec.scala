@@ -67,7 +67,6 @@ class QuantizeSpec extends SparkTestBase {
   }
 
   test("integer dot product approximates the float dot within quantization error") {
-    import spark.implicits._
     val e = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 20)
     val q = Quantize.int8(e, "embedding")
       .select(col("vec_id"), col("embedding"), col("q_vec"), col("q_scale"))

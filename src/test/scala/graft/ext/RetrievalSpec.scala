@@ -213,7 +213,6 @@ class RetrievalSpec extends SparkTestBase {
 
   test("index stores compact like any other append log: fewer files, " +
     "identical query results") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val terms = Seq("dup", "merge", "spark")
     val store = tmpDir("bm25-compact") + "/idx"
@@ -421,6 +420,73 @@ class RetrievalSpec extends SparkTestBase {
         corpusScans.headOption.getOrElse(""))
     assert(plans.exists(_.contains("PushedFilters: [In(token")),
       s"token filter not pushed into the postings scan")
+  }
+
+  test("every index table is written with its declared schema") {
+    val store = tmpDir("bm25-schema") + "/idx"
+    Retrieval.updateIndex(tiny, store)
+    Retrieval.deleteFromIndex(spark, store, Seq(2L))
+    for ((sub, declared) <- Seq("postings" -> Retrieval.PostingsSchema,
+        "lengths" -> Retrieval.LengthsSchema,
+        "tombstones" -> Retrieval.TombstonesSchema)) {
+      val inferred = spark.read.parquet(s"$store/$sub").schema
+      assert(inferred.map(f => f.name -> f.dataType.simpleString) ==
+        declared.map(f => f.name -> f.dataType.simpleString),
+        s"$sub: written $inferred, declared $declared")
+    }
+  }
+
+  test("a warm hybridQueryStores on unchanged stores runs no Spark job " +
+    "outside its two ranking executions, and a rebuild or takedown is " +
+    "visible to the next read") {
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+    val e = Tables.embeddings(spark, sf0001)
+    val queries = Seq(0L -> Seq("dup", "merge"),
+      1L -> Seq("spark", "window"))
+    val bmStore = tmpDir("hybw-bm25") + "/idx"
+    val vStore = tmpDir("hybw-vidx") + "/idx"
+    Retrieval.initIndexIfStale(docs.filter(col("doc_id") < 250), bmStore)
+    VectorIndex.init(e, vStore, coarseIters = 2)
+    val qVecs = localVectors(e, 2)
+    def hybrid(bm: String, v: String): Seq[Seq[Any]] =
+      Retrieval.hybridQueryStores(spark, bm, v, queries, qVecs, k = 10,
+        depth = 20).collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val cold = hybrid(bmStore, vStore)
+    var warm: Seq[Seq[Any]] = null
+    val jobs = jobsDuring { warm = hybrid(bmStore, vStore) }
+    assert(jobs.nonEmpty && jobs.forall(_.isDefined),
+      s"a warm hybrid read ran jobs outside any SQL execution: $jobs")
+    assert(jobs.distinct.size == 2,
+      s"a warm hybrid read ran ${jobs.distinct.size} SQL executions " +
+        "with jobs; only its dense and lexical rankings should")
+    assert(warm == cold, "the warm hybrid read answered differently")
+    // a copy of both stores at new paths holds no snapshot: fresh reads
+    def freshRead(): Seq[Seq[Any]] = {
+      import org.apache.commons.io.FileUtils
+      val (bm, v) = (tmpDir("hybw-bm25-copy") + "/idx",
+        tmpDir("hybw-vidx-copy") + "/idx")
+      FileUtils.copyDirectory(new java.io.File(bmStore),
+        new java.io.File(bm))
+      FileUtils.copyDirectory(new java.io.File(vStore),
+        new java.io.File(v))
+      hybrid(bm, v)
+    }
+    Retrieval.rebuildIndex(docs, bmStore)
+    val rebuilt = hybrid(bmStore, vStore)
+    assert(rebuilt == freshRead(), "rebuildIndex: stale hybrid read")
+    val built = {
+      val ref = tmpDir("hybw-bm25-ref") + "/idx"
+      Retrieval.initIndexIfStale(docs, ref)
+      hybrid(ref, vStore)
+    }
+    assert(rebuilt == built,
+      "the rebuilt index ranks differently from a fresh build")
+    val victim = rebuilt.head(1).asInstanceOf[Long]
+    VectorIndex.delete(spark, vStore, Seq(victim))
+    Retrieval.deleteFromIndex(spark, bmStore, Seq(victim))
+    val after = hybrid(bmStore, vStore)
+    assert(!after.exists(_(1) == victim), s"deleted $victim still served")
+    assert(after == freshRead(), "takedown: stale hybrid read")
   }
 
   test("hybridQueryStoresRerank: dense ranks == the exact-tail " +

@@ -191,7 +191,6 @@ class SimilaritySpec extends SparkTestBase {
 
   test("ANN candidate generation is selective (not a cross join)") {
     // count candidate pairs before re-rank: must be far below Q*N
-    val e = Similarity.withNorm(emb).select(col("vec_id"), col("emb"))
     val n = emb.count()
     val q = 10L
     val ann = Similarity.annTopK(emb, queries, Int.MaxValue)
@@ -416,7 +415,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("phash pairs find planted same-length edits and nothing random") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
       .filter(length(col("text")) > 130) // one chunk ≥ 2 bytes
       .limit(50)
@@ -436,7 +434,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("phash banding is exact: equals brute force at hamming <= 3") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
       .limit(120)
     val assets = Multimodal.asAssets(docs)
@@ -1263,7 +1260,6 @@ class SimilaritySpec extends SparkTestBase {
 
   test("mmr rejects an uncapped (corpus-sized) pool instead of " +
     "collecting it") {
-    import spark.implicits._
     // one query, MmrMaxPoolRows + 1 candidates: the KB-by-contract
     // bound must refuse before the driver holds the whole thing
     val big = spark.range(Similarity.MmrMaxPoolRows + 1)

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{SparkTestBase, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The persisted vector-index lifecycle: the store query must rank
@@ -92,7 +93,6 @@ class VectorIndexSpec extends SparkTestBase {
 
   test("incremental growth: a delta near-copy is found by the store " +
     "query without retraining") {
-    import spark.implicits._
     val e = Tables.embeddings(spark, sf0001)
     val st = store("vidx-delta")
     VectorIndex.init(e, st, coarseIters = 2)
@@ -113,7 +113,6 @@ class VectorIndexSpec extends SparkTestBase {
 
   test("initIfStale: serves a warm store; rebuilds on corpus, knob, " +
     "CONTENT (re-embedded same ids), or half-written-meta change") {
-    import spark.implicits._
     val e = Tables.embeddings(spark, sf0001)
     val st = store("vidx-stale")
     assert(VectorIndex.initIfStale(e, st, coarseIters = 2),
@@ -365,7 +364,6 @@ class VectorIndexSpec extends SparkTestBase {
 
   test("diversifiedQuery == mmrRerank over the store pool + PQ " +
     "reconstructions, and reconstruct is exact on zero-residual cells") {
-    import spark.implicits._
     val e = Tables.embeddings(spark, sf0001)
     val st = store("vidx-mmr")
     VectorIndex.init(e, st, coarseIters = 2)
@@ -445,7 +443,6 @@ class VectorIndexSpec extends SparkTestBase {
   test("drift advisory: self-drift is exactly zero, a shifted corpus " +
     "trips, a same-distribution 2x growth does not, pre-baseline " +
     "stores fail loudly and rebuild") {
-    import spark.implicits._
     val e = Tables.embeddings(spark, sf0001)
     val st = store("vidx-drift")
     VectorIndex.init(e, st, coarseIters = 2)
@@ -733,6 +730,105 @@ class VectorIndexSpec extends SparkTestBase {
       VectorIndex.rebuild(e, tmpDir("vidx-rebuild-none") + "/missing")
     }
     assert(ex.getMessage.contains("to rebuild"))
+  }
+
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+
+  test("every store dir is written with its declared schema, so the " +
+    "declared-schema reads see exactly what a schema-inferring read " +
+    "would") {
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-schema")
+    VectorIndex.init(e, st, coarseIters = 2)
+    VectorIndex.update(e.limit(3)
+      .withColumn("vec_id", col("vec_id") + lit(900000L)), st)
+    VectorIndex.delete(spark, st, Seq(1L))
+    for ((sub, declared) <- Seq("meta" -> VectorIndex.MetaSchema,
+        "centroids" -> VectorIndex.CentroidsSchema,
+        "codebooks" -> VectorIndex.CodebooksSchema,
+        "codes" -> VectorIndex.CodesSchema,
+        "tombstones" -> VectorIndex.TombstonesSchema)) {
+      val inferred = spark.read.parquet(s"$st/$sub").schema
+      assert(inferred.map(f => f.name -> f.dataType.simpleString) ==
+        declared.map(f => f.name -> f.dataType.simpleString),
+        s"$sub: written $inferred, declared $declared")
+    }
+  }
+
+  test("a warm query on an unchanged store runs no Spark job outside " +
+    "its ranking: no schema inference, no meta or model collect") {
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-warm")
+    VectorIndex.init(e, st, coarseIters = 2)
+    VectorIndex.delete(spark, st, Seq(7L)) // reads anti-join tombstones
+    val probes = localVectors(e, 5)
+    val cold = sortedRows(VectorIndex.query(spark, st, probes, k = 3))
+    var warm: DataFrame = null
+    val built = jobsDuring {
+      warm = VectorIndex.query(spark, st, probes, k = 3)
+    }
+    assert(built.isEmpty,
+      s"building a warm query ran ${built.size} Spark jobs")
+    var rows: Seq[Seq[Any]] = null
+    val ranked = jobsDuring { rows = sortedRows(warm) }
+    assert(ranked.nonEmpty && ranked.forall(_.isDefined) &&
+      ranked.distinct.size == 1,
+      s"the warm ranking ran jobs outside its one SQL execution: $ranked")
+    assert(rows == cold, "the warm query answered differently")
+  }
+
+  test("the held store snapshots never serve stale state: after an " +
+    "in-place init, update + delete, an __old restore and a rebuild, " +
+    "the next read equals a fresh read") {
+    import org.apache.commons.io.FileUtils
+    val e = Tables.embeddings(spark, sf0001)
+    val probes = localVectors(e, 5)
+    val st = store("vidx-held")
+    def answer(s: String): (Seq[Seq[Any]], Seq[Seq[Any]]) =
+      (sortedRows(VectorIndex.query(spark, s, probes, k = 3)),
+        sortedRows(VectorIndex.reconstruct(spark, s, 0L until 10L)))
+    // a copy at a new path has no held snapshot: its read is fresh
+    def freshRead(s: String): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+      val copy = store("vidx-held-copy")
+      FileUtils.copyDirectory(new java.io.File(s), new java.io.File(copy))
+      answer(copy)
+    }
+    val pinned = sortedRows(Similarity.ivfPqTopK(e, probes, 3,
+      coarseIters = 2))
+    // in-place init over a different corpus
+    VectorIndex.init(e.filter(col("vec_id") < 300), st, coarseIters = 2)
+    val small = answer(st)
+    VectorIndex.init(e, st, coarseIters = 2)
+    assert(answer(st)._1 == pinned,
+      "in-place init: the next query served the previous model")
+    // update + delete: codes and tombstones change, the model does not
+    val twin = e.filter(col("vec_id") === 2L)
+      .select(lit(900000L).as("vec_id"),
+        transform(col("embedding").cast("array<double>"),
+          (x, i) => when(i === 63, x + lit(1e-4)).otherwise(x))
+          .as("embedding"))
+    VectorIndex.update(twin, st)
+    VectorIndex.delete(spark, st, Seq(pinned.head(1).asInstanceOf[Long]))
+    val updated = answer(st)
+    assert(updated == freshRead(st), "update + delete: stale read")
+    assert(updated._1.exists(_(1) == 900000L) &&
+      !updated._1.exists(_(1) == pinned.head(1)),
+      s"update + delete not visible: ${updated._1}")
+    // __old restore: a crash left the root missing and the previous
+    // copy (the updated store) in __old, while this JVM holds the
+    // snapshot of a newer in-place init
+    val saved = store("vidx-held-saved")
+    FileUtils.copyDirectory(new java.io.File(st), new java.io.File(saved))
+    VectorIndex.init(e.filter(col("vec_id") < 300), st, coarseIters = 2)
+    assert(answer(st) == small, "in-place init back: stale read")
+    FileUtils.deleteDirectory(new java.io.File(st))
+    FileUtils.moveDirectory(new java.io.File(saved),
+      new java.io.File(st + "__old"))
+    assert(answer(st) == updated, "__old restore: stale read")
+    // rebuild: the swap publishes a retrained store
+    VectorIndex.rebuild(e, st, coarseIters = 2)
+    assert(answer(st)._1 == pinned, "rebuild: stale read")
   }
 
   test("loud failure modes: query/update/delete/compact on a missing " +

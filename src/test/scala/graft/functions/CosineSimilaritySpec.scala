@@ -31,7 +31,6 @@ class CosineSimilaritySpec extends SparkTestBase {
       .first().getDouble(0)
     // force interpreted path through nullSafeEval
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
     val r = pairs.limit(1).select(col("x"), col("y")).first()
     val x = r.getSeq[Double](0).toArray
     val y = r.getSeq[Double](1).toArray

@@ -247,7 +247,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming funnel agrees with batch ev14") {
-    import spark.implicits._
     val stream = StreamingOps.readEvents(spark, eventsDir)
     val q = StreamingOps.runToCompletion(
       StreamingOps.funnel(spark, stream), "stream_ev14",
