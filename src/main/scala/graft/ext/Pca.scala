@@ -115,58 +115,82 @@ object Pca {
     val spark = e.sparkSession
     import spark.implicits._
     e.select(col("emb"))
-      .mapPartitions { rows =>
-        var sums = new Array[Long](0)
-        var defined = new Array[Boolean](0) // any non-null product
-        var exists = new Array[Boolean](0)  // pair exploded at all
-        var maxLen = 0
-        def grow(len: Int): Unit = if (len > maxLen) {
-          val k = len * (len + 1) / 2
-          sums = java.util.Arrays.copyOf(sums, k)
-          defined = java.util.Arrays.copyOf(defined, k)
-          exists = java.util.Arrays.copyOf(exists, k)
-          maxLen = len
-        }
-        rows.foreach { r =>
-          if (!r.isNullAt(0)) {
-            val emb = r.getSeq[Any](0)
-            grow(emb.length)
-            var i = 0
-            while (i < emb.length) {
-              val base = i * (i + 1) / 2
-              val a = emb(i)
-              var j = 0
-              while (j <= i) {
-                val b = emb(j)
-                exists(base + j) = true
-                if (a != null && b != null) {
-                  val p = Similarity.localRound(
-                    a.asInstanceOf[Double] * b.asInstanceOf[Double] * 1e6,
-                    0)
-                  if (p.isNaN || p < Long.MinValue.toDouble ||
-                      p > Long.MaxValue.toDouble)
-                    throw new ArithmeticException(
-                      s"casting $p to bigint causes overflow (ANSI)")
-                  sums(base + j) = Math.addExact(sums(base + j), p.toLong)
-                  defined(base + j) = true
-                }
-                j += 1
-              }
-              i += 1
-            }
-          }
-        }
-        (for {
-          i <- (0 until maxLen).iterator
-          j <- 0 to i
-          k = i * (i + 1) / 2 + j
-          if exists(k)
-        } yield (i, j, if (defined(k)) Some(sums(k)) else None))
-      }
+      .mapPartitions(rows => momentPartials(
+        rows.map(r => if (r.isNullAt(0)) null else r.getSeq[Any](0))))
       .toDF("i", "j", "s")
       .groupBy(col("i"), col("j"))
       .agg(sum(col("s")).as("s"))
   }
+
+  /** [[rawMoments]]' per-partition fold over one partition's
+    * embeddings (a null entry is a NULL embedding): the (i, j ≤ i,
+    * s) partial triangle, s None where every product of the pair was
+    * null. Over a whole corpus in one call it yields the TOTALS — the
+    * driver-built vector store ([[VectorIndex.init]]) takes its PCA
+    * moments from here, so the two paths share one body.
+    */
+  private[graft] def momentPartials(embs: Iterator[Seq[Any]])
+      : Iterator[(Int, Int, Option[Long])] = {
+    var sums = new Array[Long](0)
+    var defined = new Array[Boolean](0) // any non-null product
+    var exists = new Array[Boolean](0)  // pair exploded at all
+    var maxLen = 0
+    def grow(len: Int): Unit = if (len > maxLen) {
+      val k = len * (len + 1) / 2
+      sums = java.util.Arrays.copyOf(sums, k)
+      defined = java.util.Arrays.copyOf(defined, k)
+      exists = java.util.Arrays.copyOf(exists, k)
+      maxLen = len
+    }
+    embs.foreach { emb =>
+      if (emb != null) {
+        grow(emb.length)
+        var i = 0
+        while (i < emb.length) {
+          val base = i * (i + 1) / 2
+          val a = emb(i)
+          var j = 0
+          while (j <= i) {
+            val b = emb(j)
+            exists(base + j) = true
+            if (a != null && b != null) {
+              val p = Similarity.localRound(
+                a.asInstanceOf[Double] * b.asInstanceOf[Double] * 1e6, 0)
+              if (p.isNaN || p < Long.MinValue.toDouble ||
+                  p > Long.MaxValue.toDouble)
+                throw new ArithmeticException(
+                  s"casting $p to bigint causes overflow (ANSI)")
+              sums(base + j) = Math.addExact(sums(base + j), p.toLong)
+              defined(base + j) = true
+            }
+            j += 1
+          }
+          i += 1
+        }
+      }
+    }
+    for {
+      i <- (0 until maxLen).iterator
+      j <- 0 to i
+      k = i * (i + 1) / 2 + j
+      if exists(k)
+    } yield (i, j, if (defined(k)) Some(sums(k)) else None)
+  }
+
+  /** The engine's `sum(x.cast("decimal(38,18)"))` step on the driver:
+    * double → DECIMAL(38,18) is java.math.BigDecimal.valueOf
+    * (canonical shortest representation) + setScale(18, HALF_UP), the
+    * cast Spark executes; a non-finite value casts to NULL and a
+    * decimal SUM skips NULLs, so it contributes ZERO — and so does
+    * |x| ≥ 1e20, where DECIMAL(38,18)'s 20 integer digits OVERFLOW the
+    * cast to NULL in the engine while an unlimited-precision setScale
+    * would happily keep the value.
+    */
+  private[graft] def addDec18(acc: java.math.BigDecimal,
+                              x: Double): java.math.BigDecimal =
+    if (!java.lang.Double.isFinite(x) || math.abs(x) >= 1e20) acc
+    else acc.add(java.math.BigDecimal.valueOf(x)
+      .setScale(18, java.math.RoundingMode.HALF_UP))
 
   /** Derive the component from FOLDED statistics — the one
     * definition shared by the batch trainer and the streaming
@@ -247,18 +271,7 @@ object Pca {
                                   covLocal: Seq[(Int, Int, Double)],
                                   nComponents: Int,
                                   iters: Int): Seq[Array[Double]] = {
-    // the engine cast: double → DECIMAL(38,18); a non-finite value
-    // casts to NULL and a decimal SUM skips NULLs, so a non-finite
-    // product contributes ZERO here too (valueOf would throw) — and
-    // so does |x| ≥ 1e20, where DECIMAL(38,18)'s 20 integer digits
-    // OVERFLOW the cast to NULL in the engine while an unlimited-
-    // precision setScale would happily keep the value (divergence on
-    // pathological covariance magnitudes)
-    def addDec18(acc: java.math.BigDecimal,
-                 x: Double): java.math.BigDecimal =
-      if (!java.lang.Double.isFinite(x) || math.abs(x) >= 1e20) acc
-      else acc.add(java.math.BigDecimal.valueOf(x)
-        .setScale(18, java.math.RoundingMode.HALF_UP))
+    // the engine cast: double → DECIMAL(38,18) ([[addDec18]])
     var grid = covLocal
     val comps = Seq.newBuilder[Array[Double]]
     for (c <- 1 to nComponents) {

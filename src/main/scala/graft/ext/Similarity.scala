@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
 
 /** Similarity search over an embedding column [EXT]:
   * brute-force cosine top-k as the exact baseline, and a
@@ -250,14 +252,34 @@ object Similarity {
     }
 
   /** Spark `round(col, scale)`'s DoubleType path replicated: NaN and
-    * ±Inf pass through unrounded; everything else goes through scala
-    * BigDecimal (valueOf semantics) HALF_UP — the same idiom the
-    * PCA/probe driver folds already pin against the engine.
+    * ±Inf pass through unrounded; everything else is HALF_UP on the
+    * double's shortest decimal form (scala BigDecimal, valueOf
+    * semantics) — the same idiom the PCA/probe driver folds already
+    * pin against the engine.
+    *
+    * Fast path, equal to the BigDecimal form (spec-pinned): a =
+    * |d|·10^scale is within 1.5 ulp(a) of the shortest form scaled, so
+    * below 1e9 (error < 4e-7) a fraction more than 1e-6 from .5 rounds
+    * the same way; the result k/10^scale is the very division
+    * BigDecimal.doubleValue performs for an unscaled k below 2⁵², and
+    * a zero result is +0.0. Anything else takes the BigDecimal form.
+    * The driver trainers call this millions of times per build.
     */
   private[ext] def localRound(d: Double, scale: Int): Double =
     if (d.isNaN || d.isInfinite) d
-    else BigDecimal(d).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
-      .toDouble
+    else {
+      val a = if (scale >= 0 && scale < Pow10.length)
+        math.abs(d) * Pow10(scale) else Double.NaN
+      val f = math.floor(a)
+      if (a < 1e9 && math.abs(a - f - 0.5) > 1e-6) {
+        val k = if (a - f > 0.5) f + 1.0 else f
+        if (k == 0.0) 0.0
+        else if (d < 0) -(k / Pow10(scale)) else k / Pow10(scale)
+      } else BigDecimal(d).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
+        .toDouble
+    }
+
+  private val Pow10: Array[Double] = Array.iterate(1.0, 16)(_ * 10.0)
 
   /** [[graft.functions.CosineSimilarity]].nullSafeEval replicated over
     * a collected array<double> value (elements are boxed, possibly
@@ -301,10 +323,12 @@ object Similarity {
     Some(s)
   }
 
-  /** The ceiling on the serving-path driver folds' one-job query
-    * collect ([[ivfPqProbesLocal]] callers): serving requests are
-    * small by contract; past this, [[graft.ext.VectorIndex.query]]
-    * keeps the distributed probe/dtable plan (same values).
+  /** The ceiling on the rows a serving-path driver fold materializes:
+    * [[graft.ext.VectorIndex.query]] collects at most this / (m·ksub)
+    * query rows in its one-job collect, since [[ivfPqDtableLocal]]
+    * builds |Q|·m·ksub rows from them. Serving requests are small by
+    * contract; past the cap the query keeps the distributed
+    * probe/dtable plan (same values).
     */
   private[ext] val LocalFoldMaxQueryRows: Int = 1 << 16
 
@@ -712,22 +736,6 @@ object Similarity {
       }.toDF(idCol, "tbl", "bucket")
   }
 
-  /** Lloyd-trained coarse quantizer for the IVF family [EXT] — the
-    * d09/s03 mod-prime seed sample refined by `iters − 1` Lloyd
-    * passes, [[kmeansClusters]]' exact contract re-expressed for the
-    * coarse level: assignment is the rounded-4 cosine argmax with a
-    * centroid-id tiebreak (partial-aggregable max_by, no window over
-    * the corpus), the update is per-dimension DECIMAL means (exact,
-    * order-free — bit-identical across engines, which is what keeps
-    * s03/s08 oracle-checked with training on), centroid ids stay the
-    * seed vec_ids, and a centroid that captures no vectors drops out
-    * (s05's empty-cluster policy). EAGER per pass (the pqLocal
-    * idiom): each update collects the nlist·dim-double table — KB by
-    * construction — into a literal local relation, so plan depth is
-    * O(1) in the iteration count and no cache outlives the call.
-    * `iters = 1` is the bare seed sample (the untrained baseline the
-    * recall-improvement spec compares against).
-    */
   /** Centroid-table bytes below which nearest-centroid assignment
     * rides the expression tree as literals (the
     * [[VectorIndex]].encodeLiteral valve, same 4 MiB bound): below it
@@ -740,6 +748,12 @@ object Similarity {
     * comparator is the aggregate's EXACTLY (array_max over
     * (c_sim, −id, …) == max_by over (c_sim, −id): null fields
     * smallest, NaN greatest, −0.0 == 0.0 in both).
+    *
+    * The same bound caps the corpus [[ivfPqIndex]] trains on the
+    * driver ([[driverCorpus]]), measured as rows × (8 + 8·dim): a
+    * corpus that fits is an upper bound on every centroid table its
+    * training can produce, so one bound keeps both driver-side forms
+    * inside the same few MiB (~8k vectors at dim 64).
     */
   private[graft] val LitAssignMaxBytes: Long = 4L << 20
 
@@ -779,6 +793,24 @@ object Similarity {
         c.getField("_2").as("c_emb"))))
   }
 
+  /** Lloyd-trained coarse quantizer for the IVF family [EXT] — the
+    * d09/s03 mod-prime seed sample refined by `iters − 1` Lloyd
+    * passes, [[kmeansClusters]]' exact contract re-expressed for the
+    * coarse level: assignment is the rounded-4 cosine argmax with a
+    * centroid-id tiebreak (partial-aggregable max_by, no window over
+    * the corpus), the update is per-dimension DECIMAL means (exact,
+    * order-free — bit-identical across engines, which is what keeps
+    * s03/s08 oracle-checked with training on), centroid ids stay the
+    * seed vec_ids, and a centroid that captures no vectors drops out
+    * (s05's empty-cluster policy). Runs `iters` Spark executions: one
+    * collects the seed, and each pass collects its nlist·dim-double
+    * update — KB by construction — into a literal local relation, so
+    * plan depth is O(1) in the iteration count and no cache outlives
+    * the call. [[ivfPqIndex]] runs this same training on the driver
+    * for a corpus [[driverCorpus]] admits ([[ivfPqIndexLocal]]).
+    * `iters = 1` is the bare seed sample (the untrained baseline the
+    * recall-improvement spec compares against).
+    */
   private[graft] def coarseCentroids(e: DataFrame, nlist: Int,
                                      iters: Int): DataFrame = {
     require(iters >= 1,
@@ -1248,9 +1280,9 @@ object Similarity {
     * Expects an `emb` array<double> column alongside `idCol`; `extra`
     * columns ride along (IVF-PQ's coarse cell id).
     */
-  private def pqSubvectors(df: DataFrame, idCol: String, m: Int,
-                           dsub: Int,
-                           extra: Seq[String] = Nil): DataFrame =
+  private[ext] def pqSubvectors(df: DataFrame, idCol: String, m: Int,
+                                dsub: Int,
+                                extra: Seq[String] = Nil): DataFrame =
     df.select((col(idCol) +: extra.map(col)) :+ posexplode(
       transform(sequence(lit(0), lit(m - 1)),
         s => slice(col("emb"), s * dsub + 1, lit(dsub))))
@@ -1264,8 +1296,8 @@ object Similarity {
     * pass carries nothing, so its shuffle rows are three scalars, not
     * the subvector arrays.
     */
-  private def pqAssign(svs: DataFrame, cb: DataFrame,
-                       carry: Seq[String] = Seq("sv")): DataFrame =
+  private[ext] def pqAssign(svs: DataFrame, cb: DataFrame,
+                            carry: Seq[String] = Seq("sv")): DataFrame =
     svs.join(broadcast(cb), "sub")
       .withColumn("d2", round(l2sq(col("sv"), col("c_sv")), 4))
       .groupBy(col("vec_id"), col("sub"))
@@ -1357,14 +1389,18 @@ object Similarity {
     * SSE is non-increasing up to the 4-decimal rounds, the standard
     * Lloyd guarantee; real codebooks want ~10-25 passes, the oracle
     * twins pin iters=1). `svs` must be `pqSubvectors(e, "vec_id",
-    * ...)` over the same `e`. EAGER: each iteration collects the
-    * KB-scale codebook ([[pqLocal]]), so calling this runs the
-    * training passes and the result is a literal local relation —
-    * callers unpersist their `svs` cache as soon as this returns
-    * instead of leaking it into the returned lazy plan.
+    * ...)` over the same `e`. EAGER, `iters + 1` Spark executions:
+    * the first pass collects the seed codebook ([[pqModelOf]]) and
+    * every pass collects its KB-scale update ([[pqLocal]]), so calling
+    * this runs the training and the result is a literal local
+    * relation — callers unpersist their `svs` cache as soon as this
+    * returns instead of leaking it into the returned lazy plan.
+    * [[ivfPqIndex]] runs the same passes on the driver for a corpus
+    * [[driverCorpus]] admits ([[ivfPqIndexLocal]]).
     */
-  private def pqTrainOn(e: DataFrame, svs: DataFrame, ksub: Int,
-                        m: Int, dsub: Int, iters: Int): DataFrame = {
+  private[ext] def pqTrainOn(e: DataFrame, svs: DataFrame, ksub: Int,
+                             m: Int, dsub: Int,
+                             iters: Int): DataFrame = {
     require(iters >= 1,
       s"PQ training needs at least one Lloyd pass, got $iters")
     // ksub seed vectors (mod-prime sample); sliced per subspace their
@@ -1426,20 +1462,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("approx_ip"), col("rank"))
-  }
-
-  /** The distributed (vec_id, sub, cell) encoding under a fresh
-    * training run — the exact codes [[pqTopK]] scans. Exposed for the
-    * spec that pins [[pqEncode]]'s in-row path to it.
-    */
-  private[graft] def pqCodesDistributed(embeddings: DataFrame,
-      m: Int = 8, ksub: Int = 16, dim: Int = 64,
-      iters: Int = 1): DataFrame = {
-    val dsub = dim / m
-    val e = embeddings.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding").cast("array<double>").as("emb"))
-    val svs = pqSubvectors(e, "vec_id", m, dsub)
-    pqAssign(svs, pqTrainOn(e, svs, ksub, m, dsub, iters), carry = Nil)
   }
 
   /** The trained PQ model: [[pqTopK]]'s refined codebooks collected
@@ -1527,18 +1549,293 @@ object Similarity {
     * the recall dial is (nlist, nprobe, m, ksub) exactly as in the
     * published scheme.
     */
-  /** The trained IVF-PQ index triple — (centroids (coarse_id, c_emb),
-    * residual codebooks (sub, cell, c_sv), codes (vec_id, sub, cell,
-    * coarse_id)) — ONE definition shared by the in-query [[ivfPqTopK]]
+  /** A trained IVF-PQ index: the three frames, plus the corpus rows
+    * when they were trained on the driver.
+    */
+  private[ext] final case class IvfPqIndex(centroids: DataFrame,
+      codebooks: DataFrame, codes: DataFrame, corpus: Option[DriverCorpus])
+
+  /** The trained IVF-PQ index — centroids (coarse_id, c_emb), residual
+    * codebooks (sub, cell, c_sv) and codes (vec_id, sub, cell,
+    * coarse_id) — ONE definition shared by the in-query [[ivfPqTopK]]
     * and the persisted [[VectorIndex.init]] (the winnowFp discipline:
     * the spec-pinned "store query == in-query ranking exactly"
     * contract cannot drift). `e` is (vec_id long, emb array<double>).
+    *
+    * Two forms with identical rows and schemas: a corpus that
+    * [[driverCorpus]] admits (clean, within `maxBytes`) is collected
+    * ONCE and trained on the driver ([[ivfPqIndexLocal]]), and its
+    * rows come back in `corpus` for the caller's statistics; any other
+    * corpus runs the distributed trainer ([[ivfPqIndexDistributed]]).
+    * `knownRows` (the caller's row count, or −1) skips the collect for
+    * a corpus already known to be past the cap.
     */
   private[ext] def ivfPqIndex(e: DataFrame, nlist: Int, m: Int,
                               ksub: Int, dim: Int, iters: Int,
-                              coarseIters: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+                              coarseIters: Int, knownRows: Long = -1L,
+                              maxBytes: Long = LitAssignMaxBytes)
+      : IvfPqIndex = {
     require(dim % m == 0, s"dim $dim not divisible by m $m subspaces")
+    val corpus =
+      if (nlist >= 1 && iters >= 1 && coarseIters >= 1)
+        driverCorpus(e, dim, maxBytes, knownRows)
+      else None
+    corpus match {
+      case Some(c) =>
+        val (cents, cb, codes) = ivfPqIndexLocal(e.sparkSession, c,
+          e.schema("vec_id").nullable, nlist, m, ksub, dim, iters,
+          coarseIters)
+        IvfPqIndex(cents, cb, codes, corpus)
+      case None =>
+        val (cents, cb, codes) = ivfPqIndexDistributed(e, nlist, m, ksub,
+          dim, iters, coarseIters)
+        IvfPqIndex(cents, cb, codes, None)
+    }
+  }
+
+  /** A clean corpus held on the driver: its (vec_id, emb) rows in
+    * source-partition order, grouped by source partition (`parts`
+    * holds the non-empty ones), so a frame rebuilt from them keeps the
+    * corpus's partitioning and hence its written file count.
+    */
+  private[ext] final case class DriverCorpus(
+      parts: IndexedSeq[IndexedSeq[(Long, Array[Double])]]) {
+    val rows: IndexedSeq[(Long, Array[Double])] = parts.flatten
+  }
+
+  /** Collect a prepped (vec_id, emb) corpus to the driver when it fits
+    * `maxBytes` — rows × (8 + 8·dim), the raw id + vector bytes, the
+    * measure [[LitAssignMaxBytes]] already bounds the centroid
+    * literal with (the corpus is an upper bound on any centroid
+    * table). The collect is bounded in code (`limit(capRows + 1)`).
+    * Only CLEAN input qualifies, the domain on which the driver
+    * trainer provably reproduces the engine bit for bit:
+    *
+    *  - every vec_id non-null and distinct (the distributed forms group
+    *    by vec_id; duplicate ids would make its seed order ambiguous);
+    *  - every embedding non-null, exactly `dim` long, every component
+    *    non-null and finite;
+    *  - magnitudes small enough that no DECIMAL(38,18) sum (means,
+    *    drift sums, norms) and no 1e-6-grid LONG moment sum can
+    *    overflow in ANY summation order: with M = max |xᵢ| and n rows,
+    *    n·(dim+2)·M < 1e19, dim·M² < 1e19 and n·(M²·1e6 + 1) < 9e18.
+    *
+    * None (the distributed path) for anything else: an empty, dirty,
+    * huge-valued or past-the-cap corpus.
+    */
+  private[ext] def driverCorpus(e: DataFrame, dim: Int, maxBytes: Long,
+                                knownRows: Long = -1L): Option[DriverCorpus] = {
+    val capRows = maxBytes / (8L + 8L * dim)
+    if (dim < 1 || capRows <= 0L || knownRows > capRows) None
+    else {
+      val got = e.select(spark_partition_id(), col("vec_id"), col("emb"))
+        .limit(math.min(capRows, Int.MaxValue - 1L).toInt + 1)
+        .collect()
+      val clean = got.nonEmpty && got.length <= capRows &&
+        got.forall(r => !r.isNullAt(1) && !r.isNullAt(2) && {
+          val v = r.getSeq[Any](2)
+          v.length == dim && v.forall(x =>
+            x != null && java.lang.Double.isFinite(x.asInstanceOf[Double]))
+        })
+      if (!clean) None
+      else {
+        val rows = got.map(r =>
+          (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+        val n = rows.length.toDouble
+        val mx = rows.iterator.map(_._3.iterator.map(math.abs).max).max
+        val bounded = n * (dim + 2) * mx < 1e19 && dim * mx * mx < 1e19 &&
+          n * (mx * mx * 1e6 + 1.0) < 9e18
+        if (!bounded || rows.map(_._2).distinct.length != rows.length) None
+        else Some(DriverCorpus(rows.toIndexedSeq.groupBy(_._1).toIndexedSeq
+          .sortBy(_._1).map(_._2.map(r => (r._2, r._3)))))
+      }
+    }
+  }
+
+  /** [[ivfPqIndexDistributed]] run on the driver over a clean
+    * collected corpus — every step the engine's, bit for bit:
+    *
+    *  - coarse: the mod-prime seed order ([[centroidKey]], vec_id), then
+    *    `coarseIters − 1` Lloyd passes — rounded-4 cosine argmax with
+    *    the (c_sim, −id) tiebreak ([[nearestCentroid]]), per-cell
+    *    per-dim means as `sum(decimal(38,18)).cast(double) / count`
+    *    ([[Pca.addDec18]]), empty cells dropping out;
+    *  - residuals against the rounded-6 argmax;
+    *  - PQ: the seed is the first `ksub` NON-centroid vectors in
+    *    mod-prime order, refined `iters` times over every vector's
+    *    residual subvectors (rounded-4 squared-L2 argmin, cell-id
+    *    tiebreak, [[nearestCell]]; decimal means; empty cells drop);
+    *  - codes: [[encodeRow]], the kernel the store's closure encode
+    *    runs.
+    *
+    * Returns the same three frames as literal local relations (codes
+    * in the corpus's partitioning, `vecIdNullable` carrying the input
+    * column's nullability), so writes and the ranking tail see the
+    * schemas the distributed form produces.
+    */
+  private[ext] def ivfPqIndexLocal(spark: SparkSession, c: DriverCorpus,
+      vecIdNullable: Boolean, nlist: Int, m: Int, ksub: Int, dim: Int,
+      iters: Int, coarseIters: Int): (DataFrame, DataFrame, DataFrame) = {
+    import spark.implicits._
+    val dsub = dim / m
+    val rows = c.rows
+    def seedOrder(id: Long) = (centroidKey(id), id)
+    var cents: Array[(Long, Array[Double])] =
+      rows.sortBy(r => seedOrder(r._1)).take(nlist).toArray
+    for (_ <- 2 to coarseIters) {
+      val assigned = rows.map(r => nearestCentroid(r._2, cents, 4))
+      cents = decimalMeans(cents.map(_._1), dim,
+        rows.indices.iterator.map(i => (assigned(i), rows(i)._2, 0)))
+    }
+    cents = cents.sortBy(_._1)
+    val owner = rows.map(r => nearestCentroid(r._2, cents, 6))
+    val resid = rows.indices.map { i =>
+      val (x, ce) = (rows(i)._2, cents(owner(i))._2)
+      Array.tabulate(dim)(j => x(j) - ce(j))
+    }
+    val seeds = rows.indices
+      .filter(i => rows(i)._1 != cents(owner(i))._1)
+      .sortBy(i => seedOrder(rows(i)._1))
+      .take(ksub)
+    var cb: Array[Array[(Long, Array[Double])]] = Array.tabulate(m)(s =>
+      seeds.map(i => (rows(i)._1, resid(i).slice(s * dsub, s * dsub + dsub)))
+        .sortBy(_._1).toArray)
+    for (_ <- 1 to iters)
+      cb = Array.tabulate(m) { s =>
+        if (cb(s).isEmpty) cb(s)
+        else decimalMeans(cb(s).map(_._1), dsub, resid.iterator.map(r =>
+          (nearestCell(r, s * dsub, cb(s)), r, s * dsub)))
+      }
+    val centDf = cents.toSeq.map(t => (t._1, t._2.toSeq))
+      .toDF("coarse_id", "c_emb")
+    val cbDf = cb.toSeq.zipWithIndex.flatMap { case (cs, s) =>
+      cs.map(t => (s, t._1, t._2.toSeq)) }.toDF("sub", "cell", "c_sv")
+    val codeRows = c.parts.map(_.flatMap { case (id, x) =>
+      val (cid, cells) = encodeRow(x, cents, cb, dsub)
+      cells.indices.map(s => Row(id, s, cells(s), cid))
+    })
+    val codesSchema = StructType(Seq(
+      StructField("vec_id", LongType, vecIdNullable),
+      StructField("sub", IntegerType, nullable = false),
+      StructField("cell", LongType),
+      StructField("coarse_id", LongType)))
+    val codesDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(codeRows, codeRows.length)
+        .flatMap(rs => rs),
+      codesSchema)
+    (centDf, cbDf, codesDf)
+  }
+
+  /** One Lloyd update on the driver: per-cell means of the member
+    * slices `(cell index, vector, offset)` over `len` dims, each
+    * `sum(decimal(38,18)).cast(double) / count` exactly as the engine
+    * aggregates it; cells with no member drop out (ids kept in order).
+    */
+  private def decimalMeans(ids: Array[Long], len: Int,
+      members: Iterator[(Int, Array[Double], Int)])
+      : Array[(Long, Array[Double])] = {
+    val sums = Array.fill(ids.length, len)(java.math.BigDecimal.ZERO)
+    val counts = new Array[Long](ids.length)
+    members.foreach { case (k, v, off) =>
+      counts(k) += 1
+      val acc = sums(k)
+      var j = 0
+      while (j < len) { acc(j) = Pca.addDec18(acc(j), v(off + j)); j += 1 }
+    }
+    ids.indices.filter(counts(_) > 0).map(k =>
+      (ids(k), sums(k).map(_.doubleValue / counts(k).toDouble))).toArray
+  }
+
+  /** The IVF-PQ per-row encode kernel — the store's closure encode
+    * ([[VectorIndex]] past its literal valve) and the driver-built
+    * index ([[ivfPqIndexLocal]]) run this one body. A vector is `dim`
+    * doubles with any null component (or a null vector) already NaN —
+    * the literal form's codes for such rows are the same, because a
+    * null and a NaN poison a cosine or a subspace distance for EVERY
+    * candidate alike, and an all-tied argmin picks the smallest id
+    * either way. Returns (coarse_id, the m cell ids); an empty
+    * codebook encodes nothing.
+    */
+  private[ext] def encodeRow(x: Array[Double],
+      cents: Array[(Long, Array[Double])],
+      cells: Array[Array[(Long, Array[Double])]],
+      dsub: Int): (Long, Array[Long]) = {
+    val (cid, ce) = cents(nearestCentroid(x, cents, 6))
+    val resid = Array.tabulate(x.length)(i => x(i) - ce(i))
+    (cid, if (cells.exists(_.isEmpty)) Array.empty[Long]
+      else cells.indices.map(s =>
+        cells(s)(nearestCell(resid, s * dsub, cells(s)))._1).toArray)
+  }
+
+  /** Index of `x`'s nearest centroid: the minimum of (−round(cosine,
+    * `scale`), coarse_id) under the engine's double ordering
+    * ([[cmpDouble]]: NaN greatest, −0.0 == 0.0) — the literal encode's
+    * array_min, and for finite cosines ivfPqIndex's (c_sim, −id)
+    * argmax. Cosine is the [[graft.functions.CosineSimilarity]] loop
+    * verbatim (strict left-to-right, zero denominator → 0.0).
+    */
+  private[ext] def nearestCentroid(x: Array[Double],
+      cents: Array[(Long, Array[Double])], scale: Int): Int = {
+    var best = -1
+    var bestNeg = 0.0
+    var c = 0
+    while (c < cents.length) {
+      val ce = cents(c)._2
+      var dot = 0.0; var nx = 0.0; var ny = 0.0
+      var i = 0
+      val n = math.min(x.length, ce.length)
+      while (i < n) {
+        val xi = x(i); val yi = ce(i)
+        dot += xi * yi; nx += xi * xi; ny += yi * yi
+        i += 1
+      }
+      val denom = math.sqrt(nx) * math.sqrt(ny)
+      val neg = -localRound(if (denom == 0.0) 0.0 else dot / denom, scale)
+      val cmp = if (best < 0) -1 else cmpDouble(neg, bestNeg)
+      if (cmp < 0 || (cmp == 0 && cents(c)._1 < cents(best)._1)) {
+        best = c; bestNeg = neg
+      }
+      c += 1
+    }
+    best
+  }
+
+  /** Index of the cell nearest to `x(off until off + dsub)`: the minimum
+    * of (round(squared L2, 4), cell) under [[cmpDouble]] — the
+    * [[pqEncode]] / [[pqAssignInRow]] argmin; squared L2 is the
+    * [[graft.functions.L2Squared]] loop verbatim.
+    */
+  private[ext] def nearestCell(x: Array[Double], off: Int,
+                               cells: Array[(Long, Array[Double])]): Int = {
+    var best = -1
+    var bestD2 = 0.0
+    var k = 0
+    while (k < cells.length) {
+      val sv = cells(k)._2
+      var acc = 0.0
+      var i = 0
+      while (i < sv.length) {
+        val d = x(off + i) - sv(i)
+        acc += d * d
+        i += 1
+      }
+      val d2 = localRound(acc, 4)
+      val cmp = if (best < 0) -1 else cmpDouble(d2, bestD2)
+      if (cmp < 0 || (cmp == 0 && cells(k)._1 < cells(best)._1)) {
+        best = k; bestD2 = d2
+      }
+      k += 1
+    }
+    best
+  }
+
+  /** The distributed IVF-PQ trainer — [[ivfPqIndex]] past the driver
+    * cap, and for any corpus [[driverCorpus]] does not admit.
+    */
+  private[ext] def ivfPqIndexDistributed(e: DataFrame, nlist: Int, m: Int,
+                                         ksub: Int, dim: Int, iters: Int,
+                                         coarseIters: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
     val dsub = dim / m
     val centroids = coarseCentroids(e, nlist, coarseIters)
       .select(col("centroid_id").as("coarse_id"), col("c_emb"))
@@ -1659,13 +1956,14 @@ object Similarity {
     val dsub = dim / m
     val e = embeddings.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding").cast("array<double>").as("emb"))
-    val nl = if (nlist > 0) nlist else autoNlist(e.count())
-    val (centroids, cb1, codes) =
-      ivfPqIndex(e, nl, m, ksub, dim, iters, coarseIters)
+    val (nl, n) =
+      if (nlist > 0) (nlist, -1L)
+      else { val n = e.count(); (autoNlist(n), n) }
+    val ix = ivfPqIndex(e, nl, m, ksub, dim, iters, coarseIters, n)
     val q = queries.select(col("vec_id").cast("long").as("query_id"),
       col("embedding").cast("array<double>").as("emb"))
-    ivfPqRank(codes, ivfPqProbes(q, centroids, nprobe),
-      ivfPqDtable(q, cb1, m, dsub), k)
+    ivfPqRank(ix.codes, ivfPqProbes(q, ix.centroids, nprobe),
+      ivfPqDtable(q, ix.codebooks, m, dsub), k)
   }
 
   /** ANN via L hash tables of `bits` sign-bits: bucket-equality join
@@ -1713,26 +2011,6 @@ object Similarity {
                    k: Int): DataFrame =
     recallAtK(cosineTopK(embeddings, queries, k),
       annTopK(embeddings, queries, k),
-      queries.select(col("vec_id").as("query_id")))
-
-  /** PQ/ADC index graded against the exact ranking — [[annRecallAtK]]
-    * with s07's index under evaluation.
-    */
-  def pqRecallAtK(embeddings: DataFrame, queries: DataFrame,
-                  k: Int, iters: Int = 1): DataFrame =
-    recallAtK(cosineTopK(embeddings, queries, k),
-      pqTopK(embeddings, queries, k, iters = iters),
-      queries.select(col("vec_id").as("query_id")))
-
-  /** IVF-PQ index graded against the exact ranking — [[annRecallAtK]]
-    * with s08's composed index under evaluation.
-    */
-  def ivfPqRecallAtK(embeddings: DataFrame, queries: DataFrame,
-                     k: Int, iters: Int = 1,
-                     coarseIters: Int = 1): DataFrame =
-    recallAtK(cosineTopK(embeddings, queries, k),
-      ivfPqTopK(embeddings, queries, k, iters = iters,
-        coarseIters = coarseIters),
       queries.select(col("vec_id").as("query_id")))
 
   /** The metric itself, index-agnostic: per-probe fraction of the

@@ -213,21 +213,37 @@ object VectorIndex {
   private def resolveNlist(nlist: Int, n: Long): Int =
     if (nlist > 0) nlist else Similarity.autoNlist(n)
 
-  /** Bootstrap: train the coarse quantizer and residual codebooks on
-    * `embeddings` ([[Similarity.ivfPqIndex]] — ONE definition with the
-    * in-query s08) and write the full store. Overwrites any previous
-    * store at `store` (tombstones included — a rebuild starts clean);
-    * meta lands last.
-    */
   /** The power-iteration depth of the drift baseline's PCA axis —
     * MUST match the s13/s22 oracle generators' unrolled count (a
     * mismatch hash-fails the s22 oracle loudly).
     */
   private[graft] val DriftPcaIters = 4
 
+  /** Bootstrap: train the coarse quantizer and residual codebooks on
+    * `embeddings` ([[Similarity.ivfPqIndex]] — ONE definition with the
+    * in-query s08) and write the full store. Overwrites any previous
+    * store at `store` (tombstones included — a rebuild starts clean);
+    * meta lands last.
+    *
+    * A small clean corpus is trained on the driver from one bounded
+    * collect, and the drift statistics, audit row and PCA axis come
+    * from the same rows ([[localStats]]); any other corpus runs the
+    * distributed trainer and statistics. Both write identical rows
+    * with identical schemas and file counts (spec-pinned).
+    */
   def init(embeddings: DataFrame, store: String, nlist: Int = 0,
            m: Int = 8, ksub: Int = 16, dim: Int = 64, iters: Int = 1,
-           coarseIters: Int = 2): Unit = {
+           coarseIters: Int = 2): Unit =
+    init(embeddings, store, nlist, m, ksub, dim, iters, coarseIters,
+      Similarity.LitAssignMaxBytes)
+
+  /** [[init]] with the driver-training cap as a parameter: 0 forces
+    * the distributed trainer, `Long.MaxValue` admits any clean corpus.
+    */
+  private[graft] def init(embeddings: DataFrame, store: String,
+                          nlist: Int, m: Int, ksub: Int, dim: Int,
+                          iters: Int, coarseIters: Int,
+                          driverMaxBytes: Long): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = prep(embeddings)
@@ -235,29 +251,32 @@ object VectorIndex {
     try {
       val (n, s, es) = fingerprint(e)
       val nl = resolveNlist(nlist, n)
-      val (centroids, cb1, codes) =
-        Similarity.ivfPqIndex(e, nl, m, ksub, dim, iters, coarseIters)
-      centroids.write.mode("overwrite").parquet(s"$store/centroids")
-      cb1.write.mode("overwrite").parquet(s"$store/codebooks")
-      codes.write.mode("overwrite").parquet(s"$store/codes")
+      val ix = Similarity.ivfPqIndex(e, nl, m, ksub, dim, iters,
+        coarseIters, n, driverMaxBytes)
+      ix.centroids.write.mode("overwrite").parquet(s"$store/centroids")
+      ix.codebooks.write.mode("overwrite").parquet(s"$store/codebooks")
+      ix.codes.write.mode("overwrite").parquet(s"$store/codes")
       val (tp, tf) = fs(spark, s"$store/tombstones")
       tf.delete(tp, true)
       // drift stats epoch 0: the init corpus's exact decimal sums —
       // [[update]] appends one batch per admitted delta, and
-      // [[driftReportFromStats]] folds them instead of rescanning
-      driftStatsOf(e, "init")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$store/driftstats")
-      // drift baseline (the [[driftReport]] reference): the s15 audit
-      // row, and the per-dim 6-grid means + s13 PCA axis as d KB-scale
-      // rows — what a scheduled-retrain advisory compares the serving
-      // corpus against. Written BEFORE meta: a readable meta implies a
-      // complete baseline.
+      // [[driftReportFromStats]] folds them instead of rescanning.
+      // Then the drift baseline (the [[driftReport]] reference): the
+      // s15 audit row, and the per-dim 6-grid means + s13 PCA axis as
+      // d KB-scale rows — what a scheduled-retrain advisory compares
+      // the serving corpus against. Written BEFORE meta: a readable
+      // meta implies a complete baseline.
       val withEmb = e.select(col("vec_id"), col("emb").as("embedding"))
-      Similarity.embeddingAudit(withEmb)
-        .coalesce(1).write.mode("overwrite")
+      val (drift, audit, pm) = ix.corpus match {
+        case Some(c) => localStats(spark, e, withEmb, c, dim)
+        case None => (driftStatsOf(e, "init"),
+          Similarity.embeddingAudit(withEmb),
+          Pca.pcaModel(withEmb, iters = DriftPcaIters))
+      }
+      drift.coalesce(1).write.mode("overwrite")
+        .parquet(s"$store/driftstats")
+      audit.coalesce(1).write.mode("overwrite")
         .parquet(s"$store/baseline/audit")
-      val pm = Pca.pcaModel(withEmb, iters = DriftPcaIters)
       pm.mu.indices.map(i => (i, pm.mu(i), pm.v(i)))
         .toDF("i", "mu", "v")
         .coalesce(1).write.mode("overwrite")
@@ -267,6 +286,57 @@ object VectorIndex {
           "n_rows", "id_sum", "emb_sum")
         .coalesce(1).write.mode("overwrite").parquet(s"$store/meta")
     } finally e.unpersist()
+  }
+
+  /** [[init]]'s statistics from a driver-held clean corpus, as local
+    * relations with the distributed forms' schemas — each value the
+    * engine's, bit for bit:
+    *
+    *  - drift-stats dims rows: per-dim Σ decimal(38,18)(xᵢ) and the
+    *    row count ([[Pca.addDec18]]);
+    *  - the per-vector nsq = Σ decimal(xᵢ²) cast to double, shared by
+    *    the drift-stats `i = -1` row (Σ decimal(round₆ √nsq), count)
+    *    and the s15 audit row (zero-norm count, min/max/avg norm);
+    *    clean input has no non-finite component and no empty vector;
+    *  - the PCA axis: [[Pca.modelFromStats]] over the dims rows (the
+    *    same Σ decimal(xᵢ) and count [[Pca.dimSums]] aggregates) and
+    *    the moment totals of [[Pca.momentPartials]] — the fold body
+    *    [[Pca.rawMoments]] runs per partition.
+    */
+  private def localStats(spark: SparkSession, e: DataFrame,
+                         withEmb: DataFrame, c: Similarity.DriverCorpus,
+                         dim: Int): (DataFrame, DataFrame, Pca.PcaModel) = {
+    import scala.jdk.CollectionConverters._
+    val rows = c.rows
+    val n = rows.length.toLong
+    val sx = Array.fill(dim)(java.math.BigDecimal.ZERO)
+    val norms = rows.map { case (_, x) =>
+      var nsq = java.math.BigDecimal.ZERO
+      var i = 0
+      while (i < dim) {
+        sx(i) = Pca.addDec18(sx(i), x(i))
+        nsq = Pca.addDec18(nsq, x(i) * x(i))
+        i += 1
+      }
+      math.sqrt(nsq.doubleValue)
+    }
+    val normSx = norms.foldLeft(java.math.BigDecimal.ZERO)((acc, r) =>
+      Pca.addDec18(acc, Similarity.localRound(r, 6)))
+    val driftRows = (0 until dim).map(i => Row("init", i, sx(i), n)) :+
+      Row("init", -1, normSx, n)
+    val drift = spark.createDataFrame(driftRows.asJava,
+      driftStatsOf(e, "init").schema)
+    val auditRow = Row(n, dim, true, norms.count(_ == 0.0).toLong, 0L,
+      Similarity.localRound(norms.min, 6) + 0.0d,
+      Similarity.localRound(norms.max, 6) + 0.0d,
+      Similarity.localRound(normSx.doubleValue / n.toDouble, 6) + 0.0d)
+    val audit = spark.createDataFrame(Seq(auditRow).asJava,
+      Similarity.embeddingAudit(withEmb).schema)
+    val moments = Pca.momentPartials(rows.iterator.map(_._2.toSeq))
+      .map { case (i, j, s) => (i, j) -> s.get }.toMap
+    val pm = Pca.modelFromStats(
+      (0 until dim).map(i => i -> (sx(i), n)).toMap, moments, DriftPcaIters)
+    (drift, audit, pm)
   }
 
   /** ATOMIC rebuild: retrain + re-encode into a STAGED sibling
@@ -399,24 +469,26 @@ object VectorIndex {
         col("cell"), col("coarse_id"))
   }
 
-  /** Closure-based in-row encode — the same math as [[encodeLiteral]]
-    * BIT FOR BIT (spec-pinned: codes identical across both paths),
-    * with the model shipped once per executor in the task closure
-    * (TorrentBroadcast) instead of re-serialized into every task's
-    * expression tree: cosine is the [[graft.functions
-    * .CosineSimilarity]] fused loop verbatim (dot/nx/ny accumulated
-    * left-to-right, denom-zero → 0.0), rounds are the scala
-    * BigDecimal HALF_UP Spark's `round` executes, d² the
-    * [[graft.functions.L2Squared]] loop, and both tiebreaks the same
-    * (min coarse_id / min cell).
+  /** Closure-based in-row encode — the same codes as [[encodeLiteral]]
+    * for EVERY row (spec-pinned, dirty rows included), with the model
+    * shipped once per executor in the task closure (TorrentBroadcast)
+    * instead of re-serialized into every task's expression tree. Each
+    * row runs [[Similarity.encodeRow]] — the kernel the driver-built
+    * index shares: the [[graft.functions.CosineSimilarity]] and
+    * [[graft.functions.L2Squared]] loops verbatim, Spark's `round`
+    * ([[Similarity.localRound]] — NaN and ±Inf pass through) and the
+    * engine's double ordering with the (coarse_id / cell) tiebreaks. A
+    * null vector or null component enters as NaN: the literal form's
+    * NULL cosines and distances tie every candidate exactly as the NaN
+    * ones do, so both pick the smallest id.
     */
   private def encodeClosure(b: DataFrame, meta: IndexMeta,
       centroids: Array[(Long, Array[Double])],
       model: Map[(Int, Long), Array[Double]]): DataFrame = {
     val spark = b.sparkSession
     import spark.implicits._
-    val m = meta.m
-    val dsub = meta.dim / meta.m
+    val (m, dim) = (meta.m, meta.dim)
+    val dsub = dim / m
     // per-subspace cell arrays, sorted by cell id (the argmin tiebreak)
     val cells: Array[Array[(Long, Array[Double])]] =
       Array.tabulate(m)(s => model.collect {
@@ -424,55 +496,17 @@ object VectorIndex {
       }.toArray.sortBy(_._1))
     cells.zipWithIndex.foreach { case (cs, s) =>
       require(cs.nonEmpty, s"codebook has no cells for subspace $s") }
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def round4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    b.select(col("vec_id"), col("emb")).as[(Long, Array[Double])]
+    b.select(col("vec_id"), col("emb"))
       .mapPartitions { it =>
-        it.flatMap { case (id, e) =>
-          // coarse argmax: round6 cosine, tie -> smaller coarse_id
-          var bestSim = Double.NegativeInfinity
-          var bestCid = 0L
-          var bestEmb: Array[Double] = null
-          var c = 0
-          while (c < centroids.length) {
-            val (cid, ce) = centroids(c)
-            var dot = 0.0; var nx = 0.0; var ny = 0.0
-            var i = 0
-            val n = math.min(e.length, ce.length)
-            // dims are validated equal upstream; the min is belt only
-            while (i < n) {
-              val xi = e(i); val yi = ce(i)
-              dot += xi * yi; nx += xi * xi; ny += yi * yi
-              i += 1
-            }
-            val denom = math.sqrt(nx) * math.sqrt(ny)
-            val sim = round6(if (denom == 0.0) 0.0 else dot / denom)
-            if (sim > bestSim) { bestSim = sim; bestCid = cid; bestEmb = ce }
-            c += 1
-          }
-          val resid = Array.tabulate(e.length)(i => e(i) - bestEmb(i))
-          (0 until m).iterator.map { s =>
-            val cs = cells(s)
-            var bestD2 = Double.PositiveInfinity
-            var bestCell = 0L
-            var k = 0
-            while (k < cs.length) {
-              val (cell, sv) = cs(k)
-              var acc = 0.0
-              var i = 0
-              while (i < dsub) {
-                val d = resid(s * dsub + i) - sv(i)
-                acc += d * d
-                i += 1
-              }
-              val d2 = round4(acc)
-              if (d2 < bestD2) { bestD2 = d2; bestCell = cell }
-              k += 1
-            }
-            (id, s, bestCell, bestCid)
-          }
+        it.flatMap { r =>
+          val id = if (r.isNullAt(0)) None else Some(r.getLong(0))
+          // update admits only dim-long or null vectors
+          val x =
+            if (r.isNullAt(1)) Array.fill(dim)(Double.NaN)
+            else r.getSeq[Any](1).iterator.map(v =>
+              if (v == null) Double.NaN else v.asInstanceOf[Double]).toArray
+          val (cid, codes) = Similarity.encodeRow(x, centroids, cells, dsub)
+          codes.indices.iterator.map(s => (id, s, codes(s), cid))
         }
       }.toDF("vec_id", "sub", "cell", "coarse_id")
   }
@@ -1209,9 +1243,11 @@ object VectorIndex {
     val dsub = meta.dim / meta.m
     val qRows: Option[IndexedSeq[(Option[Long], Seq[Any])]] =
       if (modelFitsDriver(meta)) {
-        val collected = q.limit(Similarity.LocalFoldMaxQueryRows + 1)
-          .collect()
-        if (collected.length <= Similarity.LocalFoldMaxQueryRows)
+        // the fold materializes |Q|·m·ksub distance-table rows: cap |Q|
+        // so that stays within LocalFoldMaxQueryRows
+        val maxQ = Similarity.LocalFoldMaxQueryRows / (meta.m * meta.ksub)
+        val collected = q.limit(maxQ + 1).collect()
+        if (collected.length <= maxQ)
           Some(collected.toIndexedSeq.map(r =>
             (if (r.isNullAt(0)) None else Some(r.getLong(0)),
               if (r.isNullAt(1)) null else r.getSeq[Any](1))))

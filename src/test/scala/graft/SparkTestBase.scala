@@ -49,10 +49,18 @@ abstract class SparkTestBase extends AnyFunSuite {
     * a job group; a sentinel job in a second group flushes the ordered
     * listener bus, so every job the body started has been counted.
     */
-  def jobsDuring(body: => Unit): Seq[Option[String]] = {
+  def jobsDuring(body: => Unit): Seq[Option[String]] =
+    jobSitesDuring(body).map(_._1)
+
+  /** [[jobsDuring]] with each job's call site — its result stage's
+    * name, e.g. `collect at Similarity.scala:1600`, the first frame
+    * outside Spark that started it.
+    */
+  def jobSitesDuring(body: => Unit): Seq[(Option[String], String)] = {
     val id = java.util.UUID.randomUUID().toString
     val (group, sentinel) = (s"jobs-$id", s"sentinel-$id")
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val jobs =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Option[String], String)]()
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -60,8 +68,9 @@ abstract class SparkTestBase extends AnyFunSuite {
         val props = Option(e.properties)
         props.map(_.getProperty("spark.jobGroup.id")) match {
           case Some(`group`) =>
-            jobs.add(props.flatMap(p =>
-              Option(p.getProperty("spark.sql.execution.id")))); ()
+            jobs.add((props.flatMap(p =>
+                Option(p.getProperty("spark.sql.execution.id"))),
+              e.stageInfos.maxBy(_.stageId).name)); ()
           case Some(`sentinel`) => sentinelSeen.countDown()
           case _ => ()
         }

@@ -107,9 +107,9 @@ class SimilaritySpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
     val qs = df.filter($"vec_id" < 6)
     for ((name, graded, index) <- Seq(
-      ("pq", Similarity.pqRecallAtK(df, qs, 3),
+      ("pq", SimilarityTwins.pqRecallAtK(df, qs, 3),
         Similarity.pqTopK(df, qs, 3)),
-      ("ivfpq", Similarity.ivfPqRecallAtK(df, qs, 3),
+      ("ivfpq", SimilarityTwins.ivfPqRecallAtK(df, qs, 3),
         Similarity.ivfPqTopK(df, qs, 3)))) {
       val got = graded.collect()
         .map(r => r.getAs[Long]("query_id") ->
@@ -175,7 +175,7 @@ class SimilaritySpec extends SparkTestBase {
     // converged codebook beats the single-pass one on this corpus
     val qs = df.filter($"vec_id" < 12)
     def meanRecall(iters: Int): Double =
-      Similarity.pqRecallAtK(df, qs, 5, iters = iters)
+      SimilarityTwins.pqRecallAtK(df, qs, 5, iters = iters)
         .agg(avg(col("recall"))).head.getDouble(0)
     val (r1, r10) = (meanRecall(1), meanRecall(10))
     assert(r10 > r1, s"recall did not improve with training: $r1 -> $r10")
@@ -987,7 +987,7 @@ class SimilaritySpec extends SparkTestBase {
       .select(col("vec_id").cast("long"), col("codes"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-    val distributed = Similarity.pqCodesDistributed(emb)
+    val distributed = SimilarityTwins.pqCodesDistributed(emb)
       .groupBy(col("vec_id"))
       .agg(transform(
         array_sort(collect_list(struct(col("sub"), col("cell")))),
@@ -2026,5 +2026,40 @@ class SimilaritySpec extends SparkTestBase {
     assert(rows2(1L).width == 10 && rows2(1L).color_type == 2)
     assert(rows2(2L).width == 0 && rows2(2L).n_bytes == 20L,
       "corrupt payload did not zero its facts row")
+  }
+
+  test("localRound's fast path == Spark's round (HALF_UP on the shortest " +
+    "decimal form) on half-way, near-half, signed-zero, huge and " +
+    "non-finite values at scales 0, 4 and 6") {
+    def mix(s: Long, j: Int): Double = {
+      var z = s * 64 + j + 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      ((z ^ (z >>> 31)) >>> 11).toDouble / (1L << 53) - 0.5
+    }
+    val ulp = java.lang.Math.ulp(0.5)
+    val edges = Seq(0.0, -0.0, 0.5, -0.5, 1.5, -2.5, 0.49999999999999994,
+      -0.49999999999999994, 0.5 + ulp, 0.5 - ulp / 2, 0.00015, -0.00015,
+      0.00005, 1.23455, -1.23455, 2.0000005, 0.0000005, 0.12345650000000001,
+      1e15 + 0.5, 4503599627370495.5, 4503599627370496.0, 999999999.5,
+      1e9 + 0.5, 1e300, -1e300, Double.MinPositiveValue, Double.MaxValue,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    // random magnitudes, values a hair off every half-way point, and
+    // exact half-way points on each scale's grid
+    val noise = (0L until 20000L).flatMap { i =>
+      val x = mix(i, 7) * math.pow(10, (i % 19).toDouble - 8)
+      val h = (math.floor(mix(i, 3) * 1e6) + 0.5) / 1e6
+      Seq(x, h, math.nextUp(h), math.nextDown(h), h * 100, h / 100)
+    }
+    for (scale <- Seq(0, 4, 6); x <- edges ++ noise) {
+      val got = Similarity.localRound(x, scale)
+      val want =
+        if (x.isNaN || x.isInfinite) x
+        else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
+          .toDouble
+      assert(java.lang.Double.doubleToRawLongBits(got) ==
+        java.lang.Double.doubleToRawLongBits(want),
+        s"localRound($x, $scale) = $got, Spark's round gives $want")
+    }
   }
 }

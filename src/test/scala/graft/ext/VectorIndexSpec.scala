@@ -53,6 +53,33 @@ class VectorIndexSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSet
     assert(clo == initCodes,
       "closure-path in-row codes diverged from the distributed init")
+    // rows update admits but training never sees — NaN, ±Inf, a null
+    // component, a null vector, a null id: both forms give the same
+    // codes (NaN cosines and distances pass Spark's round unrounded)
+    val dirty = {
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val base = e.filter(col("vec_id") < 5).orderBy("vec_id")
+        .select(col("embedding").cast("array<double>")).collect()
+        .map(_.getSeq[Double](0))
+      def poke(v: Seq[Double], at: Int, x: Any): Seq[Any] = v.updated(at, x)
+      spark.createDataFrame(Seq(
+        Row(800001L, poke(base(0), 3, Double.NaN)),
+        Row(800002L, poke(base(1), 17, Double.PositiveInfinity)),
+        Row(800003L, poke(base(2), 63, Double.NegativeInfinity)),
+        Row(800004L, poke(base(3), 40, null)),
+        Row(800005L, null),
+        Row(null, base(4))).asJava,
+        StructType(Seq(StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(DoubleType)))))
+    }
+    val dirtyLit = VectorIndex.encodeForStore(spark, st, dirty,
+      litMaxBytes = Long.MaxValue).collect().map(_.toSeq.toString).toSet
+    val dirtyClo = VectorIndex.encodeForStore(spark, st, dirty,
+      litMaxBytes = 0L).collect().map(_.toSeq.toString).toSet
+    assert(dirtyLit.size == 6 * 8 && dirtyClo == dirtyLit,
+      s"dirty rows: literal $dirtyLit, closure $dirtyClo")
     // id immutability: a replayed batch (same ids) appends nothing —
     // and neither does a re-presented id with a CHANGED embedding
     // (the divergent-code-set corruption class)
@@ -851,5 +878,212 @@ class VectorIndexSpec extends SparkTestBase {
       VectorIndex.compact(spark, none)
     }
     assert(ce.getMessage.contains("no vector index store"))
+  }
+
+  private val StoreDirs = Seq("centroids", "codebooks", "codes",
+    "driftstats", "baseline/audit", "baseline/axis", "meta")
+
+  /** A store dir as written: its rows (as exact strings, sorted), the
+    * writer's StructType from each data file's footer, and its data
+    * file count.
+    */
+  private def dirState(dir: String): (Seq[String], Set[String], Int) = {
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schemas = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), conf))
+      try r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally r.close()
+    }.toSet
+    (spark.read.parquet(dir).collect().map(_.toSeq.toString).toSeq.sorted,
+      schemas, files.length)
+  }
+
+  private type Jobs = Seq[(Option[String], String)]
+
+  /** Init `corpus` with the driver trainer forced on and off; returns
+    * the two stores and each init's jobs (execution id, call site).
+    */
+  private def initBothWays(corpus: DataFrame, prefix: String, nlist: Int,
+                           m: Int, ksub: Int, dim: Int, iters: Int,
+                           coarseIters: Int): (String, String, Jobs, Jobs) = {
+    val (onSt, offSt) = (store(s"$prefix-on"), store(s"$prefix-off"))
+    def run(st: String, cap: Long): Jobs = jobSitesDuring {
+      VectorIndex.init(corpus, st, nlist, m, ksub, dim, iters, coarseIters,
+        cap)
+    }
+    (onSt, offSt, run(onSt, Long.MaxValue), run(offSt, 0L))
+  }
+
+  private def assertSameStore(on: String, off: String, what: String): Unit =
+    for (d <- StoreDirs) {
+      val (onRows, onSchemas, onFiles) = dirState(s"$on/$d")
+      val (offRows, offSchemas, offFiles) = dirState(s"$off/$d")
+      assert(onRows == offRows, s"$what: $d rows differ")
+      assert(onSchemas == offSchemas && onSchemas.size == 1,
+        s"$what: $d written as $onSchemas, distributed $offSchemas")
+      assert(onFiles == offFiles,
+        s"$what: $d has $onFiles files, distributed $offFiles")
+    }
+
+  /** The init jobs at training and PCA call sites: every job in
+    * Pca.scala, and every Similarity.scala job but the one bounded
+    * corpus collect (the Similarity.scala site that ran first).
+    */
+  private def trainingJobs(jobs: Jobs): Seq[String] = {
+    val sim = jobs.map(_._2).filter(_.contains("Similarity.scala"))
+    jobs.map(_._2).filter(site => site.contains("Pca.scala") ||
+      (site.contains("Similarity.scala") && !sim.headOption.contains(site)))
+  }
+
+  test("a driver-built store == the distributed store dir for dir: " +
+    "rows, writer schema and file count, with no training or PCA job") {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sf0001)
+    def mix(s: Long, j: Int): Double = {
+      var z = s * 64 + j + 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      ((z ^ (z >>> 31)) >>> 11).toDouble / (1L << 53) - 0.5
+    }
+    // every vector a coarse seed; each vector of 0..5 has a twin at
+    // id + 10 (a cosine tie the smaller id wins, so the twin's cell
+    // attracts nothing) and the twins' near-zero residuals tie in PQ,
+    // so PQ cells empty too; 20 is the zero vector
+    val ties = ((0L until 6L).flatMap { i =>
+      val v = Seq.tabulate(16)(j => mix(i, j))
+      Seq((i, v), (i + 10, v))
+    } :+ ((20L, Seq.fill(16)(0.0)))).toDF("vec_id", "embedding")
+    val big = (0 until 50).map { k =>
+      (k.toLong, Seq.tabulate(64)(i => 1e5 + k * 0.3 + i * 0.01))
+    }.toDF("vec_id", "embedding")
+    for ((what, corpus, nlist, m, ksub, dim) <- Seq(
+        ("sf0.001", e, 0, 8, 16, 64),
+        ("repartition(3)", e.repartition(3), 0, 8, 16, 64),
+        ("ties, empty cells, zero vector", ties, 13, 4, 4, 16),
+        ("huge magnitudes", big.repartition(3), 0, 8, 16, 64))) {
+      val (on, off, jobs, _) = initBothWays(corpus, "vidx-drv", nlist, m,
+        ksub, dim, iters = 2, coarseIters = 2)
+      assertSameStore(on, off, what)
+      assert(trainingJobs(jobs).isEmpty,
+        s"$what: the driver-path init ran training or PCA jobs: $jobs")
+      if (what.startsWith("ties")) {
+        val cents = spark.read.parquet(s"$on/centroids").count()
+        val cells = spark.read.parquet(s"$on/codebooks").count()
+        assert(cents < 13 && cells < 4 * 4,
+          s"the ties corpus left no empty cell: $cents centroids, " +
+            s"$cells codebook cells")
+      }
+    }
+  }
+
+  test("the driver-path init runs one collect and the writes: no " +
+    "execution at a training or PCA call site") {
+    val e = Tables.embeddings(spark, sf0001)
+    val (on, off, jobs, offJobs) = initBothWays(e, "vidx-jobs", 0, 8, 16,
+      64, iters = 1, coarseIters = 2)
+    assertSameStore(on, off, "sf0.001")
+    val executions = jobs.flatMap(_._1).distinct
+    // the fingerprint, the corpus collect, and seven dir writes
+    assert(executions.size == 9 && jobs.forall(_._1.isDefined),
+      s"driver-path init ran ${executions.size} executions: $jobs")
+    assert(trainingJobs(jobs).isEmpty,
+      s"driver-path init ran training or PCA jobs: $jobs")
+    assert(jobs.count(_._2.contains("Similarity.scala")) <= 2,
+      s"the corpus collect took more than two jobs: $jobs")
+    val offTraining = trainingJobs(offJobs)
+    assert(offTraining.exists(_.contains("Pca.scala")) &&
+      offTraining.exists(_.contains("Similarity.scala")) &&
+      offJobs.flatMap(_._1).distinct.size > executions.size,
+      s"the forced distributed init should train with Spark: $offJobs")
+  }
+
+  test("a corpus one row past the cap, or a dirty one, takes the " +
+    "distributed path and gives today's result") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val e = Tables.embeddings(spark, sf0001)
+    val n = e.count()
+    val rowBytes = 8L + 8L * 64
+    val prepped = e.select(col("vec_id").cast("long").as("vec_id"),
+      col("embedding").cast("array<double>").as("emb"))
+    // the collect itself bounds the corpus (no known row count)
+    assert(Similarity.driverCorpus(prepped, 64, n * rowBytes)
+      .exists(_.rows.size == n))
+    assert(Similarity.driverCorpus(prepped, 64, n * rowBytes - 1).isEmpty)
+    val (atCap, pastCap) = (store("vidx-cap-at"), store("vidx-cap-past"))
+    val atJobs = jobSitesDuring {
+      VectorIndex.init(e, atCap, 0, 8, 16, 64, 1, 2, n * rowBytes)
+    }
+    val pastJobs = jobSitesDuring {
+      VectorIndex.init(e, pastCap, 0, 8, 16, 64, 1, 2, n * rowBytes - 1)
+    }
+    assert(trainingJobs(atJobs).isEmpty, s"at the cap: $atJobs")
+    assert(trainingJobs(pastJobs).exists(_.contains("Pca.scala")),
+      s"one row past the cap should train with Spark: $pastJobs")
+    assertSameStore(atCap, pastCap, "at vs one row past the cap")
+
+    val small = e.filter(col("vec_id") < 60)
+      .select(col("vec_id").cast("long"),
+        col("embedding").cast("array<double>"))
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+    def corpus(at: Int, emb: Seq[Double] => Any): DataFrame =
+      spark.createDataFrame(small.toSeq.map { case (id, v) =>
+        Row(id, if (id == at) emb(v) else v) }.asJava,
+        StructType(Seq(StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(DoubleType)))))
+    val dupIds = corpus(-1, v => v).union(corpus(-1, v => v).limit(1))
+    for ((what, dirty) <- Seq(
+        "NaN" -> corpus(7, _.updated(5, Double.NaN)),
+        "+Inf" -> corpus(8, _.updated(0, Double.PositiveInfinity)),
+        "-Inf" -> corpus(9, _.updated(63, Double.NegativeInfinity)),
+        "null element" -> corpus(10, _.updated(20, null)),
+        "null embedding" -> corpus(11, _ => null),
+        "duplicate id" -> dupIds)) {
+      assert(Similarity.driverCorpus(dirty.select(col("vec_id"),
+          col("embedding").as("emb")), 64, Long.MaxValue).isEmpty,
+        s"$what: a dirty corpus was admitted to the driver path")
+      val (on, off) = (store("vidx-dirty-on"), store("vidx-dirty-off"))
+      def outcome(st: String, cap: Long): Either[String, Seq[Any]] =
+        scala.util.Try(
+          VectorIndex.init(dirty, st, 4, 8, 16, 64, 1, 2, cap)).toEither
+          .left.map {
+            case t: org.apache.spark.SparkThrowable
+                if t.getCondition != null =>
+              s"${t.getCondition} ${t.getMessageParameters}"
+            case t => s"${t.getClass.getName}: ${t.getMessage}"
+          }
+          .map(_ => StoreDirs.map(d => dirState(s"$st/$d")))
+      assert(outcome(on, Long.MaxValue) == outcome(off, 0L),
+        s"$what: the uncapped init differs from today's distributed one")
+    }
+  }
+
+  test("a query set one row past |Q|·m·ksub ≤ LocalFoldMaxQueryRows " +
+    "takes the distributed form and ranks the same") {
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-qcap")
+    VectorIndex.init(e, st, ksub = 64, coarseIters = 2)
+    val cap = Similarity.LocalFoldMaxQueryRows / (8 * 64)
+    val (past, at, last) = (localVectors(e, cap + 1), localVectors(e, cap),
+      localVectors(e, cap + 1).filter(col("vec_id") === cap))
+    def plan(q: DataFrame): String =
+      VectorIndex.query(spark, st, q, k = 3).queryExecution
+        .executedPlan.toString
+    assert(plan(past).contains("posexplode"),
+      s"|Q| = ${cap + 1} should take the distributed dtable:\n${plan(past)}")
+    assert(!plan(at).contains("posexplode"),
+      s"|Q| = $cap should fold on the driver:\n${plan(at)}")
+    assert(sortedRows(VectorIndex.query(spark, st, past, k = 3)) ==
+      (sortedRows(VectorIndex.query(spark, st, at, k = 3)) ++
+        sortedRows(VectorIndex.query(spark, st, last, k = 3)))
+        .sortBy(_.toString),
+      "the distributed form ranked differently from the driver fold")
   }
 }
