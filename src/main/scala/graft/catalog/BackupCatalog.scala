@@ -2,9 +2,19 @@ package graft.catalog
 
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.OutputFile
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.internal.SQLConf
 import graft.engine.DirSnapshot
 
 /** Parquet-backed backup-metadata catalog — the Spark-native stand-in
@@ -20,11 +30,15 @@ import graft.engine.DirSnapshot
   * plus the names of the committed part files they came from. A read
   * lists each log it touches once; an unchanged listing serves the
   * snapshot, and any other listing (an append or compaction by another
-  * instance or process) reloads that log whole. Reads are
-  * `spark.createDataset(snapshot)` fed to the shared [[CatalogOps]]
-  * predicates, so a warm lookup runs no Spark job.
+  * instance or process) reloads that log whole. The DataFrame reads
+  * are `spark.createDataset(snapshot)` fed to the shared [[CatalogOps]]
+  * predicates; the lookups a table job makes ([[exists]],
+  * [[sessionStarted]], [[tableNames]], [[lastEndTimes]]) apply the
+  * same predicates to the snapshot rows in Scala. So a warm read runs
+  * no Spark job.
   *
-  * Concurrency: an append writes exactly one part file into a private
+  * Concurrency: an append writes exactly one part file from the driver
+  * ([[BackupCatalog.writePart]], no Spark job) into a private
   * `<root>/_staging/<uuid>` dir with no lock held, then renames it into
   * its log under the instance lock and the JVM-wide
   * [[graft.engine.Compactor.swapLock]] and adds its rows to the
@@ -66,15 +80,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * not yet visible in their log.
     */
   private final class Staged[T](log: DirSnapshot[T], val dir: String,
-                                rows: Seq[T]) {
-    private val part: Path = {
-      val parts = fs.listStatus(new Path(dir))
-        .filter(DirSnapshot.isCommitted)
-      require(parts.length == 1,
-        s"staged append in $dir wrote ${parts.length} part files, not 1")
-      parts.head.getPath
-    }
-
+                                part: Path, rows: Seq[T]) {
     /** Rename the part file into its log and add its rows to the
       * snapshot. Caller holds the instance lock.
       */
@@ -100,12 +106,14 @@ final class BackupCatalog(spark: SparkSession, root: String,
     inFlight.remove(p.getName)
   }
 
+  /** `rows` as one part file in a fresh staging dir, written by the
+    * driver ([[BackupCatalog.writePart]]): an append runs no Spark job.
+    */
   private def stage[T](log: DirSnapshot[T], rows: Seq[T]): Staged[T] = {
     val dir = newStagingDir()
-    try {
-      spark.createDataset(rows)(log.enc).coalesce(1).write.parquet(dir)
-      new Staged(log, dir, rows)
-    } catch { case e: Throwable => unstage(dir); throw e }
+    try new Staged(log, dir, BackupCatalog.writePart(spark, dir, rows)(log.enc),
+      rows)
+    catch { case e: Throwable => unstage(dir); throw e }
   }
 
   /** Write each batch to staging with no lock held, then publish them
@@ -358,22 +366,36 @@ final class BackupCatalog(spark: SparkSession, root: String,
   def sessionInfo(mode: String, pattern: String): DataFrame =
     CatalogOps.sessionInfo(sessions.toDF(), mode, pattern)
 
+  // The lookups below answer from the snapshot rows in Scala, with the
+  // same predicates as their CatalogOps forms, so they run no Spark job.
+
   def sessionStarted(mode: String, cluster: String, sessionName: String,
                      destRoot: String): Boolean =
-    !CatalogOps.sessionStarted(sessions.toDF(), mode, cluster,
-      sessionName, destRoot).limit(1).isEmpty
+    sessionRows.exists(s => s.mode == mode && s.cluster_name == cluster &&
+      s.session_name == sessionName && s.dest_root == destRoot)
 
   def listTableInfo(mode: String, sessionName: String,
                     tablePattern: String): DataFrame =
     CatalogOps.listTableInfo(tables.toDF(), mode, sessionName, tablePattern)
 
+  /** [[CatalogOps.tableNames]]: the table names recorded under the
+    * sessions matching `sessionPattern` whose session row has
+    * `dest_root == destRoot`, sorted.
+    */
   def tableNames(mode: String, sessionPattern: String,
-                 destRoot: String): Seq[String] =
-    CatalogOps.tableNames(tables.toDF(), sessions.toDF(), mode,
-      sessionPattern, destRoot).as[String].collect().toSeq.sorted
+                 destRoot: String): Seq[String] = {
+    val inRoot = sessionRows.iterator.filter(_.dest_root == destRoot)
+      .map(s => (s.mode, s.session_name)).toSet
+    val matches = CatalogOps.nameMatcher(sessionPattern)
+    tableRows.iterator
+      .filter(t => t.mode == mode && matches(t.session_name) &&
+        inRoot((t.mode, t.session_name)))
+      .map(_.table_name).toSeq.distinct.sorted
+  }
 
   def exists(mode: String, tableName: String, sessionName: String): Boolean =
-    CatalogOps.exists(tables.toDF(), mode, tableName, sessionName)
+    tableRows.exists(t => t.mode == mode && t.table_name == tableName &&
+      t.session_name == sessionName)
 
   def columnDescriptorRows(sessionName: String,
                            tableName: String): Seq[ColumnDescriptor] =
@@ -382,12 +404,15 @@ final class BackupCatalog(spark: SparkSession, root: String,
     descriptorRows.filter(d => d.session_name == sessionName &&
       d.table_name == tableName).distinct.sortBy(_.ordinal)
 
-  def lastEndTime(mode: String, tableName: String): Long = {
-    val rows = CatalogOps.lastEndTimes(tables.toDF(), mode)
-      .filter(col("table_name") === tableName)
-      .collect()
-    if (rows.isEmpty) 0L else rows(0).getAs[Long]("last_end")
-  }
+  /** [[CatalogOps.lastEndTimes]] as a map: each table's greatest
+    * recorded `end_time` over its non-error rows of `mode`.
+    */
+  def lastEndTimes(mode: String): Map[String, Long] =
+    tableRows.filter(t => t.mode == mode && !t.error)
+      .groupMapReduce(_.table_name)(_.end_time)(math.max)
+
+  def lastEndTime(mode: String, tableName: String): Long =
+    lastEndTimes(mode).getOrElse(tableName, 0L)
 }
 
 object BackupCatalog {
@@ -395,4 +420,41 @@ object BackupCatalog {
     * this JVM — the ones [[BackupCatalog.compactAll]] must not clear.
     */
   private val inFlight = ConcurrentHashMap.newKeySet[String]()
+
+  /** Write `rows` from the driver as one parquet part file in `dir`,
+    * named as a Spark task names its file, and return its path. Spark's
+    * own parquet write setup ([[ParquetFileFormat.prepareWrite]]: the
+    * row schema, timestamp and legacy-format settings, the session's
+    * codec) drives parquet-hadoop's writer with Spark's
+    * [[ParquetWriteSupport]], fed by the encoder's serializer, so the
+    * file carries the same parquet schema and Spark row-schema footer
+    * metadata as a one-task Spark write of the same rows, and reads
+    * back as the same StructType — without a Spark job.
+    */
+  private[catalog] def writePart[T](spark: SparkSession, dir: String,
+                                    rows: Seq[T])(implicit enc: Encoder[T])
+      : Path = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, enc.schema)
+    val conf = job.getConfiguration
+    val codec = CompressionCodecName.fromConf(
+      conf.get(ParquetOutputFormat.COMPRESSION))
+    val part = new Path(dir,
+      s"part-00000-${new Path(dir).getName}-c000${codec.getExtension}.parquet")
+    val toRow = encoderFor(enc).createSerializer()
+    val writer = SQLConf.withExistingConf(spark.sessionState.conf) {
+      new PartWriter(HadoopOutputFile.fromPath(part, conf))
+        .withConf(conf).withCompressionCodec(codec).build()
+    }
+    try rows.foreach(r => writer.write(toRow(r)))
+    finally writer.close()
+    part
+  }
+
+  private final class PartWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, PartWriter](file) {
+    override def self(): PartWriter = this
+    override def getWriteSupport(conf: Configuration)
+        : WriteSupport[InternalRow] = new ParquetWriteSupport()
+  }
 }

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.functions._
 
 /** Pure DataFrame→DataFrame catalog query logic, shared by the
@@ -21,6 +22,18 @@ object CatalogOps {
     */
   def nameFilter(c: Column, pattern: String): Column =
     if (pattern.contains("%")) c.like(pattern) else c === pattern
+
+  /** [[nameFilter]] as a predicate over driver-held names: the same
+    * dispatch, with LIKE compiled by Spark's own `escapeLikeRegex`
+    * (escape `\`), so `%`, `_` and escapes match as `Column.like`
+    * does. A null name matches nothing, as the filter drops it.
+    */
+  def nameMatcher(pattern: String): String => Boolean =
+    if (pattern.contains("%")) {
+      val re = java.util.regex.Pattern.compile(
+        StringUtils.escapeLikeRegex(pattern, '\\'))
+      n => n != null && re.matcher(n).matches()
+    } else n => n != null && n == pattern
 
   /** P1/P4 — session lookup by name or %-pattern (mysql.rb:346-353). */
   def sessionInfo(sessions: DataFrame, mode: String,

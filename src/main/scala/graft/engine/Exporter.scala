@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.catalog.{BackupCatalog, ColumnDescriptor, TableRecord}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -135,20 +135,27 @@ object Exporter {
     outcome
   }
 
-  /** The data half of an export attempt: probe → scan → cap → write →
-    * count → sidecar. NO catalog writes — everything here is
+  /** The data half of an export attempt: probe → scan → cap →
+    * write (counted) → sidecar. NO catalog writes — everything here is
     * Overwrite-idempotent, so the retry loop may safely re-run it after
     * any partial failure. Returns the outcome plus the discovered
     * descriptor rows for [[recordExportOutcome]].
+    *
+    * The probe reads the source's parquet footers on the driver, and a
+    * parquet export takes its integrity counts from its own write
+    * ([[writeCounted]]), so a parquet export's only SQL execution is
+    * the write. csv/json/orc exports count a schema-pinned FAILFAST
+    * read-back of the written files instead: for them the parse is the
+    * check.
     */
   def exportTableData(spark: SparkSession, spec: ExportSpec,
                       sessionName: String,
                       destRoot: String): (Outcome, Seq[ColumnDescriptor]) = {
       val src = spark.read.parquet(spec.srcPath)
       val descs = descriptorRows(src, sessionName, spec.table)
-      // S5 empty-table short-circuit (worker.rb:89,95-99): LocalLimit(1)
-      // probe instead of launching the full job.
-      if (src.limit(1).isEmpty)
+      // S5 empty-table short-circuit (worker.rb:89,95-99): the footers'
+      // row counts decide, up to the first non-empty file, without a job
+      if (TableOps.parquetIsEmpty(spark, spec.srcPath))
         (Empty(spec.table), descs.map(_.copy(n_nulls = 0L)))
       else {
         val windowed = spec.tsCol match {
@@ -158,22 +165,27 @@ object Exporter {
           case None => src
         }
         val dest = destPath(destRoot, sessionName, spec.table)
-        val writer0 = windowed.write.mode(SaveMode.Overwrite)
-        val writer = if (spec.partitionBy.nonEmpty)
-          writer0.partitionBy(spec.partitionBy: _*) else writer0
-        writer.format(spec.format).options(textFormatOptions).save(dest)
+        def save(df: DataFrame): Unit = {
+          val writer0 = df.write.mode(SaveMode.Overwrite)
+          val writer = if (spec.partitionBy.nonEmpty)
+            writer0.partitionBy(spec.partitionBy: _*) else writer0
+          writer.format(spec.format).options(textFormatOptions).save(dest)
+        }
         // integrity metrics the reference wants (README.textile:189-191):
-        // count what was written, post-write, from the written files —
-        // schema-pinned for the text formats (csv/json carry no types),
-        // FAILFAST so a value the pinned schema can't parse back fails
-        // the export instead of silently counting a nulled row. The same
-        // single scan folds per-column non-null counts (map-side partial
-        // agg), giving each descriptor its n_nulls — the stat a json
-        // restore later needs to tell null-omitted from lost columns.
-        val written = spark.read.schema(windowed.schema)
-          .format(spec.format)
-          .options(textReadOptions(spec.format)).load(dest)
-        val (rows, nulls) = countWithNulls(written)
+        // rows and per-column nulls — the stat a json restore later
+        // needs to tell null-omitted from lost columns
+        val (rows, nulls) =
+          if (spec.format == "parquet") writeCounted(spark, windowed, dest)(save)
+          else {
+            // counted post-write from the written files, schema-pinned
+            // (csv/json carry no types) and FAILFAST, so a value the
+            // pinned schema can't parse back fails the export instead
+            // of silently counting a nulled row
+            save(windowed)
+            countWithNulls(spark.read.schema(windowed.schema)
+              .format(spec.format)
+              .options(textReadOptions(spec.format)).load(dest))
+          }
         val descsWithNulls = descs.map(d => d.copy(n_nulls = nulls(d.name)))
         // job-log sidecar next to the data, as export.rb:167-168 —
         // underscore-prefixed so parquet readers ignore it
@@ -184,9 +196,35 @@ object Exporter {
       }
   }
 
+  /** Write `df` as parquet under `dest` through `write`, counting rows
+    * and per-column nulls in the same pass: an [[Observation]] of
+    * count(1) and each count(col) (count(col) skips nulls, so
+    * n_nulls = rows − count(col)) rides on the write plan, as the
+    * Importer counts its rows. The footers of the files the write left
+    * under `dest` must hold exactly the observed rows, so the count is
+    * still checked against what was written, at no Spark job; a
+    * mismatch fails the export.
+    */
+  private def writeCounted(spark: SparkSession, df: DataFrame, dest: String)(
+      write: DataFrame => Unit): (Long, Map[String, Long]) = {
+    val names = df.schema.fieldNames.toSeq
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows"),
+      names.indices.map(i => count(col(names(i))).as(s"c$i")): _*))
+    val m = obs.get
+    val rows = m("rows").asInstanceOf[Long]
+    val inFiles = TableOps.parquetRowCount(spark, dest)
+    if (inFiles != rows)
+      throw new IllegalStateException(
+        s"export to $dest wrote $rows rows but its files hold $inFiles")
+    (rows, names.indices
+      .map(i => names(i) -> (rows - m(s"c$i").asInstanceOf[Long])).toMap)
+  }
+
   /** One aggregation pass: total row count plus per-column null counts
     * (count(col) skips nulls, so n_nulls = rows − count(col)). A single
-    * job over the written files, all map-side partials.
+    * job over the written files, all map-side partials — the read-back
+    * check of the text and orc exports.
     */
   private[engine] def countWithNulls(df: DataFrame)
       : (Long, Map[String, Long]) = {
@@ -276,16 +314,17 @@ object Exporter {
                      nBuckets: Int): Outcome = {
     try {
       val ident = bucketedTableName(table, sessionName)
-      df.write.mode(SaveMode.Overwrite)
-        .option("path", dest)
-        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .format("parquet")
-        .saveAsTable(ident)
-      // same integrity machinery as exportTable: post-write count (with
-      // per-column nulls, one scan) from the written table, catalog
-      // record, job-log sidecar
-      val (rows, nulls) = countWithNulls(spark.table(ident))
+      // same integrity machinery as exportTable: rows and per-column
+      // nulls counted on the write, checked against the written files'
+      // footers; then the catalog record and the job-log sidecar
+      val (rows, nulls) = writeCounted(spark, df, dest) {
+        _.write.mode(SaveMode.Overwrite)
+          .option("path", dest)
+          .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+          .sortBy(bucketCols.head, bucketCols.tail: _*)
+          .format("parquet")
+          .saveAsTable(ident)
+      }
       TableOps.saveInfo(spark, s"$dest/_export_info.log",
         s"table=$table session=$sessionName rows=$rows " +
           s"bucketBy=${bucketCols.mkString(",")} buckets=$nBuckets\n")

@@ -61,32 +61,59 @@ object TableOps {
     finally out.close()
   }
 
+  /** Whether Spark's file index reads a file or dir of this name: not
+    * a `_` name without `=` (a `_SUCCESS` marker, a crashed write's
+    * `_temporary` dir, a sidecar), a `.` name (a checksum or hidden
+    * file), or a `._COPYING_` upload in flight. Partition dirs like
+    * `_k=1` are read. The same rule as Spark's listing
+    * (`HadoopFSUtils.shouldFilterOutPathName` and the file index's data
+    * path filter), applied to every name below the listed root.
+    */
+  private def sparkReads(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_"))
+
+  /** Each parquet file under `dir` that `spark.read.parquet(dir)` reads,
+    * with its footer row count, listed and opened lazily.
+    */
+  private def footerRowCounts(spark: SparkSession,
+                              dir: String): Iterator[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    def files(p: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).iterator
+        .filter(s => sparkReads(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) files(s.getPath) else Iterator(s))
+    files(path).filter(_.getPath.getName.endsWith(".parquet")).map { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromStatus(f, conf))
+      try rd.getRecordCount
+      finally rd.close()
+    }
+  }
+
   /** Row count from parquet footers only — a driver-side metadata read,
     * no Spark job and no data scan: every parquet file already carries
     * its row count. This is how sketch sizing (e10) gets its capacity
     * estimate: at production scale the number would come from the
     * catalog's export-time stats (e05 records n_rows per table); for a
     * standalone query the footer sum is the same statistic at the same
-    * (zero-job) cost. Recursive, so partitioned layouts count too.
+    * (zero-job) cost. Recursive, so partitioned layouts count too, and
+    * it counts exactly the files a reader of `dir` reads
+    * ([[sparkReads]]): a crashed write's `_temporary` part files and
+    * hidden files are not rows of the table.
     */
-  def parquetRowCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
-    var total = 0L
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, conf))
-        try total += rd.getRecordCount
-        finally rd.close()
-      }
-    }
-    total
-  }
+  def parquetRowCount(spark: SparkSession, dir: String): Long =
+    footerRowCounts(spark, dir).sum
+
+  /** Whether `spark.read.parquet(dir)` reads no row, from the footers
+    * of [[parquetRowCount]]'s files, stopping at the first non-empty
+    * one.
+    */
+  def parquetIsEmpty(spark: SparkSession, dir: String): Boolean =
+    !footerRowCounts(spark, dir).exists(_ > 0L)
 
   /** Payload-plane takedown for a purged session ([EXT], r13 — the
     * disk half of BackupCatalog.purgeSession): delete the session's

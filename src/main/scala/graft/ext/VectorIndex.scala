@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.engine.{Compactor, DirSnapshot}
@@ -186,6 +186,8 @@ object VectorIndex {
     * (terms scale ~d²/2·10⁶ per row), going inexact AND
     * partition-order-dependent — a nondeterministic fingerprint that
     * spuriously rebuilds (or, rarely, falsely serves) the store.
+    * A vector with a NaN or ±Inf component has no such term: the
+    * corpus fails with [[finiteOr]]'s error.
     */
   private def fingerprint(e: DataFrame): (Long, Long, Long) = {
     val weighted = aggregate(
@@ -193,12 +195,30 @@ object VectorIndex {
         transform(col("emb"), (_, i) => (i + 1).cast("double")),
         (x, w) => x * w),
       lit(0.0d), (acc, t) => acc + t)
+    val bad = org.apache.spark.sql.functions.exists(col("emb"), nonFinite)
     val r = e.agg(count(lit(1)).as("n"),
       coalesce(sum(col("vec_id")), lit(0L)).as("s"),
-      coalesce(sum(coalesce(round(weighted * 1e6, 0), lit(0.0d))
-        .cast("long")), lit(0L)).as("es")).collect()(0)
+      coalesce(sum(when(bad, lit(0L)).otherwise(
+        coalesce(round(weighted * 1e6, 0), lit(0.0d)).cast("long"))),
+        lit(0L)).as("es"),
+      min(when(bad, col("vec_id"))).as("bad"))
+      .select(col("n"), col("s"), finiteOr(col("bad"), col("es")).as("es"))
+      .collect()(0)
     (r.getAs[Long]("n"), r.getAs[Long]("s"), r.getAs[Long]("es"))
   }
+
+  private def nonFinite(x: Column): Column =
+    isnan(x) || abs(x) === lit(Double.PositiveInfinity)
+
+  /** `value`, or, when the aggregate `badId` (the smallest `vec_id`
+    * holding a NaN or ±Inf component) is set, an error naming that id:
+    * such a vector has no exact sum. Evaluated on an aggregate's output
+    * row, inside the aggregate's own job.
+    */
+  private def finiteOr(badId: Column, value: Column): Column =
+    when(badId.isNull, value).otherwise(raise_error(
+      concat(lit("vector index: vec_id "), badId.cast("string"),
+        lit(" has a NaN or infinite embedding component"))))
 
   private def prep(embeddings: DataFrame): DataFrame =
     embeddings.select(col("vec_id").cast("long").as("vec_id"),
@@ -618,27 +638,30 @@ object VectorIndex {
     *    [[Similarity.embeddingAudit]] pv accounting (non-finite
     *    components contribute 0 to the norm, a missing embedding is
     *    a zero-norm row), so the folded avg reproduces `avg_norm`.
+    *
+    * A NaN or ±Inf component has no decimal sum: the batch fails with
+    * [[finiteOr]]'s error, raised from the norm row's aggregate.
     */
   private def driftStatsOf(e: DataFrame, batchKey: String): DataFrame = {
+    val bad = nonFinite(col("x"))
     val dims = e
       .select(posexplode(col("emb")).as(Seq("i", "x")))
       .groupBy(col("i"))
-      .agg(sum(col("x").cast("decimal(38,18)")).as("sx"),
+      .agg(sum(when(!bad, col("x")).cast("decimal(38,18)")).as("sx"),
         count(lit(1)).as("cnt"))
-    val bad = isnan(col("x")) ||
-      col("x") === lit(Double.PositiveInfinity) ||
-      col("x") === lit(Double.NegativeInfinity)
     val nsq = e
       .select(col("vec_id"), posexplode(col("emb")).as(Seq("i", "x")))
       .groupBy(col("vec_id"))
       .agg(sum(when(bad, lit(0.0d)).otherwise(col("x") * col("x"))
-        .cast("decimal(38,18)")).cast("double").as("nsq"))
+        .cast("decimal(38,18)")).cast("double").as("nsq"),
+        max(bad).as("bad"))
     val norms = e.select(col("vec_id"))
       .join(nsq, Seq("vec_id"), "left_outer")
-      .select(coalesce(col("nsq"), lit(0.0d)).as("nsq"))
-      .agg(sum(round(sqrt(col("nsq")), 6).cast("decimal(38,18)"))
-        .as("sx"), count(lit(1)).as("cnt"))
-      .select(lit(-1).as("i"), col("sx"), col("cnt"))
+      .agg(sum(round(sqrt(coalesce(col("nsq"), lit(0.0d))), 6)
+          .cast("decimal(38,18)")).as("sx"), count(lit(1)).as("cnt"),
+        min(when(col("bad"), col("vec_id"))).as("bad_id"))
+      .select(lit(-1).as("i"), finiteOr(col("bad_id"), col("sx")).as("sx"),
+        col("cnt"))
     dims.unionByName(norms)
       .select(lit(batchKey).as("batch_key"), col("i"),
         col("sx"), col("cnt"))

@@ -32,10 +32,7 @@ object Incremental {
     */
   def planIncremental(cat: BackupCatalog, base: Seq[ExportSpec],
                       nowMs: Long): Seq[ExportSpec] = {
-    val watermarks = CatalogOps.lastEndTimes(cat.tables.toDF(), "export")
-      .collect()
-      .map(r => r.getAs[String]("table_name") -> r.getAs[Long]("last_end"))
-      .toMap
+    val watermarks = cat.lastEndTimes("export")
     base.map { spec =>
       spec.copy(startMs = watermarks.getOrElse(spec.table, 0L),
         endMs = nowMs - HotTailGuardMs)

@@ -437,6 +437,112 @@ class CatalogSpec extends SparkTestBase {
     assert(jobs.isEmpty, s"warm catalog reads ran ${jobs.size} Spark jobs")
   }
 
+  test("the record writes and lookups run no Spark job: startInfo, " +
+    "endInfo, exportedTableInfo, importedTableInfo, tableNames, " +
+    "lastEndTime, exists, sessionStarted") {
+    val cat = freshCat()
+    val jobs = jobsDuring {
+      cat.startInfo(sess)
+      cat.exportedTableInfo(rec("lineitem"), Seq(descOf("lineitem", 0)))
+      cat.exportedTableInfo(rec("orders").copy(end_time = 2000L), Nil)
+      cat.exportedTableInfo(rec("orders").copy(end_time = 3000L,
+        error = true), Nil)
+      cat.endInfo("export", sess.session_name, endedAt = 9000L)
+      cat.startInfo(sess.copy(mode = "import"))
+      cat.importedTableInfo(rec("lineitem").copy(mode = "import"))
+      assert(cat.tableNames("export", "%", sess.dest_root) ==
+        Seq("lineitem", "orders"))
+      assert(cat.tableNames("import", sess.session_name, sess.dest_root) ==
+        Seq("lineitem"))
+      assert(cat.lastEndTime("export", "orders") == 2000L)
+      assert(cat.lastEndTime("export", "nope") == 0L)
+      assert(cat.exists("import", "lineitem", sess.session_name))
+      assert(cat.sessionStarted("export", sess.cluster_name,
+        sess.session_name, sess.dest_root))
+      assert(!cat.sessionStarted("export", "other", sess.session_name,
+        sess.dest_root))
+    }
+    assert(jobs.isEmpty, s"catalog records and lookups ran ${jobs.size} " +
+      s"Spark jobs: $jobs")
+  }
+
+  test("a driver-staged part file reads back as a Spark-written one: " +
+    "rows, StructType and Spark row-schema footer metadata") {
+    import spark.implicits._
+    import org.apache.spark.sql.Encoder
+    def footer(dir: String): (String, Map[String, String]) = {
+      val f = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq
+      assert(f.size == 1, s"$dir holds ${f.size} part files")
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.head.toString),
+          spark.sessionState.newHadoopConf()))
+      try {
+        val meta = rd.getFooter.getFileMetaData
+        import scala.jdk.CollectionConverters._
+        (meta.getSchema.toString, meta.getKeyValueMetaData.asScala.toMap
+          .filter(_._1.startsWith("org.apache.spark.")))
+      } finally rd.close()
+    }
+    def same[T: Encoder](what: String, rows: Seq[T]): Unit = {
+      val (driver, sparkDir) = (tmpDir("staged") + "/d",
+        tmpDir("written") + "/s")
+      new java.io.File(driver).mkdirs()
+      BackupCatalog.writePart(spark, driver, rows)
+      spark.createDataset(rows).coalesce(1).write.parquet(sparkDir)
+      val (a, b) = (spark.read.parquet(driver), spark.read.parquet(sparkDir))
+      assert(a.schema == b.schema, s"$what: StructType differs")
+      assert(a.as[T].collect().toSeq.map(_.toString).sorted ==
+        b.as[T].collect().toSeq.map(_.toString).sorted, s"$what: rows differ")
+      val ((ps, pm), (qs, qm)) = (footer(driver), footer(sparkDir))
+      assert(pm.contains("org.apache.spark.sql.parquet.row.metadata"))
+      assert(pm == qm, s"$what: Spark footer metadata differs")
+      assert(ps == qs, s"$what: parquet schema differs")
+    }
+    same("sessions", Seq(sess, sess.copy(session_name = "s2",
+      error = true, error_info = "boom\u00e9")))
+    same("tables", Seq(rec("lineitem"), rec("orders").copy(row_count = -1L)))
+    same("descriptors", Seq(descOf("lineitem", 0), descOf("lineitem", 1)
+      .copy(n_nulls = 7L)))
+    same("purges", Seq(PurgeRecord("export", "s1", 5L)))
+    same("one null string", Seq(rec("x").copy(error_info = null)))
+  }
+
+  test("snapshot tableNames, exists and lastEndTime == their CatalogOps " +
+    "forms on LIKE patterns with %, _, an escaped \\% and regex " +
+    "metacharacters") {
+    val cat = freshCat()
+    val names = Seq("2024_01", "2024x01", "50%off", "50xoff", "a.b(c)",
+      "aXb(c)", "a+b", "aab", "[x]y", "x", "s$1", "s^1", "back\\slash",
+      "é_ü")
+    val root = sess.dest_root
+    names.zipWithIndex.foreach { case (n, i) =>
+      cat.startInfo(sess.copy(session_name = n,
+        dest_root = if (i == 3) "file:///other/" else root))
+      cat.exportedTableInfo(rec(s"t$i", n).copy(end_time = 100L * i), Nil)
+      cat.exportedTableInfo(rec("shared", n).copy(end_time = 10L * i,
+        error = i == names.size - 1), Nil)
+    }
+    val patterns = Seq("%", "2024_01%", "2024_01", "2024%", "50\\%%",
+      "50%", "%\\%%", "a.b(c)%", "a.b(c)", "a+%", "%)", "[x]%", "_%",
+      "%\\_%", "s$%", "s^%", "%\\\\%", "é%", "%ü", "_____%", "nope%",
+      "x")
+    for (p <- patterns) {
+      val exp = CatalogOps.tableNames(cat.tables.toDF(), cat.sessions.toDF(),
+        "export", p, root).collect().map(_.getString(0)).toSeq.sorted
+      assert(cat.tableNames("export", p, root) == exp, s"pattern '$p'")
+    }
+    for (t <- Seq("t0", "t5", "shared", "nope"); s <- names.take(3)) {
+      assert(cat.exists("export", t, s) ==
+        CatalogOps.exists(cat.tables.toDF(), "export", t, s), s"$t in $s")
+      val exp = CatalogOps.lastEndTimes(cat.tables.toDF(), "export")
+        .filter(org.apache.spark.sql.functions.col("table_name") === t)
+        .collect().headOption.map(_.getLong(1)).getOrElse(0L)
+      assert(cat.lastEndTime("export", t) == exp, t)
+    }
+  }
+
   test("purgeSessionData: payload takedown is staged (atomic rename, " +
     "then delete), crash-mid-delete resumes, replays no-op, other " +
     "sessions untouched, patterns refused") {

@@ -83,6 +83,87 @@ class ExportImportSpec extends SparkTestBase {
     assert(pruned.count() == expected.count())
   }
 
+  /** A source of nulls, nested struct/array/map columns, an all-null
+    * column, a timestamp to window on, a version-cap key and a
+    * partition column with a null value, in three files.
+    */
+  private def integritySource(n: Int): String = {
+    val dir = tmpDir("integrity-src") + "/t"
+    spark.range(0, n, 1, 3).selectExpr(
+      "id",
+      "CASE WHEN id % 3 = 0 THEN NULL ELSE id * 2 END AS maybe",
+      "CAST(NULL AS STRING) AS all_null",
+      "CASE WHEN id % 5 = 0 THEN NULL ELSE named_struct('a', id, " +
+        "'b', CASE WHEN id % 2 = 0 THEN NULL ELSE 'x' END) END AS st",
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE array(id, NULL) END AS arr",
+      "CASE WHEN id % 4 = 0 THEN NULL ELSE map('k', id) END AS mp",
+      "timestamp_millis(1000000 + id * 1000) AS ts",
+      "id % 10 AS k",
+      "CASE WHEN id % 11 = 0 THEN NULL ELSE CAST(id % 3 AS INT) END AS part")
+      .write.parquet(dir)
+    dir
+  }
+
+  test("a parquet export's catalog row_count and n_nulls == a read-back " +
+    "count of its written files") {
+    val full = integritySource(400)
+    val empty = tmpDir("integrity-empty") + "/t"
+    spark.read.parquet(full).limit(0).write.parquet(empty)
+    val cases = Seq(
+      "nulls, nested and all-null columns" -> ExportSpec("full", full),
+      "an empty source" -> ExportSpec("empty", empty),
+      "a zero-row window over a non-empty source" ->
+        ExportSpec("nothing", full, tsCol = Some("ts"),
+          startMs = 10000000L),
+      "a partitioned layout" ->
+        ExportSpec("parted", full, partitionBy = Seq("part")),
+      "the version-capped window" ->
+        ExportSpec("capped", full, tsCol = Some("ts"), keyCols = Seq("k"),
+          tieBreakCols = Seq("id"), versions = 3, startMs = 1050000L,
+          endMs = 1350000L))
+    val cat = new BackupCatalog(spark, tmpDir("cat"))
+    val root = tmpDir("bk")
+    for ((what, spec) <- cases) {
+      val out = Exporter.exportTable(spark, cat, spec, "s1", root)
+      val (rows, nulls) = out match {
+        case Exporter.Exported(_, _, dest) =>
+          Exporter.countWithNulls(spark.read.parquet(dest))
+        case Exporter.Empty(_) =>
+          Exporter.countWithNulls(spark.read.parquet(spec.srcPath))
+        case other => fail(s"$what: $other")
+      }
+      val rec = cat.tables.collect().filter(_.table_name == spec.table)
+      assert(rec.map(_.row_count).toSeq == Seq(rows), what)
+      val descs = cat.columnDescriptorRows("s1", spec.table)
+      assert(descs.map(d => d.name -> d.n_nulls).toMap == nulls, what)
+      assert(descs.size == 9, what)
+    }
+    // the cases test what they claim to
+    val byTable = cat.tables.collect().map(r => r.table_name -> r).toMap
+    assert(byTable("empty").empty && byTable("nothing").row_count == 0L &&
+      !byTable("nothing").empty && byTable("capped").row_count > 0L &&
+      byTable("capped").row_count < byTable("full").row_count)
+    assert(cat.columnDescriptorRows("s1", "full")
+      .find(_.name == "all_null").get.n_nulls == 400L)
+  }
+
+  test("a parquet export's data half runs one SQL execution, the write") {
+    val src = integritySource(200)
+    val spec = ExportSpec("capped", src, tsCol = Some("ts"),
+      keyCols = Seq("k"), tieBreakCols = Seq("id"), versions = 3)
+    val root = tmpDir("bk")
+    val sites = jobSitesDuring {
+      Exporter.exportTableData(spark, spec, "s1", root)
+    }
+    // the write's shuffle stages run as jobs of its one execution; the
+    // source read's schema inference is the only job outside it
+    val executions = sites.flatMap(_._1).distinct
+    assert(executions.size == 1, s"expected one SQL execution: $sites")
+    assert(sites.filter(_._1.isEmpty).forall(_._2.startsWith("parquet at")),
+      s"a job outside the write: $sites")
+    assert(spark.read.parquet(s"$root/s1/capped").count() > 0L)
+  }
+
   test("failed export records an error row and returns Failed") {
     val cat = new BackupCatalog(spark, tmpDir("cat"))
     val out = Exporter.exportTable(spark, cat,

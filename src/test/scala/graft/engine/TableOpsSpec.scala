@@ -54,6 +54,36 @@ class TableOpsSpec extends SparkTestBase {
     assert(spark.read.parquet(out.dest).count() == 25)
   }
 
+  test("parquetRowCount and parquetIsEmpty count what a reader reads: " +
+    "not a crashed write's _temporary part file or a .x.parquet file") {
+    val dir = tmpDir("rowcount") + "/t"
+    spark.range(10).coalesce(1).write.parquet(dir)
+    val stray = tmpDir("stray") + "/s"
+    spark.range(7).coalesce(1).write.parquet(stray)
+    val part = new java.io.File(stray).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    def plant(d: String): Unit = {
+      val tmp = new java.io.File(s"$d/_temporary/0")
+      tmp.mkdirs()
+      java.nio.file.Files.copy(part, new java.io.File(tmp,
+        "part-00003-x-c000.snappy.parquet").toPath)
+      java.nio.file.Files.copy(part,
+        new java.io.File(s"$d/.x.parquet").toPath)
+    }
+    plant(dir)
+    assert(TableOps.parquetRowCount(spark, dir) ==
+      spark.read.parquet(dir).count())
+    assert(TableOps.parquetRowCount(spark, dir) == 10L)
+    assert(!TableOps.parquetIsEmpty(spark, dir))
+    // a dir whose only rows sit in skipped files reads as empty
+    val empty = tmpDir("rowcount-empty") + "/t"
+    spark.range(0).coalesce(1).write.parquet(empty)
+    plant(empty)
+    assert(spark.read.parquet(empty).isEmpty)
+    assert(TableOps.parquetRowCount(spark, empty) == 0L)
+    assert(TableOps.parquetIsEmpty(spark, empty))
+  }
+
   test("importAll restores requested tables end-to-end") {
     val expCat = new BackupCatalog(spark, tmpDir("cat-exp"))
     val impCat = new BackupCatalog(spark, tmpDir("cat-imp"))

@@ -1039,13 +1039,15 @@ class VectorIndexSpec extends SparkTestBase {
         StructType(Seq(StructField("vec_id", LongType),
           StructField("embedding", ArrayType(DoubleType)))))
     val dupIds = corpus(-1, v => v).union(corpus(-1, v => v).limit(1))
-    for ((what, dirty) <- Seq(
-        "NaN" -> corpus(7, _.updated(5, Double.NaN)),
-        "+Inf" -> corpus(8, _.updated(0, Double.PositiveInfinity)),
-        "-Inf" -> corpus(9, _.updated(63, Double.NegativeInfinity)),
-        "null element" -> corpus(10, _.updated(20, null)),
-        "null embedding" -> corpus(11, _ => null),
-        "duplicate id" -> dupIds)) {
+    // a non-finite component fails the build with the store's error
+    // naming its vec_id, on both paths
+    for ((what, dirty, badId) <- Seq(
+        ("NaN", corpus(7, _.updated(5, Double.NaN)), Some(7)),
+        ("+Inf", corpus(8, _.updated(0, Double.PositiveInfinity)), Some(8)),
+        ("-Inf", corpus(9, _.updated(63, Double.NegativeInfinity)), Some(9)),
+        ("null element", corpus(10, _.updated(20, null)), None),
+        ("null embedding", corpus(11, _ => null), None),
+        ("duplicate id", dupIds, None))) {
       assert(Similarity.driverCorpus(dirty.select(col("vec_id"),
           col("embedding").as("emb")), 64, Long.MaxValue).isEmpty,
         s"$what: a dirty corpus was admitted to the driver path")
@@ -1060,9 +1062,39 @@ class VectorIndexSpec extends SparkTestBase {
             case t => s"${t.getClass.getName}: ${t.getMessage}"
           }
           .map(_ => StoreDirs.map(d => dirState(s"$st/$d")))
-      assert(outcome(on, Long.MaxValue) == outcome(off, 0L),
+      val (onOut, offOut) = (outcome(on, Long.MaxValue), outcome(off, 0L))
+      assert(onOut == offOut,
         s"$what: the uncapped init differs from today's distributed one")
+      for (id <- badId; out <- Seq(onOut, offOut))
+        assert(out.left.exists(_.contains(nonFinite(id))), s"$what: $out")
     }
+  }
+
+  /** The store's error for a non-finite component of `id`. */
+  private def nonFinite(id: Long): String =
+    s"vector index: vec_id $id has a NaN or infinite embedding component"
+
+  test("update rejects a batch with a NaN or infinite component, naming " +
+    "its smallest such vec_id, and keeps the clean store") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-nonfinite")
+    VectorIndex.init(e, st, coarseIters = 2)
+    val stats = spark.read.parquet(s"$st/driftstats").collect().toSeq
+    val v = Seq.tabulate(64)(i => i * 0.01)
+    val batch = spark.createDataFrame(Seq(
+        Row(990001L, v), Row(990002L, v.updated(3, Double.NaN)),
+        Row(990003L, v.updated(9, Double.NegativeInfinity))).asJava,
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType)))))
+    val err = intercept[Exception](VectorIndex.update(batch, st))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(chain.contains(nonFinite(990002L)), chain)
+    assert(spark.read.parquet(s"$st/driftstats").collect().toSeq == stats,
+      "a rejected batch changed the drift statistics")
   }
 
   test("a query set one row past |Q|·m·ksub ≤ LocalFoldMaxQueryRows " +
