@@ -148,7 +148,9 @@ def main():
               "metrics" in runs["change"][i]]
         print(f"\n{args.workload}, {len(ok)} pairs, seeds {args.seeds}, "
               f"--seconds {args.seconds:g}")
-        for m in e2e:
+        if not ok:
+            print("no pair has metrics on both sides")
+        for m in e2e if ok else []:
             name = m["name"]
             report(name, m["better"], m["bound"],
                    [runs["parent"][i]["metrics"][name]["value"] for i in ok],

@@ -47,8 +47,8 @@ import graft.engine.DirSnapshot
   * lock covers listings, reloads, renames and compactions; append
   * writes run outside it, so concurrent table jobs record in parallel
   * and wait only for each other's renames. Compactions (rare: one per
-  * `compactAfterFiles` appends to a log) fold, write and swap under the
-  * lock. Across instances and processes the catalog assumes one writer
+  * `compactAfterFiles` appends to a log) fold, write (from the driver,
+  * as an append) and swap under the lock. Across instances and processes the catalog assumes one writer
   * per root.
   *
   * Unlike the reference, which marks a session "ended" when the last
@@ -216,7 +216,9 @@ final class BackupCatalog(spark: SparkSession, root: String,
   }
 
   /** Replace a log with `fold` of its rows, all under the instance
-    * lock: the fold is written to a staging dir, then swapped in by
+    * lock: the fold is written by the driver as one part file
+    * ([[BackupCatalog.writePart]], as an append is) to a staging dir,
+    * then swapped in by
     * checked renames (dir → __old, staged → dir, drop __old) under the
     * swap lock, so a crash can lose at most the in-flight fold, never
     * the existing catalog (a plain Overwrite deletes-then-writes,
@@ -230,8 +232,8 @@ final class BackupCatalog(spark: SparkSession, root: String,
     val folded = fold
     val staged = newStagingDir()
     try {
-      spark.createDataset(folded)(log.enc).coalesce(1).write.parquet(staged)
-      val written = DirSnapshot.committed(fs, staged)
+      val written =
+        Set(BackupCatalog.writePart(spark, staged, folded)(log.enc).getName)
       val (p, pStaged, pOld) =
         (new Path(log.dir), new Path(staged), new Path(log.dir + "__old"))
       log.replace(spark, written, folded) {

@@ -73,25 +73,33 @@ object TableOps {
     !((name.startsWith("_") && !name.contains("=")) ||
       name.startsWith(".") || name.endsWith("._COPYING_"))
 
-  /** Each parquet file under `dir` that `spark.read.parquet(dir)` reads,
-    * with its footer row count, listed and opened lazily.
+  /** The footer row count of each file `spark.read.parquet(path)`
+    * reads, listed and opened lazily. The roots resolve as the reader
+    * resolves them: `globStatus` expands a glob and returns a plain
+    * file or dir as itself. Below them every file [[sparkReads]] keeps
+    * is opened, whatever its extension (a Hive writer's `000000_0` is a
+    * part file too), except a zero-length one, which the reader skips
+    * as holding no row.
     */
   private def footerRowCounts(spark: SparkSession,
-                              dir: String): Iterator[Long] = {
+                              path: String): Iterator[Long] = {
     val conf = spark.sessionState.newHadoopConf()
-    val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val roots = Option(fs.globStatus(p)).filter(_.nonEmpty).getOrElse(
+      throw new java.io.FileNotFoundException(s"Path does not exist: $path"))
     def files(p: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).iterator
         .filter(s => sparkReads(s.getPath.getName))
         .flatMap(s => if (s.isDirectory) files(s.getPath) else Iterator(s))
-    files(path).filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, conf))
-      try rd.getRecordCount
-      finally rd.close()
-    }
+    roots.iterator.flatMap(r => files(r.getPath)).filter(_.getLen > 0)
+      .map { f =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(f, conf))
+        try rd.getRecordCount
+        finally rd.close()
+      }
   }
 
   /** Row count from parquet footers only — a driver-side metadata read,
@@ -101,19 +109,20 @@ object TableOps {
     * catalog's export-time stats (e05 records n_rows per table); for a
     * standalone query the footer sum is the same statistic at the same
     * (zero-job) cost. Recursive, so partitioned layouts count too, and
-    * it counts exactly the files a reader of `dir` reads
-    * ([[sparkReads]]): a crashed write's `_temporary` part files and
-    * hidden files are not rows of the table.
+    * it counts exactly the files a reader of `path` reads
+    * ([[footerRowCounts]]): a crashed write's `_temporary` part files
+    * and hidden files are not rows of the table, and a part file is
+    * one whatever its name.
     */
-  def parquetRowCount(spark: SparkSession, dir: String): Long =
-    footerRowCounts(spark, dir).sum
+  def parquetRowCount(spark: SparkSession, path: String): Long =
+    footerRowCounts(spark, path).sum
 
-  /** Whether `spark.read.parquet(dir)` reads no row, from the footers
+  /** Whether `spark.read.parquet(path)` reads no row, from the footers
     * of [[parquetRowCount]]'s files, stopping at the first non-empty
     * one.
     */
-  def parquetIsEmpty(spark: SparkSession, dir: String): Boolean =
-    !footerRowCounts(spark, dir).exists(_ > 0L)
+  def parquetIsEmpty(spark: SparkSession, path: String): Boolean =
+    !footerRowCounts(spark, path).exists(_ > 0L)
 
   /** Payload-plane takedown for a purged session ([EXT], r13 — the
     * disk half of BackupCatalog.purgeSession): delete the session's

@@ -466,6 +466,29 @@ class CatalogSpec extends SparkTestBase {
       s"Spark jobs: $jobs")
   }
 
+  test("compactAll writes each fold from the driver: no Spark job, one " +
+    "part file per log, the same rows on reload") {
+    val root = tmpDir("graft-cat-fold")
+    val cat = new BackupCatalog(spark, root)
+    cat.startInfo(sess)
+    cat.exportedTableInfo(rec("lineitem"), Seq(descOf("lineitem", 0)))
+    cat.exportedTableInfo(rec("lineitem"), Seq(descOf("lineitem", 0)))
+    cat.exportedTableInfo(rec("orders"), Seq(descOf("orders", 1)))
+    cat.endInfo("export", sess.session_name, endedAt = 9000L)
+    cat.startInfo(sess.copy(session_name = "gone"))
+    cat.purgeSession("export", "gone", 1L)
+    cat.purgeSession("export", "gone", 2L)
+    def state(c: BackupCatalog) = (c.sessions.collect().toSet,
+      c.tables.collect().toSet, c.descriptors.collect().toSet)
+    val before = state(cat)
+    val jobs = jobsDuring(cat.compactAll())
+    assert(jobs.isEmpty, s"compactAll ran ${jobs.size} Spark jobs: $jobs")
+    for (log <- Seq("sessions", "tables", "descriptors", "purges"))
+      assert(partFiles(root, log) == 1, log)
+    assert(state(cat) == before)
+    assert(state(new BackupCatalog(spark, root)) == before)
+  }
+
   test("a driver-staged part file reads back as a Spark-written one: " +
     "rows, StructType and Spark row-schema footer metadata") {
     import spark.implicits._

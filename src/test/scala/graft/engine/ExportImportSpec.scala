@@ -147,6 +147,28 @@ class ExportImportSpec extends SparkTestBase {
       .find(_.name == "all_null").get.n_nulls == 400L)
   }
 
+  test("a parquet export reads a source as the reader does: part files " +
+    "without a .parquet suffix and a glob path export their rows") {
+    val src = integritySource(90)
+    // Hive-style names for the source's part files
+    new java.io.File(src).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        assert(f.renameTo(new java.io.File(src, f"$i%06d_0")))
+      }
+    val cat = new BackupCatalog(spark, tmpDir("cat"))
+    val root = tmpDir("bk")
+    for (spec <- Seq(ExportSpec("hive", src),
+                     ExportSpec("globbed", src.dropRight(1) + "[t]"))) {
+      val out = Exporter.exportTable(spark, cat, spec, "s1", root)
+      assert(out.isInstanceOf[Exporter.Exported], s"${spec.table}: $out")
+      val rec = cat.tables.collect().filter(_.table_name == spec.table)
+      assert(rec.map(r => (r.row_count, r.empty)).toSeq == Seq((90L, false)),
+        spec.table)
+      assert(spark.read.parquet(s"$root/s1/${spec.table}").count() == 90L)
+    }
+  }
+
   test("a parquet export's data half runs one SQL execution, the write") {
     val src = integritySource(200)
     val spec = ExportSpec("capped", src, tsCol = Some("ts"),

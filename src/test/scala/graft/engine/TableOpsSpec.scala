@@ -84,6 +84,29 @@ class TableOpsSpec extends SparkTestBase {
     assert(TableOps.parquetIsEmpty(spark, empty))
   }
 
+  test("parquetRowCount and parquetIsEmpty open the files a reader " +
+    "opens: a part file of any name, a glob's matches, no empty file") {
+    val dir = tmpDir("rowcount-names") + "/t"
+    spark.range(0, 12, 1, 3).write.parquet(dir)
+    // Hive-style part names, as another writer leaves them
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        assert(f.renameTo(new java.io.File(dir, f"$i%06d_0")))
+      }
+    assert(new java.io.File(dir, "empty_0").createNewFile())
+    assert(spark.read.parquet(dir).count() == 12L)
+    assert(TableOps.parquetRowCount(spark, dir) == 12L)
+    assert(!TableOps.parquetIsEmpty(spark, dir))
+    val glob = dir.dropRight(1) + "[t]"
+    assert(spark.read.parquet(glob).count() == 12L)
+    assert(TableOps.parquetRowCount(spark, glob) == 12L)
+    assert(TableOps.parquetRowCount(spark, s"$dir/00000[01]_0") ==
+      spark.read.parquet(s"$dir/00000[01]_0").count())
+    intercept[java.io.FileNotFoundException](
+      TableOps.parquetRowCount(spark, s"$dir-missing"))
+  }
+
   test("importAll restores requested tables end-to-end") {
     val expCat = new BackupCatalog(spark, tmpDir("cat-exp"))
     val impCat = new BackupCatalog(spark, tmpDir("cat-imp"))
