@@ -36,6 +36,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the custom node down to both scans
     e.injectPlannerStrategy(_ => new graft.plans.AsofJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.AsofJoinPruning)
+    // the serving reads' bounded driver fold (graft.plans.DriverFold)
+    e.injectPlannerStrategy(_ => new graft.plans.DriverFoldStrategy)
     // ... and its SQL surface: a table-valued function over named
     // tables/views, so SQL-only users reach the operator too —
     // SELECT * FROM asof_join('purchases','quotes','user_id','user_id','ts','ts')

@@ -1,7 +1,8 @@
 package graft.engine
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Encoder, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A driver-resident snapshot of one metadata-scale parquet dir: its
   * rows plus the names of the committed part files they came from.
@@ -19,29 +20,45 @@ import org.apache.spark.sql.{Encoder, SparkSession}
   * and keeps the previous snapshot.
   *
   * The whole dir is collected to the driver, so only dirs whose rows
-  * the caller would collect anyway belong here. A caller that writes
-  * the dir itself can apply its own appends and swaps through
-  * [[commit]] and [[replace]], which update the snapshot without a
-  * reload.
+  * the caller would collect anyway belong here. A dir that may outgrow
+  * the driver takes a `maxRows` bound: a reload reads at most
+  * `maxRows + 1` rows, and a dir holding more is not held
+  * ([[bounded]] answers None until its listing changes). A caller
+  * that writes the dir itself can apply its own appends and swaps
+  * through [[commit]] and [[replace]], which update the snapshot
+  * without a reload.
   */
-final class DirSnapshot[T](val dir: String)(implicit val enc: Encoder[T]) {
+final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
+    implicit val enc: Encoder[T]) {
   private var files: Set[String] = Set.empty
-  private var held: Vector[T] = Vector.empty
+  private var held: Option[Vector[T]] = Some(Vector.empty)
 
   private def fs(spark: SparkSession): FileSystem = Compactor.fs(spark, dir)
 
   /** The dir's rows, brought up to date by one listing. */
-  def rows(spark: SparkSession): Vector[T] = synchronized {
+  def rows(spark: SparkSession): Vector[T] = bounded(spark).getOrElse(
+    throw new IllegalStateException(s"$dir holds more than $maxRows rows"))
+
+  /** [[rows]], or None when the dir holds more than `maxRows` rows. */
+  def bounded(spark: SparkSession): Option[Vector[T]] = synchronized {
     Compactor.swapLock.synchronized {
       val f = fs(spark)
       Compactor.restoreOld(f, dir)
       val listed = DirSnapshot.committed(f, dir)
       if (listed != files) {
         held =
-          if (listed.isEmpty) Vector.empty
-          else spark.read.schema(enc.schema)
-            .parquet(listed.toSeq.map(n => new Path(dir, n).toString): _*)
-            .as[T](enc).collect().toVector
+          if (listed.isEmpty) Some(Vector.empty)
+          else {
+            val ds = spark.read.schema(enc.schema)
+              .parquet(listed.toSeq.map(n => new Path(dir, n).toString): _*)
+              .as[T](enc)
+            // a bounded dir is small by contract: one task reads it, so
+            // the limit stops in one job
+            val read =
+              if (maxRows == Int.MaxValue) ds.collect()
+              else ds.coalesce(1).limit(maxRows + 1).collect()
+            Some(read.toVector).filter(_.length <= maxRows)
+          }
         files = listed
       }
       held
@@ -50,7 +67,7 @@ final class DirSnapshot[T](val dir: String)(implicit val enc: Encoder[T]) {
 
   /** The number of committed part files, after one listing. */
   def fileCount(spark: SparkSession): Int = synchronized {
-    rows(spark); files.size
+    bounded(spark); files.size
   }
 
   /** Move one part file holding exactly `added` into the dir (`move`
@@ -64,7 +81,7 @@ final class DirSnapshot[T](val dir: String)(implicit val enc: Encoder[T]) {
       move
     }
     files += file
-    held ++= added
+    held = held.map(_ ++ added).filter(_.length <= maxRows)
   }
 
   /** Swap a rewrite holding exactly `rewritten` in the part files
@@ -78,11 +95,31 @@ final class DirSnapshot[T](val dir: String)(implicit val enc: Encoder[T]) {
       swap
     }
     files = rewrittenFiles
-    held = rewritten.toVector
+    held = Some(rewritten.toVector).filter(_.length <= maxRows)
   }
 }
 
 object DirSnapshot {
+  private val snapshots =
+    new java.util.concurrent.ConcurrentHashMap[String, DirSnapshot[Row]]()
+
+  /** The rows of a parquet dir of `schema` from this JVM's held
+    * snapshot of it, keyed by the qualified dir path (reloaded only
+    * when the dir's listing changed); None when it holds more than
+    * `maxRows` rows. With `keep = false` the dir is read whole and its
+    * held snapshot dropped.
+    */
+  def heldRows(spark: SparkSession, dir: String, schema: StructType,
+               maxRows: Int = Int.MaxValue,
+               keep: Boolean = true): Option[Vector[Row]] = {
+    val key = Compactor.fs(spark, dir).makeQualified(new Path(dir)).toString
+    def fresh = new DirSnapshot[Row](dir, maxRows)(Encoders.row(schema))
+    val snap =
+      if (keep) snapshots.computeIfAbsent(key, _ => fresh)
+      else { snapshots.remove(key); fresh }
+    snap.bounded(spark)
+  }
+
   /** A committed data file: not a `_`/`.` sidecar or in-flight dir. */
   def isCommitted(s: FileStatus): Boolean = {
     val n = s.getPath.getName

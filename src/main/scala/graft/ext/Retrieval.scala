@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.engine.{Compactor, DirSnapshot}
+import graft.plans.DriverFold
+import Similarity.{optLong, optSeq}
 
 /** [EXT] Lexical retrieval — Okapi BM25 (Robertson & Zaragoza 2009,
   * "The Probabilistic Relevance Framework: BM25 and Beyond" — public).
@@ -271,12 +273,17 @@ object Retrieval {
     * inference job) — empty when the table has never been written.
     */
   private def readStore(spark: org.apache.spark.sql.SparkSession,
+                        path: String, schema: StructType): DataFrame =
+    scanStore(spark, path, schema).distinct()
+
+  /** A store table's raw rows (replays not folded). */
+  private def scanStore(spark: org.apache.spark.sql.SparkSession,
                         path: String, schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
       spark.createDataFrame(java.util.List.of[Row](), schema)
-    else spark.read.schema(schema).parquet(path).distinct()
+    else spark.read.schema(schema).parquet(path)
   }
 
   /** The deletion facts (doc_id, deleted_at) — empty when none. */
@@ -867,6 +874,15 @@ object Retrieval {
     * dense leg excludes self-hits (the store query's contract) where
     * in-query [[hybridTopK]] retains them — the one documented
     * semantic difference between the surfaces.
+    *
+    * Execution: each leg ranks on the driver from one bounded store
+    * read — the dense leg's probed codes ([[graft.ext.VectorIndex
+    * .query]]'s fold) and the lexical leg's query-term postings
+    * ([[lexRankFromStore]]) — so a warm read on unchanged stores runs
+    * two SQL executions with one Spark job each, and the fuse folds on
+    * the driver. A leg past a valve takes its distributed plan; a leg
+    * of more than [[Similarity.foldCap]] rows makes the fuse the
+    * distributed [[rrfFuse]].
     */
   def hybridQueryStores(spark: org.apache.spark.sql.SparkSession,
                         indexStore: String, vectorStore: String,
@@ -879,24 +895,32 @@ object Retrieval {
       "every hybrid query needs at least one term")
 
     // dense leg: the vector store's own cell-pruned ADC ranking —
-    // its (approx_ip DESC, vec_id) rank IS the dense rank.
-    // r15: both legs are ≤ |Q|·depth rows by construction; collect
-    // them (one job each) and fold the RRF fuse driver-side
-    // ([[fuseLocal]] — rrfFuse op for op, spec-pinned), instead of
-    // planning a full-outer join + window over two KB frames per call.
-    val denseRows = VectorIndex.query(spark, vectorStore, queryVecs,
-        k = depth, nprobe = nprobe)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("dense_rank"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getInt(2)))
-    val lexRows = lexRankFromStore(spark, indexStore, queries, depth,
-        k1, b)
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getInt(2)))
-    localFusedDf(spark, fuseLocal(lexRows, denseRows, k, c))
+    // its (approx_ip DESC, vec_id) rank IS the dense rank
+    val dense = VectorIndex.query(spark, vectorStore, queryVecs,
+      k = depth, nprobe = nprobe)
+    fused(spark, lexRankFromStore(spark, indexStore, queries, depth, k1, b),
+      dense, dense.select(col("query_id"), col("neighbor_id").as("doc_id"),
+        col("rank").as("dense_rank")), k, c)
+  }
+
+  /** The fuse of two ranked legs: both collected under the fold cap
+    * (`rank` is each frame's LAST column; collecting the dense frame
+    * unprojected keeps a [[graft.plans.DriverFold]] leg at one job) and
+    * fused on the driver ([[fuseLocal]] — rrfFuse op for op,
+    * spec-pinned); a leg past the cap runs the distributed
+    * [[rrfFuse]] over `lex` and `denseLeg` instead.
+    */
+  private def fused(spark: org.apache.spark.sql.SparkSession,
+                    lex: DataFrame, dense: DataFrame, denseLeg: DataFrame,
+                    k: Int, c: Int): DataFrame = {
+    val cap = Similarity.foldCap
+    def legRows(df: DataFrame) = DriverFold.collect(df, cap).map(
+      _.toIndexedSeq.map(r => (optLong(r, 0), optLong(r, 1),
+        r.getInt(r.length - 1))))
+    legRows(dense).flatMap(d => legRows(lex).map(l => (l, d))) match {
+      case Some((l, d)) => localFusedDf(spark, fuseLocal(l, d, k, c))
+      case None => rrfFuse(lex, denseLeg, k, c)
+    }
   }
 
   /** A driver-fused ranking as a LOCAL relation — [[rrfFuse]]'s exact
@@ -920,43 +944,140 @@ object Retrieval {
         StructField("rank", IntegerType, nullable = false))))
   }
 
-  /** The store-fed lexical leg shared by [[hybridQueryStores]] and
-    * [[hybridQueryStoresRerank]] — ONE definition: queryIndex's store
-    * tables (pushed token filter, tombstones excluded), s11's scoring
-    * fan-out, the depth-bounded bottom-k rank.
+  /** The store-fed lexical leg shared by the three hybrid store reads —
+    * ONE definition: queryIndex's store tables (pushed token filter,
+    * tombstones excluded), s11's scoring fan-out, the depth-bounded
+    * bottom-k rank. (query_id, doc_id, lex_rank) rows.
+    *
+    * Execution: while the lengths and tombstone dirs are held on the
+    * driver (each at most [[Similarity.LocalFoldMaxQueryRows]] rows;
+    * a warm read lists them and reloads neither) the leg runs ONE Spark
+    * job — the query terms' postings read with `limit(cap + 1)` and a
+    * pushed `token IN` — and ranks on the driver ([[lexRankLocal]], op
+    * for op the plan below), returning a local relation. Past the cap
+    * ([[Similarity.foldCap]] postings rows), a dir too large to hold, or
+    * input the fold declines, it returns the distributed plan.
     */
-  private def lexRankFromStore(spark: org.apache.spark.sql.SparkSession,
+  private[ext] def lexRankFromStore(spark: org.apache.spark.sql.SparkSession,
                                indexStore: String,
                                queries: Seq[(Long, Seq[String])],
                                depth: Int, k1: Double,
                                b: Double): DataFrame = {
     import spark.implicits._
+    Compactor.recover(spark, indexStore)
     val allTerms = queries.flatMap(_._2).distinct
-    val qt = broadcast(queries.flatMap { case (qid, ts) =>
-      ts.distinct.map(qid -> _)
-    }.toDF("query_id", "token"))
-    val bottomK = udaf(graft.functions.BottomKAggregator.bottomK(depth))
-    val stats = liveStore(spark, indexStore, "lengths", LengthsSchema)
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_tot"))
-      .select(col("n_docs"),
-        (col("dl_tot").cast("double") / col("n_docs")).as("avgdl"))
-    val tf = liveStore(spark, indexStore, "postings", PostingsSchema)
-      .filter(col("token").isin(allTerms: _*))
-    val dfT = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    tf.join(qt, "token")
-      .join(broadcast(dfT), "token")
-      .crossJoin(broadcast(stats))
-      .withColumn("w", termWeight(col("tf"), col("dl"),
-        idf(col("n_docs"), col("df")), col("avgdl"), k1, b))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(sum(col("w").cast("decimal(38,18)")).cast("double"), 4)
-        .as("s"))
-      .groupBy(col("query_id"))
-      .agg(bottomK((-round(col("s") * 1e4)).cast("long"),
-        col("doc_id")).as("picked"))
-      .select(col("query_id"), posexplode(col("picked")))
-      .select(col("query_id"), col("col._2").as("doc_id"),
-        (col("pos") + 1).cast("int").as("lex_rank"))
+    val qtRows = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
+    def held(sub: String, schema: StructType) =
+      DirSnapshot.heldRows(spark, s"$indexStore/$sub", schema,
+        Similarity.LocalFoldMaxQueryRows)
+    // a null in a posting or length row is left to the plan
+    def noNulls(rows: Seq[Row]): Option[Seq[Row]] =
+      Some(rows).filter(_.forall(r => !r.anyNull))
+    val local = for {
+      lengths <- held("lengths", LengthsSchema).flatMap(noNulls)
+      dead <- held("tombstones", TombstonesSchema)
+      read <- DriverFold.collect(
+        scanStore(spark, s"$indexStore/postings", PostingsSchema)
+          .filter(col("token").isin(allTerms: _*)).coalesce(1),
+        Similarity.foldCap).flatMap(rows => noNulls(rows.toSeq))
+      ranked <- lexRankLocal(
+        read.map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))),
+        lengths.map(r => (r.getLong(0), r.getLong(1))),
+        dead.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet,
+        qtRows, depth, k1, b)
+    } yield ranked
+    local match {
+      case Some(rows) =>
+        import scala.jdk.CollectionConverters._
+        import org.apache.spark.sql.types._
+        // the plan's schema: doc_id comes out of the bottom-k struct
+        spark.createDataFrame(
+          rows.map(t => Row(t._1, t._2, t._3)).asJava,
+          StructType(Seq(StructField("query_id", LongType, nullable = false),
+            StructField("doc_id", LongType),
+            StructField("lex_rank", IntegerType, nullable = false))))
+      case None =>
+        val qt = broadcast(qtRows.toDF("query_id", "token"))
+        val bottomK = udaf(graft.functions.BottomKAggregator.bottomK(depth))
+        val stats = liveStore(spark, indexStore, "lengths", LengthsSchema)
+          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_tot"))
+          .select(col("n_docs"),
+            (col("dl_tot").cast("double") / col("n_docs")).as("avgdl"))
+        val tf = liveStore(spark, indexStore, "postings", PostingsSchema)
+          .filter(col("token").isin(allTerms: _*))
+        val dfT = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+        tf.join(qt, "token")
+          .join(broadcast(dfT), "token")
+          .crossJoin(broadcast(stats))
+          .withColumn("w", termWeight(col("tf"), col("dl"),
+            idf(col("n_docs"), col("df")), col("avgdl"), k1, b))
+          .groupBy(col("query_id"), col("doc_id"))
+          .agg(round(sum(col("w").cast("decimal(38,18)")).cast("double"), 4)
+            .as("s"))
+          .groupBy(col("query_id"))
+          .agg(bottomK((-round(col("s") * 1e4)).cast("long"),
+            col("doc_id")).as("picked"))
+          .select(col("query_id"), posexplode(col("picked")))
+          .select(col("query_id"), col("col._2").as("doc_id"),
+            (col("pos") + 1).cast("int").as("lex_rank"))
+    }
+  }
+
+  /** [[lexRankFromStore]]'s distributed plan folded on the driver over
+    * the collected raw postings rows (doc_id, dl, token, tf) of the
+    * query terms, the lengths rows (doc_id, dl) and the tombstoned ids,
+    * op for op:
+    *
+    *  - both tables distinct, then tombstoned docs removed;
+    *  - df = the live postings rows per token; n_docs = the live
+    *    lengths rows, avgdl = Σ dl / n_docs in double;
+    *  - per (query, term) pair of `qt` (a multiset, like the joined
+    *    frame) and posting of the term: the [[termWeight]] tree over
+    *    the [[idf]] tree in the same association order (Spark's `log`
+    *    is `StrictMath.log`), rounded 6 ([[Similarity.localRound]]);
+    *  - per (query, doc): the decimal(38,18) sum of the weights
+    *    ([[Pca.addDec18]]) cast back to double, rounded 4;
+    *  - per query: the bottom-`depth` pick by
+    *    (−round(s·1e4) as long, doc_id) — [[graft.functions
+    *    .BottomKAggregator]]'s order.
+    *
+    * Returns (query_id, doc_id, lex_rank) rows, or None where the plan
+    * would divide by zero (no live document, or a zero denominator) or
+    * a weight could not take the decimal cast.
+    */
+  private[ext] def lexRankLocal(postings: Seq[(Long, Int, String, Long)],
+                                lengths: Seq[(Long, Long)], dead: Set[Long],
+                                qt: Seq[(Long, String)], depth: Int,
+                                k1: Double, b: Double)
+      : Option[Seq[(Long, Long, Int)]] = {
+    import Similarity.localRound
+    val live = postings.distinct.filterNot(p => dead(p._1))
+    val docs = lengths.distinct.filterNot(l => dead(l._1))
+    val nDocs = docs.size.toLong
+    val avgdl = docs.map(_._2).sum.toDouble / nDocs
+    if (nDocs == 0 || avgdl == 0.0) return None
+    val byToken = live.groupBy(_._3)
+    val sums = scala.collection.mutable.LinkedHashMap
+      .empty[(Long, Long), java.math.BigDecimal]
+    for ((qid, tok) <- qt; (doc, dl, _, tf) <- byToken.getOrElse(tok, Nil)) {
+      val df = byToken(tok).size.toLong
+      val idfV = StrictMath.log(1.0 + ((nDocs - df).toDouble + 0.5) /
+        (df.toDouble + 0.5))
+      val denom = tf.toDouble + k1 * ((1.0 - b) + (b * dl.toDouble) / avgdl)
+      if (denom == 0.0) return None
+      val w = localRound(idfV * ((tf.toDouble * (k1 + 1.0)) / denom), 6)
+      if (!java.lang.Double.isFinite(w) || math.abs(w) >= 1e20) return None
+      sums((qid, doc)) = Pca.addDec18(
+        sums.getOrElse((qid, doc), java.math.BigDecimal.ZERO), w)
+    }
+    Some(sums.toSeq.groupBy(_._1._1).toSeq.flatMap { case (qid, rs) =>
+      rs.map { case ((_, doc), sum) =>
+          val s = localRound(sum.doubleValue, 4)
+          ((-localRound(s * 1e4, 0)).toLong, doc)
+        }
+        .sorted.take(depth).zipWithIndex
+        .map { case ((_, doc), i) => (qid, doc, i + 1) }
+    })
   }
 
   /** EXACT-TAIL hybrid retrieval — [[hybridQueryStores]] with the
@@ -974,6 +1095,12 @@ object Retrieval {
     * pushed candidate fetch (|Q|·depth row groups — spec-pinned).
     * Oracle-checked (s25): the s09 weight tree, the s08 ADC chain,
     * the s20 exact re-rank and the shared RRF tail replay end-to-end.
+    *
+    * Execution: three Spark jobs on warm stores — the dense leg's
+    * codes read and corpus fetch ([[graft.ext.VectorIndex
+    * .queryRerank]]), the lexical leg's postings read — and driver
+    * folds for both ranks and the fuse; the fuse falls back to
+    * [[rrfFuse]] as in [[hybridQueryStores]].
     */
   def hybridQueryStoresRerank(spark: org.apache.spark.sql.SparkSession,
                               indexStore: String, vectorStore: String,
@@ -989,22 +1116,13 @@ object Retrieval {
       "every hybrid query needs at least one term")
 
     // dense leg: store nomination + exact re-rank of the originals —
-    // queryRerank verbatim at full rerank coverage of the nominees.
-    // r15: queryRerank's fold already returns a LOCAL relation, so the
-    // collect here is free; fuse driver-side like hybridQueryStores.
-    val denseRows = VectorIndex.queryRerank(spark, vectorStore, corpus,
-        queryVecs, k = depth, rerank = depth, nprobe = nprobe)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("dense_rank"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getInt(2)))
-    val lexRows = lexRankFromStore(spark, indexStore, queries, depth,
-        k1, b)
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getInt(2)))
-    localFusedDf(spark, fuseLocal(lexRows, denseRows, k, c))
+    // queryRerank verbatim at full rerank coverage of the nominees
+    // (a local relation, so collecting it runs no job)
+    val dense = VectorIndex.queryRerank(spark, vectorStore, corpus,
+      queryVecs, k = depth, rerank = depth, nprobe = nprobe)
+    fused(spark, lexRankFromStore(spark, indexStore, queries, depth, k1, b),
+      dense, dense.select(col("query_id"), col("neighbor_id").as("doc_id"),
+        col("rank").as("dense_rank")), k, c)
   }
 
   /** DIVERSIFIED hybrid retrieval — the MMR tail after the RRF fuse
@@ -1041,6 +1159,13 @@ object Retrieval {
     * oracle's `f JOIN e` → pool-cut order. The r13 form cut the fuse
     * to top-depth FIRST, letting lexical-only docs evict backed
     * candidates from the pool under partial embedding coverage.
+    *
+    * Execution: three Spark jobs on warm stores — the two legs' store
+    * reads and the one corpus fetch — with every rank, the fuse, the
+    * pool and the MMR greedy folded on the driver. The tail has no
+    * distributed form: a leg, fetch or query frame of more than
+    * [[Similarity.foldCap]] rows fails with
+    * [[graft.plans.FoldCapExceeded]].
     */
   def hybridQueryStoresDiversify(spark: org.apache.spark.sql.SparkSession,
                                  indexStore: String, vectorStore: String,
@@ -1059,53 +1184,44 @@ object Retrieval {
       s"pool ($poolSize) must cover k ($k)")
     require(depth >= poolSize,
       s"depth ($depth) must cover the pool ($poolSize)")
-    // r15 (VERDICT r14 item 3): everything PAST the two store legs is
-    // KB by construction (each leg ≤ |Q|·depth rows, the fetch
-    // ≤ 2·|Q|·depth), yet the r14 form ran it as ~12 pool-bounded
-    // Spark jobs (three eager checkpoints, two id collects, the dense
-    // re-rank window, the full-outer fuse, the pool window, the MMR
-    // pool collect) — pure scheduling/planning overhead at any corpus
-    // size. The legs keep their distributed plans (postings-scale and
-    // codes-scale) and are COLLECTED (one job each, replacing their
-    // checkpoint jobs); the fetch keeps its pushed parallel corpus
-    // scan and is collected (one job, replacing checkpoint + re-read);
-    // the re-rank/fuse/pool tail folds driver-side with the engine's
-    // arithmetic op for op (the mmrRerank-fold primitives: round-4
-    // local cosine, SQL double ordering, DESC-NULLS-LAST ranks, RRF
-    // contribs in the fixed lex+dense IEEE order, round-6 fuse) —
-    // spec-pinned against the expression tail and replayed by the s28
-    // oracle end-to-end.
-    val lexRows = lexRankFromStore(spark, indexStore, queries, depth,
-        k1, b)
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        r.getInt(2)))
-    val candRows = VectorIndex.query(spark, vectorStore, queryVecs,
-        k = depth, nprobe = nprobe)
-      .select(col("query_id"), col("neighbor_id").as("vec_id"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    // everything PAST the two store legs is KB by construction (each
+    // leg ≤ |Q|·depth rows, the fetch ≤ 2·|Q|·depth): the legs, the
+    // pushed corpus fetch and the query vectors are each collected
+    // under the fold cap, and the re-rank/fuse/pool tail folds on the
+    // driver with the engine's arithmetic op for op (the mmrRerank-fold
+    // primitives: round-4 local cosine, SQL double ordering,
+    // DESC-NULLS-LAST ranks, RRF contribs in the fixed lex+dense IEEE
+    // order, round-6 fuse) — spec-pinned against the expression tail
+    // and replayed by the s28 oracle end-to-end. The tail has no
+    // distributed form: a frame past the cap fails with
+    // [[graft.plans.FoldCapExceeded]].
+    val cap = Similarity.foldCap
+    val lexRows = DriverFold.collectOrFail(
+        lexRankFromStore(spark, indexStore, queries, depth, k1, b), cap,
+        "hybridQueryStoresDiversify lexical leg").toIndexedSeq
+      .map(r => (optLong(r, 0), optLong(r, 1), r.getInt(2)))
+    val candRows = DriverFold.collectOrFail(
+        VectorIndex.query(spark, vectorStore, queryVecs, k = depth,
+          nprobe = nprobe), cap,
+        "hybridQueryStoresDiversify dense leg").toIndexedSeq
+      .map(r => (optLong(r, 0), optLong(r, 1)))
     // ONE pushed corpus fetch serves both the exact dense re-rank and
     // the pool join: the union of both legs' candidate ids (≤
     // 2·|Q|·depth longs — KB) into an In filter; the scan keeps its
     // parallelism (ADVICE r14 — no coalesce anywhere near it)
     val ids = (candRows.flatMap(_._2) ++ lexRows.flatMap(_._2))
       .distinct
-    val fetchedRows = corpus
-      .filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id").cast("long").as("doc_id"),
-        col("embedding").cast("array<double>").as("emb"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Any](1)))
-    val qRows = queryVecs
-      .select(col("vec_id").cast("long").as("query_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Any](1)))
+    val fetchedRows = DriverFold.collectOrFail(corpus
+        .filter(col("vec_id").isin(ids: _*))
+        .select(col("vec_id").cast("long").as("doc_id"),
+          col("embedding").cast("array<double>").as("emb")), cap,
+        "hybridQueryStoresDiversify fetch").toIndexedSeq
+      .map(r => (optLong(r, 0), optSeq(r, 1)))
+    val qRows = DriverFold.collectOrFail(queryVecs
+        .select(col("vec_id").cast("long").as("query_id"),
+          col("embedding").cast("array<double>").as("q_emb")), cap,
+        "hybridQueryStoresDiversify queries").toIndexedSeq
+      .map(r => (optLong(r, 0), optSeq(r, 1)))
     val pool = diversifyPoolLocal(lexRows, candRows, fetchedRows, qRows,
       depth, poolSize, c)
     import scala.jdk.CollectionConverters._

@@ -303,6 +303,16 @@ object Similarity {
     Some(if (denom == 0.0) 0.0 else dot / denom)
   }
 
+  /** A collected row's nullable bigint cell. */
+  private[ext] def optLong(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+
+  /** A collected row's nullable array cell, null when null — the shape
+    * [[localCosine]] and the folds take.
+    */
+  private[ext] def optSeq(r: org.apache.spark.sql.Row, i: Int): Seq[Any] =
+    if (r.isNullAt(i)) null else r.getSeq[Any](i)
+
   /** [[dot]] (aggregate over zip_with) replicated over collected
     * array<double> values: None where the expression yields NULL —
     * null array, length mismatch (zip_with null-pads the shorter
@@ -323,14 +333,39 @@ object Similarity {
     Some(s)
   }
 
-  /** The ceiling on the rows a serving-path driver fold materializes:
-    * [[graft.ext.VectorIndex.query]] collects at most this / (m·ksub)
-    * query rows in its one-job collect, since [[ivfPqDtableLocal]]
-    * builds |Q|·m·ksub rows from them. Serving requests are small by
-    * contract; past the cap the query keeps the distributed
-    * probe/dtable plan (same values).
+  /** The ceiling on the rows a serving-path driver fold materializes,
+    * each read with `limit(cap + 1)`:
+    *
+    *  - [[graft.ext.VectorIndex.query]] collects at most this / (m·ksub)
+    *    query rows, since [[ivfPqDtableLocal]] builds |Q|·m·ksub rows
+    *    from them, and at most this many probed codes rows for
+    *    [[ivfPqRankLocal]];
+    *  - the store-fed lexical leg collects at most this many postings
+    *    rows, and holds the lengths and tombstone dirs only while each
+    *    has at most this many rows;
+    *  - every other serving-path collect (legs, candidates, fetches,
+    *    query vectors) is capped here too.
+    *
+    * Serving requests are small by contract. Past the cap a fold with a
+    * distributed form runs it (same values); one without fails with
+    * [[graft.plans.FoldCapExceeded]].
     */
   private[ext] val LocalFoldMaxQueryRows: Int = 1 << 16
+
+  private val foldCapOverride =
+    new scala.util.DynamicVariable[Option[Int]](None)
+
+  /** The serving-path fold cap in force: [[LocalFoldMaxQueryRows]],
+    * unless a spec runs under [[withFoldCap]].
+    */
+  private[ext] def foldCap: Int =
+    foldCapOverride.value.getOrElse(LocalFoldMaxQueryRows)
+
+  /** Run `body` with every serving-path fold capped at `cap` rows — the
+    * specs' way to force each fold both ways at the cap.
+    */
+  private[graft] def withFoldCap[T](cap: Int)(body: => T): T =
+    foldCapOverride.withValue(Some(cap))(body)
 
   /** [[ivfPqProbes]] folded driver-side over the COLLECTED query and
     * centroid tables (r15 — the mmrRerank fold discipline applied to
@@ -450,6 +485,70 @@ object Similarity {
       (_, cell, cSv) <- bySub.getOrElse(sub, Nil)
     } yield (qid, sub, cell,
       localDot(sv, cSv).map(localRound(_, 4)))
+  }
+
+  /** [[ivfPqRank]] folded driver-side over collected LIVE codes rows
+    * (vec_id, sub, cell, coarse_id) — already distinct and
+    * tombstone-free — and the folded probe and distance tables,
+    * op for op:
+    *
+    *  - codes ⋈ probes on coarse_id, then the self-hit filter
+    *    `vec_id =!= query_id` (a null on either side drops the row);
+    *  - ⋈ dtable on (query_id, sub, cell) — multiset inner joins, null
+    *    keys never match;
+    *  - per (query_id, vec_id): `first(qc)` and the decimal(38,18) sum
+    *    of pd cast back to double ([[Pca.addDec18]]'s cast; null pds
+    *    skipped, all-null → null);
+    *  - approx_ip = round(qc + r_ip, 4), null if either is null;
+    *  - row_number over (approx_ip DESC NULLS LAST, vec_id ASC) per
+    *    query_id ([[rankLt]]), cut at `k`.
+    *
+    * Returns (query_id, neighbor_id, approx_ip, rank) rows, or None
+    * where the engine's answer is not this fold's: a group whose rows
+    * carry different qc values (`first` then depends on row order) or
+    * a pd the decimal cast cannot hold (non-finite or ≥ 1e20).
+    */
+  private[ext] def ivfPqRankLocal(
+      codes: Seq[(Option[Long], Option[Int], Option[Long], Option[Long])],
+      probes: Seq[(Option[Long], Option[Long], Option[Double])],
+      dtable: Seq[(Option[Long], Int, Long, Option[Double])], k: Int)
+      : Option[Seq[(Long, Long, Option[Double], Int)]] = {
+    val probesByCell = probes.collect { case (Some(q), Some(c), qc) =>
+        c -> (q, qc) }
+      .groupBy(_._1).map { case (c, v) => c -> v.map(_._2) }
+    val pdByKey = dtable.collect { case (Some(q), sub, cell, pd) =>
+        (q, sub, cell) -> pd }
+      .groupBy(_._1).map { case (key, v) => key -> v.map(_._2) }
+    final class Acc(val qc: Option[Double]) {
+      var sum: java.math.BigDecimal = java.math.BigDecimal.ZERO
+      var anyPd = false
+    }
+    val groups = scala.collection.mutable.LinkedHashMap.empty[(Long, Long), Acc]
+    def sameQc(a: Option[Double], b: Option[Double]): Boolean =
+      a.map(java.lang.Double.doubleToRawLongBits) ==
+        b.map(java.lang.Double.doubleToRawLongBits)
+    for {
+      (Some(vid), Some(sub), Some(cell), Some(cid)) <- codes
+      (qid, qc) <- probesByCell.getOrElse(cid, Nil) if vid != qid
+      pd <- pdByKey.getOrElse((qid, sub, cell), Nil)
+    } {
+      val acc = groups.getOrElseUpdate((qid, vid), new Acc(qc))
+      if (!sameQc(acc.qc, qc)) return None
+      for (d <- pd) {
+        if (!java.lang.Double.isFinite(d) || math.abs(d) >= 1e20) return None
+        acc.sum = Pca.addDec18(acc.sum, d)
+        acc.anyPd = true
+      }
+    }
+    Some(groups.toSeq.groupBy(_._1._1).toSeq.flatMap { case (qid, rs) =>
+      rs.map { case ((_, vid), acc) =>
+          val rIp = if (acc.anyPd) Some(acc.sum.doubleValue) else None
+          (vid, for (a <- acc.qc; b <- rIp) yield localRound(a + b, 4))
+        }
+        .sortWith((a, b) => rankLt((a._2, Some(a._1)), (b._2, Some(b._1))))
+        .take(k).zipWithIndex
+        .map { case ((vid, ip), i) => (qid, vid, ip, i + 1) }
+    })
   }
 
   /** MMR over the exact candidate pool — [[cosineTopK]]'s plan with
@@ -737,8 +836,7 @@ object Similarity {
   }
 
   /** Centroid-table bytes below which nearest-centroid assignment
-    * rides the expression tree as literals (the
-    * [[VectorIndex]].encodeLiteral valve, same 4 MiB bound): below it
+    * rides the expression tree as literals: below it
     * the assignment is a PURE NARROW MAP (no n·k row blowup, no
     * argmax aggregate with array-typed buffers — which HashAggregate
     * cannot hold, so the old form paid an ObjectHashAggregate of the
@@ -1842,8 +1940,8 @@ object Similarity {
     val cents = centroidRows(
       centroids.withColumnRenamed("coarse_id", "centroid_id"))
     // coarse argmax + residual in the same pass: a narrow in-row
-    // argmax over the literal centroids below the valve (the
-    // encodeLiteral form — no n·nlist blowup, no object aggregate),
+    // argmax over the literal centroids below the valve (no n·nlist
+    // blowup, no object aggregate),
     // the crossJoin + max_by form beyond — same pick, same residual
     val er = (if (cents.nonEmpty && centroidBytes(cents) <= LitAssignMaxBytes)
         e.withColumn("cc", bestCentroidStruct(col("emb"), cents, 6))

@@ -1,9 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.engine.{Compactor, DirSnapshot}
+import graft.plans.DriverFold
+import Similarity.{optLong, optSeq}
 
 /** Persisted vector ANN index [EXT] — the BM25 inverted-index
   * lifecycle ([[Retrieval.updateIndex]] / [[Retrieval.queryIndex]])
@@ -51,9 +53,9 @@ import graft.engine.{Compactor, DirSnapshot}
   * The model (centroids + codebooks) is FROZEN at init — [[update]]
   * encodes new vectors under it without retraining (a production PQ
   * index re-trains on a schedule, not per batch), as a PURE NARROW
-  * MAP with two bit-identical execution forms picked by model size
-  * (see [[update]]): no shuffle, no state, runs unchanged on a
-  * `readStream` batch ([[graft.streaming.StreamingVectorIndex]]).
+  * MAP with the model in the task closure: no shuffle, no state, runs
+  * unchanged on a `readStream` batch
+  * ([[graft.streaming.StreamingVectorIndex]]).
   *
   * [[query]] never touches the corpus: probes rank the KB centroid
   * table, the probed cell ids push into the codes parquet scan as
@@ -61,7 +63,10 @@ import graft.engine.{Compactor, DirSnapshot}
   * probed cells' posting lists), and scoring is [[Similarity
   * .ivfPqRank]] — the EXACT tail the in-query s08 uses, so the two
   * surfaces return identical rankings over the same corpus
-  * (spec-pinned AND oracle-checked: s17 replays s08's SQL).
+  * (spec-pinned AND oracle-checked: s17 replays s08's SQL). A
+  * serving-sized request ranks on the driver from ONE bounded read of
+  * the probed cells' codes ([[Similarity.ivfPqRankLocal]], op for op
+  * that tail), with the tombstones held like the model.
   */
 object VectorIndex {
 
@@ -81,26 +86,23 @@ object VectorIndex {
   private[graft] val TombstonesSchema: StructType =
     StructType.fromDDL("vec_id BIGINT, deleted_at BIGINT")
 
-  /** The held snapshots of the KB-scale store dirs, one per dir this
-    * JVM has read, keyed by the qualified dir path.
-    */
-  private val snapshots =
-    new java.util.concurrent.ConcurrentHashMap[String, DirSnapshot[Row]]()
-
-  /** A KB-scale store dir's rows: from its held snapshot when `keep`
-    * (reloaded only when the dir's listing changed), else read whole
-    * and not kept.
+  /** A KB-scale store dir's rows: from this JVM's held snapshot when
+    * `keep` (reloaded only when the dir's listing changed), else read
+    * whole and not kept.
     */
   private def dirRows(spark: SparkSession, dir: String, schema: StructType,
-                      keep: Boolean): Vector[Row] = {
-    val key = Compactor.fs(spark, dir)
-      .makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
-    def fresh = new DirSnapshot[Row](dir)(Encoders.row(schema))
-    val snap =
-      if (keep) snapshots.computeIfAbsent(key, _ => fresh)
-      else { snapshots.remove(key); fresh }
-    snap.rows(spark)
-  }
+                      keep: Boolean): Vector[Row] =
+    DirSnapshot.heldRows(spark, dir, schema, keep = keep).get
+
+  /** The tombstoned ids from the held tombstones snapshot, or None while
+    * the dir holds more than [[Similarity.LocalFoldMaxQueryRows]] rows.
+    * A null id never matches the read paths' anti-join, so it is left
+    * out.
+    */
+  private def deadIds(spark: SparkSession, store: String): Option[Set[Long]] =
+    DirSnapshot.heldRows(spark, s"$store/tombstones", TombstonesSchema,
+        Similarity.LocalFoldMaxQueryRows)
+      .map(_.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet)
 
   /** Whether the frozen model (centroids + codebooks), sized from META
     * without a collect, fits the driver-side valve
@@ -123,15 +125,6 @@ object VectorIndex {
     (dirRows(spark, s"$store/centroids", CentroidsSchema, keep),
       dirRows(spark, s"$store/codebooks", CodebooksSchema, keep))
   }
-
-  /** Above this raw-model size, [[update]] switches the in-row encode
-    * from planted plan literals to a closure-based mapPartitions (the
-    * KeywordMatch 4 MiB TorrentBroadcast precedent): a production
-    * nlist (≈√N — thousands of centroids × dim doubles) would
-    * otherwise re-serialize a multi-MiB literal tree into EVERY task
-    * binary of every update stage.
-    */
-  private[graft] val LitEncodeMaxBytes: Long = 4L << 20
 
   private def fs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -456,51 +449,20 @@ object VectorIndex {
     (centroids, model)
   }
 
-  /** Literal-plan in-row encode: coarse assignment is an in-row
-    * argmin over (−round6 cosine, coarse_id) structs of the literal
-    * centroid list (identical argmax + tiebreak to the distributed
-    * assignment — [[Similarity.ivfPqIndex]]'s max_by — spec-pinned
-    * code-for-code), the residual an in-row zip_with against the
-    * chosen centroid, and the PQ cells [[Similarity.pqEncode]]'s
-    * in-row argmin. Whole-stage-codegen'd, but the model rides the
-    * expression tree — right below [[LitEncodeMaxBytes]] only.
-    */
-  private def encodeLiteral(b: DataFrame, meta: IndexMeta,
-      centroids: Array[(Long, Array[Double])],
-      model: Map[(Int, Long), Array[Double]]): DataFrame = {
-    val best = array_min(array(centroids.map { case (cid, cEmb) =>
-      struct(
-        (-round(Similarity.cosine(col("emb"), typedLit(cEmb.toSeq)), 6))
-          .as("nsim"),
-        lit(cid).as("coarse_id"),
-        typedLit(cEmb.toSeq).as("c_emb"))
-    }.toIndexedSeq: _*))
-    val encoded = b.withColumn("best", best)
-      .withColumn("coarse_id", col("best").getField("coarse_id"))
-      .withColumn("resid",
-        zip_with(col("emb"), col("best").getField("c_emb"), _ - _))
-      .select(col("vec_id"), col("coarse_id"), col("resid"))
-    Similarity.pqEncode(encoded, model, meta.m, meta.dim,
-        embCol = "resid")
-      .select(col("vec_id"),
-        posexplode(col("codes")).as(Seq("sub", "cell")),
-        col("coarse_id"))
-      .select(col("vec_id"), col("sub").cast("int").as("sub"),
-        col("cell"), col("coarse_id"))
-  }
-
-  /** Closure-based in-row encode — the same codes as [[encodeLiteral]]
-    * for EVERY row (spec-pinned, dirty rows included), with the model
-    * shipped once per executor in the task closure (TorrentBroadcast)
-    * instead of re-serialized into every task's expression tree. Each
-    * row runs [[Similarity.encodeRow]] — the kernel the driver-built
-    * index shares: the [[graft.functions.CosineSimilarity]] and
-    * [[graft.functions.L2Squared]] loops verbatim, Spark's `round`
+  /** The in-row encode of a prepped (vec_id, emb) frame under the
+    * frozen stored model, as a closure-based mapPartitions: the model
+    * ships once per executor in the task closure (TorrentBroadcast),
+    * so the plan carries no model literals whatever the model's size.
+    * Each row runs [[Similarity.encodeRow]] — the kernel the
+    * driver-built index shares: the [[graft.functions.CosineSimilarity]]
+    * and [[graft.functions.L2Squared]] loops verbatim, Spark's `round`
     * ([[Similarity.localRound]] — NaN and ±Inf pass through) and the
     * engine's double ordering with the (coarse_id / cell) tiebreaks. A
-    * null vector or null component enters as NaN: the literal form's
-    * NULL cosines and distances tie every candidate exactly as the NaN
-    * ones do, so both pick the smallest id.
+    * null vector or null component enters as NaN, which ties every
+    * candidate exactly as the expression form's NULL cosines and
+    * distances do, so both pick the smallest id. The specs pin it code
+    * for code, dirty rows included, against init's distributed encode
+    * and the literal-expression twin in the test tree.
     */
   private def encodeClosure(b: DataFrame, meta: IndexMeta,
       centroids: Array[(Long, Array[Double])],
@@ -531,30 +493,24 @@ object VectorIndex {
       }.toDF("vec_id", "sub", "cell", "coarse_id")
   }
 
-  /** The in-row encode of a prepped (vec_id, emb) frame under the
-    * frozen stored model — the two execution forms above, picked by
-    * raw model size. Exposed for the parity spec.
-    */
-  private[graft] def encodeUnderModel(b: DataFrame, meta: IndexMeta,
-      centroids: Array[(Long, Array[Double])],
-      model: Map[(Int, Long), Array[Double]],
-      litMaxBytes: Long): DataFrame = {
-    val modelBytes =
-      (centroids.length.toLong * meta.dim +
-        model.size.toLong * (meta.dim / meta.m)) * 8L
-    if (modelBytes <= litMaxBytes) encodeLiteral(b, meta, centroids, model)
-    else encodeClosure(b, meta, centroids, model)
+  /** [[update]]'s encode of `batch` under the store's frozen model. */
+  private[graft] def encodeForStore(spark: SparkSession, store: String,
+                                    batch: DataFrame): DataFrame = {
+    val (meta, centroids, model) = frozenModel(spark, store)
+    encodeClosure(prep(batch), meta, centroids, model)
   }
 
-  private[graft] def encodeForStore(spark: SparkSession, store: String,
-      batch: DataFrame, litMaxBytes: Long = LitEncodeMaxBytes): DataFrame = {
+  /** The store's meta and frozen model ([[readModel]]). */
+  private[graft] def frozenModel(spark: SparkSession, store: String)
+      : (IndexMeta, Array[(Long, Array[Double])],
+        Map[(Int, Long), Array[Double]]) = {
     val meta = readMeta(spark, store)
     val (centroids, model) = readModel(spark, store, meta)
-    encodeUnderModel(prep(batch), meta, centroids, model, litMaxBytes)
+    (meta, centroids, model)
   }
 
   /** Append one batch of new vectors under the FROZEN stored model —
-    * the index-maintenance narrow map ([[encodeUnderModel]]): no
+    * the index-maintenance narrow map ([[encodeClosure]]): no
     * explode over the corpus, no retrain — scan speed on a 100 TB
     * delta, and unchanged on a `readStream` batch. Contract guards:
     *
@@ -574,14 +530,9 @@ object VectorIndex {
     * append begins, so the store is never read and written by the
     * same job.
     */
-  def update(batch: DataFrame, store: String): Unit =
-    update(batch, store, LitEncodeMaxBytes)
-
-  private[graft] def update(batch: DataFrame, store: String,
-                            litMaxBytes: Long): Unit = {
+  def update(batch: DataFrame, store: String): Unit = {
     val spark = batch.sparkSession
-    val meta = readMeta(spark, store)
-    val (centroids, model) = readModel(spark, store, meta)
+    val (meta, centroids, model) = frozenModel(spark, store)
     val b0 = prep(batch).distinct()
     val dims = b0.agg(min(size(col("emb"))).as("mn"),
       max(size(col("emb"))).as("mx")).collect()(0)
@@ -617,7 +568,7 @@ object VectorIndex {
     val batchKey = s"b${kr.getLong(0)}_${kr.getLong(1)}_${kr.getLong(2)}"
     driftStatsOf(fresh, batchKey)
       .coalesce(1).write.mode("append").parquet(s"$store/driftstats")
-    encodeUnderModel(fresh, meta, centroids, model, litMaxBytes)
+    encodeClosure(fresh, meta, centroids, model)
       .write.mode("append").parquet(s"$store/codes")
   }
 
@@ -1056,6 +1007,53 @@ object VectorIndex {
         zip_with(col("c_emb"), col("remb"), _ + _).as("emb"))
   }
 
+  /** [[reconstruct]] folded on the driver over collected live codes
+    * rows (each vector's rows, as [[liveCodeRows]] gives them) and the
+    * held model rows: the (sub, cell) inner join to the codebook
+    * (null keys never match), the per-vector concatenation of the
+    * matched subvectors in `sub` order — null when any of them is null,
+    * as `flatten` gives — the inner join to the centroids on the
+    * vector's coarse_id, and `zip_with(c_emb, remb, _ + _)`, which
+    * null-pads the shorter side. Returns each vector's reconstructions
+    * (one per matching centroid row; a vector with no codebook or
+    * centroid match has none).
+    *
+    * None where [[reconstruct]]'s answer would depend on row order:
+    * a vector whose matched rows carry two coarse ids (`first`) or two
+    * rows for one subspace (the `array_sort` tie on sub). [[update]]'s
+    * id gate codes every vector once, so a store never holds either.
+    */
+  private def reconstructLocal(rows: Seq[CodeRow], centRows: Seq[Row],
+                               cbRows: Seq[Row])
+      : Option[Map[Long, Seq[Seq[Any]]]] = {
+    val cb = cbRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .groupBy(r => (r.getInt(0), r.getLong(1)))
+    val cents = centRows.filter(!_.isNullAt(0)).groupBy(_.getLong(0))
+    val perVec = rows.collect { case CodeRow(Some(v), Some(sub), Some(cell), cid) =>
+        cb.getOrElse((sub, cell), Nil).map(c => (v, sub, cid, optSeq(c, 2)))
+      }.flatten.groupBy(_._1)
+    val out = Map.newBuilder[Long, Seq[Seq[Any]]]
+    for ((v, matched) <- perVec) {
+      if (matched.map(_._3).distinct.size > 1 ||
+          matched.map(_._2).distinct.size < matched.size) return None
+      val subs = matched.sortBy(_._2).map(_._4)
+      val remb: Seq[Any] =
+        if (subs.contains(null)) null else subs.flatten
+      val embs = matched.head._3.toSeq.flatMap(cents.getOrElse(_, Nil))
+        .map { c =>
+          val cEmb = optSeq(c, 1)
+          if (cEmb == null || remb == null) null
+          else Seq.tabulate(math.max(cEmb.length, remb.length)) { i =>
+            val (x, y) = (cEmb.lift(i).orNull, remb.lift(i).orNull)
+            if (x == null || y == null) null
+            else x.asInstanceOf[Double] + y.asInstanceOf[Double]
+          }
+        }
+      if (embs.nonEmpty) out += v -> embs
+    }
+    Some(out.result())
+  }
+
   /** Diversified retrieval ENTIRELY from the store — the production
     * MMR shape when the float corpus is not on the serving path: the
     * candidate pool is [[query]]'s cell-pruned top-`poolSize` (rel =
@@ -1065,32 +1063,50 @@ object VectorIndex {
     * contract, third pool family after s14's exact and s18's LSH).
     * Oracle-checked (s19): pool ranking, reconstruction arithmetic
     * and every greedy round replay in SQL.
+    *
+    * Execution: one Spark job when the ranking folds on the driver
+    * ([[query]]'s valves): the probed cells' codes are read once, the
+    * pool ranks from them ([[Similarity.ivfPqRankLocal]]) and the pool's
+    * vectors reconstruct from the same rows and the held model
+    * ([[reconstructLocal]]); the greedy is the driver fold it always
+    * was. Past a valve the distributed ranking and [[reconstruct]] run,
+    * each collected under the fold cap.
     */
   def diversifiedQuery(spark: SparkSession, store: String,
                        queries: DataFrame, k: Int, poolSize: Int = 12,
                        lambda: Double = 0.7,
                        nprobe: Int = 4): DataFrame = {
     require(poolSize >= k, s"pool ($poolSize) must cover k ($k)")
-    // r15: the pool build is KB by construction (|Q|·poolSize rows) —
-    // collect the store ranking once (one job, replacing the eager
-    // checkpoint + id-collect pair) and join the PQ reconstructions
-    // back driver-side (multiset inner join, null keys never match —
-    // SQL equality). The reconstruct itself keeps its distributed
-    // pushed-codes plan; the MMR greedy was already a driver fold.
-    val pool0 = query(spark, store, queries, poolSize, nprobe)
-      .select(col("query_id"), col("neighbor_id").as("vec_id"),
-        col("approx_ip").as("rel"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+    val cap = Similarity.foldCap
+    val plan = rankPlan(spark, store, queries, nprobe)
+    val local = for {
+      l <- plan.local
+      read <- DriverFold.collect(plan.codes.coalesce(1), cap)
+      live = liveCodeRows(read, l.dead)
+      ranked <- l.rank(live, poolSize)
+    } yield (ranked, live)
+    val pool0 = local match {
+      case Some((ranked, _)) =>
+        ranked.map(t => (Some(t._1), Some(t._2), t._3))
+      case None =>
+        DriverFold.collectOrFail(plan.distributed(poolSize), cap,
+            "diversifiedQuery pool").toIndexedSeq
+          .map(r => (optLong(r, 0), optLong(r, 1),
+            if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+    }
     val ids = pool0.flatMap(_._2).distinct
-    val embById = reconstruct(spark, store, ids)
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Any](1)))
-      .collect { case (Some(id), emb) => id -> emb }
-      .groupBy(_._1).map { case (key, v) => key -> v.map(_._2) }
+    val idSet = ids.toSet
+    val embById = local.flatMap { case (_, live) =>
+        val (centRows, cbRows) = modelRows(spark, store, plan.meta)
+        reconstructLocal(live.filter(_.vecId.exists(idSet)), centRows,
+          cbRows)
+      }.getOrElse {
+        DriverFold.collectOrFail(reconstruct(spark, store, ids), cap,
+            "diversifiedQuery reconstruction").toIndexedSeq
+          .map(r => (optLong(r, 0), optSeq(r, 1)))
+          .collect { case (Some(id), emb) => id -> emb }
+          .groupBy(_._1).map { case (key, v) => key -> v.map(_._2) }
+      }
     val pool = for {
       (qid, vid, rel) <- pool0
       emb <- vid.toSeq.flatMap(embById.getOrElse(_, Nil))
@@ -1132,36 +1148,33 @@ object VectorIndex {
     * degenerates to the exact ranking (spec-pinned, the s04
     * contract). Oracle-checked (s20): the s08 candidate chain + the
     * exact re-rank CTE replay end-to-end.
+    *
+    * The candidates, the fetched originals and the query vectors are
+    * each collected under the fold cap ([[Similarity.foldCap]]) and the
+    * re-rank folds on the driver ([[Similarity.exactRerankLocal]], the
+    * one definition the hybrid dense legs share); the tail has no
+    * distributed form, so a frame past the cap fails with
+    * [[graft.plans.FoldCapExceeded]].
     */
   def queryRerank(spark: SparkSession, store: String, corpus: DataFrame,
                   queries: DataFrame, k: Int, rerank: Int = 8,
                   nprobe: Int = 4): DataFrame = {
     require(rerank >= k,
       s"rerank pool ($rerank) must cover k ($k)")
-    // r15: the re-rank tail runs over KB-by-construction frames
-    // (|Q|·rerank candidates, their pushed-fetched originals, the
-    // query vectors), yet cost an eager checkpoint, an id collect and
-    // a join+window plan per call. Collect the three frames (the
-    // corpus fetch keeps its pushed PARALLEL scan) and fold the exact
-    // re-rank driver-side — [[Similarity.exactRerankLocal]], the one
-    // definition the hybrid dense legs share, spec-pinned against the
-    // expression form.
-    val candRows = query(spark, store, queries, rerank, nprobe)
-      .select(col("query_id"), col("neighbor_id").as("vec_id"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    val cap = Similarity.foldCap
+    val candRows = DriverFold.collectOrFail(
+        query(spark, store, queries, rerank, nprobe), cap,
+        "queryRerank candidates").toIndexedSeq
+      .map(r => (optLong(r, 0), optLong(r, 1)))
     val ids = candRows.flatMap(_._2).distinct
-    val fetchedRows = prep(corpus)
-      .filter(col("vec_id").isin(ids: _*))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Any](1)))
-    val qRows = prep(queries)
-      .select(col("vec_id").as("query_id"), col("emb"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Any](1)))
+    val fetchedRows = DriverFold.collectOrFail(
+        prep(corpus).filter(col("vec_id").isin(ids: _*)), cap,
+        "queryRerank fetch").toIndexedSeq
+      .map(r => (optLong(r, 0), optSeq(r, 1)))
+    val qRows = DriverFold.collectOrFail(
+        prep(queries).select(col("vec_id").as("query_id"), col("emb")), cap,
+        "queryRerank queries").toIndexedSeq
+      .map(r => (optLong(r, 0), optSeq(r, 1)))
     val ranked = Similarity.exactRerankLocal(candRows, fetchedRows,
       qRows, k)
     import scala.jdk.CollectionConverters._
@@ -1192,6 +1205,11 @@ object VectorIndex {
     * Oracle-checked (s24): the s08 candidate chain, the pool cut,
     * the exact relevance join and every greedy round replay
     * end-to-end.
+    *
+    * The pool build (cands ⋈ originals ⋈ q, rel = round-4 exact
+    * cosine, NO cut — the greedy sees the whole nomination) folds on
+    * the driver over the three frames, each collected under the fold
+    * cap; past it the call fails with [[graft.plans.FoldCapExceeded]].
     */
   def diversifiedQueryRerank(spark: SparkSession, store: String,
                              corpus: DataFrame, queries: DataFrame,
@@ -1199,31 +1217,22 @@ object VectorIndex {
                              lambda: Double = 0.7,
                              nprobe: Int = 4): DataFrame = {
     require(poolSize >= k, s"pool ($poolSize) must cover k ($k)")
-    // r15: the pool build (cands ⋈ originals ⋈ q, rel = round-4 exact
-    // cosine, NO cut — the greedy sees the whole nomination) folds
-    // driver-side over the three collected KB frames, the
-    // queryRerank/diversify discipline; the pushed corpus fetch keeps
-    // its parallel scan.
-    val candRows = query(spark, store, queries, poolSize, nprobe)
-      .select(col("query_id"), col("neighbor_id").as("vec_id"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    val cap = Similarity.foldCap
+    val candRows = DriverFold.collectOrFail(
+        query(spark, store, queries, poolSize, nprobe), cap,
+        "diversifiedQueryRerank candidates").toIndexedSeq
+      .map(r => (optLong(r, 0), optLong(r, 1)))
     val ids = candRows.flatMap(_._2).distinct
-    val embById = prep(corpus)
-      .filter(col("vec_id").isin(ids: _*))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Any](1)))
-      .collect { case (Some(id), emb) => id -> emb }
-      .groupBy(_._1).map { case (key, v) => key -> v.map(_._2) }
-    val qById = prep(queries)
-      .select(col("vec_id").as("query_id"), col("emb"))
-      .collect().toIndexedSeq
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Any](1)))
-      .collect { case (Some(id), emb) => id -> emb }
-      .groupBy(_._1).map { case (key, v) => key -> v.map(_._2) }
+    def byId(rows: Array[Row]): Map[Long, Seq[Seq[Any]]] =
+      rows.toIndexedSeq.map(r => (optLong(r, 0), optSeq(r, 1)))
+        .collect { case (Some(id), emb) => id -> emb }
+        .groupBy(_._1).map { case (key, v) => key -> v.map(_._2) }
+    val embById = byId(DriverFold.collectOrFail(
+      prep(corpus).filter(col("vec_id").isin(ids: _*)), cap,
+      "diversifiedQueryRerank fetch"))
+    val qById = byId(DriverFold.collectOrFail(
+      prep(queries).select(col("vec_id").as("query_id"), col("emb")), cap,
+      "diversifiedQueryRerank queries"))
     val pool = for {
       (qid, vid) <- candRows
       emb <- vid.toSeq.flatMap(embById.getOrElse(_, Nil))
@@ -1234,77 +1243,113 @@ object VectorIndex {
     Similarity.mmrRerank(localPoolDf(spark, pool), k, lambda)
   }
 
-  /** Rank from the store WITHOUT touching the corpus: probes rank the
-    * KB centroid table, the probed cell ids (collected — |Q|·nprobe
-    * longs, the bm25-terms discipline) push into the codes scan as
-    * PushedFilters, replayed appends fold via distinct, tombstoned
-    * ids anti-join out, and the scoring tail is [[Similarity
-    * .ivfPqRank]] verbatim. Identical rankings to
-    * [[Similarity.ivfPqTopK]] over the same corpus and knobs
-    * (spec-pinned; s17's oracle replays s08's SQL).
+  /** [[query]]'s output: [[Similarity.ivfPqRank]]'s exact schema, whose
+    * query_id is as nullable as the request's vec_id.
     */
-  def query(spark: SparkSession, store: String, queries: DataFrame,
-            k: Int, nprobe: Int = 4): DataFrame = {
+  private def rankSchema(qidNullable: Boolean): StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("query_id", LongType, qidNullable),
+      StructField("neighbor_id", LongType),
+      StructField("approx_ip", DoubleType),
+      StructField("rank", IntegerType, nullable = false)))
+  }
+
+  /** A collected codes row (vec_id, sub, cell, coarse_id). */
+  private final case class CodeRow(vecId: Option[Long], sub: Option[Int],
+                                   cell: Option[Long], coarseId: Option[Long])
+
+  /** The live codes of a raw codes read: replayed appends folded
+    * (distinct) and tombstoned ids removed — [[liveCodes]] on collected
+    * rows (a null id is never tombstoned).
+    */
+  private def liveCodeRows(read: Array[Row], dead: Set[Long]): Seq[CodeRow] =
+    read.iterator.map(r => CodeRow(optLong(r, 0),
+        if (r.isNullAt(1)) None else Some(r.getInt(1)), optLong(r, 2),
+        optLong(r, 3)))
+      .filterNot(_.vecId.exists(dead)).toSeq.distinct
+
+  /** The driver side of one call's ranking: the folded probe and
+    * distance tables and the tombstoned ids.
+    */
+  private final case class LocalRank(
+      probes: Seq[(Option[Long], Option[Long], Option[Double])],
+      dtable: Seq[(Option[Long], Int, Long, Option[Double])],
+      dead: Set[Long]) {
+    def rank(live: Seq[CodeRow], k: Int)
+        : Option[Seq[(Long, Long, Option[Double], Int)]] =
+      Similarity.ivfPqRankLocal(
+        live.map(c => (c.vecId, c.sub, c.cell, c.coarseId)), probes, dtable, k)
+  }
+
+  /** One call's cell-pruned ranking, planned: the probed cells' raw
+    * codes scan (coarse_id IN pushed into it), the driver side of the
+    * fold when the model, the request and the tombstones fit the
+    * driver, and the [[Similarity.ivfPqRank]] plan for a given k.
+    */
+  private final class RankPlan(val meta: IndexMeta, val qidNullable: Boolean,
+                               val codes: DataFrame,
+                               val local: Option[LocalRank],
+                               val distributed: Int => DataFrame)
+
+  private def rankPlan(spark: SparkSession, store: String,
+                       queries: DataFrame, nprobe: Int): RankPlan = {
     val meta = readMeta(spark, store)
     val q = prep(queries)
       .select(col("vec_id").as("query_id"), col("emb"))
-    // r15 (VERDICT r14 item 3, the mmrRerank-fold discipline): the
-    // probe table (|Q|·nprobe rows) and the ADC distance table
-    // (|Q|·m·ksub rows) are KB BY CONTRACT — the former eager
-    // probe plan (crossJoin + window + checkpoint), the cell collect,
-    // and the dtable's posexplode/join subtree cost ~10 pool-bounded
-    // jobs + their Catalyst planning per call, the measured majority
-    // of every serving query's wall time. Fold them driver-side over
-    // the collected query table and the held centroid/codebook
+    // the probe table (|Q|·nprobe rows) and the ADC distance table
+    // (|Q|·m·ksub rows) are KB by contract: fold them on the driver
+    // over the collected query table and the held centroid/codebook
     // snapshots when the model fits the literal valve
     // ([[modelFitsDriver]] — sized from META; a 100 TB autoNlist model
-    // keeps the distributed form) and the request is serving-sized.
-    // Arithmetic is replicated op for op in
-    // [[Similarity.ivfPqProbesLocal]]/[[ivfPqDtableLocal]] (spec-pinned
-    // against the expression forms); the corpus-sized codes scan +
-    // rank tail is UNCHANGED either way.
+    // keeps the distributed form) and the request is serving-sized —
+    // the fold materializes |Q|·m·ksub distance-table rows, so |Q| is
+    // capped to keep that within the fold cap. Arithmetic is
+    // replicated op for op in [[Similarity.ivfPqProbesLocal]] /
+    // [[Similarity.ivfPqDtableLocal]] (spec-pinned against the
+    // expression forms).
     val dsub = meta.dim / meta.m
+    val qidNullable = q.schema("query_id").nullable
     val qRows: Option[IndexedSeq[(Option[Long], Seq[Any])]] =
-      if (modelFitsDriver(meta)) {
-        // the fold materializes |Q|·m·ksub distance-table rows: cap |Q|
-        // so that stays within LocalFoldMaxQueryRows
-        val maxQ = Similarity.LocalFoldMaxQueryRows / (meta.m * meta.ksub)
-        val collected = q.limit(maxQ + 1).collect()
-        if (collected.length <= maxQ)
-          Some(collected.toIndexedSeq.map(r =>
-            (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-              if (r.isNullAt(1)) null else r.getSeq[Any](1))))
-        else None // not a serving-sized request: distributed form
-      } else None
-    val (probes, dtable, cells) = qRows match {
+      if (!modelFitsDriver(meta)) None
+      else DriverFold.collect(q, Similarity.foldCap / (meta.m * meta.ksub))
+        .map(_.toIndexedSeq.map(r => (optLong(r, 0), optSeq(r, 1))))
+    def codesIn(cells: Seq[Long]): DataFrame =
+      spark.read.schema(CodesSchema).parquet(s"$store/codes")
+        .filter(col("coarse_id").isin(cells: _*))
+    def rank(codes: DataFrame, probes: DataFrame, dtable: DataFrame)(
+        k: Int): DataFrame =
+      Similarity.ivfPqRank(
+        codes.join(tombstones(spark, store).select(col("vec_id")),
+          Seq("vec_id"), "left_anti").distinct(), probes, dtable, k)
+    qRows match {
       case Some(rows) =>
         // declared (coarse_id, c_emb) and (sub, cell, c_sv) rows
         val (centRows, cbRows) = modelRows(spark, store, meta)
-        val cents = centRows.map(r =>
-          (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-            if (r.isNullAt(1)) null else r.getSeq[Any](1)))
+        val cents = centRows.map(r => (optLong(r, 0), optSeq(r, 1)))
         val cb = cbRows
           .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-          .map(r => (r.getInt(0), r.getLong(1),
-            if (r.isNullAt(2)) null else r.getSeq[Any](2)))
+          .map(r => (r.getInt(0), r.getLong(1), optSeq(r, 2)))
         val pl = Similarity.ivfPqProbesLocal(rows, cents, nprobe)
         val dl = Similarity.ivfPqDtableLocal(rows, cb, meta.m, dsub)
         import scala.jdk.CollectionConverters._
-        import org.apache.spark.sql.Row
         import org.apache.spark.sql.types._
+        // query_id keeps the request's nullability, as the
+        // distributed probe and distance tables do
+        val qid = StructField("query_id", LongType, qidNullable)
         val pDf = spark.createDataFrame(
-          pl.map(t => Row(t._1.orNull, t._2.orNull, t._3.orNull))
-            .asJava,
-          StructType(Seq(StructField("query_id", LongType),
-            StructField("coarse_id", LongType),
+          pl.map(t => Row(t._1.orNull, t._2.orNull, t._3.orNull)).asJava,
+          StructType(Seq(qid, StructField("coarse_id", LongType),
             StructField("qc", DoubleType))))
         val dDf = spark.createDataFrame(
           dl.map(t => Row(t._1.orNull, t._2, t._3, t._4.orNull)).asJava,
-          StructType(Seq(StructField("query_id", LongType),
+          StructType(Seq(qid,
             StructField("sub", IntegerType, nullable = false),
             StructField("cell", LongType, nullable = false),
             StructField("pd", DoubleType))))
-        (pDf, dDf, pl.flatMap(_._2).distinct.toIndexedSeq)
+        val codes = codesIn(pl.flatMap(_._2).distinct)
+        new RankPlan(meta, qidNullable, codes,
+          deadIds(spark, store).map(LocalRank(pl, dl, _)),
+          rank(codes, pDf, dDf))
       case None =>
         val centroids =
           spark.read.schema(CentroidsSchema).parquet(s"$store/centroids")
@@ -1318,13 +1363,41 @@ object VectorIndex {
           .localCheckpoint(true) // consumed twice: collect + rank join
         val cells = probes.select(col("coarse_id")).distinct()
           .collect().map(_.getLong(0)).toIndexedSeq
-        (probes, Similarity.ivfPqDtable(q, cb1, meta.m, dsub), cells)
+        val codes = codesIn(cells)
+        new RankPlan(meta, qidNullable, codes, None,
+          rank(codes, probes, Similarity.ivfPqDtable(q, cb1, meta.m, dsub)))
     }
-    val codes = spark.read.schema(CodesSchema).parquet(s"$store/codes")
-      .filter(col("coarse_id").isin(cells: _*))
-      .join(tombstones(spark, store).select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .distinct()
-    Similarity.ivfPqRank(codes, probes, dtable, k)
+  }
+
+  /** Rank from the store WITHOUT touching the corpus: probes rank the
+    * KB centroid table, the probed cell ids push into the codes scan as
+    * PushedFilters, replayed appends fold via distinct, tombstoned
+    * ids anti-join out, and the scoring is [[Similarity.ivfPqRank]]'s.
+    * Identical rankings to [[Similarity.ivfPqTopK]] over the same
+    * corpus and knobs (spec-pinned; s17's oracle replays s08's SQL).
+    *
+    * Execution: when the model fits the driver, the request is
+    * serving-sized and the tombstones are held, the frame is a
+    * [[graft.plans.DriverFold]]: building it runs no Spark job, and
+    * collecting it runs ONE — the probed cells' codes read with
+    * `limit(cap + 1)` — then ranks on the driver with
+    * [[Similarity.ivfPqRankLocal]], op for op the distributed rank.
+    * Past the cap ([[Similarity.foldCap]] codes rows) the same
+    * collect runs the distributed [[Similarity.ivfPqRank]] plan
+    * instead. Past any other valve the frame is that plan.
+    */
+  def query(spark: SparkSession, store: String, queries: DataFrame,
+            k: Int, nprobe: Int = 4): DataFrame = {
+    val plan = rankPlan(spark, store, queries, nprobe)
+    plan.local match {
+      case Some(l) =>
+        DriverFold.frame(plan.codes.coalesce(1),
+            rankSchema(plan.qidNullable),
+            "ivfPqRankLocal", Similarity.foldCap) { read =>
+          l.rank(liveCodeRows(read.toArray, l.dead), k).map(_.map(t =>
+            Row(t._1, t._2, t._3.orNull, t._4)))
+        }(plan.distributed(k))
+      case None => plan.distributed(k)
+    }
   }
 }

@@ -1074,4 +1074,114 @@ class RetrievalSpec extends SparkTestBase {
       .collect().map(_.getAs[Long]("doc_id")).toSeq
     assert(top == Seq(1L))
   }
+
+  /** An index whose query terms hold the lexical fold's corner cases:
+    * two documents with the same text (tied scores), a term whose only
+    * posting is tombstoned, a replayed postings append (duplicate rows);
+    * the queries also carry a term absent from the store. Returns the
+    * store and the count of raw postings rows of the query terms.
+    */
+  private def foldStore(prefix: String)
+      : (String, Seq[(Long, Seq[String])], Int) = {
+    val extra = Seq((900001L, "zebra zebra quokka spark"),
+      (900002L, "zebra zebra quokka spark"),
+      (900003L, "onlyterm merge window")).toDF("doc_id", "text")
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+      .filter(col("doc_id") < 250).unionByName(extra)
+    val st = tmpDir(prefix) + "/idx"
+    Retrieval.initIndexIfStale(docs, st)
+    spark.read.schema(Retrieval.PostingsSchema).parquet(s"$st/postings")
+      .filter(col("token").isin("zebra", "merge", "spark")).limit(40)
+      .collect().toSeq match { case rows =>
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.asJava, Retrieval.PostingsSchema)
+          .write.mode("append").parquet(s"$st/postings")
+      }
+    Retrieval.deleteFromIndex(spark, st, Seq(900003L))
+    val queries = Seq(0L -> Seq("zebra", "absentterm"),
+      1L -> Seq("onlyterm", "dup", "merge"),
+      2L -> Seq("spark", "window", "zebra"))
+    val n = spark.read.parquet(s"$st/postings")
+      .filter(col("token").isin(queries.flatMap(_._2).distinct: _*)).count()
+    (st, queries, n.toInt)
+  }
+
+  test("the lexical leg's driver fold == its distributed plan at the " +
+    "fold cap ±1 postings row: ties, an absent term, an all-tombstoned " +
+    "term, duplicate postings; identical rows and StructType") {
+    val (st, queries, n) = foldStore("lexfold")
+    def run(cap: Int): (Seq[Seq[Any]],
+        org.apache.spark.sql.types.StructType, Int) =
+      Similarity.withFoldCap(cap) {
+        def leg() = Retrieval.lexRankFromStore(spark, st, queries, 20,
+          1.2, 0.75)
+        leg() // warm: the lengths and tombstone snapshots load once
+        var df: DataFrame = null
+        var rows: Seq[Seq[Any]] = null
+        val jobs = jobsDuring {
+          df = leg(); rows = df.collect().map(_.toSeq).toSeq
+            .sortBy(_.toString)
+        }
+        (rows, df.schema, jobs.size)
+      }
+    val (folded, foldedSchema, foldedJobs) = run(n)
+    val (past, pastSchema, pastJobs) = run(n - 1)
+    assert(foldedJobs == 1, s"the folded leg ran $foldedJobs jobs")
+    assert(pastJobs > 1, "one row past the cap should run the plan")
+    assert(folded == past, "the fold ranked differently from the plan")
+    assert(foldedSchema == pastSchema,
+      s"${foldedSchema.treeString} vs ${pastSchema.treeString}")
+    // ties order by doc_id; the tombstoned doc never ranks
+    val q0 = folded.filter(_.head == 0L).sortBy(_(2).asInstanceOf[Int])
+    assert(q0.take(2).map(_(1)) == Seq(900001L, 900002L), s"ties: $q0")
+    assert(!folded.exists(_(1) == 900003L), "a tombstoned doc ranked")
+  }
+
+  test("a warm hybridQueryStores runs at most two Spark jobs, and every " +
+    "hybrid read runs its retained distributed fuse past the fold cap") {
+    val (bm, queries, _) = foldStore("hybfold-bm25")
+    val e = Tables.embeddings(spark, sf0001)
+    val vStore = tmpDir("hybfold-vidx") + "/idx"
+    VectorIndex.init(e, vStore, coarseIters = 2)
+    val qVecs = localVectors(e, 3)
+    def hybrid(): Seq[Seq[Any]] =
+      Retrieval.hybridQueryStores(spark, bm, vStore, queries, qVecs,
+        k = 10, depth = 20).collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val cold = hybrid()
+    val jobs = jobsDuring { assert(hybrid() == cold) }
+    assert(jobs.size <= 2, s"a warm hybrid read ran ${jobs.size} jobs")
+    // each leg holds |Q|·depth = 60 rows: one below, both legs take
+    // their distributed plans and the fuse is rrfFuse's
+    assert(Similarity.withFoldCap(59)(hybrid()) == cold,
+      "the distributed fuse answered differently")
+    // the rerank read's dense leg holds 2·20 rows while the lexical
+    // leg holds 60: one row below the lexical leg, only the fuse
+    // leaves the driver
+    def rerank(): Seq[Seq[Any]] =
+      Retrieval.hybridQueryStoresRerank(spark, bm, vStore, e, queries,
+        localVectors(e, 2), k = 10, depth = 20).collect().map(_.toSeq)
+        .toSeq.sortBy(_.toString)
+    val lexRows = Retrieval.lexRankFromStore(spark, bm, queries, 20, 1.2,
+      0.75).count().toInt
+    assert(lexRows > 40)
+    assert(Similarity.withFoldCap(lexRows - 1)(rerank()) == rerank(),
+      "the rerank read's distributed fuse answered differently")
+    // the diversify tail has no distributed form: it fails by name
+    val ex = intercept[graft.plans.FoldCapExceeded] {
+      Similarity.withFoldCap(lexRows - 1) {
+        Retrieval.hybridQueryStoresDiversify(spark, bm, vStore, e, queries,
+          localVectors(e, 2), k = 4, poolSize = 12, depth = 20)
+      }
+    }
+    assert(ex.getMessage.contains("lexical leg") &&
+      ex.getMessage.contains(s"more than ${lexRows - 1} rows"),
+      ex.getMessage)
+    val dense = intercept[graft.plans.FoldCapExceeded] {
+      Similarity.withFoldCap(59) {
+        Retrieval.hybridQueryStoresDiversify(spark, bm, vStore, e,
+          queries.take(2), qVecs, k = 4, poolSize = 12, depth = 20)
+      }
+    }
+    assert(dense.getMessage.contains("dense leg"), dense.getMessage)
+  }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** The persisted vector-index lifecycle: the store query must rank
   * EXACTLY as the in-query IVF-PQ (which is oracle-checked), the
   * in-row delta encode must equal the distributed one ACROSS BOTH
-  * execution forms (plan literals and the size-gated mapPartitions
-  * closure), replays and re-presented ids must append nothing,
+  * execution forms (the engine's mapPartitions closure and the
+  * literal-plan twin), replays and re-presented ids must append nothing,
   * staleness must see embedding CONTENT and half-written meta,
   * tombstones must delete for every read path, compaction must be
   * invisible to queries, and a store must fail loudly rather than
@@ -45,11 +45,11 @@ class VectorIndexSpec extends SparkTestBase {
     // re-encode the WHOLE corpus through both in-row paths under the
     // frozen model: coarse argmax, residual, and PQ argmin must agree
     // code for code with the distributed init encode
-    val litCodes = VectorIndex.encodeForStore(spark, st, e,
-      litMaxBytes = Long.MaxValue).collect().map(_.toSeq).toSet
+    val litCodes = VectorIndexTwins.encodeLiteral(spark, st, e)
+      .collect().map(_.toSeq).toSet
     assert(litCodes == initCodes,
       "literal-path in-row codes diverged from the distributed init")
-    val clo = VectorIndex.encodeForStore(spark, st, e, litMaxBytes = 0L)
+    val clo = VectorIndex.encodeForStore(spark, st, e)
       .collect().map(_.toSeq).toSet
     assert(clo == initCodes,
       "closure-path in-row codes diverged from the distributed init")
@@ -74,10 +74,10 @@ class VectorIndexSpec extends SparkTestBase {
         StructType(Seq(StructField("vec_id", LongType),
           StructField("embedding", ArrayType(DoubleType)))))
     }
-    val dirtyLit = VectorIndex.encodeForStore(spark, st, dirty,
-      litMaxBytes = Long.MaxValue).collect().map(_.toSeq.toString).toSet
-    val dirtyClo = VectorIndex.encodeForStore(spark, st, dirty,
-      litMaxBytes = 0L).collect().map(_.toSeq.toString).toSet
+    val dirtyLit = VectorIndexTwins.encodeLiteral(spark, st, dirty)
+      .collect().map(_.toSeq.toString).toSet
+    val dirtyClo = VectorIndex.encodeForStore(spark, st, dirty)
+      .collect().map(_.toSeq.toString).toSet
     assert(dirtyLit.size == 6 * 8 && dirtyClo == dirtyLit,
       s"dirty rows: literal $dirtyLit, closure $dirtyClo")
     // id immutability: a replayed batch (same ids) appends nothing —
@@ -1117,5 +1117,157 @@ class VectorIndexSpec extends SparkTestBase {
         sortedRows(VectorIndex.query(spark, st, last, k = 3)))
         .sortBy(_.toString),
       "the distributed form ranked differently from the driver fold")
+  }
+
+  /** The raw codes rows a query over `q` reads: every row of the codes
+    * dir in the cells the probes pick.
+    */
+  private def probedCodeRows(st: String, q: DataFrame): Long = {
+    val cells = Similarity.ivfPqProbes(
+        q.select(col("vec_id").cast("long").as("query_id"),
+          col("embedding").cast("array<double>").as("emb")),
+        spark.read.parquet(s"$st/centroids"), 4)
+      .select("coarse_id").distinct().collect().map(_.getLong(0)).toSeq
+    spark.read.parquet(s"$st/codes").filter(col("coarse_id").isin(cells: _*))
+      .count()
+  }
+
+  /** A store whose probed cells hold the fold's corner cases: two twins
+    * of vec 3 (identical codes, so every query ties them), a replayed
+    * codes append (duplicate rows), a probed cell whose codes are all
+    * gone (an empty cell the probes still rank), and a tombstoned id
+    * from the first answer; the queries are corpus vectors, so every
+    * query has a self-hit to drop.
+    */
+  private def adversarialStore(prefix: String): (String, DataFrame) = {
+    import scala.jdk.CollectionConverters._
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding"))
+    val twins = Seq(900003L, 900004L).map(id =>
+      e.filter(col("vec_id") === 3L).select(lit(id).as("vec_id"),
+        col("embedding")))
+    val st = store(prefix)
+    VectorIndex.init(twins.foldLeft(e)(_ unionByName _), st,
+      coarseIters = 2)
+    val q = localVectors(e, 5)
+    def cellOf(id: Long): Long = spark.read.parquet(s"$st/codes")
+      .filter(col("vec_id") === id).select("coarse_id").head().getLong(0)
+    // empty the cell of a probed neighbour that is not the twins' cell
+    val victimCell = VectorIndex.query(spark, st, q, k = 3).collect()
+      .map(r => cellOf(r.getLong(1))).filterNot(_ == cellOf(3L)).head
+    val kept = spark.read.schema(VectorIndex.CodesSchema)
+      .parquet(s"$st/codes").filter(col("coarse_id") =!= victimCell)
+      .collect().toSeq
+    spark.createDataFrame(kept.asJava, VectorIndex.CodesSchema)
+      .write.mode("overwrite").parquet(s"$st/codes")
+    spark.createDataFrame(kept.take(200).asJava, VectorIndex.CodesSchema)
+      .write.mode("append").parquet(s"$st/codes")
+    val top = VectorIndex.query(spark, st, q, k = 1).collect()
+      .map(_.getLong(1)).filterNot(Set(900003L, 900004L)).head
+    VectorIndex.delete(spark, st, Seq(top))
+    (st, q)
+  }
+
+  test("the driver rank fold == the distributed rank at the fold cap " +
+    "±1 codes row: ties, a replayed append, a tombstone, self-hits and " +
+    "an empty probed cell; identical rows and StructType") {
+    val (st, q) = adversarialStore("vidx-fold")
+    val n = probedCodeRows(st, q).toInt
+    assert(n - 1 >= 5 * 8 * 16, s"$n codes rows: |Q| would leave the fold")
+    def run(cap: Int): (Seq[Seq[Any]], org.apache.spark.sql.types.StructType,
+        Int) = Similarity.withFoldCap(cap) {
+      val df = VectorIndex.query(spark, st, q, k = 6)
+      var rows: Seq[Seq[Any]] = null
+      val jobs = jobsDuring { rows = sortedRows(df) }
+      (rows, df.schema, jobs.size)
+    }
+    val (folded, foldedSchema, foldedJobs) = run(n)
+    val (past, pastSchema, pastJobs) = run(n - 1)
+    assert(foldedJobs == 1, s"at the cap the fold ran $foldedJobs jobs")
+    assert(pastJobs > 1, "one row past the cap should run the " +
+      "distributed rank")
+    assert(folded == past, "the fold ranked differently from the plan")
+    val distributed = Similarity.withFoldCap(0) {
+      VectorIndex.query(spark, st, q, k = 6)
+    }
+    assert(sortedRows(distributed) == folded)
+    assert(foldedSchema == distributed.schema &&
+      pastSchema == distributed.schema,
+      s"${foldedSchema.treeString} vs ${distributed.schema.treeString}")
+    // the twins tie on query 3 and order by vec_id; no self-hit
+    val q3 = folded.filter(_.head == 3L).sortBy(_(3).asInstanceOf[Int])
+    assert(q3.take(2).map(_(1)) == Seq(900003L, 900004L) &&
+      q3(0)(2) == q3(1)(2), s"tied twins: $q3")
+    assert(!folded.exists(r => r(0) == r(1)), "a self-hit was ranked")
+  }
+
+  test("diversifiedQuery ranks and reconstructs on the driver at the " +
+    "fold cap, == its distributed form one row past it, in one job") {
+    val (st, q) = adversarialStore("vidx-fold-mmr")
+    val n = probedCodeRows(st, q).toInt
+    def run(cap: Int): (Seq[Seq[Any]], Int) = Similarity.withFoldCap(cap) {
+      def read() = sortedRows(VectorIndex.diversifiedQuery(spark, st, q,
+        k = 4, poolSize = 12, lambda = 0.7))
+      read() // warm: the tombstone snapshot reloads once
+      var rows: Seq[Seq[Any]] = null
+      val jobs = jobsDuring { rows = read() }
+      (rows, jobs.size)
+    }
+    val (folded, foldedJobs) = run(n)
+    val (past, pastJobs) = run(n - 1)
+    assert(foldedJobs == 1, s"the folded read ran $foldedJobs jobs")
+    assert(pastJobs > 1)
+    assert(folded == past, "driver rank + reconstruct diverged from the " +
+      "distributed ranking and reconstruct")
+  }
+
+  test("a warm query runs exactly one Spark job: the probed codes read") {
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-onejob")
+    VectorIndex.init(e, st, coarseIters = 2)
+    VectorIndex.delete(spark, st, Seq(7L))
+    val probes = localVectors(e, 5)
+    VectorIndex.query(spark, st, probes, k = 3).collect()
+    val sites = jobSitesDuring {
+      VectorIndex.query(spark, st, probes, k = 3).collect()
+    }
+    assert(sites.size == 1, s"a warm query ran jobs at $sites")
+  }
+
+  test("serving tails with no distributed form fail by name one row " +
+    "past the fold cap") {
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-pastcap")
+    VectorIndex.init(e, st, coarseIters = 2)
+    val q = localVectors(e, 5)
+    def fails(cap: Int, what: String)(body: => Any): Unit = {
+      val ex = intercept[graft.plans.FoldCapExceeded] {
+        Similarity.withFoldCap(cap)(body)
+      }
+      assert(ex.getMessage.contains(what) &&
+        ex.getMessage.contains(s"more than $cap rows"), ex.getMessage)
+    }
+    // candidates: |Q|·rerank = 40 rows, pool: |Q|·poolSize = 60 rows
+    val rerank = Similarity.withFoldCap(40) {
+      sortedRows(VectorIndex.queryRerank(spark, st, e, q, k = 3))
+    }
+    assert(rerank == sortedRows(VectorIndex.queryRerank(spark, st, e, q,
+      k = 3)))
+    fails(39, "queryRerank candidates") {
+      VectorIndex.queryRerank(spark, st, e, q, k = 3)
+    }
+    // a corpus holding every vector twice fetches 2 rows per candidate
+    val fetched = 2 * VectorIndex.query(spark, st, q, k = 8).collect()
+      .map(_.getLong(1)).distinct.length
+    assert(fetched > 41)
+    fails(fetched - 1, "queryRerank fetch") {
+      VectorIndex.queryRerank(spark, st, e.unionByName(e), q, k = 3)
+    }
+    fails(59, "diversifiedQueryRerank candidates") {
+      VectorIndex.diversifiedQueryRerank(spark, st, e, q, k = 4)
+    }
+    fails(59, "diversifiedQuery pool") {
+      VectorIndex.diversifiedQuery(spark, st, q, k = 4)
+    }
   }
 }
