@@ -20,6 +20,11 @@ most the metric's bound, and a parent spread wider than the bound leaves the
 metric unresolved. A run that is not correct, or has failed ops, is reported
 and makes the exit code 1.
 The raw runs are written as JSON to --json when given.
+
+With --traced SEED, each side then makes one traced run (`--trace 1`) on
+SEED, parent first, and the per-op deltas of the two span files are printed
+as `scripts/span_tree.py --diff PARENT CHANGE` prints them, so the command
+that gives the A/B also shows which layer moved.
 """
 import argparse
 import json
@@ -29,6 +34,9 @@ import statistics
 import subprocess
 import sys
 import tempfile
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import span_tree  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUN_TIMEOUT_S = 1200
@@ -51,10 +59,11 @@ def unpack(rev, into):
     return into
 
 
-def run_once(checkout, workload, seed, seconds):
-    """One untraced run; its JSON line, or an error dict."""
+def run_once(checkout, workload, seed, seconds, trace=0):
+    """One run; its JSON line, or an error dict."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", str(trace)]
     try:
         r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True,
                            timeout=RUN_TIMEOUT_S)
@@ -64,6 +73,29 @@ def run_once(checkout, workload, seed, seconds):
     if r.returncode != 0 or not lines:
         return {"error": f"exit {r.returncode}: {r.stderr.strip()[-500:]}"}
     return json.loads(lines[-1])
+
+
+def spans_file(checkout, workload, seed):
+    """Where `perfbench/run.py --trace 1` leaves its span file."""
+    return os.path.join(checkout, "perfbench", ".out",
+                        f"{workload}-seed{seed}.spans.json")
+
+
+def traced_diff(sides, workload, seed, seconds, out, run=run_once):
+    """One traced run per side on `seed`, parent first, then the span
+    diff (parent -> change) on `out`; an error string, or None.
+    """
+    for name in ("parent", "change"):
+        r = run(sides[name], workload, seed, seconds, trace=1)
+        if "error" in r:
+            return f"{name} traced run: {r['error']}"
+        if not r["correct"] or r["failed"]:
+            return f"{name} traced run: failed ops"
+    print(f"\nspan diff, seed {seed} (parent -> change):", file=out)
+    span_tree.diff(span_tree.load(spans_file(sides["parent"], workload, seed)),
+                   span_tree.load(spans_file(sides["change"], workload, seed)),
+                   out)
+    return None
 
 
 def quartiles(xs):
@@ -97,7 +129,7 @@ def report(metric, better, bound, parent, change):
           f"parent IQR {iqr:.3f}  -> {verdict}")
 
 
-def main():
+def parse_args(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="git rev of the parent")
     ap.add_argument("--change", help="git rev of the change "
@@ -109,7 +141,14 @@ def main():
     ap.add_argument("--keep", action="store_true",
                     help="keep the unpacked checkouts")
     ap.add_argument("--json", help="write the raw runs here")
-    args = ap.parse_args()
+    ap.add_argument("--traced", type=int, metavar="SEED",
+                    help="after the A/B, one traced run per side on SEED "
+                    "and the per-op span diff")
+    return ap.parse_args(argv)
+
+
+def main():
+    args = parse_args()
 
     with open(os.path.join(REPO, "BENCHMARK.json")) as fh:
         e2e = json.load(fh)["end_to_end"]
@@ -155,6 +194,11 @@ def main():
             report(name, m["better"], m["bound"],
                    [runs["parent"][i]["metrics"][name]["value"] for i in ok],
                    [runs["change"][i]["metrics"][name]["value"] for i in ok])
+        if args.traced is not None:
+            err = traced_diff(sides, args.workload, args.traced,
+                              args.seconds, sys.stdout)
+            if err:
+                bad.append(err)
         for b in bad:
             print(f"NOT CORRECT: {b}")
         sys.exit(1 if bad else 0)

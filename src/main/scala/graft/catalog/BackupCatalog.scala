@@ -1,21 +1,8 @@
 package graft.catalog
 
-import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.Job
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
-import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.OutputFile
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.encoderFor
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
-import org.apache.spark.sql.internal.SQLConf
-import graft.engine.DirSnapshot
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.engine.{DirSnapshot, DriverParquet}
 
 /** Parquet-backed backup-metadata catalog — the Spark-native stand-in
   * for the reference's MySQL/SimpleDB store
@@ -38,11 +25,12 @@ import graft.engine.DirSnapshot
   * no Spark job.
   *
   * Concurrency: an append writes exactly one part file from the driver
-  * ([[BackupCatalog.writePart]], no Spark job) into a private
-  * `<root>/_staging/<uuid>` dir with no lock held, then renames it into
-  * its log under the instance lock and the JVM-wide
-  * [[graft.engine.Compactor.swapLock]] and adds its rows to the
-  * snapshot — so a log dir only ever holds complete files, and a
+  * (no Spark job) into a private `<root>/_staging/<uuid>` dir with no
+  * lock held, then renames it into its log under the instance lock and
+  * the JVM-wide [[graft.engine.Compactor.swapLock]] and adds its rows
+  * to the snapshot — the engine's one staged-append protocol
+  * ([[DriverParquet.stage]]), which the serving stores' appends share —
+  * so a log dir only ever holds complete files, and a
   * concurrent reader can never see a half-written append. The instance
   * lock covers listings, reloads, renames and compactions; append
   * writes run outside it, so concurrent table jobs record in parallel
@@ -59,7 +47,6 @@ import graft.engine.DirSnapshot
 final class BackupCatalog(spark: SparkSession, root: String,
                           compactAfterFiles: Int = 64) {
   import spark.implicits._
-  import BackupCatalog.inFlight
 
   private def fs =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -72,59 +59,28 @@ final class BackupCatalog(spark: SparkSession, root: String,
   private val descsLog =
     new DirSnapshot[ColumnDescriptor](s"$root/descriptors")
   private val purgesLog = new DirSnapshot[PurgeRecord](s"$root/purges")
-  private val stagingDir = s"$root/_staging"
 
   private def rowsOf[T](log: DirSnapshot[T]): Vector[T] = log.rows(spark)
 
-  /** Rows written to a private staging dir as exactly one part file,
-    * not yet visible in their log.
+  /** `rows` as one part file in a fresh `<root>/_staging` dir, written
+    * by the driver ([[DriverParquet.stage]]): an append runs no Spark
+    * job. Publishing renames it into its log and adds its rows to the
+    * snapshot.
     */
-  private final class Staged[T](log: DirSnapshot[T], val dir: String,
-                                part: Path, rows: Seq[T]) {
-    /** Rename the part file into its log and add its rows to the
-      * snapshot. Caller holds the instance lock.
-      */
-    def publish(): Unit = {
-      val dst = new Path(log.dir, part.getName)
-      log.commit(spark, dst.getName, rows) {
-        fs.mkdirs(new Path(log.dir))
-        require(fs.rename(part, dst), s"cannot publish $part to $dst")
-      }
-    }
-  }
-
-  /** A fresh staging dir, registered as in flight until [[unstage]]. */
-  private def newStagingDir(): String = {
-    val id = UUID.randomUUID().toString
-    inFlight.add(id)
-    s"$stagingDir/$id"
-  }
-
-  private def unstage(dir: String): Unit = {
-    val p = new Path(dir)
-    if (fs.exists(p)) fs.delete(p, true)
-    inFlight.remove(p.getName)
-  }
-
-  /** `rows` as one part file in a fresh staging dir, written by the
-    * driver ([[BackupCatalog.writePart]]): an append runs no Spark job.
-    */
-  private def stage[T](log: DirSnapshot[T], rows: Seq[T]): Staged[T] = {
-    val dir = newStagingDir()
-    try new Staged(log, dir, BackupCatalog.writePart(spark, dir, rows)(log.enc),
-      rows)
-    catch { case e: Throwable => unstage(dir); throw e }
-  }
+  private def stage[T](log: DirSnapshot[T], rows: Seq[T])
+      : DriverParquet.Staged[T] =
+    DriverParquet.stage(spark, Some(log), log.dir, rows)(log.enc)
 
   /** Write each batch to staging with no lock held, then publish them
     * in order under the instance lock.
     */
-  private def append(batches: (() => Staged[_])*): Unit = {
-    val staged = scala.collection.mutable.ArrayBuffer.empty[Staged[_]]
+  private def append(batches: (() => DriverParquet.Staged[_])*): Unit = {
+    val staged =
+      scala.collection.mutable.ArrayBuffer.empty[DriverParquet.Staged[_]]
     try {
       batches.foreach(b => staged += b())
       synchronized { staged.foreach(_.publish()) }
-    } finally staged.foreach(s => unstage(s.dir))
+    } finally staged.foreach(_.discard())
   }
 
   private def fileCount(log: DirSnapshot[_]): Int = synchronized {
@@ -217,7 +173,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
 
   /** Replace a log with `fold` of its rows, all under the instance
     * lock: the fold is written by the driver as one part file
-    * ([[BackupCatalog.writePart]], as an append is) to a staging dir,
+    * ([[DriverParquet.writePart]], as an append is) to a staging dir,
     * then swapped in by
     * checked renames (dir → __old, staged → dir, drop __old) under the
     * swap lock, so a crash can lose at most the in-flight fold, never
@@ -230,10 +186,10 @@ final class BackupCatalog(spark: SparkSession, root: String,
   private def compact[T](log: DirSnapshot[T])(fold: => Seq[T])
       : Unit = synchronized {
     val folded = fold
-    val staged = newStagingDir()
+    val staged = DriverParquet.newStagingDir(root)
     try {
       val written =
-        Set(BackupCatalog.writePart(spark, staged, folded)(log.enc).getName)
+        Set(DriverParquet.writePart(spark, staged, folded)(log.enc).getName)
       val (p, pStaged, pOld) =
         (new Path(log.dir), new Path(staged), new Path(log.dir + "__old"))
       log.replace(spark, written, folded) {
@@ -248,7 +204,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
         }
         fs.delete(pOld, true) // old copy only removed after a full swap
       }
-    } finally unstage(staged)
+    } finally DriverParquet.unstage(spark, staged)
   }
 
   /** Purge a session — the takedown path the append-only logs
@@ -287,11 +243,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
   def compactAll(): Unit = {
     compactSessions(); compactTables(); compactDescriptors()
     compactPurges()
-    val staging = new Path(stagingDir)
-    if (fs.exists(staging))
-      fs.listStatus(staging).map(_.getPath)
-        .filterNot(p => inFlight.contains(p.getName))
-        .foreach(p => fs.delete(p, true))
+    DriverParquet.clearStaging(spark, root)
   }
 
   /** Fold the sessions log back to one row per session (purged
@@ -340,7 +292,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
     */
   def exportedTableInfo(t: TableRecord, descs: Seq[ColumnDescriptor]): Unit = {
     require(t.mode == "export", s"mode=${t.mode}")
-    val descBatch: Seq[() => Staged[_]] =
+    val descBatch: Seq[() => DriverParquet.Staged[_]] =
       if (descs.isEmpty) Nil else Seq(() => stage(descsLog, descs))
     append(descBatch :+ (() => stage(tablesLog, Seq(t))): _*)
     compactIfAccreted()
@@ -415,48 +367,4 @@ final class BackupCatalog(spark: SparkSession, root: String,
 
   def lastEndTime(mode: String, tableName: String): Long =
     lastEndTimes(mode).getOrElse(tableName, 0L)
-}
-
-object BackupCatalog {
-  /** Staging dir names (UUIDs) of the appends and folds in flight in
-    * this JVM — the ones [[BackupCatalog.compactAll]] must not clear.
-    */
-  private val inFlight = ConcurrentHashMap.newKeySet[String]()
-
-  /** Write `rows` from the driver as one parquet part file in `dir`,
-    * named as a Spark task names its file, and return its path. Spark's
-    * own parquet write setup ([[ParquetFileFormat.prepareWrite]]: the
-    * row schema, timestamp and legacy-format settings, the session's
-    * codec) drives parquet-hadoop's writer with Spark's
-    * [[ParquetWriteSupport]], fed by the encoder's serializer, so the
-    * file carries the same parquet schema and Spark row-schema footer
-    * metadata as a one-task Spark write of the same rows, and reads
-    * back as the same StructType — without a Spark job.
-    */
-  private[catalog] def writePart[T](spark: SparkSession, dir: String,
-                                    rows: Seq[T])(implicit enc: Encoder[T])
-      : Path = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, enc.schema)
-    val conf = job.getConfiguration
-    val codec = CompressionCodecName.fromConf(
-      conf.get(ParquetOutputFormat.COMPRESSION))
-    val part = new Path(dir,
-      s"part-00000-${new Path(dir).getName}-c000${codec.getExtension}.parquet")
-    val toRow = encoderFor(enc).createSerializer()
-    val writer = SQLConf.withExistingConf(spark.sessionState.conf) {
-      new PartWriter(HadoopOutputFile.fromPath(part, conf))
-        .withConf(conf).withCompressionCodec(codec).build()
-    }
-    try rows.foreach(r => writer.write(toRow(r)))
-    finally writer.close()
-    part
-  }
-
-  private final class PartWriter(file: OutputFile)
-      extends ParquetWriter.Builder[InternalRow, PartWriter](file) {
-    override def self(): PartWriter = this
-    override def getWriteSupport(conf: Configuration)
-        : WriteSupport[InternalRow] = new ParquetWriteSupport()
-  }
 }

@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.StructType
   * the caller would collect anyway belong here. A dir that may outgrow
   * the driver takes a `maxRows` bound: a reload reads at most
   * `maxRows + 1` rows, and a dir holding more is not held
-  * ([[bounded]] answers None until its listing changes). A caller
+  * ([[bounded]] answers None until a file of it is replaced or
+  * removed: appends alone cannot bring it back under). A caller
   * that writes the dir itself can apply its own appends and swaps
   * through [[commit]] and [[replace]], which update the snapshot
   * without a reload.
@@ -48,6 +49,9 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
       if (listed != files) {
         held =
           if (listed.isEmpty) Some(Vector.empty)
+          // files were only added to a dir already past the bound: it
+          // still is, and nothing need be read to say so
+          else if (held.isEmpty && files.subsetOf(listed)) None
           else {
             val ds = spark.read.schema(enc.schema)
               .parquet(listed.toSeq.map(n => new Path(dir, n).toString): _*)
@@ -112,13 +116,21 @@ object DirSnapshot {
   def heldRows(spark: SparkSession, dir: String, schema: StructType,
                maxRows: Int = Int.MaxValue,
                keep: Boolean = true): Option[Vector[Row]] = {
-    val key = Compactor.fs(spark, dir).makeQualified(new Path(dir)).toString
+    val k = key(spark, dir)
     def fresh = new DirSnapshot[Row](dir, maxRows)(Encoders.row(schema))
     val snap =
-      if (keep) snapshots.computeIfAbsent(key, _ => fresh)
-      else { snapshots.remove(key); fresh }
+      if (keep) snapshots.computeIfAbsent(k, _ => fresh)
+      else { snapshots.remove(k); fresh }
     snap.bounded(spark)
   }
+
+  /** This JVM's held snapshot of `dir`, if [[heldRows]] keeps one. */
+  private[engine] def held(spark: SparkSession,
+                           dir: String): Option[DirSnapshot[Row]] =
+    Option(snapshots.get(key(spark, dir)))
+
+  private def key(spark: SparkSession, dir: String): String =
+    Compactor.fs(spark, dir).makeQualified(new Path(dir)).toString
 
   /** A committed data file: not a `_`/`.` sidecar or in-flight dir. */
   def isCommitted(s: FileStatus): Boolean = {

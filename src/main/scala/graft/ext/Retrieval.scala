@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.engine.{Compactor, DirSnapshot}
+import graft.engine.{Compactor, DirSnapshot, DriverParquet}
 import graft.plans.DriverFold
 import Similarity.{optLong, optSeq}
 
@@ -199,10 +199,22 @@ object Retrieval {
     * NOTHING — not even the harmless bit-identical rows the
     * fold-at-read distinct used to absorb.
     * Re-texting a live id is a rebuild event ([[rebuildIndex]]). The
-    * anti-join's survivor set is materialized (eager localCheckpoint,
+    * stores remain append-only fact logs; long-lived ones compact with
+    * the engine's Compactor.
+    *
+    * A batch of at most [[Similarity.foldCap]] rows with no null id or
+    * text, whose postings fit the cap too, is folded on the driver
+    * ([[updateIndexLocal]]): one bounded read of the batch, the id gate
+    * from the held lengths and tombstone snapshots, one pushed
+    * `doc_id IN` postings probe for the crash-window gate below, and
+    * each append written by the driver and committed into the held
+    * snapshot — a warm update of a local batch runs one Spark job, the
+    * probe, and the next read reloads nothing. Any other batch (a
+    * corpus-sized bootstrap) takes the distributed path, whose
+    * anti-join survivor set is materialized (eager localCheckpoint,
     * delta-sized) BEFORE the appends, so the store is never read and
-    * written by the same job. The stores remain append-only fact
-    * logs; long-lived ones compact with the engine's Compactor.
+    * written by the same job. Both paths write the same rows, schemas
+    * and file counts (spec-pinned).
     *
     * CRASH WINDOW (r13): the lengths row lands LAST, so a crash
     * between the two appends leaves ids whose postings are planted
@@ -215,23 +227,108 @@ object Retrieval {
     * missing lengths row is repaired from its OWN planted facts (dl
     * is a posting column) — the retry COMPLETES the crashed update
     * exactly, whatever text it carries. Cost: the postings scan is
-    * column-pruned to (doc_id, dl) and semi-joined against the
-    * delta-sized survivor ids (AQE broadcasts them while they fit),
-    * and it is paid only when the lengths gate let something through
-    * — an identical replay never reaches it.
+    * column-pruned to (doc_id, dl) and filtered to the delta-sized
+    * survivor ids, and it is paid only when the lengths gate let
+    * something through — an identical replay never reaches it.
     */
   def updateIndex(batch: DataFrame, indexStore: String): Unit = {
-    val spark = batch.sparkSession
+    Compactor.recover(batch.sparkSession, indexStore)
+    if (!updateIndexLocal(batch, indexStore))
+      updateIndexDistributed(batch, indexStore)
+  }
+
+  /** The batch's (doc_id, text) rows; doc ids are stored as BIGINT
+    * (the declared store schemas).
+    */
+  private def prepDocs(batch: DataFrame): DataFrame =
+    batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+
+  /** A (doc_id, text) frame's postings rows (doc_id, dl, token, tf). */
+  private def postingsOf(b: DataFrame): DataFrame = {
     val toks = TextAnalysis.tokens(col("text"))
-    // distinct first: an exactly-duplicated document row inside one
-    // batch must not double its tf counts (the lengths distinct alone
-    // would mask it — one dl row, 2x tf — a silent score corruption)
+    b.select(col("doc_id"), size(toks).as("dl"), explode(toks).as("token"))
+      .groupBy(col("doc_id"), col("dl"), col("token"))
+      .agg(count(lit(1)).as("tf"))
+  }
+
+  /** A (doc_id, text) frame's lengths rows (doc_id, dl). */
+  private def lengthsOf(b: DataFrame): DataFrame =
+    b.select(col("doc_id"),
+      size(TextAnalysis.tokens(col("text"))).cast("long").as("dl"))
+      .distinct()
+
+  /** [[updateIndex]] on the driver, op for op
+    * [[updateIndexDistributed]]: the batch distinct, the gate on
+    * lengths ∪ tombstones, the orphan repair, then postings grouped by
+    * (doc_id, dl, token) over `split(text, " ")` and the distinct
+    * (doc_id, dl) lengths, appended in the same order with the schemas
+    * the distributed writes carry. Returns false, having written
+    * nothing, for a batch past the cap or holding a null id or text,
+    * lengths or tombstones too many to hold, or a probe or postings
+    * append past the cap.
+    */
+  private def updateIndexLocal(batch: DataFrame, indexStore: String)
+      : Boolean = {
+    val spark = batch.sparkSession
+    val cap = Similarity.foldCap
+    val got = DriverFold.collect(prepDocs(batch), cap)
+      .filter(_.forall(r => !r.anyNull)).getOrElse(return false)
+    val known = Seq("lengths" -> LengthsSchema,
+        "tombstones" -> TombstonesSchema)
+      .flatMap { case (sub, schema) =>
+        heldStore(spark, indexStore, sub, schema).getOrElse(return false) }
+      .iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    // distinct, as the distributed path's: a duplicated row must not
+    // double its tf counts
+    val b0 = got.iterator.map(r => (r.getLong(0), r.getString(1)))
+      .filterNot(r => known(r._1)).distinct.toSeq
+    if (b0.isEmpty) return true
+    val postingsDir = s"$indexStore/postings"
+    val orphans = DriverFold.collect(
+        scanStore(spark, postingsDir, PostingsSchema)
+          .filter(DriverFold.isIn(col("doc_id"), b0.map(_._1)))
+          .select(col("doc_id"), col("dl")).coalesce(1), cap)
+      .filter(_.forall(r => !r.anyNull)).getOrElse(return false)
+      .map(r => (r.getLong(0), r.getInt(1))).distinct.toSeq
+    val orphanIds = orphans.map(_._1).toSet
+    val b = b0.filterNot(r => orphanIds(r._1))
+    val toks = b.map { case (id, text) => (id, TextAnalysis.tokensLocal(text)) }
+    // tf per (doc_id, dl, token), stopping once the postings pass the
+    // cap (a corpus-sized batch declines early)
+    val postings = scala.collection.mutable.HashMap
+      .empty[(Long, Int, String), Long]
+    for ((id, ts) <- toks) {
+      ts.foreach(t => postings.updateWith((id, ts.length, t))(
+        n => Some(n.getOrElse(0L) + 1L)))
+      if (postings.size > cap) return false
+    }
+    if (orphans.nonEmpty)
+      DriverParquet.appendPart(spark, s"$indexStore/lengths", LengthsSchema,
+        orphans.map { case (id, dl) => Row(id, dl.toLong) })
+    if (b.nonEmpty) {
+      val docs = prepDocs(batch).distinct()
+      DriverParquet.appendPart(spark, postingsDir, postingsOf(docs).schema,
+        postings.iterator.map { case ((id, dl, t), tf) => Row(id, dl, t, tf) }
+          .toSeq)
+      DriverParquet.appendPart(spark, s"$indexStore/lengths",
+        lengthsOf(docs).schema,
+        toks.map { case (id, ts) => (id, ts.length.toLong) }.distinct
+          .map { case (id, dl) => Row(id, dl) })
+    }
+    true
+  }
+
+  /** [[updateIndex]] as Spark jobs, for any batch. */
+  private def updateIndexDistributed(batch: DataFrame,
+                                     indexStore: String): Unit = {
+    val spark = batch.sparkSession
     val known = liveStore(spark, indexStore, "lengths", LengthsSchema)
       .select(col("doc_id"))
       .unionByName(tombstones(spark, indexStore).select(col("doc_id")))
-    // doc ids are stored as BIGINT (the declared store schemas)
-    val b0 = batch.select(col("doc_id").cast("long").as("doc_id"),
-        col("text")).distinct()
+    // distinct first: an exactly-duplicated document row inside one
+    // batch must not double its tf counts (the lengths distinct alone
+    // would mask it — one dl row, 2x tf — a silent score corruption)
+    val b0 = prepDocs(batch).distinct()
       .join(known, Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
     if (b0.isEmpty) return
@@ -259,14 +356,8 @@ object Retrieval {
           .localCheckpoint(true)
       }
     if (b.isEmpty) return
-    b.select(col("doc_id"), size(toks).as("dl"),
-        explode(toks).as("token"))
-      .groupBy(col("doc_id"), col("dl"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      .write.mode("append").parquet(s"$indexStore/postings")
-    b.select(col("doc_id"), size(toks).cast("long").as("dl"))
-      .distinct()
-      .write.mode("append").parquet(s"$indexStore/lengths")
+    postingsOf(b).write.mode("append").parquet(s"$indexStore/postings")
+    lengthsOf(b).write.mode("append").parquet(s"$indexStore/lengths")
   }
 
   /** A store table's folded rows, read with its declared schema (no
@@ -307,10 +398,12 @@ object Retrieval {
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
                       indexStore: String, docIds: Seq[Long]): Unit = {
     require(docIds.nonEmpty, "deleteFromIndex needs at least one doc_id")
-    import spark.implicits._
+    // a crash mid-rebuild leaves the root missing and `__old` holding
+    // the truth: restore it before the append creates the root
+    Compactor.recover(spark, indexStore)
     val now = System.currentTimeMillis()
-    docIds.distinct.map((_, now)).toDF("doc_id", "deleted_at")
-      .coalesce(1).write.mode("append").parquet(s"$indexStore/tombstones")
+    DriverParquet.appendPart(spark, s"$indexStore/tombstones",
+      TombstonesWritten, docIds.distinct.map(Row(_, now)))
   }
 
   /** Live store rows: fold-at-read distinct + tombstone anti-join —
@@ -333,6 +426,19 @@ object Retrieval {
     StructType.fromDDL("doc_id BIGINT, dl BIGINT")
   private[graft] val TombstonesSchema: StructType =
     StructType.fromDDL("doc_id BIGINT, deleted_at BIGINT")
+  // the tombstone parts' written schema, nullability included: the
+  // footer of the Spark-written tombstone parts already in stores
+  private[graft] val TombstonesWritten: StructType =
+    StructType.fromDDL("doc_id BIGINT NOT NULL, deleted_at BIGINT NOT NULL")
+
+  /** A store table's rows from this JVM's held snapshot, or None while
+    * it holds more than [[Similarity.LocalFoldMaxQueryRows]] rows.
+    */
+  private def heldStore(spark: org.apache.spark.sql.SparkSession,
+                        indexStore: String, sub: String,
+                        schema: StructType): Option[Vector[Row]] =
+    DirSnapshot.heldRows(spark, s"$indexStore/$sub", schema,
+      Similarity.LocalFoldMaxQueryRows)
 
   final case class IndexCompactReport(postingsBefore: Long,
     postingsAfter: Long, filesBefore: Int, filesAfter: Int)
@@ -343,7 +449,9 @@ object Retrieval {
     * .swapInto]]). Query results unchanged by construction (reads
     * already fold + anti-join); N streaming drains' small append files
     * and replay duplicates stop accumulating. Tombstones stay (cheap
-    * facts; they still gate [[updateIndex]]).
+    * facts; they still gate [[updateIndex]]). The staging dirs a
+    * crashed driver append left under `_staging/` are removed
+    * ([[DriverParquet.clearStaging]]).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    indexStore: String,
@@ -372,6 +480,7 @@ object Retrieval {
     val rootFs = new org.apache.hadoop.fs.Path(indexStore)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.engine.StoreLease.withLease(rootFs, indexStore) {
+      DriverParquet.clearStaging(spark, indexStore)
       val (pb, pa, fb, fa) = one("postings", PostingsSchema)
       val (_, _, lb, la) = one("lengths", LengthsSchema)
       IndexCompactReport(pb, pa, fb + lb, fa + la)
@@ -967,15 +1076,13 @@ object Retrieval {
     Compactor.recover(spark, indexStore)
     val allTerms = queries.flatMap(_._2).distinct
     val qtRows = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
-    def held(sub: String, schema: StructType) =
-      DirSnapshot.heldRows(spark, s"$indexStore/$sub", schema,
-        Similarity.LocalFoldMaxQueryRows)
     // a null in a posting or length row is left to the plan
     def noNulls(rows: Seq[Row]): Option[Seq[Row]] =
       Some(rows).filter(_.forall(r => !r.anyNull))
     val local = for {
-      lengths <- held("lengths", LengthsSchema).flatMap(noNulls)
-      dead <- held("tombstones", TombstonesSchema)
+      lengths <- heldStore(spark, indexStore, "lengths", LengthsSchema)
+        .flatMap(noNulls)
+      dead <- heldStore(spark, indexStore, "tombstones", TombstonesSchema)
       read <- DriverFold.collect(
         scanStore(spark, s"$indexStore/postings", PostingsSchema)
           .filter(col("token").isin(allTerms: _*)).coalesce(1),

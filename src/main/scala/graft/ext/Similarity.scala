@@ -1741,7 +1741,7 @@ object Similarity {
           (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
         val n = rows.length.toDouble
         val mx = rows.iterator.map(_._3.iterator.map(math.abs).max).max
-        val bounded = n * (dim + 2) * mx < 1e19 && dim * mx * mx < 1e19 &&
+        val bounded = decimalSumsFit(n, dim, mx) &&
           n * (mx * mx * 1e6 + 1.0) < 9e18
         if (!bounded || rows.map(_._2).distinct.length != rows.length) None
         else Some(DriverCorpus(rows.toIndexedSeq.groupBy(_._1).toIndexedSeq
@@ -1749,6 +1749,14 @@ object Similarity {
       }
     }
   }
+
+  /** Whether no DECIMAL(38,18) sum over `n` vectors of `dim`
+    * components of magnitude at most `mx` (per-dim sums, squared
+    * norms, norm sums) can overflow in any summation order:
+    * n·(dim+2)·mx < 1e19 and dim·mx² < 1e19.
+    */
+  private[ext] def decimalSumsFit(n: Double, dim: Int, mx: Double): Boolean =
+    n * (dim + 2) * mx < 1e19 && dim * mx * mx < 1e19
 
   /** [[ivfPqIndexDistributed]] run on the driver over a clean
     * collected corpus — every step the engine's, bit for bit:

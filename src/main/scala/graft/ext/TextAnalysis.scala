@@ -17,6 +17,13 @@ object TextAnalysis {
     */
   def tokens(text: Column): Column = split(text, " ")
 
+  /** [[tokens]] on the driver: Spark's `split` is Java's
+    * `String.split` with a limit of -1, so empty tokens (doubled,
+    * leading or trailing spaces, an empty text) are kept alike.
+    */
+  private[ext] def tokensLocal(text: String): Array[String] =
+    text.split(" ", -1)
+
   /** Language marker lists (shared with the SQL oracle via
     * [[graft.queries.TextQueries]]). Deliberately small: language ID
     * here is the n-gram/stopword heuristic itself, not a model.

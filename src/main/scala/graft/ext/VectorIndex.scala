@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.engine.{Compactor, DirSnapshot}
+import graft.engine.{Compactor, DirSnapshot, DriverParquet}
 import graft.plans.DriverFold
 import Similarity.{optLong, optSeq}
 
@@ -20,8 +20,8 @@ import Similarity.{optLong, optSeq}
   *    ([[Similarity.ivfPqIndex]]), KB-scale;
   *  - `codes/` — (vec_id, sub, cell, coarse_id): the corpus codes —
   *    the ONLY corpus-sized artifact (~3% of a float corpus). Appends
-  *    are id-gated ([[update]] anti-joins the batch against the ids
-  *    already coded), so at-least-once replays of a batch append
+  *    are id-gated ([[update]] drops the batch ids already coded or
+  *    tombstoned), so at-least-once replays of a batch append
   *    NOTHING — stronger than the fold-at-read contract the BM25
   *    postings use, and it closes the divergent-re-present hole (a
   *    changed embedding under an existing id can never plant a second
@@ -35,6 +35,13 @@ import Similarity.{optLong, optSeq}
   *    ([[driftReportFromStats]]) never has to rescan the corpus —
   *    decimal sums fold associatively, so the stats-fed report equals
   *    the corpus-scan report BIT FOR BIT;
+  *  - `_staging/` — driver-written appends in flight: a serving-sized
+  *    [[update]] or [[delete]] folds on the driver and writes each
+  *    append as one part file here, renamed into its dir (and into
+  *    the held snapshot of it) once complete
+  *    ([[graft.engine.DriverParquet.appendPart]]); tombstones are
+  *    always appended this way, and [[compact]] removes the staging
+  *    dirs a crash left;
   *  - `meta/` — one row: the training knobs plus a corpus fingerprint
   *    (row count + vec_id sum + a first-component content sum on the
   *    1e-6 grid), written LAST so a crash mid-init leaves a store that
@@ -42,7 +49,7 @@ import Similarity.{optLong, optSeq}
   *    one; an UNREADABLE meta (crash mid-commit) also reads as stale.
   *
   * Every dir the serving and write paths read has its schema declared
-  * once below ([[MetaSchema]] … [[TombstonesSchema]]); its writer
+  * once below ([[MetaSchema]] … [[DriftStatsSchema]]); its writer
   * produces exactly that schema (spec-pinned) and its readers pass it,
   * so no store read runs a schema-inference job. The KB-scale dirs
   * (meta, and centroids + codebooks while the model fits
@@ -55,7 +62,11 @@ import Similarity.{optLong, optSeq}
   * index re-trains on a schedule, not per batch), as a PURE NARROW
   * MAP with the model in the task closure: no shuffle, no state, runs
   * unchanged on a `readStream` batch
-  * ([[graft.streaming.StreamingVectorIndex]]).
+  * ([[graft.streaming.StreamingVectorIndex]]). A serving-sized batch
+  * (at most [[Similarity.foldCap]] rows) runs the same per-row kernel
+  * ([[Similarity.encodeRow]]) on the driver, gated against the held
+  * tombstones, and the driver writes its appends: the write costs the
+  * batch, not the store.
   *
   * [[query]] never touches the corpus: probes rank the KB centroid
   * table, the probed cell ids push into the codes parquet scan as
@@ -85,6 +96,21 @@ object VectorIndex {
     "vec_id BIGINT, sub INT, cell BIGINT, coarse_id BIGINT")
   private[graft] val TombstonesSchema: StructType =
     StructType.fromDDL("vec_id BIGINT, deleted_at BIGINT")
+  private[graft] val DriftStatsSchema: StructType = StructType.fromDDL(
+    "batch_key STRING, i INT, sx DECIMAL(38,18), cnt BIGINT")
+
+  // the schemas the distributed appends write, nullability included,
+  // so a driver-written part carries the same parquet footer (the
+  // tombstones keep the footer of the Spark-written tombstone parts
+  // already in stores)
+  private[graft] val CodesWritten: StructType = StructType.fromDDL(
+    "vec_id BIGINT, sub INT NOT NULL, cell BIGINT NOT NULL, " +
+      "coarse_id BIGINT NOT NULL")
+  private[graft] val DriftStatsWritten: StructType = StructType.fromDDL(
+    "batch_key STRING NOT NULL, i INT NOT NULL, sx DECIMAL(38,18), " +
+      "cnt BIGINT NOT NULL")
+  private[graft] val TombstonesWritten: StructType = StructType.fromDDL(
+    "vec_id BIGINT NOT NULL, deleted_at BIGINT NOT NULL")
 
   /** A KB-scale store dir's rows: from this JVM's held snapshot when
     * `keep` (reloaded only when the dir's listing changed), else read
@@ -281,7 +307,7 @@ object VectorIndex {
       // meta implies a complete baseline.
       val withEmb = e.select(col("vec_id"), col("emb").as("embedding"))
       val (drift, audit, pm) = ix.corpus match {
-        case Some(c) => localStats(spark, e, withEmb, c, dim)
+        case Some(c) => localStats(spark, withEmb, c, dim)
         case None => (driftStatsOf(e, "init"),
           Similarity.embeddingAudit(withEmb),
           Pca.pcaModel(withEmb, iters = DriftPcaIters))
@@ -316,14 +342,50 @@ object VectorIndex {
     *    the moment totals of [[Pca.momentPartials]] — the fold body
     *    [[Pca.rawMoments]] runs per partition.
     */
-  private def localStats(spark: SparkSession, e: DataFrame,
-                         withEmb: DataFrame, c: Similarity.DriverCorpus,
-                         dim: Int): (DataFrame, DataFrame, Pca.PcaModel) = {
+  private def localStats(spark: SparkSession, withEmb: DataFrame,
+                         c: Similarity.DriverCorpus, dim: Int): (DataFrame, DataFrame, Pca.PcaModel) = {
     import scala.jdk.CollectionConverters._
     val rows = c.rows
     val n = rows.length.toLong
+    val d = localDrift(rows.map(_._2), dim)
+    val drift = spark.createDataFrame(d.rows("init").asJava,
+      DriftStatsWritten)
+    val auditRow = Row(n, dim, true, d.norms.count(_ == 0.0).toLong, 0L,
+      Similarity.localRound(d.norms.min, 6) + 0.0d,
+      Similarity.localRound(d.norms.max, 6) + 0.0d,
+      Similarity.localRound(d.normSx.doubleValue / n.toDouble, 6) + 0.0d)
+    val audit = spark.createDataFrame(Seq(auditRow).asJava,
+      Similarity.embeddingAudit(withEmb).schema)
+    val moments = Pca.momentPartials(rows.iterator.map(_._2.toSeq))
+      .map { case (i, j, s) => (i, j) -> s.get }.toMap
+    val pm = Pca.modelFromStats(
+      (0 until dim).map(i => i -> (d.sx(i), n)).toMap, moments,
+      DriftPcaIters)
+    (drift, audit, pm)
+  }
+
+  /** [[driftStatsOf]] folded on the driver over clean vectors (each
+    * `dim` long, finite, within [[Similarity.decimalSumsFit]]): the
+    * per-dim Σ decimal(38,18)(xᵢ) ([[Pca.addDec18]]), each vector's
+    * norm √(Σ decimal(xᵢ²) cast to double), and Σ decimal(round₆ norm).
+    */
+  private final case class LocalDrift(sx: IndexedSeq[java.math.BigDecimal],
+                                      norms: IndexedSeq[Double],
+                                      normSx: java.math.BigDecimal) {
+    /** The rows [[driftStatsOf]] appends under `key`; `negate` gives
+      * the reconciling [[delete]]'s negative rows.
+      */
+    def rows(key: String, negate: Boolean = false): Seq[Row] = {
+      val n = norms.length.toLong
+      def row(i: Int, s: java.math.BigDecimal) =
+        if (negate) Row(key, i, s.negate, -n) else Row(key, i, s, n)
+      sx.indices.map(i => row(i, sx(i))) :+ row(-1, normSx)
+    }
+  }
+
+  private def localDrift(vectors: Seq[Array[Double]], dim: Int): LocalDrift = {
     val sx = Array.fill(dim)(java.math.BigDecimal.ZERO)
-    val norms = rows.map { case (_, x) =>
+    val norms = vectors.map { x =>
       var nsq = java.math.BigDecimal.ZERO
       var i = 0
       while (i < dim) {
@@ -332,25 +394,30 @@ object VectorIndex {
         i += 1
       }
       math.sqrt(nsq.doubleValue)
-    }
-    val normSx = norms.foldLeft(java.math.BigDecimal.ZERO)((acc, r) =>
-      Pca.addDec18(acc, Similarity.localRound(r, 6)))
-    val driftRows = (0 until dim).map(i => Row("init", i, sx(i), n)) :+
-      Row("init", -1, normSx, n)
-    val drift = spark.createDataFrame(driftRows.asJava,
-      driftStatsOf(e, "init").schema)
-    val auditRow = Row(n, dim, true, norms.count(_ == 0.0).toLong, 0L,
-      Similarity.localRound(norms.min, 6) + 0.0d,
-      Similarity.localRound(norms.max, 6) + 0.0d,
-      Similarity.localRound(normSx.doubleValue / n.toDouble, 6) + 0.0d)
-    val audit = spark.createDataFrame(Seq(auditRow).asJava,
-      Similarity.embeddingAudit(withEmb).schema)
-    val moments = Pca.momentPartials(rows.iterator.map(_._2.toSeq))
-      .map { case (i, j, s) => (i, j) -> s.get }.toMap
-    val pm = Pca.modelFromStats(
-      (0 until dim).map(i => i -> (sx(i), n)).toMap, moments, DriftPcaIters)
-    (drift, audit, pm)
+    }.toIndexedSeq
+    LocalDrift(sx.toIndexedSeq, norms,
+      norms.foldLeft(java.math.BigDecimal.ZERO)((acc, r) =>
+        Pca.addDec18(acc, Similarity.localRound(r, 6))))
   }
+
+  /** Clean (vec_id, emb) rows of a collected prepped frame — no null
+    * id, vector or component, no NaN or ±Inf — as arrays; None for any
+    * other input, which the distributed path handles (and names).
+    */
+  private def cleanRows(rows: Seq[Row]): Option[IndexedSeq[(Long, Array[Double])]] =
+    Some(rows).filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+      r.getSeq[Any](1).forall(x => x != null &&
+        java.lang.Double.isFinite(x.asInstanceOf[Double]))))
+      .map(_.iterator.map(r =>
+        (r.getLong(0), r.getSeq[Double](1).toArray)).toIndexedSeq)
+
+  /** `rows` with exact duplicates dropped, as `distinct()` drops them:
+    * −0.0 and 0.0 group together.
+    */
+  private def distinctRows(rows: IndexedSeq[(Long, Array[Double])])
+      : IndexedSeq[(Long, Array[Double])] =
+    rows.distinctBy { case (id, x) =>
+      (id, x.toSeq.map(v => if (v == 0.0) 0.0 else v)) }
 
   /** ATOMIC rebuild: retrain + re-encode into a STAGED sibling
     * (`<store>__rebuild_tmp`), then publish via the checked-rename
@@ -469,15 +536,9 @@ object VectorIndex {
       model: Map[(Int, Long), Array[Double]]): DataFrame = {
     val spark = b.sparkSession
     import spark.implicits._
-    val (m, dim) = (meta.m, meta.dim)
-    val dsub = dim / m
-    // per-subspace cell arrays, sorted by cell id (the argmin tiebreak)
-    val cells: Array[Array[(Long, Array[Double])]] =
-      Array.tabulate(m)(s => model.collect {
-        case ((`s`, cell), c_sv) => (cell, c_sv)
-      }.toArray.sortBy(_._1))
-    cells.zipWithIndex.foreach { case (cs, s) =>
-      require(cs.nonEmpty, s"codebook has no cells for subspace $s") }
+    val dim = meta.dim
+    val dsub = dim / meta.m
+    val cells = modelCells(meta, model)
     b.select(col("vec_id"), col("emb"))
       .mapPartitions { it =>
         it.flatMap { r =>
@@ -491,6 +552,20 @@ object VectorIndex {
           codes.indices.iterator.map(s => (id, s, codes(s), cid))
         }
       }.toDF("vec_id", "sub", "cell", "coarse_id")
+  }
+
+  /** The codebook as per-subspace cell arrays, each sorted by cell id
+    * (the argmin tiebreak) — [[Similarity.encodeRow]]'s `cells`.
+    */
+  private def modelCells(meta: IndexMeta,
+                         model: Map[(Int, Long), Array[Double]])
+      : Array[Array[(Long, Array[Double])]] = {
+    val cells = Array.tabulate(meta.m)(s => model.collect {
+      case ((`s`, cell), c_sv) => (cell, c_sv)
+    }.toArray.sortBy(_._1))
+    cells.zipWithIndex.foreach { case (cs, s) =>
+      require(cs.nonEmpty, s"codebook has no cells for subspace $s") }
+    cells
   }
 
   /** [[update]]'s encode of `batch` under the store's frozen model. */
@@ -525,22 +600,93 @@ object VectorIndex {
     *    whose first(qc) would go nondeterministic). Re-embedding an
     *    existing id is a model-drift event — re-init handles it.
     *
-    * The anti-join's code-store read is materialized (eager
-    * localCheckpoint of the delta-sized survivor set) BEFORE the
-    * append begins, so the store is never read and written by the
-    * same job.
+    * A batch of at most [[Similarity.foldCap]] clean rows is folded on
+    * the driver ([[updateLocal]]): one bounded read of the batch, the
+    * id gate from the held tombstones plus one pushed `vec_id IN` codes
+    * probe, and both appends written by the driver — a warm update of a
+    * local batch runs one Spark job, the probe. Any other batch takes
+    * the distributed path, whose anti-join survivor set is materialized
+    * (eager localCheckpoint, delta-sized) BEFORE the append begins, so
+    * the store is never read and written by the same job. Both paths
+    * write the same rows, schemas and file counts (spec-pinned).
     */
   def update(batch: DataFrame, store: String): Unit = {
     val spark = batch.sparkSession
     val (meta, centroids, model) = frozenModel(spark, store)
+    if (!updateLocal(batch, store, meta, centroids, model))
+      updateDistributed(batch, store, meta, centroids, model)
+  }
+
+  /** [[update]] on the driver, op for op [[updateDistributed]]: the
+    * batch distinct ([[distinctRows]]) and its dimension check with the
+    * same error, the id gate, the content key, the drift statistics
+    * ([[localDrift]]) and the codes ([[Similarity.encodeRow]], as
+    * [[encodeClosure]] runs it), appended by the driver in the same
+    * order. Returns false, having written nothing, for a batch past the
+    * cap or not clean ([[cleanRows]]: the distributed path names a NaN
+    * or ±Inf), an id carrying two vectors, sums that could overflow,
+    * tombstones too many to hold, or a probe past the cap. The codes
+    * it builds are `m` rows per admitted vector.
+    */
+  private def updateLocal(batch: DataFrame, store: String, meta: IndexMeta,
+                          centroids: Array[(Long, Array[Double])],
+                          model: Map[(Int, Long), Array[Double]]): Boolean = {
+    val spark = batch.sparkSession
+    val cap = Similarity.foldCap
+    val b0 = DriverFold.collect(prep(batch), cap)
+      .flatMap(rows => cleanRows(rows.toSeq)).map(distinctRows)
+      .getOrElse(return false)
+    if (b0.isEmpty) return true // empty batch: nothing to encode
+    val sizes = b0.map(_._2.length)
+    checkDims(store, meta, sizes.min, sizes.max)
+    val mx = b0.iterator.flatMap(_._2.iterator.map(math.abs)).max
+    if (b0.map(_._1).distinct.length != b0.length ||
+      !Similarity.decimalSumsFit(b0.length, meta.dim, mx)) return false
+    val dead = deadIds(spark, store).getOrElse(return false)
+    // every coded vector has one sub-0 code row per append, so the
+    // probe reads at most one row per already-coded batch id
+    val coded = DriverFold.collect(
+        spark.read.schema(CodesSchema).parquet(s"$store/codes")
+          .filter(DriverFold.isIn(col("vec_id"), b0.map(_._1)) &&
+            col("sub") === 0)
+          .select(col("vec_id")).coalesce(1), cap)
+      .getOrElse(return false)
+      .iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    val fresh = b0.filterNot { case (id, _) => dead(id) || coded(id) }
+    if (fresh.isEmpty) return true
+    val ids = fresh.map(_._1)
+    val idSum = scala.util.Try(ids.foldLeft(0L)(Math.addExact))
+      .getOrElse(return false) // the engine's sum raises on overflow
+    val batchKey = s"b${ids.length}_${idSum}_${ids.min}"
+    val cells = modelCells(meta, model)
+    val codes = fresh.flatMap { case (id, x) =>
+      val (cid, cs) = Similarity.encodeRow(x, centroids, cells,
+        meta.dim / meta.m)
+      cs.indices.map(s => Row(id, s, cs(s), cid))
+    }
+    DriverParquet.appendPart(spark, s"$store/driftstats", DriftStatsWritten,
+      localDrift(fresh.map(_._2), meta.dim).rows(batchKey))
+    DriverParquet.appendPart(spark, s"$store/codes", CodesWritten, codes)
+    true
+  }
+
+  private def checkDims(store: String, meta: IndexMeta, mn: Int,
+                        mx: Int): Unit =
+    require(mn == meta.dim && mx == meta.dim,
+      s"update batch carries $mn..$mx-dim " +
+        s"embeddings where the store at $store is trained on " +
+        s"${meta.dim}-dim vectors (re-init to change the model)")
+
+  /** [[update]] as Spark jobs, for any batch. */
+  private def updateDistributed(batch: DataFrame, store: String,
+      meta: IndexMeta, centroids: Array[(Long, Array[Double])],
+      model: Map[(Int, Long), Array[Double]]): Unit = {
+    val spark = batch.sparkSession
     val b0 = prep(batch).distinct()
     val dims = b0.agg(min(size(col("emb"))).as("mn"),
       max(size(col("emb"))).as("mx")).collect()(0)
     if (dims.isNullAt(0)) return // empty batch: nothing to encode
-    require(dims.getInt(0) == meta.dim && dims.getInt(1) == meta.dim,
-      s"update batch carries ${dims.getInt(0)}..${dims.getInt(1)}-dim " +
-        s"embeddings where the store at $store is trained on " +
-        s"${meta.dim}-dim vectors (re-init to change the model)")
+    checkDims(store, meta, dims.getInt(0), dims.getInt(1))
     val known = spark.read.schema(CodesSchema).parquet(s"$store/codes")
       .select(col("vec_id")).distinct()
       .unionByName(tombstones(spark, store).select(col("vec_id")))
@@ -678,7 +824,8 @@ object VectorIndex {
     val (dp, df) = fs(spark, s"$store/driftstats")
     val accounted =
       if (!df.exists(dp)) 0L
-      else spark.read.parquet(s"$store/driftstats").distinct()
+      else spark.read.schema(DriftStatsSchema)
+        .parquet(s"$store/driftstats").distinct()
         .filter((col("i") === -1 && col("cnt") < 0 &&
             col("batch_key").startsWith("d")) ||
           (col("i") === -2 && col("batch_key").startsWith("r")))
@@ -712,10 +859,17 @@ object VectorIndex {
     require(exists(spark, store),
       s"no vector index store at $store (run init first)")
     require(vecIds.nonEmpty, "delete needs at least one vec_id")
-    import spark.implicits._
+    appendTombstones(spark, store, vecIds.distinct)
+  }
+
+  /** Append (id, now) tombstone facts, written by the driver as one
+    * part file: the ids are already a driver list.
+    */
+  private def appendTombstones(spark: SparkSession, store: String,
+                               ids: Seq[Long]): Unit = {
     val now = System.currentTimeMillis()
-    vecIds.distinct.map((_, now)).toDF("vec_id", "deleted_at")
-      .coalesce(1).write.mode("append").parquet(s"$store/tombstones")
+    DriverParquet.appendPart(spark, s"$store/tombstones",
+      TombstonesWritten, ids.map(Row(_, now)))
   }
 
   /** [[delete]] WITH drift-stats reconciliation — the takedown form
@@ -727,8 +881,9 @@ object VectorIndex {
     * sums subtract as exactly as they add — spec-pinned). Contract
     * guards, mirroring [[update]]'s:
     *
-    *  - already-tombstoned ids are skipped, so an at-least-once
-    *    replay subtracts NOTHING twice;
+    *  - already-tombstoned ids are skipped (gated against the held
+    *    tombstones), so an at-least-once replay subtracts NOTHING
+    *    twice;
     *  - the supplied frame must cover every newly-deleted id (a
     *    missing vector would silently leave the stats over-counting
     *    — it fails loudly instead) at the store's trained dimension;
@@ -737,8 +892,11 @@ object VectorIndex {
     *    same content-derived key, folded at read — tombstones-first
     *    would skip the replay's subtraction forever.
     *
-    * Without the vectors, the base [[delete]] applies and the stats
-    * keep counting the appended corpus (documented there).
+    * Up to [[Similarity.foldCap]] ids of clean vectors, the vectors
+    * are read once and the statistics folded and written by the
+    * driver ([[localDrift]]); otherwise by Spark jobs. Without the
+    * vectors, the base [[delete]] applies and the stats keep counting
+    * the appended corpus (documented there).
     */
   def delete(spark: SparkSession, store: String, vecIds: Seq[Long],
              vectors: DataFrame): Unit = {
@@ -747,34 +905,56 @@ object VectorIndex {
     require(vecIds.nonEmpty, "delete needs at least one vec_id")
     import spark.implicits._
     val meta = readMeta(spark, store)
-    val fresh = vecIds.distinct.toDF("vec_id")
-      .join(tombstones(spark, store).select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .collect().map(_.getLong(0)).sorted // takedown-list-sized
+    val fresh = (deadIds(spark, store) match {
+      case Some(dead) => vecIds.distinct.filterNot(dead).toArray
+      case None => vecIds.distinct.toDF("vec_id")
+        .join(tombstones(spark, store).select(col("vec_id")),
+          Seq("vec_id"), "left_anti")
+        .collect().map(_.getLong(0)) // takedown-list-sized
+    }).sorted
     if (fresh.isEmpty) return // full replay: already tombstoned
-    val rows = prep(vectors).distinct()
-      .filter(col("vec_id").isin(fresh.toIndexedSeq: _*))
+    val key = s"d${fresh.length}_${fresh.sum}_${fresh.head}"
+    def missing(nd: Long) = s"${fresh.length - nd} of the ids to delete " +
+      s"are missing from the supplied vectors frame — stats would " +
+      "over-count the survivors (supply the full rows, or use the " +
+      "vectors-free delete and accept append-only stats)"
+    def wrongDim(mn: Int, mx: Int) = s"supplied vectors carry $mn..$mx" +
+      s"-dim embeddings where the store at $store is trained on " +
+      s"${meta.dim}-dim vectors"
+    val cap = Similarity.foldCap
+    val inHand = prep(vectors).filter(DriverFold.isIn(col("vec_id"), fresh))
+    val local = (if (fresh.length > cap) None
+      else DriverFold.collect(inHand, cap))
+      .flatMap(rows => cleanRows(rows.toSeq)).map(distinctRows)
+    local match {
+      case Some(rows) =>
+        require(rows.length == fresh.length, missing(rows.length))
+        val sizes = rows.map(_._2.length)
+        require(sizes.min == meta.dim && sizes.max == meta.dim,
+          wrongDim(sizes.min, sizes.max))
+        val mx = rows.iterator.flatMap(_._2.iterator.map(math.abs)).max
+        if (Similarity.decimalSumsFit(rows.length, meta.dim, mx)) {
+          DriverParquet.appendPart(spark, s"$store/driftstats",
+            DriftStatsWritten,
+            localDrift(rows.map(_._2), meta.dim).rows(key, negate = true))
+          appendTombstones(spark, store, fresh.toSeq)
+          return
+        }
+      case None =>
+    }
+    val rows = inHand.distinct()
     val dims = rows.agg(count(lit(1)).as("nd"),
       min(size(col("emb"))).as("mn"),
       max(size(col("emb"))).as("mx")).collect()(0)
-    require(dims.getLong(0) == fresh.length,
-      s"${fresh.length - dims.getLong(0)} of the ids to delete are " +
-        s"missing from the supplied vectors frame — stats would " +
-        "over-count the survivors (supply the full rows, or use the " +
-        "vectors-free delete and accept append-only stats)")
+    require(dims.getLong(0) == fresh.length, missing(dims.getLong(0)))
     require(dims.getInt(1) == meta.dim && dims.getInt(2) == meta.dim,
-      s"supplied vectors carry ${dims.getInt(1)}..${dims.getInt(2)}" +
-        s"-dim embeddings where the store at $store is trained on " +
-        s"${meta.dim}-dim vectors")
-    val key = s"d${fresh.length}_${fresh.sum}_${fresh.head}"
+      wrongDim(dims.getInt(1), dims.getInt(2)))
     driftStatsOf(rows, key)
       .select(col("batch_key"), col("i"),
         (-col("sx")).cast("decimal(38,18)").as("sx"),
         (-col("cnt")).as("cnt"))
       .coalesce(1).write.mode("append").parquet(s"$store/driftstats")
-    val now = System.currentTimeMillis()
-    fresh.toSeq.map((_, now)).toDF("vec_id", "deleted_at")
-      .coalesce(1).write.mode("append").parquet(s"$store/tombstones")
+    appendTombstones(spark, store, fresh.toSeq)
   }
 
   /** Live codes: the store's append log with replay duplicates folded
@@ -798,7 +978,9 @@ object VectorIndex {
     * changes is the physics — N streaming drains' small append files
     * and replay duplicates stop accumulating. Tombstones stay in
     * place (they are cheap facts and still gate [[update]]); only
-    * re-[[init]] clears them.
+    * re-[[init]] clears them. The staging dirs a crashed driver append
+    * left under `_staging/` are removed
+    * ([[graft.engine.DriverParquet.clearStaging]]).
     */
   def compact(spark: SparkSession, store: String,
               targetBytes: Long = 512L << 20): CompactReport = {
@@ -811,6 +993,7 @@ object VectorIndex {
     // leased on the STORE root (not the codes subdir), so a compact
     // and a rebuild of the same store exclude each other cross-process
     graft.engine.StoreLease.withLease(f, store) {
+      DriverParquet.clearStaging(spark, store)
       val rowsBefore = spark.read.schema(CodesSchema).parquet(dir).count()
       val bytes = before.map(_.getLen).sum
       val nOut =
@@ -894,7 +1077,8 @@ object VectorIndex {
     val (dp, df) = fs(spark, s"$store/driftstats")
     require(df.exists(dp),
       s"store at $store predates drift stats — re-init to record them")
-    val folded = spark.read.parquet(s"$store/driftstats")
+    val folded = spark.read.schema(DriftStatsSchema)
+      .parquet(s"$store/driftstats")
       .distinct() // byte-identical at-least-once replays fold
       .groupBy(col("i"))
       .agg(sum(col("sx")).as("sx"), sum(col("cnt")).as("cnt"))

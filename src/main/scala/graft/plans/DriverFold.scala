@@ -1,13 +1,13 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, InSet, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** A driver-side fold as a logical operator: at execution time it
   * collects its child's rows in one bounded read (`limit(cap + 1)`),
@@ -96,6 +96,18 @@ object DriverFold {
         DataTypeUtils.toAttributes(schema),
         new Fold(name, cap, run, () => fallback)))
   }
+
+  /** `c IN values` for BIGINT ids, as one set-membership expression:
+    * it pushes into a parquet scan like `isin`, but its plan holds no
+    * expression per value, so a batch-sized id list costs no per-id
+    * planning. Not a general `isin`: the raw expression skips the
+    * analyzer's coercion, so `c` is cast to BIGINT (a no-op the
+    * optimizer drops on a BIGINT column) and the values are Longs.
+    */
+  def isIn(c: Column, values: Iterable[Long]): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(InSet(
+      org.apache.spark.sql.GraftColumnBridge.expression(c.cast(LongType)),
+      values.toSet[Any]))
 
   /** `df`'s rows when there are at most `cap` of them, read with
     * `limit(cap + 1)`; None past the cap.

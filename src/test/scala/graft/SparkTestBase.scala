@@ -42,6 +42,32 @@ abstract class SparkTestBase extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
+  /** A parquet dir as written: its rows as sorted strings (without the
+    * `drop` columns), the StructType a reader infers, each data file's
+    * parquet schema and Spark row-schema footer metadata, and its data
+    * file count — what two writers of the same rows must agree on.
+    */
+  def writtenDir(dir: String, drop: String*)
+      : (Seq[String], org.apache.spark.sql.types.StructType,
+        Set[(String, String)], Int) = {
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    val footers = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath),
+          spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = r.getFooter.getFileMetaData
+        (meta.getSchema.toString, meta.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally r.close()
+    }.toSet
+    val df = spark.read.parquet(dir)
+    (df.drop(drop: _*).collect().map(_.toSeq.toString).toSeq.sorted,
+      df.schema, footers, files.length)
+  }
+
   /** The Spark jobs `body` starts — on this thread and on the threads
     * Spark starts for it (broadcasts, subqueries) — each as its SQL
     * execution id: None for a job outside any SQL execution, such as a

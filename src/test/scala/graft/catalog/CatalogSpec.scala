@@ -512,7 +512,7 @@ class CatalogSpec extends SparkTestBase {
       val (driver, sparkDir) = (tmpDir("staged") + "/d",
         tmpDir("written") + "/s")
       new java.io.File(driver).mkdirs()
-      BackupCatalog.writePart(spark, driver, rows)
+      graft.engine.DriverParquet.writePart(spark, driver, rows)
       spark.createDataset(rows).coalesce(1).write.parquet(sparkDir)
       val (a, b) = (spark.read.parquet(driver), spark.read.parquet(sparkDir))
       assert(a.schema == b.schema, s"$what: StructType differs")
@@ -530,6 +530,32 @@ class CatalogSpec extends SparkTestBase {
       .copy(n_nulls = 7L)))
     same("purges", Seq(PurgeRecord("export", "s1", 5L)))
     same("one null string", Seq(rec("x").copy(error_info = null)))
+    // the serving stores' appends: their written schemas (nullability
+    // included) and read schemas, with nulls where a column allows one
+    import org.apache.spark.sql.{Encoders, Row}
+    import graft.ext.{Retrieval, VectorIndex}
+    def dec(s: String) = new java.math.BigDecimal(s).setScale(18)
+    def rows(what: String, schema: org.apache.spark.sql.types.StructType,
+             rs: Row*): Unit = same(what, rs)(Encoders.row(schema))
+    rows("codes", VectorIndex.CodesWritten, Row(1L, 0, 3L, 2L),
+      Row(null, 7, 0L, -1L))
+    rows("driftstats", VectorIndex.DriftStatsWritten,
+      Row("b2_3_1", 0, dec("-1.234567890123456789"), 2L),
+      Row("b2_3_1", -1, null, -2L),
+      Row("d1_5_5", 63, dec("12345678901234567890.5"), 0L))
+    rows("driftstats read", VectorIndex.DriftStatsSchema,
+      Row(null, null, null, null), Row("r1_1_1", -2, null, 4L))
+    rows("vector tombstones", VectorIndex.TombstonesWritten,
+      Row(5L, 1700000000000L), Row(Long.MinValue, 0L))
+    rows("index tombstones", Retrieval.TombstonesWritten,
+      Row(5L, 1700000000000L))
+    rows("postings", Retrieval.PostingsSchema,
+      Row(1L, 3, "dup", 2L), Row(2L, 1, "", 1L), Row(null, null, null, null),
+      Row(3L, 2, "\u00e9t\u00e9", 1L))
+    rows("postings written", org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT NOT NULL, dl INT, token STRING NOT NULL, " +
+        "tf BIGINT NOT NULL"), Row(1L, 3, "dup", 2L), Row(2L, null, "", 1L))
+    rows("lengths", Retrieval.LengthsSchema, Row(1L, 3L), Row(2L, null))
   }
 
   test("snapshot tableNames, exists and lastEndTime == their CatalogOps " +

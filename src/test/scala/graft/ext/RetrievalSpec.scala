@@ -1184,4 +1184,163 @@ class RetrievalSpec extends SparkTestBase {
     }
     assert(dense.getMessage.contains("dense leg"), dense.getMessage)
   }
+
+  test("a part a crashed driver append left under _staging is never " +
+    "read, and compactIndex removes it") {
+    val store = tmpDir("bm25-staging") + "/idx"
+    Retrieval.updateIndex(Seq((1L, "rare common"), (2L, "common words"))
+      .toDF("doc_id", "text"), store)
+    def served() = Retrieval.queryIndex(spark, store, Seq("common"), k = 5)
+      .collect().map(_.getLong(0)).toSeq.sorted
+    assert(served() == Seq(1L, 2L))
+    // a crash after the staged write, before the rename into tombstones
+    val leftover = s"$store/_staging/crashed-append"
+    Seq((1L, 1L)).toDF("doc_id", "deleted_at").coalesce(1).write
+      .parquet(leftover)
+    assert(served() == Seq(1L, 2L), "a staged part was read")
+    Retrieval.compactIndex(spark, store)
+    assert(!new java.io.File(leftover).exists(),
+      "compactIndex left the crashed staging dir")
+    assert(served() == Seq(1L, 2L))
+  }
+
+  test("deleteFromIndex recovers an interrupted rebuild swap before it " +
+    "appends: the postings, the lengths and the new tombstone all " +
+    "survive") {
+    val store = tmpDir("bm25-del-recover") + "/idx"
+    Retrieval.updateIndex(tiny, store)
+    def rows(sub: String): Set[Seq[Any]] =
+      spark.read.parquet(s"$store/$sub").collect().map(_.toSeq).toSet
+    val (postings, lengths) = (rows("postings"), rows("lengths"))
+    val root = new org.apache.hadoop.fs.Path(store)
+    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(f.rename(root, new org.apache.hadoop.fs.Path(store + "__old")))
+    Retrieval.deleteFromIndex(spark, store, Seq(2L))
+    assert(!f.exists(new org.apache.hadoop.fs.Path(store + "__old")),
+      "the __old copy was left behind")
+    assert(rows("postings") == postings && rows("lengths") == lengths,
+      "the takedown lost the index it was appended to")
+    assert(rows("tombstones").map(_.head) == Set(2L))
+  }
+
+  /** The jobs of `jobs` that are not a held snapshot's (re)load. */
+  private def workJobs(jobs: Seq[(Option[String], String)]) =
+    jobs.filterNot(_._2.contains("DirSnapshot"))
+
+  test("updateIndex forced both ways at the fold cap ±1, beside a " +
+    "deleteFromIndex, writes the same store dirs: rows, StructType, " +
+    "footer schema and file count") {
+    val base = tmpDir("idx-writes") + "/idx"
+    Retrieval.updateIndex(Seq((1L, "rare common common"),
+      (2L, "common words"), (3L, "other words")).toDF("doc_id", "text"), base)
+    Retrieval.deleteFromIndex(spark, base, Seq(2L))
+    // a crashed update's orphan: 50's postings landed, its lengths row
+    // did not
+    val scratch = tmpDir("idx-writes-scratch") + "/idx"
+    Retrieval.updateIndex(Seq((50L, "orphan text text")).toDF("doc_id",
+      "text"), scratch)
+    spark.read.parquet(s"$scratch/postings")
+      .write.mode("append").parquet(s"$base/postings")
+    def copy(prefix: String): String = {
+      val dst = tmpDir(prefix) + "/idx"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(base),
+        new java.io.File(dst))
+      dst
+    }
+    // many tokens per document: split edge cases (doubled, leading and
+    // trailing spaces, an empty text, non-ASCII), a duplicated row, a
+    // live id, a tombstoned id and the orphan with a changed text
+    val multi = Seq((10L, "a  b a"), (11L, " lead lead"), (12L, "trail "),
+      (13L, ""), (14L, "\u00e9t\u00e9 \u00fc \u00e9t\u00e9"),
+      (10L, "a  b a"), (1L, "changed"), (2L, "back again"),
+      (50L, "retry differs")).toDF("doc_id", "text")
+    // one token per document, so its postings rows equal its rows
+    val single = Seq((20L, "x"), (21L, "y y"), (22L, "z z z"))
+      .toDF("doc_id", "text")
+    // distinct tokens of the admitted documents: 10 has a, "" and b;
+    // 11 "" and lead; 12 trail and ""; 13 ""; 14 two
+    val multiPostings = 10
+    val killed = Seq(20L, 30L, 31L)
+    val t0 = System.currentTimeMillis()
+    // the takedown's tombstones are driver-written at any id count:
+    // only the updates fork
+    def run(st: String, over: Int): Seq[Seq[(Option[String], String)]] = {
+      val jobs = Seq(Similarity.withFoldCap(multiPostings - over)(
+          jobSitesDuring(Retrieval.updateIndex(multi, st))),
+        Similarity.withFoldCap(3 - over)(
+          jobSitesDuring(Retrieval.updateIndex(single, st))))
+      Retrieval.deleteFromIndex(spark, st, killed)
+      jobs
+    }
+    val (onSt, offSt) = (copy("idx-writes-on"), copy("idx-writes-off"))
+    val (on, off) = (run(onSt, 0), run(offSt, 1))
+    for (((a, b), op) <- on.zip(off).zip(Seq("multi-token updateIndex",
+        "single-token updateIndex")))
+      assert(workJobs(a).size <= 1 && workJobs(b).size > workJobs(a).size,
+        s"$op: at the cap ran $a, past it $b")
+    for (d <- Seq("postings", "lengths", "tombstones")) {
+      val drop = if (d == "tombstones") Seq("deleted_at") else Nil
+      val (rowsOn, schemaOn, footOn, filesOn) = writtenDir(s"$onSt/$d", drop: _*)
+      val (rowsOff, schemaOff, footOff, filesOff) =
+        writtenDir(s"$offSt/$d", drop: _*)
+      assert(rowsOn == rowsOff, s"$d: rows differ")
+      assert(schemaOn == schemaOff, s"$d: StructType differs")
+      assert(footOn == footOff, s"$d: footers $footOn vs $footOff")
+      assert(filesOn == filesOff, s"$d: $filesOn files vs $filesOff")
+    }
+    val stamps = spark.read.parquet(s"$onSt/tombstones")
+      .filter(col("doc_id") =!= 2L).collect()
+      .map(_.getAs[Long]("deleted_at"))
+    assert(stamps.length == 3 && stamps.forall(t =>
+      t >= t0 && t <= System.currentTimeMillis()), stamps.toSeq)
+    // the orphan's lengths row came from its planted postings
+    assert(spark.read.parquet(s"$onSt/lengths")
+      .filter(col("doc_id") === 50L).collect().map(_.getAs[Long]("dl"))
+      .toSeq == Seq(3L))
+    assert(spark.read.parquet(s"$onSt/postings")
+      .filter(col("doc_id") === 10L && col("token") === "a")
+      .collect().map(_.getAs[Long]("tf")).toSeq == Seq(2L),
+      "the duplicated row doubled its tf")
+  }
+
+  test("warm index writes of a local batch: updateIndex runs at most one " +
+    "Spark job (the postings probe), deleteFromIndex none, and a " +
+    "hybridQueryStores read right after either reloads no snapshot") {
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+    val e = Tables.embeddings(spark, sf0001)
+    val bmStore = tmpDir("warmw-bm25") + "/idx"
+    val vStore = tmpDir("warmw-vidx") + "/idx"
+    Retrieval.initIndexIfStale(docs.filter(col("doc_id") < 250), bmStore)
+    VectorIndex.init(e, vStore, coarseIters = 2)
+    VectorIndex.delete(spark, vStore, Seq(5L))
+    Retrieval.deleteFromIndex(spark, bmStore, Seq(5L))
+    val queries = Seq(0L -> Seq("dup", "merge"), 1L -> Seq("spark", "new"))
+    val qVecs = localVectors(e, 2)
+    def hybrid(): Seq[(Option[String], String)] = jobSitesDuring {
+      Retrieval.hybridQueryStores(spark, bmStore, vStore, queries, qVecs,
+        k = 10, depth = 20).collect(); ()
+    }
+    hybrid()
+    val upd = jobSitesDuring(Retrieval.updateIndex(Seq(
+      (900001L, "new dup text"), (900002L, "spark new new"))
+      .toDF("doc_id", "text"), bmStore))
+    assert(upd.size <= 1, s"a warm updateIndex ran $upd")
+    val probe = capturedPlans(Retrieval.updateIndex(Seq(
+      (900003L, "more text")).toDF("doc_id", "text"), bmStore))
+    assert(probe.exists(p => p.contains("PushedFilters") &&
+      p.contains("In(doc_id")),
+      s"the postings probe pushed no doc_id IN: $probe")
+    val afterUpd = hybrid()
+    assert(afterUpd.size <= 2 && !afterUpd.exists(_._2.contains("DirSnapshot")),
+      s"the read after updateIndex ran $afterUpd")
+    val del = jobSitesDuring(Retrieval.deleteFromIndex(spark, bmStore,
+      Seq(900001L)))
+    assert(del.isEmpty, s"a warm deleteFromIndex ran $del")
+    val afterDel = hybrid()
+    assert(afterDel.size <= 2 && !afterDel.exists(_._2.contains("DirSnapshot")),
+      s"the read after deleteFromIndex ran $afterDel")
+    val lex = Retrieval.lexRankFromStore(spark, bmStore, queries, 20, 1.2,
+      0.75).collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(lex(900002L) && !lex(900001L), s"writes not visible: $lex")
+  }
 }

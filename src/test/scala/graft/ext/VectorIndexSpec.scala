@@ -298,6 +298,28 @@ class VectorIndexSpec extends SparkTestBase {
       "compacted store != init codes minus the deleted id")
   }
 
+  test("a part a crashed driver append left under _staging is never " +
+    "read, and compact removes it") {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-staging")
+    VectorIndex.init(e, st, coarseIters = 2)
+    val probes = e.filter(col("vec_id") < 5)
+    def served() = VectorIndex.query(spark, st, probes, k = 3)
+      .collect().map(_.toSeq).toSeq
+    val before = served()
+    val victim = before.head(1).asInstanceOf[Long]
+    // a crash after the staged write, before the rename into tombstones
+    val leftover = s"$st/_staging/crashed-append"
+    Seq((victim, 1L)).toDF("vec_id", "deleted_at").coalesce(1).write
+      .parquet(leftover)
+    assert(served() == before, "a staged part was read")
+    VectorIndex.compact(spark, st)
+    assert(!new java.io.File(leftover).exists(),
+      "compact left the crashed staging dir")
+    assert(served() == before)
+  }
+
   test("streaming maintenance: drains == batch updates, delta-only " +
     "second drain, no-op re-drain appends nothing, empty source dir " +
     "is a no-op") {
@@ -1269,5 +1291,124 @@ class VectorIndexSpec extends SparkTestBase {
     fails(59, "diversifiedQuery pool") {
       VectorIndex.diversifiedQuery(spark, st, q, k = 4)
     }
+  }
+
+  /** A copy of `src` at a new path (which holds no snapshot yet). */
+  private def copyStore(src: String, prefix: String): String = {
+    val dst = store(prefix)
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src),
+      new java.io.File(dst))
+    dst
+  }
+
+  /** The jobs of `jobs` that are not a held snapshot's (re)load. */
+  private def workJobs(jobs: Jobs): Jobs =
+    jobs.filterNot(_._2.contains("DirSnapshot"))
+
+  test("update and the reconciling delete forced both ways at the fold " +
+    "cap ±1 batch row, beside a plain delete, write the same store dirs " +
+    "(rows, StructType, footer schema, file count) and the same " +
+    "stats-fed drift report") {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sf0001)
+    val base = store("vidx-writes")
+    VectorIndex.init(e, base, coarseIters = 2)
+    VectorIndex.delete(spark, base, Seq(3L))
+    val corpus = localVectors(e, 40)
+    val v = corpus.as[(Long, Seq[Double])].collect().sortBy(_._1)
+    // four new vectors (one of them presented twice, one with a -0.0
+    // component), an id already coded and a tombstoned one
+    val fresh = v.take(4).map { case (id, x) =>
+      (900000L + id, x.map(_ * 1.5).updated(2, if (id == 1L) -0.0 else x(2)))
+    }
+    val batch = (fresh.toSeq ++ Seq(fresh(0), v(5), v(3)))
+      .toDF("vec_id", "embedding")
+    val batchRows = 7
+    val (killed, takenDown) = (Seq(10L, 11L, 12L), Seq(20L, 21L, 3L))
+    val t0 = System.currentTimeMillis()
+    // the plain delete's tombstones are driver-written at any id count,
+    // so only the update and the reconciling delete's stats fork
+    def run(st: String, over: Int): Seq[Jobs] = Seq(
+      Similarity.withFoldCap(batchRows - over)(
+        jobSitesDuring(VectorIndex.update(batch, st))),
+      { VectorIndex.delete(spark, st, killed)
+        // 3 is already tombstoned: two ids and two vectors are fresh
+        Similarity.withFoldCap(2 - over)(jobSitesDuring(
+          VectorIndex.delete(spark, st, takenDown, corpus))) })
+    val (onSt, offSt) = (copyStore(base, "vidx-writes-on"),
+      copyStore(base, "vidx-writes-off"))
+    val (on, off) = (run(onSt, 0), run(offSt, 1))
+    for (((a, b), op) <- on.zip(off).zip(Seq("update",
+        "delete with vectors")))
+      assert(workJobs(a).size <= 1 && workJobs(b).size > workJobs(a).size,
+        s"$op: at the cap ran $a, past it $b")
+    for (d <- Seq("codes", "driftstats", "tombstones")) {
+      val drop = if (d == "tombstones") Seq("deleted_at") else Nil
+      val (rowsOn, schemaOn, footOn, filesOn) = writtenDir(s"$onSt/$d", drop: _*)
+      val (rowsOff, schemaOff, footOff, filesOff) =
+        writtenDir(s"$offSt/$d", drop: _*)
+      assert(rowsOn == rowsOff, s"$d: rows differ")
+      assert(schemaOn == schemaOff, s"$d: StructType differs")
+      assert(footOn == footOff, s"$d: footers $footOn vs $footOff")
+      assert(filesOn == filesOff, s"$d: $filesOn files vs $filesOff")
+    }
+    val stamps = spark.read.parquet(s"$onSt/tombstones")
+      .filter(col("vec_id") =!= 3L).collect().map(_.getAs[Long]("deleted_at"))
+    assert(stamps.length == 5 && stamps.forall(t =>
+      t >= t0 && t <= System.currentTimeMillis()), stamps.toSeq)
+    assert(spark.read.parquet(s"$onSt/codes")
+      .filter(col("vec_id") >= 900000L).select("vec_id").distinct().count()
+      == 4, "the batch's four new vectors were not all coded")
+    def report(st: String) = VectorIndex.driftReportFromStats(spark, st)
+      .collect().toSeq
+    assert(report(onSt) == report(offSt), "stats-fed drift reports differ")
+    assert(VectorIndex.unreconciledTombstones(spark, onSt) ==
+      VectorIndex.unreconciledTombstones(spark, offSt))
+    // a replay of every write appends nothing on either path
+    def files(st: String) = Seq("codes", "driftstats", "tombstones")
+      .map(d => writtenDir(s"$st/$d")._4)
+    val (fOn, fOff) = (files(onSt), files(offSt))
+    Similarity.withFoldCap(batchRows)(VectorIndex.update(batch, onSt))
+    Similarity.withFoldCap(batchRows - 1)(VectorIndex.update(batch, offSt))
+    VectorIndex.delete(spark, onSt, takenDown, corpus)
+    assert(files(onSt) == fOn && files(offSt) == fOff,
+      "a replayed batch appended to the store")
+  }
+
+  test("warm writes of a local batch: update runs at most one Spark job " +
+    "(the codes probe), both deletes none, and the next read reloads " +
+    "no held snapshot") {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sf0001)
+    val st = store("vidx-warm-writes")
+    VectorIndex.init(e, st, coarseIters = 2)
+    VectorIndex.delete(spark, st, Seq(7L))
+    val probes = localVectors(e, 5)
+    val vectors = localVectors(e, 30)
+    def read(): Jobs = jobSitesDuring {
+      VectorIndex.query(spark, st, probes, k = 3).collect(); ()
+    }
+    read()
+    val batch = vectors.as[(Long, Seq[Double])].collect().take(3).toSeq
+      .map { case (id, x) => (800000L + id, x) }.toDF("vec_id", "embedding")
+    val upd = jobSitesDuring(VectorIndex.update(batch, st))
+    assert(upd.size <= 1, s"a warm update ran $upd")
+    val probe = capturedPlans(VectorIndex.update(batch, st))
+    assert(probe.exists(p => p.contains("PushedFilters") &&
+      p.contains("In(vec_id") && p.contains("EqualTo(sub,0)")),
+      s"the codes probe pushed no vec_id IN: $probe")
+    assert(read().size == 1, "the read after update reloaded a snapshot")
+    val del = jobSitesDuring(VectorIndex.delete(spark, st, Seq(8L)))
+    assert(del.isEmpty, s"a warm delete ran $del")
+    val afterDel = read()
+    assert(afterDel.size == 1 && !afterDel.exists(_._2.contains("DirSnapshot")),
+      s"the read after delete ran $afterDel")
+    val delV = jobSitesDuring(
+      VectorIndex.delete(spark, st, Seq(9L, 10L), vectors))
+    assert(delV.isEmpty, s"a warm reconciling delete ran $delV")
+    assert(read().size == 1, "the read after delete reloaded a snapshot")
+    assert(!VectorIndex.query(spark, st, probes, k = 30).collect()
+      .exists(r => Set(7L, 8L, 9L, 10L)(r.getAs[Long]("neighbor_id"))),
+      "a deleted id was served")
   }
 }
