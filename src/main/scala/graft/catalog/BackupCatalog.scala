@@ -69,7 +69,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
     */
   private def stage[T](log: DirSnapshot[T], rows: Seq[T])
       : DriverParquet.Staged[T] =
-    DriverParquet.stage(spark, Some(log), log.dir, rows)(log.enc)
+    DriverParquet.stage(spark, Some(log), log.dir, root, rows)(log.enc)
 
   /** Write each batch to staging with no lock held, then publish them
     * in order under the instance lock.

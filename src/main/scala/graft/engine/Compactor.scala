@@ -54,16 +54,19 @@ object Compactor {
   /** Crash recovery: a swap that died after staging leaves
     * `<dir>__old` with no `<dir>` — the old copy is the truth. Runs
     * under [[swapLock]], so it never mistakes a live swap for a crash.
+    * Returns whether `dir` exists after it.
     */
-  def recover(spark: SparkSession, dir: String): Unit =
+  def recover(spark: SparkSession, dir: String): Boolean =
     swapLock.synchronized { restoreOld(fs(spark, dir), dir) }
 
   /** [[recover]]'s restore, for callers already holding [[swapLock]]. */
-  private[graft] def restoreOld(f: FileSystem, dir: String): Unit = {
+  private[graft] def restoreOld(f: FileSystem, dir: String): Boolean = {
     val (p, pOld) = (new Path(dir), new Path(dir + "__old"))
-    if (!f.exists(p) && f.exists(pOld))
+    f.exists(p) || f.exists(pOld) && {
       require(f.rename(pOld, p),
         s"recovery failed: cannot restore $pOld to $p")
+      true
+    }
   }
 
   /** Compact one directory (recursing into Hive partition dirs) to
@@ -137,7 +140,7 @@ object Compactor {
   private[graft] val swapLock = new Object
 
   /** Carry sidecars into the rewrite, then publish it over `dir` via
-    * the checked-rename swap (dir → __old, tmp → dir, drop __old).
+    * the checked-rename [[swap]], under the cross-process writer lease.
     */
   private[graft] def swapInto(f: FileSystem, dir: String,
                               tmp: String): Unit =
@@ -146,7 +149,7 @@ object Compactor {
     // inversion); reentrant, so a rebuild that already leased the
     // store publishes through here without re-acquiring
     StoreLease.withLease(f, dir) { swapLock.synchronized {
-    val (p, pTmp, pOld) = (new Path(dir), new Path(tmp), new Path(dir + "__old"))
+    val (p, pTmp) = (new Path(dir), new Path(tmp))
     // sidecars (_export_info.log etc.) move into the rewrite before the
     // swap so the published dir keeps its provenance; the rewrite's own
     // _SUCCESS already exists in tmp
@@ -157,14 +160,27 @@ object Compactor {
       require(f.rename(s.getPath, new Path(pTmp, s.getPath.getName)),
         s"cannot carry sidecar ${s.getPath} into the compacted dir")
     }
+    swap(f, dir, tmp) } }
+
+  /** The checked-rename swap that publishes `tmp` as `dir`, under
+    * [[swapLock]]: dir → `__old`, tmp → dir, drop `__old`. A crash can
+    * leave `__old` with no dir, which [[recover]] restores, but never a
+    * half-written dir; a failed second rename rolls the first back. A
+    * `dir` that does not exist yet is simply created.
+    */
+  private[graft] def swap(f: FileSystem, dir: String,
+                          tmp: String): Unit = swapLock.synchronized {
+    val (p, pTmp, pOld) = (new Path(dir), new Path(tmp), new Path(dir + "__old"))
     if (f.exists(pOld)) require(f.delete(pOld, true), s"cannot clear $pOld")
-    require(f.rename(p, pOld), s"cannot stage $p to $pOld")
+    if (f.exists(p)) require(f.rename(p, pOld), s"cannot stage $p to $pOld")
     if (!f.rename(pTmp, p)) {
-      f.rename(pOld, p) // roll back: never leave the dest missing
+      // roll back: never leave the dest missing
+      if (f.exists(pOld)) f.rename(pOld, p)
       throw new IllegalStateException(s"cannot swap $pTmp into $p")
     }
     f.delete(pOld, true)
-    () } }
+    ()
+  }
 
   final case class MajorReport(dir: String, rowsBefore: Long,
                                rowsAfter: Long, files: Int)

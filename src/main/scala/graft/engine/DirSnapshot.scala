@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
   * rewrite replaces it, so the set of names says whether the dir
   * changed.
   *
-  * [[rows]] lists the dir once per call. An unchanged listing serves
+  * [[bounded]] lists the dir once per call. An unchanged listing serves
   * the held rows; any other listing (an append, delete, in-place
   * rewrite, swap or `__old` restore, by this or another process)
   * reloads the listed files whole with the encoder's schema, so no
@@ -108,23 +108,28 @@ object DirSnapshot {
     new java.util.concurrent.ConcurrentHashMap[String, DirSnapshot[Row]]()
 
   /** The rows of a parquet dir of `schema` from this JVM's held
-    * snapshot of it, keyed by the qualified dir path (reloaded only
-    * when the dir's listing changed); None when it holds more than
-    * `maxRows` rows. With `keep = false` the dir is read whole and its
-    * held snapshot dropped.
+    * snapshot of it ([[shared]]), reloaded only when the dir's listing
+    * changed; None when it holds more than `maxRows` rows.
     */
   def heldRows(spark: SparkSession, dir: String, schema: StructType,
                maxRows: Int = Int.MaxValue,
-               keep: Boolean = true): Option[Vector[Row]] = {
-    val k = key(spark, dir)
-    def fresh = new DirSnapshot[Row](dir, maxRows)(Encoders.row(schema))
-    val snap =
-      if (keep) snapshots.computeIfAbsent(k, _ => fresh)
-      else { snapshots.remove(k); fresh }
-    snap.bounded(spark)
-  }
+               keep: Boolean = true): Option[Vector[Row]] =
+    if (keep) shared(spark, dir, schema, maxRows).bounded(spark)
+    else {
+      snapshots.remove(key(spark, dir))
+      new DirSnapshot[Row](dir, maxRows)(Encoders.row(schema)).bounded(spark)
+    }
 
-  /** This JVM's held snapshot of `dir`, if [[heldRows]] keeps one. */
+  /** This JVM's held snapshot of `dir`, keyed by the qualified dir path
+    * and created on first use with `schema` and `maxRows`.
+    */
+  private[engine] def shared(spark: SparkSession, dir: String,
+                             schema: StructType,
+                             maxRows: Int): DirSnapshot[Row] =
+    snapshots.computeIfAbsent(key(spark, dir),
+      _ => new DirSnapshot[Row](dir, maxRows)(Encoders.row(schema)))
+
+  /** This JVM's held snapshot of `dir`, if [[shared]] made one. */
   private[engine] def held(spark: SparkSession,
                            dir: String): Option[DirSnapshot[Row]] =
     Option(snapshots.get(key(spark, dir)))

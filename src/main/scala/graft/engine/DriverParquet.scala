@@ -87,8 +87,8 @@ object DriverParquet {
   }
 
   /** `rows` written by the driver ([[writePart]]) as one part file in a
-    * fresh staging dir beside `dir`, not yet in it. [[publish]] moves
-    * it in; [[discard]] removes the staging dir either way.
+    * fresh staging dir, not yet in `dir`. [[publish]] moves it in;
+    * [[discard]] removes the staging dir either way.
     */
   final class Staged[T] private[DriverParquet] (
       spark: SparkSession, dir: String, snap: Option[DirSnapshot[T]],
@@ -115,14 +115,14 @@ object DriverParquet {
     def discard(): Unit = unstage(spark, stagingDir)
   }
 
-  /** Stage `rows` for `dir` ([[Staged]]), with no lock held. `snap`,
-    * when given, is the snapshot of `dir` that [[Staged.publish]]
-    * commits the rows into.
+  /** Stage `rows` for `dir` ([[Staged]]) under `<root>/_staging`,
+    * with no lock held. `snap`, when given, is the snapshot of `dir`
+    * that [[Staged.publish]] commits the rows into.
     */
   def stage[T](spark: SparkSession, snap: Option[DirSnapshot[T]],
-               dir: String, rows: Seq[T])(implicit enc: Encoder[T])
-      : Staged[T] = {
-    val s = newStagingDir(new Path(dir).getParent.toString)
+               dir: String, root: String, rows: Seq[T])(
+      implicit enc: Encoder[T]): Staged[T] = {
+    val s = newStagingDir(root)
     try new Staged(spark, dir, snap, s, writePart(spark, s, rows), rows)
     catch { case e: Throwable => unstage(spark, s); throw e }
   }
@@ -134,18 +134,13 @@ object DriverParquet {
   def appendPart[T](spark: SparkSession, snap: Option[DirSnapshot[T]],
                     dir: String, rows: Seq[T])(implicit enc: Encoder[T])
       : Unit = {
-    val s = stage(spark, snap, dir, rows)
+    val s = stage(spark, snap, dir, new Path(dir).getParent.toString, rows)
     try s.publish() finally s.discard()
   }
 
   /** [[appendPart]] of rows of a serving store dir's read schema,
-    * written with `schema` (which may differ from it only in
-    * nullability, so the part matches the footer of the Spark write it
-    * replaces). When this JVM holds a snapshot of `dir`
-    * ([[DirSnapshot.heldRows]]) the rows are committed into it, and
-    * the next read reloads nothing. Staging creates `dir`'s parent: a
-    * caller whose parent may be a crashed swap's missing root recovers
-    * it first ([[Compactor.recover]]).
+    * written with `schema`; committed into this JVM's held snapshot of
+    * `dir` when there is one.
     */
   def appendPart(spark: SparkSession, dir: String, schema: StructType,
                  rows: Seq[Row]): Unit =
