@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.engine.{Compactor, DirSnapshot, DriverParquet}
+import graft.engine.{Compactor, FactLog}
 import graft.plans.DriverFold
 import Similarity.{optLong, optSeq}
 
@@ -38,24 +38,26 @@ import Similarity.{optLong, optSeq}
   *  - `_staging/` — driver-written appends in flight: a serving-sized
   *    [[update]] or [[delete]] folds on the driver and writes each
   *    append as one part file here, renamed into its dir (and into
-  *    the held snapshot of it) once complete
-  *    ([[graft.engine.DriverParquet.appendPart]]); tombstones are
-  *    always appended this way, and [[compact]] removes the staging
-  *    dirs a crash left;
+  *    the held snapshot of it) once complete; tombstones are always
+  *    appended this way, and [[compact]] removes the staging dirs a
+  *    crash left;
   *  - `meta/` — one row: the training knobs plus a corpus fingerprint
   *    (row count + vec_id sum + a first-component content sum on the
   *    1e-6 grid), written LAST so a crash mid-init leaves a store that
   *    [[initIfStale]] rebuilds rather than a silently half-written
   *    one; an UNREADABLE meta (crash mid-commit) also reads as stale.
   *
-  * Every dir the serving and write paths read has its schema declared
-  * once below ([[MetaSchema]] … [[DriftStatsSchema]]); its writer
-  * produces exactly that schema (spec-pinned) and its readers pass it,
-  * so no store read runs a schema-inference job. The KB-scale dirs
-  * (meta, and centroids + codebooks while the model fits
-  * [[Similarity.LitAssignMaxBytes]]) are held on the driver as
-  * listing-validated [[graft.engine.DirSnapshot]]s, so a warm read on
-  * an unchanged store collects none of them again.
+  * Each of these dirs is a [[graft.engine.FactLog]] under the store
+  * root, with its schema declared once below ([[MetaSchema]] …
+  * [[DriftStatsSchema]]): every read passes it (no schema-inference
+  * job), every driver append writes the Spark write's footer, and every
+  * operation first restores a crashed swap of the root. The codes,
+  * tombstones and drift statistics are append-only facts, folded at
+  * read and compacted by a log rewrite. The KB-scale dirs (meta,
+  * centroids + codebooks while the model fits
+  * [[Similarity.LitAssignMaxBytes]], and the tombstones while they fit
+  * the serving fold) are held on the driver in the log's snapshot, so
+  * a warm read on an unchanged store collects none of them again.
   *
   * The model (centroids + codebooks) is FROZEN at init — [[update]]
   * encodes new vectors under it without retraining (a production PQ
@@ -95,7 +97,7 @@ object VectorIndex {
   private[graft] val CodesSchema: StructType = StructType.fromDDL(
     "vec_id BIGINT, sub INT, cell BIGINT, coarse_id BIGINT")
   private[graft] val TombstonesSchema: StructType =
-    StructType.fromDDL("vec_id BIGINT, deleted_at BIGINT")
+    FactLog.tombstoneSchema("vec_id")
   private[graft] val DriftStatsSchema: StructType = StructType.fromDDL(
     "batch_key STRING, i INT, sx DECIMAL(38,18), cnt BIGINT")
 
@@ -109,26 +111,30 @@ object VectorIndex {
   private[graft] val DriftStatsWritten: StructType = StructType.fromDDL(
     "batch_key STRING NOT NULL, i INT NOT NULL, sx DECIMAL(38,18), " +
       "cnt BIGINT NOT NULL")
-  private[graft] val TombstonesWritten: StructType = StructType.fromDDL(
-    "vec_id BIGINT NOT NULL, deleted_at BIGINT NOT NULL")
+  private[graft] val TombstonesWritten: StructType =
+    FactLog.tombstoneSchema("vec_id", written = true)
 
-  /** A KB-scale store dir's rows: from this JVM's held snapshot when
-    * `keep` (reloaded only when the dir's listing changed), else read
-    * whole and not kept.
+  /** A store dir as a [[graft.engine.FactLog]] under the store root,
+    * held in this JVM's shared snapshot of it.
     */
-  private def dirRows(spark: SparkSession, dir: String, schema: StructType,
-                      keep: Boolean): Vector[Row] =
-    DirSnapshot.heldRows(spark, dir, schema, keep = keep).get
+  private def storeDir(store: String, sub: String, schema: StructType,
+                       written: StructType): FactLog[Row] =
+    FactLog.rows(s"$store/$sub", store, schema, written)
 
-  /** The tombstoned ids from the held tombstones snapshot, or None while
-    * the dir holds more than [[Similarity.LocalFoldMaxQueryRows]] rows.
-    * A null id never matches the read paths' anti-join, so it is left
-    * out.
+  private def codesLog(store: String) =
+    storeDir(store, "codes", CodesSchema, CodesWritten)
+
+  private def driftLog(store: String) =
+    storeDir(store, "driftstats", DriftStatsSchema, DriftStatsWritten)
+
+  /** The tombstones, held while they fit the serving fold
+    * ([[Similarity.LocalFoldMaxQueryRows]] rows; a held read's ids are
+    * [[graft.engine.FactLog.ids]], which leaves out a null id, as the
+    * read paths' anti-join never matches one).
     */
-  private def deadIds(spark: SparkSession, store: String): Option[Set[Long]] =
-    DirSnapshot.heldRows(spark, s"$store/tombstones", TombstonesSchema,
-        Similarity.LocalFoldMaxQueryRows)
-      .map(_.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet)
+  private def tombLog(store: String) =
+    FactLog.tombstones(s"$store/tombstones", store, "vec_id",
+      Similarity.LocalFoldMaxQueryRows)
 
   /** Whether the frozen model (centroids + codebooks), sized from META
     * without a collect, fits the driver-side valve
@@ -147,15 +153,16 @@ object VectorIndex {
     */
   private def modelRows(spark: SparkSession, store: String,
                         meta: IndexMeta): (Vector[Row], Vector[Row]) = {
-    val keep = modelFitsDriver(meta)
-    (dirRows(spark, s"$store/centroids", CentroidsSchema, keep),
-      dirRows(spark, s"$store/codebooks", CodebooksSchema, keep))
+    def rows(sub: String, schema: StructType): Vector[Row] = {
+      val dir = storeDir(store, sub, schema, schema)
+      if (modelFitsDriver(meta)) dir.held(spark).get
+      else dir.scan(spark).collect().toVector
+    }
+    (rows("centroids", CentroidsSchema), rows("codebooks", CodebooksSchema))
   }
 
-  private def fs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
+  private def has(spark: SparkSession, path: String): Boolean =
+    Compactor.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** Whether a store is at `store`, after crash recovery for an
     * interrupted [[rebuild]] swap: if a crash landed between the two
@@ -169,16 +176,16 @@ object VectorIndex {
     * processes the store assumes a SINGLE writer, see [[rebuild]]).
     * Gates every entry point.
     */
-  def exists(spark: SparkSession, store: String): Boolean = {
-    Compactor.recover(spark, store)
-    val (p, f) = fs(spark, s"$store/meta")
-    f.exists(p)
-  }
+  def exists(spark: SparkSession, store: String): Boolean =
+    Compactor.recover(spark, store) && has(spark, s"$store/meta")
 
-  private def readMeta(spark: SparkSession, store: String): IndexMeta = {
+  private def requireStore(spark: SparkSession, store: String): Unit =
     require(exists(spark, store),
       s"no vector index store at $store (run init first)")
-    val r = dirRows(spark, s"$store/meta", MetaSchema, keep = true)(0)
+
+  private def readMeta(spark: SparkSession, store: String): IndexMeta = {
+    requireStore(spark, store)
+    val r = storeDir(store, "meta", MetaSchema, MetaSchema).held(spark).get(0)
     IndexMeta(r.getAs[Int]("nlist"), r.getAs[Int]("m"),
       r.getAs[Int]("ksub"), r.getAs[Int]("dim"), r.getAs[Int]("iters"),
       r.getAs[Int]("coarse_iters"), r.getAs[Long]("n_rows"),
@@ -295,8 +302,8 @@ object VectorIndex {
       ix.centroids.write.mode("overwrite").parquet(s"$store/centroids")
       ix.codebooks.write.mode("overwrite").parquet(s"$store/codebooks")
       ix.codes.write.mode("overwrite").parquet(s"$store/codes")
-      val (tp, tf) = fs(spark, s"$store/tombstones")
-      tf.delete(tp, true)
+      Compactor.fs(spark, store)
+        .delete(new org.apache.hadoop.fs.Path(s"$store/tombstones"), true)
       // drift stats epoch 0: the init corpus's exact decimal sums —
       // [[update]] appends one batch per admitted delta, and
       // [[driftReportFromStats]] folds them instead of rescanning.
@@ -453,12 +460,13 @@ object VectorIndex {
     require(exists(spark, store),
       s"no vector index store at $store to rebuild (run init first)")
     val tmp = store + "__rebuild_tmp"
-    val (tp, tf) = fs(spark, tmp)
+    val tf = Compactor.fs(spark, tmp)
     // the writer lease spans the WHOLE retrain (r14): a second
     // process double-launching this rebuild refuses at entry instead
     // of racing the stage/swap — StoreLease's takeover rules apply
     graft.engine.StoreLease.withLease(tf, store) {
-      tf.delete(tp, true) // a crashed rebuild's stage is garbage
+      // a crashed rebuild's stage is garbage
+      tf.delete(new org.apache.hadoop.fs.Path(tmp), true)
       init(embeddings, tmp, nlist, m, ksub, dim, iters, coarseIters)
       beforeSwap()
       graft.engine.Compactor.swapInto(tf, store, tmp)
@@ -484,9 +492,7 @@ object VectorIndex {
       // a pre-baseline or pre-driftstats store (older layouts) must
       // rebuild so the drift advisory has its reference and its
       // incrementally-maintained serving-corpus statistics
-      val (bp, bf) = fs(spark, s"$store/baseline/axis")
-      val (dp, df) = fs(spark, s"$store/driftstats")
-      bf.exists(bp) && df.exists(dp) &&
+      has(spark, s"$store/baseline/axis") && has(spark, s"$store/driftstats") &&
         meta == IndexMeta(resolveNlist(nlist, n), m, ksub, dim, iters,
           coarseIters, n, s, es)
     }.getOrElse(false)
@@ -642,11 +648,12 @@ object VectorIndex {
     val mx = b0.iterator.flatMap(_._2.iterator.map(math.abs)).max
     if (b0.map(_._1).distinct.length != b0.length ||
       !Similarity.decimalSumsFit(b0.length, meta.dim, mx)) return false
-    val dead = deadIds(spark, store).getOrElse(return false)
+    val dead = tombLog(store).held(spark).map(FactLog.ids)
+      .getOrElse(return false)
     // every coded vector has one sub-0 code row per append, so the
     // probe reads at most one row per already-coded batch id
     val coded = DriverFold.collect(
-        spark.read.schema(CodesSchema).parquet(s"$store/codes")
+        codesLog(store).scan(spark)
           .filter(DriverFold.isIn(col("vec_id"), b0.map(_._1)) &&
             col("sub") === 0)
           .select(col("vec_id")).coalesce(1), cap)
@@ -664,9 +671,9 @@ object VectorIndex {
         meta.dim / meta.m)
       cs.indices.map(s => Row(id, s, cs(s), cid))
     }
-    DriverParquet.appendPart(spark, s"$store/driftstats", DriftStatsWritten,
+    driftLog(store).append(spark,
       localDrift(fresh.map(_._2), meta.dim).rows(batchKey))
-    DriverParquet.appendPart(spark, s"$store/codes", CodesWritten, codes)
+    codesLog(store).append(spark, codes)
     true
   }
 
@@ -687,9 +694,9 @@ object VectorIndex {
       max(size(col("emb"))).as("mx")).collect()(0)
     if (dims.isNullAt(0)) return // empty batch: nothing to encode
     checkDims(store, meta, dims.getInt(0), dims.getInt(1))
-    val known = spark.read.schema(CodesSchema).parquet(s"$store/codes")
+    val known = codesLog(store).scan(spark)
       .select(col("vec_id")).distinct()
-      .unionByName(tombstones(spark, store).select(col("vec_id")))
+      .unionByName(tombLog(store).scan(spark).select(col("vec_id")))
     val fresh = b0.join(known, Seq("vec_id"), "left_anti")
       .localCheckpoint(true)
     if (fresh.isEmpty) return
@@ -771,9 +778,10 @@ object VectorIndex {
     * vectors-free [[delete]] whose subtraction never happened)
     * permanently double-counts the overlap in the folded stats. One
     * corpus scan writes the exact decimal statistics of `corpus` as a
-    * single reconcile batch and swaps it into place via the engine's
-    * checked-rename ([[graft.engine.Compactor.swapInto]] — crash-safe,
-    * never leaves the table missing). After it, [[driftReportFromStats]]
+    * single reconcile batch and swaps it into place as a fact-log
+    * rewrite ([[graft.engine.FactLog.rewrite]] — crash-safe, never
+    * leaves the table missing), under the store's writer lease. After
+    * it, [[driftReportFromStats]]
     * equals the corpus-scan report over `corpus` bit for bit again
     * (spec-pinned), and subsequent [[update]] batches fold on top as
     * usual. The `r…` key prefix cannot collide with the `b…`/`d…`
@@ -781,29 +789,27 @@ object VectorIndex {
     */
   def reconcileDriftStats(spark: SparkSession, store: String,
                           corpus: DataFrame): Unit = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
+    requireStore(spark, store)
     val e = prep(corpus)
     val kr = e.agg(count(lit(1)), coalesce(sum(col("vec_id")), lit(0L)),
       coalesce(min(col("vec_id")), lit(0L))).collect()(0)
     val key = s"r${kr.getLong(0)}_${kr.getLong(1)}_${kr.getLong(2)}"
-    val dir = s"$store/driftstats"
-    val (_, f) = fs(spark, dir)
-    val tmp = dir + "__reconcile_tmp"
-    f.delete(new org.apache.hadoop.fs.Path(tmp), true)
     // the i = -2 bookkeeping row: every tombstone existing at
     // reconcile time is now fully accounted (the supplied corpus IS
     // the survivors), so [[unreconciledTombstones]] stops counting
     // them; the report reads only i >= -1, so the row is invisible
     // to the drift arithmetic
-    val covered = tombstones(spark, store)
+    val covered = tombLog(store).scan(spark)
       .select(col("vec_id")).distinct().count()
     val mark = spark.range(1).select(lit(key).as("batch_key"),
       lit(-2).as("i"), lit(null).cast("decimal(38,18)").as("sx"),
       lit(covered).as("cnt"))
-    driftStatsOf(e, key).unionByName(mark)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    graft.engine.Compactor.swapInto(f, dir, tmp)
+    graft.engine.StoreLease.withLease(Compactor.fs(spark, store), store) {
+      driftLog(store).rewrite(spark) { (tmp, _) =>
+        driftStatsOf(e, key).unionByName(mark)
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+      }
+    }
   }
 
   /** Tombstoned ids whose drift statistics were never subtracted —
@@ -817,32 +823,16 @@ object VectorIndex {
     * KB-scale reads; clamped at zero.
     */
   def unreconciledTombstones(spark: SparkSession, store: String): Long = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
-    val nTomb = tombstones(spark, store)
+    requireStore(spark, store)
+    val nTomb = tombLog(store).scan(spark)
       .select(col("vec_id")).distinct().count()
-    val (dp, df) = fs(spark, s"$store/driftstats")
-    val accounted =
-      if (!df.exists(dp)) 0L
-      else spark.read.schema(DriftStatsSchema)
-        .parquet(s"$store/driftstats").distinct()
-        .filter((col("i") === -1 && col("cnt") < 0 &&
-            col("batch_key").startsWith("d")) ||
-          (col("i") === -2 && col("batch_key").startsWith("r")))
-        .agg(coalesce(sum(abs(col("cnt"))), lit(0L)))
-        .collect()(0).getLong(0)
+    val accounted = driftLog(store).scan(spark).distinct()
+      .filter((col("i") === -1 && col("cnt") < 0 &&
+          col("batch_key").startsWith("d")) ||
+        (col("i") === -2 && col("batch_key").startsWith("r")))
+      .agg(coalesce(sum(abs(col("cnt"))), lit(0L)))
+      .collect()(0).getLong(0)
     math.max(0L, nTomb - accounted)
-  }
-
-  /** The tombstone facts (vec_id, deleted_at) — empty frame when none
-    * have ever been written.
-    */
-  private def tombstones(spark: SparkSession, store: String): DataFrame = {
-    val (p, f) = fs(spark, s"$store/tombstones")
-    if (!f.exists(p))
-      spark.range(0).select(col("id").as("vec_id"),
-        lit(0L).as("deleted_at"))
-    else spark.read.schema(TombstonesSchema).parquet(s"$store/tombstones")
   }
 
   /** Delete vectors from the store — the takedown path an append-only
@@ -856,20 +846,10 @@ object VectorIndex {
     */
   def delete(spark: SparkSession, store: String,
              vecIds: Seq[Long]): Unit = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
+    requireStore(spark, store)
     require(vecIds.nonEmpty, "delete needs at least one vec_id")
-    appendTombstones(spark, store, vecIds.distinct)
-  }
-
-  /** Append (id, now) tombstone facts, written by the driver as one
-    * part file: the ids are already a driver list.
-    */
-  private def appendTombstones(spark: SparkSession, store: String,
-                               ids: Seq[Long]): Unit = {
     val now = System.currentTimeMillis()
-    DriverParquet.appendPart(spark, s"$store/tombstones",
-      TombstonesWritten, ids.map(Row(_, now)))
+    tombLog(store).append(spark, vecIds.distinct.map(Row(_, now)))
   }
 
   /** [[delete]] WITH drift-stats reconciliation — the takedown form
@@ -900,15 +880,14 @@ object VectorIndex {
     */
   def delete(spark: SparkSession, store: String, vecIds: Seq[Long],
              vectors: DataFrame): Unit = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
+    requireStore(spark, store)
     require(vecIds.nonEmpty, "delete needs at least one vec_id")
     import spark.implicits._
     val meta = readMeta(spark, store)
-    val fresh = (deadIds(spark, store) match {
+    val fresh = (tombLog(store).held(spark).map(FactLog.ids) match {
       case Some(dead) => vecIds.distinct.filterNot(dead).toArray
       case None => vecIds.distinct.toDF("vec_id")
-        .join(tombstones(spark, store).select(col("vec_id")),
+        .join(tombLog(store).scan(spark).select(col("vec_id")),
           Seq("vec_id"), "left_anti")
         .collect().map(_.getLong(0)) // takedown-list-sized
     }).sorted
@@ -926,86 +905,61 @@ object VectorIndex {
     val local = (if (fresh.length > cap) None
       else DriverFold.collect(inHand, cap))
       .flatMap(rows => cleanRows(rows.toSeq)).map(distinctRows)
-    local match {
-      case Some(rows) =>
-        require(rows.length == fresh.length, missing(rows.length))
-        val sizes = rows.map(_._2.length)
-        require(sizes.min == meta.dim && sizes.max == meta.dim,
-          wrongDim(sizes.min, sizes.max))
-        val mx = rows.iterator.flatMap(_._2.iterator.map(math.abs)).max
-        if (Similarity.decimalSumsFit(rows.length, meta.dim, mx)) {
-          DriverParquet.appendPart(spark, s"$store/driftstats",
-            DriftStatsWritten,
-            localDrift(rows.map(_._2), meta.dim).rows(key, negate = true))
-          appendTombstones(spark, store, fresh.toSeq)
-          return
-        }
-      case None =>
+    val localStats = local.flatMap { rows =>
+      require(rows.length == fresh.length, missing(rows.length))
+      val sizes = rows.map(_._2.length)
+      require(sizes.min == meta.dim && sizes.max == meta.dim,
+        wrongDim(sizes.min, sizes.max))
+      val mx = rows.iterator.flatMap(_._2.iterator.map(math.abs)).max
+      if (!Similarity.decimalSumsFit(rows.length, meta.dim, mx)) None
+      else Some(localDrift(rows.map(_._2), meta.dim).rows(key, negate = true))
     }
-    val rows = inHand.distinct()
-    val dims = rows.agg(count(lit(1)).as("nd"),
-      min(size(col("emb"))).as("mn"),
-      max(size(col("emb"))).as("mx")).collect()(0)
-    require(dims.getLong(0) == fresh.length, missing(dims.getLong(0)))
-    require(dims.getInt(1) == meta.dim && dims.getInt(2) == meta.dim,
-      wrongDim(dims.getInt(1), dims.getInt(2)))
-    driftStatsOf(rows, key)
-      .select(col("batch_key"), col("i"),
-        (-col("sx")).cast("decimal(38,18)").as("sx"),
-        (-col("cnt")).as("cnt"))
-      .coalesce(1).write.mode("append").parquet(s"$store/driftstats")
-    appendTombstones(spark, store, fresh.toSeq)
+    localStats match {
+      case Some(stats) => driftLog(store).append(spark, stats)
+      case None =>
+        val rows = inHand.distinct()
+        val dims = rows.agg(count(lit(1)).as("nd"),
+          min(size(col("emb"))).as("mn"),
+          max(size(col("emb"))).as("mx")).collect()(0)
+        require(dims.getLong(0) == fresh.length, missing(dims.getLong(0)))
+        require(dims.getInt(1) == meta.dim && dims.getInt(2) == meta.dim,
+          wrongDim(dims.getInt(1), dims.getInt(2)))
+        driftStatsOf(rows, key)
+          .select(col("batch_key"), col("i"),
+            (-col("sx")).cast("decimal(38,18)").as("sx"),
+            (-col("cnt")).as("cnt"))
+          .coalesce(1).write.mode("append").parquet(s"$store/driftstats")
+    }
+    val now = System.currentTimeMillis()
+    tombLog(store).append(spark, fresh.toSeq.map(Row(_, now)))
   }
-
-  /** Live codes: the store's append log with replay duplicates folded
-    * and tombstoned ids removed — ONE definition for every read path.
-    */
-  private def liveCodes(spark: SparkSession, store: String): DataFrame =
-    spark.read.schema(CodesSchema).parquet(s"$store/codes")
-      .join(tombstones(spark, store).select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .distinct()
 
   final case class CompactReport(codeRowsBefore: Long, codeRowsAfter: Long,
                                  filesBefore: Int, filesAfter: Int)
 
-  /** Physically compact the codes store: rewrite it as the folded,
-    * tombstone-free row set ([[liveCodes]]) in few sized files, then
-    * publish via the engine's checked-rename swap
-    * ([[graft.engine.Compactor.swapInto]] — crash-safe, never leaves
-    * the store missing). Query results are unchanged BY CONSTRUCTION
+  /** Physically compact the codes store: rewrite it as the live
+    * (folded, tombstone-free) row set in few sized files, a fact-log
+    * rewrite ([[graft.engine.FactLog.rewrite]] — crash-safe, never
+    * leaves the store missing). Query results are unchanged BY CONSTRUCTION
     * (reads already fold + anti-join; spec-pinned anyway); what
     * changes is the physics — N streaming drains' small append files
     * and replay duplicates stop accumulating. Tombstones stay in
     * place (they are cheap facts and still gate [[update]]); only
     * re-[[init]] clears them. The staging dirs a crashed driver append
-    * left under `_staging/` are removed
-    * ([[graft.engine.DriverParquet.clearStaging]]).
+    * left under `_staging/` are removed.
     */
   def compact(spark: SparkSession, store: String,
               targetBytes: Long = 512L << 20): CompactReport = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
-    val dir = s"$store/codes"
-    val (p, f) = fs(spark, dir)
-    def dataFiles = f.listStatus(p).filter(DirSnapshot.isCommitted)
-    val before = dataFiles
+    requireStore(spark, store)
     // leased on the STORE root (not the codes subdir), so a compact
     // and a rebuild of the same store exclude each other cross-process
-    graft.engine.StoreLease.withLease(f, store) {
-      DriverParquet.clearStaging(spark, store)
-      val rowsBefore = spark.read.schema(CodesSchema).parquet(dir).count()
-      val bytes = before.map(_.getLen).sum
-      val nOut =
-        math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val tmp = dir + "__compact_tmp"
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      liveCodes(spark, store).coalesce(nOut)
-        .write.mode("overwrite").parquet(tmp)
-      graft.engine.Compactor.swapInto(f, dir, tmp)
-      CompactReport(rowsBefore,
-        spark.read.schema(CodesSchema).parquet(dir).count(),
-        before.length, dataFiles.length)
+    graft.engine.StoreLease.withLease(Compactor.fs(spark, store), store) {
+      val codes = codesLog(store)
+      val r = codes.rewrite(spark, targetBytes) { (tmp, n) =>
+        codes.live(spark, tombLog(store)).coalesce(n)
+          .write.mode("overwrite").parquet(tmp)
+      }
+      CompactReport(r.rowsBefore, r.rowsAfter, r.filesBefore, r.filesAfter)
     }
   }
 
@@ -1037,8 +991,7 @@ object VectorIndex {
   def driftReport(spark: SparkSession, store: String, corpus: DataFrame,
                   tolMean: Double = 0.01, tolAxis: Double = 0.005,
                   tolNorm: Double = 0.02): DataFrame = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
+    requireStore(spark, store)
     val e = prep(corpus)
     val curAudit = Similarity.embeddingAudit(corpus)
       .select(col("n_vectors").as("n_current"),
@@ -1072,13 +1025,10 @@ object VectorIndex {
                            tolMean: Double = 0.01,
                            tolAxis: Double = 0.005,
                            tolNorm: Double = 0.02): DataFrame = {
-    require(exists(spark, store),
-      s"no vector index store at $store (run init first)")
-    val (dp, df) = fs(spark, s"$store/driftstats")
-    require(df.exists(dp),
+    requireStore(spark, store)
+    require(has(spark, s"$store/driftstats"),
       s"store at $store predates drift stats — re-init to record them")
-    val folded = spark.read.schema(DriftStatsSchema)
-      .parquet(s"$store/driftstats")
+    val folded = driftLog(store).scan(spark)
       .distinct() // byte-identical at-least-once replays fold
       .groupBy(col("i"))
       .agg(sum(col("sx")).as("sx"), sum(col("cnt")).as("cnt"))
@@ -1117,8 +1067,7 @@ object VectorIndex {
                         curAudit: DataFrame, curMu: DataFrame,
                         tolMean: Double, tolAxis: Double,
                         tolNorm: Double): DataFrame = {
-    val (bp, bf) = fs(spark, s"$store/baseline/axis")
-    require(bf.exists(bp),
+    require(has(spark, s"$store/baseline/axis"),
       s"store at $store predates drift baselines — re-init to record one")
     val baseAudit = spark.read.parquet(s"$store/baseline/audit")
       .select(col("n_vectors").as("n_base"),
@@ -1173,13 +1122,13 @@ object VectorIndex {
         val (centRows, cbRows) = modelRows(spark, store, meta)
         (spark.createDataFrame(centRows.asJava, CentroidsSchema),
           spark.createDataFrame(cbRows.asJava, CodebooksSchema))
-      } else (spark.read.schema(CentroidsSchema).parquet(s"$store/centroids"),
-        spark.read.schema(CodebooksSchema).parquet(s"$store/codebooks"))
-    val codes = spark.read.schema(CodesSchema).parquet(s"$store/codes")
+      } else (
+        storeDir(store, "centroids", CentroidsSchema, CentroidsSchema)
+          .scan(spark),
+        storeDir(store, "codebooks", CodebooksSchema, CodebooksSchema)
+          .scan(spark))
+    val codes = codesLog(store).live(spark, tombLog(store))
       .filter(col("vec_id").isin(vecIds: _*))
-      .join(tombstones(spark, store).select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .distinct()
     codes.join(broadcast(cb1), Seq("sub", "cell"))
       .groupBy(col("vec_id"))
       .agg(first(col("coarse_id")).as("coarse_id"),
@@ -1443,7 +1392,8 @@ object VectorIndex {
                                    cell: Option[Long], coarseId: Option[Long])
 
   /** The live codes of a raw codes read: replayed appends folded
-    * (distinct) and tombstoned ids removed — [[liveCodes]] on collected
+    * (distinct) and tombstoned ids removed — the codes log's
+    * [[graft.engine.FactLog.live]] on collected
     * rows (a null id is never tombstoned).
     */
   private def liveCodeRows(read: Array[Row], dead: Set[Long]): Seq[CodeRow] =
@@ -1497,14 +1447,12 @@ object VectorIndex {
       if (!modelFitsDriver(meta)) None
       else DriverFold.collect(q, Similarity.foldCap / (meta.m * meta.ksub))
         .map(_.toIndexedSeq.map(r => (optLong(r, 0), optSeq(r, 1))))
-    def codesIn(cells: Seq[Long]): DataFrame =
-      spark.read.schema(CodesSchema).parquet(s"$store/codes")
-        .filter(col("coarse_id").isin(cells: _*))
-    def rank(codes: DataFrame, probes: DataFrame, dtable: DataFrame)(
+    def inCells(cells: Seq[Long]): Column = col("coarse_id").isin(cells: _*)
+    def rank(cells: Seq[Long], probes: DataFrame, dtable: DataFrame)(
         k: Int): DataFrame =
       Similarity.ivfPqRank(
-        codes.join(tombstones(spark, store).select(col("vec_id")),
-          Seq("vec_id"), "left_anti").distinct(), probes, dtable, k)
+        codesLog(store).live(spark, tombLog(store)).filter(inCells(cells)),
+        probes, dtable, k)
     qRows match {
       case Some(rows) =>
         // declared (coarse_id, c_emb) and (sub, cell, c_sv) rows
@@ -1530,15 +1478,17 @@ object VectorIndex {
             StructField("sub", IntegerType, nullable = false),
             StructField("cell", LongType, nullable = false),
             StructField("pd", DoubleType))))
-        val codes = codesIn(pl.flatMap(_._2).distinct)
-        new RankPlan(meta, qidNullable, codes,
-          deadIds(spark, store).map(LocalRank(pl, dl, _)),
-          rank(codes, pDf, dDf))
+        val cells = pl.flatMap(_._2).distinct
+        new RankPlan(meta, qidNullable,
+          codesLog(store).scan(spark).filter(inCells(cells)),
+          tombLog(store).held(spark).map(d => LocalRank(pl, dl, FactLog.ids(d))),
+          rank(cells, pDf, dDf))
       case None =>
         val centroids =
-          spark.read.schema(CentroidsSchema).parquet(s"$store/centroids")
-        val cb1 =
-          spark.read.schema(CodebooksSchema).parquet(s"$store/codebooks")
+          storeDir(store, "centroids", CentroidsSchema, CentroidsSchema)
+            .scan(spark)
+        val cb1 = storeDir(store, "codebooks", CodebooksSchema,
+          CodebooksSchema).scan(spark)
         // coalesce(1): |Q|·nprobe rows by construction (KB at any
         // scale) — single-partition checkpoint keeps the collect and
         // the rank join's probe side 1-task (guide §2.2)
@@ -1547,9 +1497,9 @@ object VectorIndex {
           .localCheckpoint(true) // consumed twice: collect + rank join
         val cells = probes.select(col("coarse_id")).distinct()
           .collect().map(_.getLong(0)).toIndexedSeq
-        val codes = codesIn(cells)
-        new RankPlan(meta, qidNullable, codes, None,
-          rank(codes, probes, Similarity.ivfPqDtable(q, cb1, meta.m, dsub)))
+        new RankPlan(meta, qidNullable,
+          codesLog(store).scan(spark).filter(inCells(cells)), None,
+          rank(cells, probes, Similarity.ivfPqDtable(q, cb1, meta.m, dsub)))
     }
   }
 
