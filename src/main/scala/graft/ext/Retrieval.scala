@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.engine.{Compactor, DirSnapshot, DriverParquet}
+import graft.engine.{Compactor, FactLog}
 import graft.plans.DriverFold
 import Similarity.{optLong, optSeq}
 
@@ -199,8 +199,8 @@ object Retrieval {
     * NOTHING — not even the harmless bit-identical rows the
     * fold-at-read distinct used to absorb.
     * Re-texting a live id is a rebuild event ([[rebuildIndex]]). The
-    * stores remain append-only fact logs; long-lived ones compact with
-    * the engine's Compactor.
+    * stores remain append-only fact logs ([[graft.engine.FactLog]]);
+    * long-lived ones compact with [[compactIndex]].
     *
     * A batch of at most [[Similarity.foldCap]] rows with no null id or
     * text, whose postings fit the cap too, is folded on the driver
@@ -209,8 +209,9 @@ object Retrieval {
     * `doc_id IN` postings probe for the crash-window gate below, and
     * each append written by the driver and committed into the held
     * snapshot — a warm update of a local batch runs one Spark job, the
-    * probe, and the next read reloads nothing. Any other batch (a
-    * corpus-sized bootstrap) takes the distributed path, whose
+    * probe, and the next read reloads nothing. Any other batch takes
+    * the distributed path (as a bootstrap into a cleared root does
+    * directly), whose
     * anti-join survivor set is materialized (eager localCheckpoint,
     * delta-sized) BEFORE the appends, so the store is never read and
     * written by the same job. Both paths write the same rows, schemas
@@ -232,7 +233,6 @@ object Retrieval {
     * something through — an identical replay never reaches it.
     */
   def updateIndex(batch: DataFrame, indexStore: String): Unit = {
-    Compactor.recover(batch.sparkSession, indexStore)
     if (!updateIndexLocal(batch, indexStore))
       updateIndexDistributed(batch, indexStore)
   }
@@ -273,19 +273,15 @@ object Retrieval {
     val cap = Similarity.foldCap
     val got = DriverFold.collect(prepDocs(batch), cap)
       .filter(_.forall(r => !r.anyNull)).getOrElse(return false)
-    val known = Seq("lengths" -> LengthsSchema,
-        "tombstones" -> TombstonesSchema)
-      .flatMap { case (sub, schema) =>
-        heldStore(spark, indexStore, sub, schema).getOrElse(return false) }
-      .iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    val known = FactLog.ids(Seq(lengthsLog(indexStore), tombLog(indexStore))
+      .flatMap(_.held(spark).getOrElse(return false)))
     // distinct, as the distributed path's: a duplicated row must not
     // double its tf counts
     val b0 = got.iterator.map(r => (r.getLong(0), r.getString(1)))
       .filterNot(r => known(r._1)).distinct.toSeq
     if (b0.isEmpty) return true
-    val postingsDir = s"$indexStore/postings"
     val orphans = DriverFold.collect(
-        scanStore(spark, postingsDir, PostingsSchema)
+        postingsLog(indexStore).scan(spark)
           .filter(DriverFold.isIn(col("doc_id"), b0.map(_._1)))
           .select(col("doc_id"), col("dl")).coalesce(1), cap)
       .filter(_.forall(r => !r.anyNull)).getOrElse(return false)
@@ -303,15 +299,14 @@ object Retrieval {
       if (postings.size > cap) return false
     }
     if (orphans.nonEmpty)
-      DriverParquet.appendPart(spark, s"$indexStore/lengths", LengthsSchema,
+      lengthsLog(indexStore).append(spark,
         orphans.map { case (id, dl) => Row(id, dl.toLong) })
     if (b.nonEmpty) {
       val docs = prepDocs(batch).distinct()
-      DriverParquet.appendPart(spark, postingsDir, postingsOf(docs).schema,
+      postingsLog(indexStore, postingsOf(docs).schema).append(spark,
         postings.iterator.map { case ((id, dl, t), tf) => Row(id, dl, t, tf) }
           .toSeq)
-      DriverParquet.appendPart(spark, s"$indexStore/lengths",
-        lengthsOf(docs).schema,
+      lengthsLog(indexStore, lengthsOf(docs).schema).append(spark,
         toks.map { case (id, ts) => (id, ts.length.toLong) }.distinct
           .map { case (id, dl) => Row(id, dl) })
     }
@@ -322,9 +317,10 @@ object Retrieval {
   private def updateIndexDistributed(batch: DataFrame,
                                      indexStore: String): Unit = {
     val spark = batch.sparkSession
-    val known = liveStore(spark, indexStore, "lengths", LengthsSchema)
+    val tombs = tombLog(indexStore)
+    val known = lengthsLog(indexStore).live(spark, tombs)
       .select(col("doc_id"))
-      .unionByName(tombstones(spark, indexStore).select(col("doc_id")))
+      .unionByName(tombs.scan(spark).select(col("doc_id")))
     // distinct first: an exactly-duplicated document row inside one
     // batch must not double its tf counts (the lengths distinct alone
     // would mask it — one dl row, 2x tf — a silent score corruption)
@@ -335,21 +331,14 @@ object Retrieval {
     // crash-window gate + repair: ids that already hold postings are
     // orphans of a crashed update — re-plant their lengths row from
     // the postings' own dl, and append nothing else for them
-    val pPost = new org.apache.hadoop.fs.Path(s"$indexStore/postings")
-    val f = pPost.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val orphans =
-      if (!f.exists(pPost))
-        spark.emptyDataFrame.selectExpr(
-          "CAST(0 AS BIGINT) AS doc_id", "CAST(0 AS INT) AS dl").limit(0)
-      else spark.read.schema(PostingsSchema)
-        .parquet(s"$indexStore/postings")
-        .select(col("doc_id"), col("dl"))
-        .join(b0.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .distinct()
-        .localCheckpoint(true) // ≤ |survivors| rows
+    val probe = postingsLog(indexStore).scan(spark)
+      .select(col("doc_id"), col("dl"))
+      .join(b0.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .distinct()
     val b =
-      if (orphans.isEmpty) b0
+      if (probe.isEmpty) b0 // a store with no postings runs no job here
       else {
+        val orphans = probe.localCheckpoint(true) // ≤ |survivors| rows
         orphans.select(col("doc_id"), col("dl").cast("long").as("dl"))
           .write.mode("append").parquet(s"$indexStore/lengths")
         b0.join(orphans.select(col("doc_id")), Seq("doc_id"), "left_anti")
@@ -360,29 +349,24 @@ object Retrieval {
     lengthsOf(b).write.mode("append").parquet(s"$indexStore/lengths")
   }
 
-  /** A store table's folded rows, read with its declared schema (no
-    * inference job) — empty when the table has never been written.
+  /** The store tables as [[graft.engine.FactLog]]s under the store
+    * root, read with their declared schemas (no inference job) and
+    * appended with `written`, the schema of the Spark write an append
+    * replaces. The lengths and tombstones are held on the driver while
+    * they fit the serving fold ([[Similarity.LocalFoldMaxQueryRows]]
+    * rows).
     */
-  private def readStore(spark: org.apache.spark.sql.SparkSession,
-                        path: String, schema: StructType): DataFrame =
-    scanStore(spark, path, schema).distinct()
+  private def postingsLog(store: String,
+                          written: StructType = PostingsSchema) =
+    FactLog.rows(s"$store/postings", store, PostingsSchema, written)
 
-  /** A store table's raw rows (replays not folded). */
-  private def scanStore(spark: org.apache.spark.sql.SparkSession,
-                        path: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(java.util.List.of[Row](), schema)
-    else spark.read.schema(schema).parquet(path)
-  }
+  private def lengthsLog(store: String, written: StructType = LengthsSchema) =
+    FactLog.rows(s"$store/lengths", store, LengthsSchema, written,
+      Similarity.LocalFoldMaxQueryRows)
 
-  /** The deletion facts (doc_id, deleted_at) — empty when none. */
-  private def tombstones(spark: org.apache.spark.sql.SparkSession,
-                         indexStore: String): DataFrame = {
-    Compactor.recover(spark, indexStore)
-    readStore(spark, s"$indexStore/tombstones", TombstonesSchema)
-  }
+  private def tombLog(store: String) =
+    FactLog.tombstones(s"$store/tombstones", store, "doc_id",
+      Similarity.LocalFoldMaxQueryRows)
 
   /** Delete documents from the persisted index — the takedown path an
     * append-only store otherwise lacks (the [[graft.ext.VectorIndex
@@ -398,24 +382,8 @@ object Retrieval {
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
                       indexStore: String, docIds: Seq[Long]): Unit = {
     require(docIds.nonEmpty, "deleteFromIndex needs at least one doc_id")
-    // a crash mid-rebuild leaves the root missing and `__old` holding
-    // the truth: restore it before the append creates the root
-    Compactor.recover(spark, indexStore)
     val now = System.currentTimeMillis()
-    DriverParquet.appendPart(spark, s"$indexStore/tombstones",
-      TombstonesWritten, docIds.distinct.map(Row(_, now)))
-  }
-
-  /** Live store rows: fold-at-read distinct + tombstone anti-join —
-    * ONE definition for both store tables and both consumers.
-    */
-  private def liveStore(spark: org.apache.spark.sql.SparkSession,
-                        indexStore: String, sub: String,
-                        schema: StructType): DataFrame = {
-    Compactor.recover(spark, indexStore)
-    readStore(spark, s"$indexStore/$sub", schema)
-      .join(tombstones(spark, indexStore).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
+    tombLog(indexStore).append(spark, docIds.distinct.map(Row(_, now)))
   }
 
   // the store tables' schemas, declared once: [[updateIndex]] and
@@ -425,65 +393,39 @@ object Retrieval {
   private[graft] val LengthsSchema: StructType =
     StructType.fromDDL("doc_id BIGINT, dl BIGINT")
   private[graft] val TombstonesSchema: StructType =
-    StructType.fromDDL("doc_id BIGINT, deleted_at BIGINT")
+    FactLog.tombstoneSchema("doc_id")
   // the tombstone parts' written schema, nullability included: the
   // footer of the Spark-written tombstone parts already in stores
   private[graft] val TombstonesWritten: StructType =
-    StructType.fromDDL("doc_id BIGINT NOT NULL, deleted_at BIGINT NOT NULL")
-
-  /** A store table's rows from this JVM's held snapshot, or None while
-    * it holds more than [[Similarity.LocalFoldMaxQueryRows]] rows.
-    */
-  private def heldStore(spark: org.apache.spark.sql.SparkSession,
-                        indexStore: String, sub: String,
-                        schema: StructType): Option[Vector[Row]] =
-    DirSnapshot.heldRows(spark, s"$indexStore/$sub", schema,
-      Similarity.LocalFoldMaxQueryRows)
+    FactLog.tombstoneSchema("doc_id", written = true)
 
   final case class IndexCompactReport(postingsBefore: Long,
     postingsAfter: Long, filesBefore: Int, filesAfter: Int)
 
   /** Physically compact the postings + lengths stores: rewrite each as
-    * its folded, tombstone-free row set in few sized files, published
-    * via the engine's checked-rename swap ([[graft.engine.Compactor
-    * .swapInto]]). Query results unchanged by construction (reads
-    * already fold + anti-join); N streaming drains' small append files
-    * and replay duplicates stop accumulating. Tombstones stay (cheap
-    * facts; they still gate [[updateIndex]]). The staging dirs a
-    * crashed driver append left under `_staging/` are removed
-    * ([[DriverParquet.clearStaging]]).
+    * its live (folded, tombstone-free) row set in few sized files, a
+    * fact-log rewrite ([[graft.engine.FactLog.rewrite]]). Query results
+    * unchanged by construction (reads already fold + anti-join); N
+    * streaming drains' small append files and replay duplicates stop
+    * accumulating. Tombstones stay (cheap facts; they still gate
+    * [[updateIndex]]). The staging dirs a crashed driver append left
+    * under `_staging/` are removed.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    indexStore: String,
                    targetBytes: Long = 512L << 20): IndexCompactReport = {
-    def one(sub: String, schema: StructType): (Long, Long, Int, Int) = {
-      val dir = s"$indexStore/$sub"
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(f.exists(p), s"no $sub store at $indexStore")
-      def dataFiles = f.listStatus(p).filter(DirSnapshot.isCommitted)
-      val before = dataFiles
-      val rowsBefore = spark.read.schema(schema).parquet(dir).count()
-      val bytes = before.map(_.getLen).sum
-      val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val tmp = dir + "__compact_tmp"
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      liveStore(spark, indexStore, sub, schema).coalesce(nOut)
-        .write.mode("overwrite").parquet(tmp)
-      Compactor.swapInto(f, dir, tmp)
-      (rowsBefore, spark.read.schema(schema).parquet(dir).count(),
-        before.length, dataFiles.length)
-    }
     // leased on the STORE root across BOTH sub-store rewrites, so a
     // compaction and a rebuild of the same index exclude each other
     // cross-process (r14)
-    val rootFs = new org.apache.hadoop.fs.Path(indexStore)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.StoreLease.withLease(rootFs, indexStore) {
-      DriverParquet.clearStaging(spark, indexStore)
-      val (pb, pa, fb, fa) = one("postings", PostingsSchema)
-      val (_, _, lb, la) = one("lengths", LengthsSchema)
-      IndexCompactReport(pb, pa, fb + lb, fa + la)
+    graft.engine.StoreLease.withLease(Compactor.fs(spark, indexStore),
+        indexStore) {
+      val Seq(p, l) = Seq(postingsLog(indexStore), lengthsLog(indexStore))
+        .map(log => log.rewrite(spark, targetBytes) { (tmp, n) =>
+          log.live(spark, tombLog(indexStore)).coalesce(n)
+            .write.mode("overwrite").parquet(tmp)
+        })
+      IndexCompactReport(p.rowsBefore, p.rowsAfter,
+        p.filesBefore + l.filesBefore, p.filesAfter + l.filesAfter)
     }
   }
 
@@ -498,14 +440,14 @@ object Retrieval {
                      indexStore: String, terms: Seq[String],
                      k1: Double = 1.2, b: Double = 0.75): Bm25Model = {
     require(terms.nonEmpty, "modelFromIndex needs at least one query term")
-    val lengths = liveStore(spark, indexStore, "lengths", LengthsSchema)
+    val lengths = lengthsLog(indexStore).live(spark, tombLog(indexStore))
     val statsRow = lengths
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_tot"))
       .collect()(0)
     val nDocs = statsRow.getAs[Long]("n_docs")
     require(nDocs > 0, s"empty index store at $indexStore")
     val avgdl = statsRow.getAs[Long]("dl_tot").toDouble / nDocs
-    val dfRows = liveStore(spark, indexStore, "postings", PostingsSchema)
+    val dfRows = postingsLog(indexStore).live(spark, tombLog(indexStore))
       .filter(col("token").isin(terms: _*))
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
       .collect()
@@ -529,11 +471,11 @@ object Retrieval {
                  indexStore: String, terms: Seq[String], k: Int = 10,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "queryIndex needs at least one query term")
-    val stats = liveStore(spark, indexStore, "lengths", LengthsSchema)
+    val stats = lengthsLog(indexStore).live(spark, tombLog(indexStore))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_tot"))
       .select(col("n_docs"),
         (col("dl_tot").cast("double") / col("n_docs")).as("avgdl"))
-    val tf = liveStore(spark, indexStore, "postings", PostingsSchema)
+    val tf = postingsLog(indexStore).live(spark, tombLog(indexStore))
       .filter(col("token").isin(terms: _*))
     // no reuse guard needed here: tf comes straight from the store
     // scan (no shared aggregate subtree to keep bit-identical)
@@ -730,14 +672,17 @@ object Retrieval {
                         fp: (Long, Long, Long, Long)): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    updateIndex(docs, indexStore)
+    // the root was just cleared (or is a fresh stage): the driver
+    // attempt's id gate has nothing to find, so go straight to the
+    // distributed write
+    updateIndexDistributed(docs, indexStore)
     // drift baseline off the fresh stores (KB-scale aggregates)
-    liveStore(spark, indexStore, "lengths", LengthsSchema)
+    lengthsLog(indexStore).live(spark, tombLog(indexStore))
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$indexStore/baseline/stats")
-    liveStore(spark, indexStore, "postings", PostingsSchema)
+    postingsLog(indexStore).live(spark, tombLog(indexStore))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("tfm"))
       .orderBy(col("df").desc, col("token"))
@@ -771,11 +716,9 @@ object Retrieval {
   private[graft] def rebuildIndex(docs: DataFrame, indexStore: String,
                                   beforeSwap: () => Unit): Unit = {
     val spark = docs.sparkSession
-    Compactor.recover(spark, indexStore)
-    val p = new org.apache.hadoop.fs.Path(indexStore)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(f.exists(p),
+    require(Compactor.recover(spark, indexStore),
       s"no index store at $indexStore to rebuild (init first)")
+    val f = Compactor.fs(spark, indexStore)
     val fpRow = docs.agg(count(lit(1)), coalesce(sum(col("doc_id")),
         lit(0L)), coalesce(sum(length(col("text")).cast("long")),
         lit(0L)),
@@ -802,12 +745,8 @@ object Retrieval {
     * store one rename away from being served.
     */
   def indexExists(spark: org.apache.spark.sql.SparkSession,
-                  indexStore: String): Boolean = {
+                  indexStore: String): Boolean =
     Compactor.recover(spark, indexStore)
-    val p = new org.apache.hadoop.fs.Path(indexStore)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.exists(p)
-  }
 
   /** Lexical drift advisory, fed ENTIRELY from the persisted stores —
     * the [[graft.ext.VectorIndex.driftReportFromStats]] discipline on
@@ -845,10 +784,10 @@ object Retrieval {
                               tolOov: Double = 0.01,
                               tolDl: Double = 0.05): DataFrame = {
     val vocab = readVocab(spark, indexStore)
-    val curStats = liveStore(spark, indexStore, "lengths", LengthsSchema)
+    val curStats = lengthsLog(indexStore).live(spark, tombLog(indexStore))
       .agg(count(lit(1)).as("n_current"),
         coalesce(sum(col("dl")), lit(0L)).as("dl_cur"))
-    val curDf = liveStore(spark, indexStore, "postings", PostingsSchema)
+    val curDf = postingsLog(indexStore).live(spark, tombLog(indexStore))
       .filter(col("token").isin(vocabTokens(vocab): _*))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("df_c"), sum(col("tf")).as("tfm_c"))
@@ -895,17 +834,16 @@ object Retrieval {
   private def readVocab(spark: org.apache.spark.sql.SparkSession,
                         indexStore: String): DataFrame = {
     // every store entry point recovers a crash-interrupted rebuild
-    // swap first (the liveStore/tombstones discipline) — without this,
+    // swap first (the fact logs' discipline) — without this,
     // a drift report after an interrupted swap failed with the
     // misleading "predates drift baselines" error instead of serving
     // the restored previous copy
-    Compactor.recover(spark, indexStore)
-    val p = new org.apache.hadoop.fs.Path(s"$indexStore/baseline/vocab")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(f.exists(p),
+    val vocab = s"$indexStore/baseline/vocab"
+    require(Compactor.recover(spark, indexStore) &&
+        Compactor.fs(spark, vocab).exists(new org.apache.hadoop.fs.Path(vocab)),
       s"index store at $indexStore predates drift baselines — " +
         "rebuild it (initIndexIfStale) to record one")
-    spark.read.parquet(s"$indexStore/baseline/vocab")
+    spark.read.parquet(vocab)
   }
 
   private def vocabTokens(vocab: DataFrame): Seq[String] =
@@ -1073,24 +1011,22 @@ object Retrieval {
                                depth: Int, k1: Double,
                                b: Double): DataFrame = {
     import spark.implicits._
-    Compactor.recover(spark, indexStore)
     val allTerms = queries.flatMap(_._2).distinct
     val qtRows = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
     // a null in a posting or length row is left to the plan
     def noNulls(rows: Seq[Row]): Option[Seq[Row]] =
       Some(rows).filter(_.forall(r => !r.anyNull))
     val local = for {
-      lengths <- heldStore(spark, indexStore, "lengths", LengthsSchema)
-        .flatMap(noNulls)
-      dead <- heldStore(spark, indexStore, "tombstones", TombstonesSchema)
+      lengths <- lengthsLog(indexStore).held(spark).flatMap(noNulls)
+      dead <- tombLog(indexStore).held(spark)
       read <- DriverFold.collect(
-        scanStore(spark, s"$indexStore/postings", PostingsSchema)
+        postingsLog(indexStore).scan(spark)
           .filter(col("token").isin(allTerms: _*)).coalesce(1),
         Similarity.foldCap).flatMap(rows => noNulls(rows.toSeq))
       ranked <- lexRankLocal(
         read.map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))),
         lengths.map(r => (r.getLong(0), r.getLong(1))),
-        dead.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet,
+        FactLog.ids(dead),
         qtRows, depth, k1, b)
     } yield ranked
     local match {
@@ -1106,11 +1042,11 @@ object Retrieval {
       case None =>
         val qt = broadcast(qtRows.toDF("query_id", "token"))
         val bottomK = udaf(graft.functions.BottomKAggregator.bottomK(depth))
-        val stats = liveStore(spark, indexStore, "lengths", LengthsSchema)
+        val stats = lengthsLog(indexStore).live(spark, tombLog(indexStore))
           .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_tot"))
           .select(col("n_docs"),
             (col("dl_tot").cast("double") / col("n_docs")).as("avgdl"))
-        val tf = liveStore(spark, indexStore, "postings", PostingsSchema)
+        val tf = postingsLog(indexStore).live(spark, tombLog(indexStore))
           .filter(col("token").isin(allTerms: _*))
         val dfT = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
         tf.join(qt, "token")
