@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.engine.{Compactor, FactLog}
 
 /** Deduplication operators for a training-data pipeline [EXT]:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -861,6 +863,13 @@ object Dedup {
   // DedupSpec. At 100 TB the store is k longs per doc (~128 B), read
   // once per delta; the delta side is small, so AQE turns the
   // new-vs-all band join into a broadcast join automatically.
+  //
+  // The store is a fact log ([[graft.engine.FactLog]]): signature rows
+  // appended, folded at read on doc_id, taken back by the tombstone
+  // log, compacted by a log rewrite. The signature rows are read by
+  // schema inference (their schema depends on the store's age, see
+  // [[requireDlSchema]]); the tombstones have a declared schema and are
+  // appended by the driver.
 
   /** The store row form of [[minhashSignatures]] (r13): the same k
     * minima PLUS the doc's token count `dl` — one extra grouping
@@ -940,10 +949,9 @@ object Dedup {
   def initSignaturesIfStale(docs: DataFrame, path: String,
                             n: Int = 3): Boolean = {
     val spark = docs.sparkSession
-    graft.engine.Compactor.recover(spark, path)
-    val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = fs.exists(bp) && {
+    Compactor.recover(spark, path)
+    val fresh = Compactor.fs(spark, path)
+        .exists(new org.apache.hadoop.fs.Path(path + "_baseline")) && {
       val b = spark.read.parquet(path + "_baseline").collect()(0)
       val fp = sigFingerprint(docs)
       b.getAs[Int]("n_shingle") == n &&
@@ -962,12 +970,8 @@ object Dedup {
     * store" for one a single rename away from live.
     */
   def storeExists(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Boolean = {
-    graft.engine.Compactor.recover(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
+                  path: String): Boolean =
+    Compactor.recover(spark, path)
 
   /** Read the signature store. Appends are made idempotent HERE, not
     * at write time: a retried [[updateSignatures]] may leave duplicate
@@ -979,25 +983,26 @@ object Dedup {
     */
   def readSignatures(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = {
-    graft.engine.Compactor.recover(spark, path)
+    Compactor.recover(spark, path)
     spark.read.parquet(path).dropDuplicates("doc_id")
-      .join(sigTombstones(spark, path).select(col("doc_id")),
+      .join(tombLog(path).scan(spark).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
   }
 
   /** The signature store's deletion facts, kept in a SIBLING directory
     * (`<path>_tombstones` — the store itself is a flat parquet dir, so
-    * facts cannot nest inside it without polluting its schema).
+    * facts cannot nest inside it without polluting its schema). The
+    * log's root is the store: its appends stage under `<path>/_staging`
+    * (not under the parent other stores may share), where
+    * [[compactSignatures]]' rewrite clears a crashed one.
     */
-  private def sigTombstones(spark: org.apache.spark.sql.SparkSession,
-                            path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path + "_tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.range(0).select(col("id").as("doc_id"),
-        org.apache.spark.sql.functions.lit(0L).as("deleted_at"))
-    else spark.read.parquet(p.toString)
-  }
+  private def tombLog(path: String): FactLog[Row] =
+    FactLog.tombstones(path + "_tombstones", path, "doc_id")
+
+  // the tombstone parts' written schema: the footer of the Spark write
+  // of a driver id list the driver-written parts replace
+  private[graft] val TombstonesWritten: StructType =
+    FactLog.tombstoneSchema("doc_id", written = true)
 
   /** Delete documents from the signature store — the takedown path
     * ([[graft.ext.VectorIndex.delete]]'s discipline on the dedup
@@ -1013,33 +1018,28 @@ object Dedup {
   def deleteSignatures(spark: org.apache.spark.sql.SparkSession,
                        path: String, docIds: Seq[Long]): Unit = {
     require(docIds.nonEmpty, "deleteSignatures needs at least one doc_id")
-    import spark.implicits._
     val now = System.currentTimeMillis()
-    docIds.distinct.map((_, now)).toDF("doc_id", "deleted_at")
-      .coalesce(1).write.mode("append").parquet(path + "_tombstones")
+    tombLog(path).append(spark, docIds.distinct.map(Row(_, now)))
   }
 
   /** Physically compact the signature store: rewrite it as the folded,
-    * tombstone-free row set in few sized files via the engine's
-    * checked-rename swap. Read results unchanged by construction;
-    * the physics of N drains' append files stop accumulating.
+    * tombstone-free row set in few sized files, a fact-log rewrite
+    * ([[graft.engine.FactLog.rewrite]], sized from the data files) that
+    * also clears the tombstone appends a crash left staged. Read
+    * results unchanged by construction; the physics of N drains'
+    * append files stop accumulating.
     */
   def compactSignatures(spark: org.apache.spark.sql.SparkSession,
                         path: String,
                         targetBytes: Long = 512L << 20): Unit = {
-    graft.engine.Compactor.recover(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no signature store at $path")
-    val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+    require(storeExists(spark, path), s"no signature store at $path")
     // cross-process writer lease across the whole rewrite (r14)
-    graft.engine.StoreLease.withLease(fs, path) {
-      val tmp = path + "__compact_tmp"
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      readSignatures(spark, path).coalesce(nOut)
-        .write.mode("overwrite").parquet(tmp)
-      graft.engine.Compactor.swapInto(fs, path, tmp)
+    graft.engine.StoreLease.withLease(Compactor.fs(spark, path), path) {
+      val live = readSignatures(spark, path)
+      FactLog.rows(path, path, live.schema, live.schema)
+        .rewrite(spark, targetBytes) { (tmp, n) =>
+          live.coalesce(n).write.mode("overwrite").parquet(tmp)
+        }
     }
   }
 
@@ -1054,9 +1054,7 @@ object Dedup {
     */
   private def requireDlSchema(spark: org.apache.spark.sql.SparkSession,
                               path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) &&
+    if (Compactor.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path)) &&
         !spark.read.parquet(path).schema.fieldNames.contains("dl"))
       throw new IllegalArgumentException(
         s"signature store at $path predates the dl column — rebuild " +
@@ -1069,10 +1067,10 @@ object Dedup {
     * stays taken down until a re-bootstrap.
     */
   def updateSignatures(newDocs: DataFrame, path: String, n: Int = 3): Unit = {
-    graft.engine.Compactor.recover(newDocs.sparkSession, path)
+    Compactor.recover(newDocs.sparkSession, path)
     requireDlSchema(newDocs.sparkSession, path)
     signatureRowsWithDl(newDocs, n)
-      .join(sigTombstones(newDocs.sparkSession, path)
+      .join(tombLog(path).scan(newDocs.sparkSession)
         .select(col("doc_id")), Seq("doc_id"), "left_anti")
       .write.mode("append").parquet(path)
   }
@@ -1110,16 +1108,11 @@ object Dedup {
     // baseline gate FIRST: a pre-r13 store has neither the baseline
     // nor the dl column, and the stats aggregate below would throw an
     // analysis error instead of the actionable message
-    graft.engine.Compactor.recover(spark, path)
-    val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
-    val bfs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(bfs.exists(bp),
-      s"signature store at $path predates drift baselines — rebuild " +
-        "it (writeSignatures/initSignaturesIfStale) to record one")
+    val b = baseline(spark, path)
     val live = readSignatures(spark, path)
     val s = live.agg(count(lit(1)).as("n"),
       coalesce(sum(col("dl")), lit(0L)).as("dls")).collect()(0)
-    sigDriftTail(spark, path, s.getLong(0), s.getLong(1),
+    sigDriftTail(spark, path, b, s.getLong(0), s.getLong(1),
       bandPairMass(live), tolPairs, tolDl)
   }
 
@@ -1135,20 +1128,28 @@ object Dedup {
     val spark = docs.sparkSession
     // re-shingle with the STORE's own width (recorded at init) — a
     // twin at a different n would compare incomparable pair masses
-    graft.engine.Compactor.recover(spark, path)
-    val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
-    val bfs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(bfs.exists(bp),
-      s"signature store at $path predates drift baselines — rebuild " +
-        "it (writeSignatures/initSignaturesIfStale) to record one")
-    val nShingle = spark.read.parquet(path + "_baseline")
-      .collect()(0).getAs[Int]("n_shingle")
+    val b = baseline(spark, path)
     val rows = signatureRowsWithDl(
-      docs.select(col("doc_id"), col("text")).distinct(), nShingle)
+      docs.select(col("doc_id"), col("text")).distinct(),
+      b.getAs[Int]("n_shingle"))
     val s = rows.agg(count(lit(1)).as("n"),
       coalesce(sum(col("dl")), lit(0L)).as("dls")).collect()(0)
-    sigDriftTail(spark, path, s.getLong(0), s.getLong(1),
+    sigDriftTail(spark, path, b, s.getLong(0), s.getLong(1),
       bandPairMass(rows), tolPairs, tolDl)
+  }
+
+  /** The drift baseline row [[writeSignatures]] recorded, read after
+    * crash recovery; a store that predates baselines fails with the
+    * rebuild advice.
+    */
+  private def baseline(spark: org.apache.spark.sql.SparkSession,
+                       path: String): Row = {
+    Compactor.recover(spark, path)
+    require(Compactor.fs(spark, path)
+        .exists(new org.apache.hadoop.fs.Path(path + "_baseline")),
+      s"signature store at $path predates drift baselines — rebuild " +
+        "it (writeSignatures/initSignaturesIfStale) to record one")
+    spark.read.parquet(path + "_baseline").collect()(0)
   }
 
   /** The advisory boolean from the store-fed report — the per-drain
@@ -1160,22 +1161,16 @@ object Dedup {
     sigDriftReportFromStore(spark, path, tolPairs, tolDl)
       .collect()(0).getAs[Boolean]("stale")
 
-  /** Shared drift tail: the baseline longs vs current longs, however
-    * obtained (store read or corpus scan) — one definition so the two
-    * report forms cannot drift. All divisions are IEEE double in a
-    * fixed order, rounded to 6 with the −0.0 normalize.
+  /** Shared drift tail: the [[baseline]] longs vs current longs,
+    * however obtained (store read or corpus scan) — one definition so
+    * the two report forms cannot drift. All divisions are IEEE double
+    * in a fixed order, rounded to 6 with the −0.0 normalize.
     */
   private def sigDriftTail(spark: org.apache.spark.sql.SparkSession,
-                           path: String, nCur: Long, dlCur: Long,
+                           path: String, b: Row, nCur: Long, dlCur: Long,
                            pmCur: Long, tolPairs: Double,
                            tolDl: Double): DataFrame = {
     import spark.implicits._
-    val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(bp),
-      s"signature store at $path predates drift baselines — rebuild " +
-        "it (writeSignatures/initSignaturesIfStale) to record one")
-    val b = spark.read.parquet(path + "_baseline").collect()(0)
     val (nb, dlb, pmb) = (b.getAs[Long]("n_docs"),
       b.getAs[Long]("dl_sum"), b.getAs[Long]("pair_mass"))
     require(nb > 0 && dlb > 0,
@@ -1213,13 +1208,13 @@ object Dedup {
     */
   def updatePairs(newDocs: DataFrame, path: String, n: Int = 3): DataFrame = {
     val spark = newDocs.sparkSession
-    graft.engine.Compactor.recover(spark, path)
+    Compactor.recover(spark, path)
     requireDlSchema(spark, path)
     // the tombstone gate sits on BOTH legs: the append (no dead rows
     // re-enter the store) and the delta band side below (a tombstoned
     // re-present must not emit pairs either)
     val newSigs = signatureRowsWithDl(newDocs, n)
-      .join(sigTombstones(spark, path).select(col("doc_id")),
+      .join(tombLog(path).scan(spark).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     newSigs.write.mode("append").parquet(path)

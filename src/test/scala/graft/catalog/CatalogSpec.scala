@@ -514,6 +514,10 @@ class CatalogSpec extends SparkTestBase {
       new java.io.File(driver).mkdirs()
       graft.engine.DriverParquet.writePart(spark, driver, rows)
       spark.createDataset(rows).coalesce(1).write.parquet(sparkDir)
+      sameDirs[T](what, driver, sparkDir)
+    }
+    def sameDirs[T: Encoder](what: String, driver: String,
+                             sparkDir: String): Unit = {
       val (a, b) = (spark.read.parquet(driver), spark.read.parquet(sparkDir))
       assert(a.schema == b.schema, s"$what: StructType differs")
       assert(a.as[T].collect().toSeq.map(_.toString).sorted ==
@@ -556,6 +560,18 @@ class CatalogSpec extends SparkTestBase {
       "doc_id BIGINT NOT NULL, dl INT, token STRING NOT NULL, " +
         "tf BIGINT NOT NULL"), Row(1L, 3, "dup", 2L), Row(2L, null, "", 1L))
     rows("lengths", Retrieval.LengthsSchema, Row(1L, 3L), Row(2L, null))
+    // the signature store's tombstones: the part deleteSignatures writes
+    // equals the Spark write of the driver id list that it replaced
+    rows("signature tombstones", graft.ext.Dedup.TombstonesWritten,
+      Row(5L, 1700000000000L), Row(Long.MinValue, 0L))
+    val sigs = tmpDir("sig-tomb") + "/sigs"
+    graft.ext.Dedup.deleteSignatures(spark, sigs, Seq(5L, Long.MinValue, 5L))
+    val at = spark.read.parquet(sigs + "_tombstones").head().getLong(1)
+    val sigSpark = tmpDir("written") + "/s"
+    Seq(5L, Long.MinValue).map((_, at)).toDF("doc_id", "deleted_at")
+      .coalesce(1).write.parquet(sigSpark)
+    sameDirs[(Long, Long)]("signature tombstones written",
+      sigs + "_tombstones", sigSpark)
   }
 
   test("snapshot tableNames, exists and lastEndTime == their CatalogOps " +

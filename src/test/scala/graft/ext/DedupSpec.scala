@@ -710,6 +710,22 @@ class DedupSpec extends SparkTestBase {
     assert(!Dedup.storeExists(spark, path + "-nonexistent"))
   }
 
+  test("signature tombstones are written by the driver: deleteSignatures " +
+    "runs no Spark job, and building readSignatures over a store with " +
+    "tombstones infers only the signature rows' schema") {
+    val path = tmpDir("sig-tomb-jobs") + "/sigs"
+    Dedup.writeSignatures(docs.filter(col("doc_id") < 20)
+      .select("doc_id", "text"), path)
+    Dedup.deleteSignatures(spark, path, Seq(1L))
+    val del = jobsDuring(Dedup.deleteSignatures(spark, path, Seq(2L, 3L)))
+    assert(del.isEmpty, s"deleteSignatures ran Spark jobs: $del")
+    val built = jobSitesDuring(Dedup.readSignatures(spark, path))
+    assert(built.count(_._1.isEmpty) == 1,
+      s"readSignatures ran other than the rows' inference job: $built")
+    assert(Dedup.readSignatures(spark, path)
+      .filter(col("doc_id").between(1, 3)).count() == 0)
+  }
+
   test("signature-store drift advisory (s27): store-fed == corpus-scan " +
     "bit for bit, self-report is identity, duplicate mass trips " +
     "pair_delta, doc-length shift trips avgdl, text-distinct growth " +
