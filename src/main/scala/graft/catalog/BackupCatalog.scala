@@ -1,8 +1,7 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.engine.{DirSnapshot, DriverParquet}
+import graft.engine.{DriverParquet, FactLog}
 
 /** Parquet-backed backup-metadata catalog — the Spark-native stand-in
   * for the reference's MySQL/SimpleDB store
@@ -12,9 +11,11 @@ import graft.engine.{DirSnapshot, DriverParquet}
   * `<root>/purges`, one Parquet append log each, plus `<root>/_staging`
   * for appends in flight, on ANY Hadoop-supported filesystem (every
   * probe goes through the scheme-aware FileSystem API, not java.io).
-  * The catalog is metadata-scale (one row per table per run), so each
-  * log lives on the driver as a [[graft.engine.DirSnapshot]]: its rows
-  * plus the names of the committed part files they came from. A read
+  * Each log is a [[graft.engine.FactLog]]: appended facts, folded at
+  * read, purged by purge facts, compacted by a log rewrite. The
+  * catalog is metadata-scale (one row per table per run), so each log
+  * is held on the driver in the instance's own snapshot: its rows plus
+  * the names of the committed part files they came from. A read
   * lists each log it touches once; an unchanged listing serves the
   * snapshot, and any other listing (an append or compaction by another
   * instance or process) reloads that log whole. The DataFrame reads
@@ -24,20 +25,15 @@ import graft.engine.{DirSnapshot, DriverParquet}
   * same predicates to the snapshot rows in Scala. So a warm read runs
   * no Spark job.
   *
-  * Concurrency: an append writes exactly one part file from the driver
-  * (no Spark job) into a private `<root>/_staging/<uuid>` dir with no
-  * lock held, then renames it into its log under the instance lock and
-  * the JVM-wide [[graft.engine.Compactor.swapLock]] and adds its rows
-  * to the snapshot — the engine's one staged-append protocol
-  * ([[DriverParquet.stage]]), which the serving stores' appends share —
-  * so a log dir only ever holds complete files, and a
-  * concurrent reader can never see a half-written append. The instance
-  * lock covers listings, reloads, renames and compactions; append
-  * writes run outside it, so concurrent table jobs record in parallel
-  * and wait only for each other's renames. Compactions (rare: one per
-  * `compactAfterFiles` appends to a log) fold, write (from the driver,
-  * as an append) and swap under the lock. Across instances and processes the catalog assumes one writer
-  * per root.
+  * Concurrency: an append is staged by the driver with no lock held
+  * ([[graft.engine.FactLog.stage]]: one part file under
+  * `<root>/_staging`, no Spark job) and published under the instance
+  * lock, so concurrent table jobs record in parallel and wait only for
+  * each other's renames. The instance lock covers listings, reloads,
+  * renames and compactions: a compaction (one per `compactAfterFiles`
+  * appends to a log) folds, writes and swaps under it
+  * ([[graft.engine.FactLog.rewrite]]). Across instances and processes
+  * the catalog assumes one writer per root.
   *
   * Unlike the reference, which marks a session "ended" when the last
   * job is *enqueued* (export.rb:96 — a real quirk, see SURVEY.md §3.1
@@ -48,28 +44,14 @@ final class BackupCatalog(spark: SparkSession, root: String,
                           compactAfterFiles: Int = 64) {
   import spark.implicits._
 
-  private def fs =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // the four append logs; each restores a compaction swap's `__old`
+  // copy before any read or append of it
+  private val sessionsLog = FactLog[BackupSession](s"$root/sessions", root)
+  private val tablesLog = FactLog[TableRecord](s"$root/tables", root)
+  private val descsLog = FactLog[ColumnDescriptor](s"$root/descriptors", root)
+  private val purgesLog = FactLog[PurgeRecord](s"$root/purges", root)
 
-  // the four append logs; a snapshot restores a compaction swap's
-  // `__old` copy before any read or append of its log
-  private val sessionsLog =
-    new DirSnapshot[BackupSession](s"$root/sessions")
-  private val tablesLog = new DirSnapshot[TableRecord](s"$root/tables")
-  private val descsLog =
-    new DirSnapshot[ColumnDescriptor](s"$root/descriptors")
-  private val purgesLog = new DirSnapshot[PurgeRecord](s"$root/purges")
-
-  private def rowsOf[T](log: DirSnapshot[T]): Vector[T] = log.rows(spark)
-
-  /** `rows` as one part file in a fresh `<root>/_staging` dir, written
-    * by the driver ([[DriverParquet.stage]]): an append runs no Spark
-    * job. Publishing renames it into its log and adds its rows to the
-    * snapshot.
-    */
-  private def stage[T](log: DirSnapshot[T], rows: Seq[T])
-      : DriverParquet.Staged[T] =
-    DriverParquet.stage(spark, Some(log), log.dir, root, rows)(log.enc)
+  private def rowsOf[T](log: FactLog[T]): Vector[T] = log.held(spark).get
 
   /** Write each batch to staging with no lock held, then publish them
     * in order under the instance lock.
@@ -83,7 +65,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
     } finally staged.foreach(_.discard())
   }
 
-  private def fileCount(log: DirSnapshot[_]): Int = synchronized {
+  private def fileCount(log: FactLog[_]): Int = synchronized {
     log.fileCount(spark)
   }
 
@@ -141,7 +123,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
 
   /** Session start row (mysql.rb:226-239). */
   def startInfo(s: BackupSession): Unit =
-    append(() => stage(sessionsLog, Seq(s)))
+    append(() => sessionsLog.stage(spark, Seq(s)))
 
   /** Session end: a keyed update of (mode, session_name)
     * (mysql.rb:246-267), recorded as an APPENDED close row — the
@@ -167,45 +149,23 @@ final class BackupCatalog(spark: SparkSession, root: String,
         .map(s => s.copy(ended_at = endedAt, error = s.error || error,
           error_info = if (errorInfo.nonEmpty) errorInfo else s.error_info))
     }
-    if (closes.nonEmpty) append(() => stage(sessionsLog, closes))
+    if (closes.nonEmpty) append(() => sessionsLog.stage(spark, closes))
     if (fileCount(sessionsLog) > compactAfterFiles) compactSessions()
   }
 
   /** Replace a log with `fold` of its rows, all under the instance
-    * lock: the fold is written by the driver as one part file
-    * ([[DriverParquet.writePart]], as an append is) to a staging dir,
-    * then swapped in by
-    * checked renames (dir → __old, staged → dir, drop __old) under the
-    * swap lock, so a crash can lose at most the in-flight fold, never
-    * the existing catalog (a plain Overwrite deletes-then-writes,
-    * leaving a destroyed store dir if killed mid-way — fatal for a
-    * catalog whose whole job is surviving crashed runs), and the log's
-    * snapshot restores `<dir>__old` if a crash lands between the
-    * renames.
+    * lock: the fold is written by the driver as one part file, as an
+    * append is, and swapped in by the checked-rename swap
+    * ([[graft.engine.FactLog.rewrite]]), so a crash can lose at most the
+    * in-flight fold, never the existing catalog (a plain Overwrite
+    * deletes-then-writes, leaving a destroyed store dir if killed
+    * mid-way — fatal for a catalog whose whole job is surviving crashed
+    * runs), and the log restores `<dir>__old` if a crash lands between
+    * the renames. The rewrite also clears the staging dirs a crashed
+    * append left.
     */
-  private def compact[T](log: DirSnapshot[T])(fold: => Seq[T])
-      : Unit = synchronized {
-    val folded = fold
-    val staged = DriverParquet.newStagingDir(root)
-    try {
-      val written =
-        Set(DriverParquet.writePart(spark, staged, folded)(log.enc).getName)
-      val (p, pStaged, pOld) =
-        (new Path(log.dir), new Path(staged), new Path(log.dir + "__old"))
-      log.replace(spark, written, folded) {
-        if (fs.exists(pOld))
-          require(fs.delete(pOld, true), s"cannot clear $pOld")
-        if (fs.exists(p))
-          require(fs.rename(p, pOld), s"cannot stage $p to $pOld")
-        if (!fs.rename(pStaged, p)) {
-          // roll back so the catalog is never left without a live dir
-          if (fs.exists(pOld)) fs.rename(pOld, p)
-          throw new IllegalStateException(s"cannot swap $pStaged into $p")
-        }
-        fs.delete(pOld, true) // old copy only removed after a full swap
-      }
-    } finally DriverParquet.unstage(spark, staged)
-  }
+  private def compact[T](log: FactLog[T])(fold: => Seq[T]): Unit =
+    synchronized { log.rewrite(spark, fold) }
 
   /** Purge a session — the takedown path the append-only logs
     * otherwise lack (the tombstone discipline of the EXT stores on
@@ -228,7 +188,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
         purgedKeys()((mode, sessionName))
     }
     require(known, s"no $mode session '$sessionName' in the catalog to purge")
-    append(() => stage(purgesLog, Seq(PurgeRecord(mode, sessionName,
+    append(() => purgesLog.stage(spark, Seq(PurgeRecord(mode, sessionName,
       purgedAt))))
     if (fileCount(purgesLog) > compactAfterFiles) compactPurges()
   }
@@ -236,14 +196,13 @@ final class BackupCatalog(spark: SparkSession, root: String,
   /** Run every threshold compaction NOW — the ops hook that makes a
     * purge PHYSICAL without waiting for the file-count thresholds
     * (the folds already read through the purge filter, so purged
-    * rows are dropped from the rewritten logs) — and clear the staging
-    * dirs a crashed append or fold left behind (any not in flight in
+    * rows are dropped from the rewritten logs) — which also clears the
+    * staging dirs a crashed append left behind (any not in flight in
     * this JVM).
     */
   def compactAll(): Unit = {
     compactSessions(); compactTables(); compactDescriptors()
     compactPurges()
-    DriverParquet.clearStaging(spark, root)
   }
 
   /** Fold the sessions log back to one row per session (purged
@@ -293,15 +252,15 @@ final class BackupCatalog(spark: SparkSession, root: String,
   def exportedTableInfo(t: TableRecord, descs: Seq[ColumnDescriptor]): Unit = {
     require(t.mode == "export", s"mode=${t.mode}")
     val descBatch: Seq[() => DriverParquet.Staged[_]] =
-      if (descs.isEmpty) Nil else Seq(() => stage(descsLog, descs))
-    append(descBatch :+ (() => stage(tablesLog, Seq(t))): _*)
+      if (descs.isEmpty) Nil else Seq(() => descsLog.stage(spark, descs))
+    append(descBatch :+ (() => tablesLog.stage(spark, Seq(t))): _*)
     compactIfAccreted()
   }
 
   /** Per-table record, import side (mysql.rb:200-215). */
   def importedTableInfo(t: TableRecord): Unit = {
     require(t.mode == "import", s"mode=${t.mode}")
-    append(() => stage(tablesLog, Seq(t)))
+    append(() => tablesLog.stage(spark, Seq(t)))
     compactIfAccreted()
   }
 

@@ -36,11 +36,9 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
 
   private def fs(spark: SparkSession): FileSystem = Compactor.fs(spark, dir)
 
-  /** The dir's rows, brought up to date by one listing. */
-  def rows(spark: SparkSession): Vector[T] = bounded(spark).getOrElse(
-    throw new IllegalStateException(s"$dir holds more than $maxRows rows"))
-
-  /** [[rows]], or None when the dir holds more than `maxRows` rows. */
+  /** The dir's rows, brought up to date by one listing, or None when
+    * the dir holds more than `maxRows` rows.
+    */
   def bounded(spark: SparkSession): Option[Vector[T]] = synchronized {
     Compactor.swapLock.synchronized {
       val f = fs(spark)
@@ -106,19 +104,6 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
 object DirSnapshot {
   private val snapshots =
     new java.util.concurrent.ConcurrentHashMap[String, DirSnapshot[Row]]()
-
-  /** The rows of a parquet dir of `schema` from this JVM's held
-    * snapshot of it ([[shared]]), reloaded only when the dir's listing
-    * changed; None when it holds more than `maxRows` rows.
-    */
-  def heldRows(spark: SparkSession, dir: String, schema: StructType,
-               maxRows: Int = Int.MaxValue,
-               keep: Boolean = true): Option[Vector[Row]] =
-    if (keep) shared(spark, dir, schema, maxRows).bounded(spark)
-    else {
-      snapshots.remove(key(spark, dir))
-      new DirSnapshot[Row](dir, maxRows)(Encoders.row(schema)).bounded(spark)
-    }
 
   /** This JVM's held snapshot of `dir`, keyed by the qualified dir path
     * and created on first use with `schema` and `maxRows`.

@@ -10,12 +10,11 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.OutputFile
-import org.apache.spark.sql.{Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
 
 /** Parquet part files written by the driver: metadata-scale appends
   * (catalog records, serving-store batches) cost no Spark job.
@@ -126,26 +125,6 @@ object DriverParquet {
     try new Staged(spark, dir, snap, s, writePart(spark, s, rows), rows)
     catch { case e: Throwable => unstage(spark, s); throw e }
   }
-
-  /** Append `rows` to the parquet dir `dir` as one driver-written part
-    * file: [[stage]]d, [[Staged.publish]]ed, then the staging dir
-    * removed, so the dir only ever holds complete files.
-    */
-  def appendPart[T](spark: SparkSession, snap: Option[DirSnapshot[T]],
-                    dir: String, rows: Seq[T])(implicit enc: Encoder[T])
-      : Unit = {
-    val s = stage(spark, snap, dir, new Path(dir).getParent.toString, rows)
-    try s.publish() finally s.discard()
-  }
-
-  /** [[appendPart]] of rows of a serving store dir's read schema,
-    * written with `schema`; committed into this JVM's held snapshot of
-    * `dir` when there is one.
-    */
-  def appendPart(spark: SparkSession, dir: String, schema: StructType,
-                 rows: Seq[Row]): Unit =
-    appendPart(spark, DirSnapshot.held(spark, dir), dir, rows)(
-      Encoders.row(schema))
 
   private final class PartWriter(file: OutputFile)
       extends ParquetWriter.Builder[InternalRow, PartWriter](file) {

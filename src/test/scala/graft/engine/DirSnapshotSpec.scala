@@ -12,7 +12,7 @@ class DirSnapshotSpec extends SparkTestBase {
   private val schema = StructType.fromDDL("id BIGINT")
 
   private def held(dir: String): Option[Seq[Long]] =
-    DirSnapshot.heldRows(spark, dir, schema, maxRows = 3)
+    FactLog.rows(dir, dir, schema, schema, maxRows = 3).held(spark)
       .map(_.map(_.getLong(0)).sorted)
 
   test("a dir past its row bound that only gains part files stays " +
@@ -32,14 +32,15 @@ class DirSnapshotSpec extends SparkTestBase {
     "no staged file") {
     val root = tmpDir("snap-append")
     val dir = s"$root/d"
-    DriverParquet.appendPart(spark, dir, schema, Seq(Row(1L)))
+    val log = FactLog.rows(dir, root, schema, schema)
+    log.append(spark, Seq(Row(1L)))
     assert(held(dir) == Some(Seq(1L)))
     // a swap that died between its renames: __old holds the truth
     val f = Compactor.fs(spark, dir)
     require(f.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + "__old")))
     val jobs = jobsDuring {
-      DriverParquet.appendPart(spark, dir, schema, Seq(Row(2L), Row(3L)))
+      log.append(spark, Seq(Row(2L), Row(3L)))
       assert(held(dir) == Some(Seq(1L, 2L, 3L)))
     }
     assert(jobs.isEmpty, s"the append or the next read ran $jobs")
