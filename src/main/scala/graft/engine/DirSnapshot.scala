@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.StructType
   * schema-inference job runs. Listing and reload hold
   * [[Compactor.swapLock]]: no swap in this JVM lands between them, and
   * the held rows always match the listed files. A failed reload throws
-  * and keeps the previous snapshot.
+  * and keeps the previous snapshot. A crashed swap is restored by the
+  * caller, the dir's [[FactLog]], before it reads or writes.
   *
   * The whole dir is collected to the driver, so only dirs whose rows
   * the caller would collect anyway belong here. A dir that may outgrow
@@ -41,9 +42,7 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
     */
   def bounded(spark: SparkSession): Option[Vector[T]] = synchronized {
     Compactor.swapLock.synchronized {
-      val f = fs(spark)
-      Compactor.restoreOld(f, dir)
-      val listed = DirSnapshot.committed(f, dir)
+      val listed = DirSnapshot.committed(fs(spark), dir)
       if (listed != files) {
         held =
           if (listed.isEmpty) Some(Vector.empty)
@@ -73,29 +72,22 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
   }
 
   /** Move one part file holding exactly `added` into the dir (`move`
-    * runs under the swap lock, after any `__old` restore) and add its
-    * rows to the snapshot.
+    * runs under the swap lock) and add its rows to the snapshot.
     */
-  def commit(spark: SparkSession, file: String, added: Seq[T])(
-      move: => Unit): Unit = synchronized {
-    Compactor.swapLock.synchronized {
-      Compactor.restoreOld(fs(spark), dir)
-      move
-    }
+  def commit(file: String, added: Seq[T])(move: => Unit): Unit =
+      synchronized {
+    Compactor.swapLock.synchronized(move)
     files += file
     held = held.map(_ ++ added).filter(_.length <= maxRows)
   }
 
   /** Swap a rewrite holding exactly `rewritten` in the part files
-    * `rewrittenFiles` into place (`swap` runs under the swap lock, after
-    * any `__old` restore) and make it the snapshot.
+    * `rewrittenFiles` into place (`swap` runs under the swap lock) and
+    * make it the snapshot.
     */
-  def replace(spark: SparkSession, rewrittenFiles: Set[String],
-              rewritten: Seq[T])(swap: => Unit): Unit = synchronized {
-    Compactor.swapLock.synchronized {
-      Compactor.restoreOld(fs(spark), dir)
-      swap
-    }
+  def replace(rewrittenFiles: Set[String], rewritten: Seq[T])(
+      swap: => Unit): Unit = synchronized {
+    Compactor.swapLock.synchronized(swap)
     files = rewrittenFiles
     held = Some(rewritten.toVector).filter(_.length <= maxRows)
   }
@@ -106,13 +98,18 @@ object DirSnapshot {
     new java.util.concurrent.ConcurrentHashMap[String, DirSnapshot[Row]]()
 
   /** This JVM's held snapshot of `dir`, keyed by the qualified dir path
-    * and created on first use with `schema` and `maxRows`.
+    * and created on first use with `schema` and `maxRows`; a later call
+    * must pass the same two.
     */
   private[engine] def shared(spark: SparkSession, dir: String,
                              schema: StructType,
-                             maxRows: Int): DirSnapshot[Row] =
-    snapshots.computeIfAbsent(key(spark, dir),
+                             maxRows: Int): DirSnapshot[Row] = {
+    val s = snapshots.computeIfAbsent(key(spark, dir),
       _ => new DirSnapshot[Row](dir, maxRows)(Encoders.row(schema)))
+    require(s.maxRows == maxRows && s.enc.schema == schema,
+      s"$dir is held with ${s.maxRows} rows of ${s.enc.schema.simpleString}")
+    s
+  }
 
   /** This JVM's held snapshot of `dir`, if [[shared]] made one. */
   private[engine] def held(spark: SparkSession,
@@ -128,11 +125,11 @@ object DirSnapshot {
     s.isFile && !n.startsWith("_") && !n.startsWith(".")
   }
 
-  /** The names of the committed part files directly under `dir`. */
-  def committed(f: FileSystem, dir: String): Set[String] = {
-    val p = new Path(dir)
-    if (!f.exists(p)) Set.empty
-    else f.listStatus(p).iterator.filter(isCommitted)
+  /** The names of the committed part files directly under `dir`; none
+    * when it does not exist.
+    */
+  def committed(f: FileSystem, dir: String): Set[String] =
+    try f.listStatus(new Path(dir)).iterator.filter(isCommitted)
       .map(_.getPath.getName).toSet
-  }
+    catch { case _: java.io.FileNotFoundException => Set.empty }
 }

@@ -92,8 +92,8 @@ object DriverParquet {
   final class Staged[T] private[DriverParquet] (
       spark: SparkSession, dir: String, snap: Option[DirSnapshot[T]],
       val stagingDir: String, part: Path, rows: Seq[T]) {
-    /** Rename the part into `dir` under [[Compactor.swapLock]], after
-      * any `__old` restore, and commit its rows into `snap` when given.
+    /** Rename the part into `dir` under [[Compactor.swapLock]] and
+      * commit its rows into `snap` when given.
       */
     def publish(): Unit = {
       val f = Compactor.fs(spark, dir)
@@ -103,11 +103,8 @@ object DriverParquet {
           s"cannot append $part to $dir")
       }
       snap match {
-        case Some(s) => s.commit(spark, part.getName, rows)(move())
-        case None => Compactor.swapLock.synchronized {
-          Compactor.restoreOld(f, dir)
-          move()
-        }
+        case Some(s) => s.commit(part.getName, rows)(move())
+        case None => Compactor.swapLock.synchronized(move())
       }
     }
 

@@ -14,28 +14,36 @@ import org.apache.spark.sql.types.StructType
   * A log is its dir, its encoder (the read schema every read passes, so
   * none runs a schema-inference job), the encoder its driver-written
   * parts carry (the read schema with the nullability of the Spark write
-  * a part replaces, so the footers match) and its root: the dir a
-  * whole-store swap replaces, whose crashed swap every operation
-  * restores first, and under whose `_staging` appends are written. Its
-  * rows are held on the driver in a [[DirSnapshot]]: the log's own, or
-  * the one this JVM shares for the dir ([[FactLog.rows]]).
+  * a part replaces, so the footers match) and its root: the dir itself
+  * or an ancestor of it, the dir a whole-store swap replaces, under
+  * whose `_staging` appends are written. Every operation first restores
+  * a crashed swap of the root and of the dir, and the log is the only
+  * layer that does: its [[DirSnapshot]] and staged appends only take
+  * [[Compactor.swapLock]]. Its rows are held on the driver in a
+  * [[DirSnapshot]]: the log's own, or the one this JVM shares for the
+  * dir ([[FactLog.rows]]), which `snapshot` creates and `ifHeld` only
+  * looks up.
   */
 final class FactLog[T] private (
     val dir: String, val root: String, written: Encoder[T],
-    snapshot: (SparkSession, Boolean) => Option[DirSnapshot[T]])(
+    snapshot: SparkSession => DirSnapshot[T],
+    ifHeld: SparkSession => Option[DirSnapshot[T]])(
     implicit val enc: Encoder[T]) {
+  require(dir == root || dir.startsWith(root + "/"),
+    s"fact log $dir is not under its root $root")
 
   private def fs(spark: SparkSession) = Compactor.fs(spark, dir)
 
   /** Restore a crashed swap of the root, then of the dir (a [[rewrite]]
     * that died between its renames); whether the dir exists. A warm
-    * call makes one probe.
+    * call makes one probe: the root holds the dir, so a dir that exists
+    * has no crashed root swap to restore.
     */
   private def recovered(spark: SparkSession): Boolean = {
-    val (f, p) = (fs(spark), new Path(dir))
-    f.exists(p) || Compactor.swapLock.synchronized {
-      Compactor.restoreOld(f, root)
-      Compactor.restoreOld(f, dir)
+    val f = fs(spark)
+    f.exists(new Path(dir)) || Compactor.swapLock.synchronized {
+      (root == dir || Compactor.restoreOld(f, root)) &&
+        Compactor.restoreOld(f, dir)
     }
   }
 
@@ -51,13 +59,13 @@ final class FactLog[T] private (
     */
   def held(spark: SparkSession): Option[Vector[T]] = {
     recovered(spark)
-    snapshot(spark, true).get.bounded(spark)
+    snapshot(spark).bounded(spark)
   }
 
   /** The number of committed part files, after one listing. */
   def fileCount(spark: SparkSession): Int = {
     recovered(spark)
-    snapshot(spark, true).get.fileCount(spark)
+    snapshot(spark).fileCount(spark)
   }
 
   /** `rows` written by the driver as one part file under the root's
@@ -67,7 +75,7 @@ final class FactLog[T] private (
     */
   def stage(spark: SparkSession, rows: Seq[T]): DriverParquet.Staged[T] = {
     recovered(spark)
-    DriverParquet.stage(spark, snapshot(spark, false), dir, root, rows)(
+    DriverParquet.stage(spark, ifHeld(spark), dir, root, rows)(
       written)
   }
 
@@ -92,21 +100,30 @@ final class FactLog[T] private (
     * `<dir>__compact_tmp`, `nOut` sizing the files to about
     * `targetBytes` from the committed data files' bytes, published by
     * the checked-rename [[Compactor.swap]]; the next operation restores
-    * a crash between its renames. Rows are counted from the footers.
-    * The stages a crashed append left under the root are removed.
+    * a crash between its renames. The stages a crashed append left
+    * under the root are removed.
     */
   def rewrite(spark: SparkSession, targetBytes: Long = 512L << 20)(
-      write: (String, Int) => Unit): FactLog.Rewritten = {
+      write: (String, Int) => Unit): Unit = {
     require(recovered(spark), s"no fact log at $dir")
-    def dataFiles =
-      fs(spark).listStatus(new Path(dir)).filter(DirSnapshot.isCommitted)
-    val (before, rowsBefore) = (dataFiles, TableOps.parquetRowCount(spark, dir))
-    val nOut = math.max(1L,
-      (before.map(_.getLen).sum + targetBytes - 1) / targetBytes).toInt
+    val bytes = dataFiles(spark).map(_.getLen).sum
+    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     swapIn(spark, write(_, nOut), None)
-    FactLog.Rewritten(rowsBefore, TableOps.parquetRowCount(spark, dir),
-      before.length, dataFiles.length)
   }
+
+  /** The rows in the data files' footers and the number of data files:
+    * what a compaction reports before and after its [[rewrite]].
+    */
+  def footprint(spark: SparkSession): (Long, Int) =
+    if (!recovered(spark)) (0L, 0)
+    else (TableOps.parquetRowCount(spark, dir), dataFiles(spark).length)
+
+  private def dataFiles(spark: SparkSession) =
+    fs(spark).listStatus(new Path(dir)).filter(DirSnapshot.isCommitted)
+
+  /** Remove the stages a crashed append left under the root. */
+  def clearStaging(spark: SparkSession): Unit =
+    DriverParquet.clearStaging(spark, root)
 
   /** [[rewrite]] to exactly `rows`, written by the driver as one part
     * file and committed into the held snapshot (no Spark job). A log
@@ -120,13 +137,13 @@ final class FactLog[T] private (
   private def swapIn(spark: SparkSession, write: String => Unit,
                      rows: Option[Seq[T]]): Unit = {
     val (f, tmp) = (fs(spark), dir + "__compact_tmp")
-    DriverParquet.clearStaging(spark, root)
+    clearStaging(spark)
     f.delete(new Path(tmp), true) // a crashed rewrite's stage
     try {
       write(tmp)
       def swap(): Unit = Compactor.swap(f, dir, tmp)
-      rows.zip(snapshot(spark, false)) match {
-        case Some((r, s)) => s.replace(spark, DirSnapshot.committed(f, tmp), r)(swap())
+      rows.zip(ifHeld(spark)) match {
+        case Some((r, s)) => s.replace(DirSnapshot.committed(f, tmp), r)(swap())
         case None => swap()
       }
     } finally f.delete(new Path(tmp), true)
@@ -135,15 +152,11 @@ final class FactLog[T] private (
 
 object FactLog {
 
-  /** A [[FactLog.rewrite]]'s footer rows and data files, before and after. */
-  final case class Rewritten(rowsBefore: Long, rowsAfter: Long,
-                             filesBefore: Int, filesAfter: Int)
-
   /** A log of `T` facts, written as read, holding its own snapshot. */
   def apply[T](dir: String, root: String)(implicit enc: Encoder[T])
       : FactLog[T] = {
-    val own = Some(new DirSnapshot[T](dir))
-    new FactLog[T](dir, root, enc, (_, _) => own)
+    val own = new DirSnapshot[T](dir)
+    new FactLog[T](dir, root, enc, _ => own, _ => Some(own))
   }
 
   /** A store log of `schema` rows written with `written`, held in this
@@ -152,9 +165,9 @@ object FactLog {
     */
   def rows(dir: String, root: String, schema: StructType,
            written: StructType, maxRows: Int = Int.MaxValue): FactLog[Row] =
-    new FactLog[Row](dir, root, Encoders.row(written), (spark, create) =>
-      if (create) Some(DirSnapshot.shared(spark, dir, schema, maxRows))
-      else DirSnapshot.held(spark, dir))(Encoders.row(schema))
+    new FactLog[Row](dir, root, Encoders.row(written),
+      DirSnapshot.shared(_, dir, schema, maxRows),
+      DirSnapshot.held(_, dir))(Encoders.row(schema))
 
   /** A tombstone log of (`key`, deleted_at) facts ([[tombstoneSchema]]). */
   def tombstones(dir: String, root: String, key: String,

@@ -992,12 +992,13 @@ object Dedup {
   /** The signature store's deletion facts, kept in a SIBLING directory
     * (`<path>_tombstones` — the store itself is a flat parquet dir, so
     * facts cannot nest inside it without polluting its schema). The
-    * log's root is the store: its appends stage under `<path>/_staging`
-    * (not under the parent other stores may share), where
-    * [[compactSignatures]]' rewrite clears a crashed one.
+    * log is its own root: its appends stage under
+    * `<path>_tombstones/_staging` (not under the parent other stores
+    * may share, nor under the store, which an append must never create
+    * or mask), where [[compactSignatures]] clears a crashed one.
     */
   private def tombLog(path: String): FactLog[Row] =
-    FactLog.tombstones(path + "_tombstones", path, "doc_id")
+    FactLog.tombstones(path + "_tombstones", path + "_tombstones", "doc_id")
 
   // the tombstone parts' written schema: the footer of the Spark write
   // of a driver id list the driver-written parts replace
@@ -1024,8 +1025,8 @@ object Dedup {
 
   /** Physically compact the signature store: rewrite it as the folded,
     * tombstone-free row set in few sized files, a fact-log rewrite
-    * ([[graft.engine.FactLog.rewrite]], sized from the data files) that
-    * also clears the tombstone appends a crash left staged. Read
+    * ([[graft.engine.FactLog.rewrite]], sized from the data files), and
+    * clear the tombstone appends a crash left staged. Read
     * results unchanged by construction; the physics of N drains'
     * append files stop accumulating.
     */
@@ -1040,6 +1041,7 @@ object Dedup {
         .rewrite(spark, targetBytes) { (tmp, n) =>
           live.coalesce(n).write.mode("overwrite").parquet(tmp)
         }
+      tombLog(path).clearStaging(spark)
     }
   }
 

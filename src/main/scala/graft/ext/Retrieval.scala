@@ -419,13 +419,16 @@ object Retrieval {
     // cross-process (r14)
     graft.engine.StoreLease.withLease(Compactor.fs(spark, indexStore),
         indexStore) {
-      val Seq(p, l) = Seq(postingsLog(indexStore), lengthsLog(indexStore))
-        .map(log => log.rewrite(spark, targetBytes) { (tmp, n) =>
-          log.live(spark, tombLog(indexStore)).coalesce(n)
-            .write.mode("overwrite").parquet(tmp)
-        })
-      IndexCompactReport(p.rowsBefore, p.rowsAfter,
-        p.filesBefore + l.filesBefore, p.filesAfter + l.filesAfter)
+      val logs = Seq(postingsLog(indexStore), lengthsLog(indexStore))
+      def footprints = logs.map(_.footprint(spark))
+      val before = footprints
+      logs.foreach(log => log.rewrite(spark, targetBytes) { (tmp, n) =>
+        log.live(spark, tombLog(indexStore)).coalesce(n)
+          .write.mode("overwrite").parquet(tmp)
+      })
+      val after = footprints
+      IndexCompactReport(before.head._1, after.head._1,
+        before.map(_._2).sum, after.map(_._2).sum)
     }
   }
 

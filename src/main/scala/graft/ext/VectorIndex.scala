@@ -955,11 +955,13 @@ object VectorIndex {
     // and a rebuild of the same store exclude each other cross-process
     graft.engine.StoreLease.withLease(Compactor.fs(spark, store), store) {
       val codes = codesLog(store)
-      val r = codes.rewrite(spark, targetBytes) { (tmp, n) =>
+      val (rowsBefore, filesBefore) = codes.footprint(spark)
+      codes.rewrite(spark, targetBytes) { (tmp, n) =>
         codes.live(spark, tombLog(store)).coalesce(n)
           .write.mode("overwrite").parquet(tmp)
       }
-      CompactReport(r.rowsBefore, r.rowsAfter, r.filesBefore, r.filesAfter)
+      val (rowsAfter, filesAfter) = codes.footprint(spark)
+      CompactReport(rowsBefore, rowsAfter, filesBefore, filesAfter)
     }
   }
 

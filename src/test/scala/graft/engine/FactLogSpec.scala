@@ -103,12 +103,13 @@ class FactLogSpec extends SparkTestBase {
       new Array[Byte](1 << 20))
     spark.range(1).write.parquet(dir + "__compact_tmp")
     var sized = -1
-    val r = l.rewrite(spark, targetBytes = 64L << 10) { (tmp, n) =>
+    assert(l.footprint(spark) == (8L, 4))
+    l.rewrite(spark, targetBytes = 64L << 10) { (tmp, n) =>
       sized = n
       l.live(spark, t).coalesce(n).write.mode("overwrite").parquet(tmp)
     }
     assert(sized == 1, s"sized from more than the data files: $sized")
-    assert(r == FactLog.Rewritten(8L, 3L, 4, 1), r)
+    assert(l.footprint(spark) == (3L, 1))
     assert(rowsOf(l.scan(spark).collect().toSeq) == live)
     assert(!new File(dir + "__compact_tmp").exists())
     assert(!new File(dir + "__old").exists())
@@ -125,6 +126,15 @@ class FactLogSpec extends SparkTestBase {
     assert(jobs.isEmpty, s"the driver rewrite or the next read ran $jobs")
     assert(writtenDir(dir)._4 == 1)
     assert(!new File(dir + "__compact_tmp").exists())
+  }
+
+  test("a log sits under its root, and a dir is held with one bound") {
+    val root = tmpDir("fl-root")
+    intercept[IllegalArgumentException](
+      FactLog.rows(s"$root-sibling/facts", root, schema, written))
+    log(root, maxRows = 2).append(spark, Seq(Row(1L, "a")))
+    assert(log(root, maxRows = 2).held(spark).map(rowsOf) == Some(Seq("1,a")))
+    intercept[IllegalArgumentException](log(root, maxRows = 3).held(spark))
   }
 
   test("a leftover _staging part is never read, and the compaction " +

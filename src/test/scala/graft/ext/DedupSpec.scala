@@ -726,6 +726,30 @@ class DedupSpec extends SparkTestBase {
       .filter(col("doc_id").between(1, 3)).count() == 0)
   }
 
+  test("a signature delete never creates or masks the store: after a " +
+    "crash between a compaction swap's renames the old rows are read, " +
+    "and a delete on a store never written leaves it missing") {
+    val path = tmpDir("sig-tomb-crash") + "/sigs"
+    Dedup.writeSignatures(docs.filter(col("doc_id") < 20)
+      .select("doc_id", "text"), path)
+    Dedup.deleteSignatures(spark, path, Seq(3L))
+    val before = Dedup.readSignatures(spark, path)
+      .filter(col("doc_id") =!= 4L).collect().map(_.toSeq).toSet
+    assert(new java.io.File(path)
+      .renameTo(new java.io.File(path + "__old")))
+    Dedup.deleteSignatures(spark, path, Seq(4L))
+    assert(Dedup.readSignatures(spark, path)
+      .collect().map(_.toSeq).toSet == before,
+      "a delete after a crashed swap masked the store's old rows")
+    Dedup.compactSignatures(spark, path)
+    assert(Dedup.readSignatures(spark, path)
+      .collect().map(_.toSeq).toSet == before)
+    val unwritten = tmpDir("sig-tomb-unwritten") + "/sigs"
+    Dedup.deleteSignatures(spark, unwritten, Seq(1L))
+    assert(!Dedup.storeExists(spark, unwritten),
+      "a delete created the signature store")
+  }
+
   test("signature-store drift advisory (s27): store-fed == corpus-scan " +
     "bit for bit, self-report is identity, duplicate mass trips " +
     "pair_delta, doc-length shift trips avgdl, text-distinct growth " +
