@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.engine.{DriverParquet, FactLog}
+import graft.engine.FactLog
 
 /** Parquet-backed backup-metadata catalog — the Spark-native stand-in
   * for the reference's MySQL/SimpleDB store
@@ -56,9 +56,9 @@ final class BackupCatalog(spark: SparkSession, root: String,
   /** Write each batch to staging with no lock held, then publish them
     * in order under the instance lock.
     */
-  private def append(batches: (() => DriverParquet.Staged[_])*): Unit = {
+  private def append(batches: (() => FactLog.Staged[_])*): Unit = {
     val staged =
-      scala.collection.mutable.ArrayBuffer.empty[DriverParquet.Staged[_]]
+      scala.collection.mutable.ArrayBuffer.empty[FactLog.Staged[_]]
     try {
       batches.foreach(b => staged += b())
       synchronized { staged.foreach(_.publish()) }
@@ -251,7 +251,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
     */
   def exportedTableInfo(t: TableRecord, descs: Seq[ColumnDescriptor]): Unit = {
     require(t.mode == "export", s"mode=${t.mode}")
-    val descBatch: Seq[() => DriverParquet.Staged[_]] =
+    val descBatch: Seq[() => FactLog.Staged[_]] =
       if (descs.isEmpty) Nil else Seq(() => descsLog.stage(spark, descs))
     append(descBatch :+ (() => tablesLog.stage(spark, Seq(t))): _*)
     compactIfAccreted()

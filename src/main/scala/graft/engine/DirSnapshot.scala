@@ -35,14 +35,12 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
   private var files: Set[String] = Set.empty
   private var held: Option[Vector[T]] = Some(Vector.empty)
 
-  private def fs(spark: SparkSession): FileSystem = Compactor.fs(spark, dir)
-
   /** The dir's rows, brought up to date by one listing, or None when
     * the dir holds more than `maxRows` rows.
     */
   def bounded(spark: SparkSession): Option[Vector[T]] = synchronized {
     Compactor.swapLock.synchronized {
-      val listed = DirSnapshot.committed(fs(spark), dir)
+      val listed = DirSnapshot.committed(Compactor.fs(spark, dir), dir)
       if (listed != files) {
         held =
           if (listed.isEmpty) Some(Vector.empty)

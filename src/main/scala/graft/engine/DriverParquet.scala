@@ -85,44 +85,6 @@ object DriverParquet {
         .foreach(p => f.delete(p, true))
   }
 
-  /** `rows` written by the driver ([[writePart]]) as one part file in a
-    * fresh staging dir, not yet in `dir`. [[publish]] moves it in;
-    * [[discard]] removes the staging dir either way.
-    */
-  final class Staged[T] private[DriverParquet] (
-      spark: SparkSession, dir: String, snap: Option[DirSnapshot[T]],
-      val stagingDir: String, part: Path, rows: Seq[T]) {
-    /** Rename the part into `dir` under [[Compactor.swapLock]] and
-      * commit its rows into `snap` when given.
-      */
-    def publish(): Unit = {
-      val f = Compactor.fs(spark, dir)
-      def move(): Unit = {
-        f.mkdirs(new Path(dir))
-        require(f.rename(part, new Path(dir, part.getName)),
-          s"cannot append $part to $dir")
-      }
-      snap match {
-        case Some(s) => s.commit(part.getName, rows)(move())
-        case None => Compactor.swapLock.synchronized(move())
-      }
-    }
-
-    def discard(): Unit = unstage(spark, stagingDir)
-  }
-
-  /** Stage `rows` for `dir` ([[Staged]]) under `<root>/_staging`,
-    * with no lock held. `snap`, when given, is the snapshot of `dir`
-    * that [[Staged.publish]] commits the rows into.
-    */
-  def stage[T](spark: SparkSession, snap: Option[DirSnapshot[T]],
-               dir: String, root: String, rows: Seq[T])(
-      implicit enc: Encoder[T]): Staged[T] = {
-    val s = newStagingDir(root)
-    try new Staged(spark, dir, snap, s, writePart(spark, s, rows), rows)
-    catch { case e: Throwable => unstage(spark, s); throw e }
-  }
-
   private final class PartWriter(file: OutputFile)
       extends ParquetWriter.Builder[InternalRow, PartWriter](file) {
     override def self(): PartWriter = this

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.StructType
 final class FactLog[T] private (
     val dir: String, val root: String, written: Encoder[T],
     snapshot: SparkSession => DirSnapshot[T],
-    ifHeld: SparkSession => Option[DirSnapshot[T]])(
+    private val ifHeld: SparkSession => Option[DirSnapshot[T]])(
     implicit val enc: Encoder[T]) {
   require(dir == root || dir.startsWith(root + "/"),
     s"fact log $dir is not under its root $root")
@@ -73,10 +73,12 @@ final class FactLog[T] private (
     * held snapshot. The root is recovered first, so staging never
     * creates a root that a crashed swap's `__old` still holds.
     */
-  def stage(spark: SparkSession, rows: Seq[T]): DriverParquet.Staged[T] = {
+  def stage(spark: SparkSession, rows: Seq[T]): FactLog.Staged[T] = {
     recovered(spark)
-    DriverParquet.stage(spark, ifHeld(spark), dir, root, rows)(
-      written)
+    val s = DriverParquet.newStagingDir(root)
+    try new FactLog.Staged(spark, this, s,
+      DriverParquet.writePart(spark, s, rows)(written), rows)
+    catch { case e: Throwable => DriverParquet.unstage(spark, s); throw e }
   }
 
   /** Append `rows` as one part file ([[stage]]d, then published): no
@@ -151,6 +153,30 @@ final class FactLog[T] private (
 }
 
 object FactLog {
+
+  /** `rows` staged by [[FactLog.stage]], not yet in the log.
+    * [[publish]] renames the part into the log under
+    * [[Compactor.swapLock]] and commits its rows into the log's held
+    * snapshot, if there is one; [[discard]] removes the staging dir
+    * either way.
+    */
+  final class Staged[T] private[FactLog] (spark: SparkSession,
+      log: FactLog[T], stagingDir: String, part: Path, rows: Seq[T]) {
+    def publish(): Unit = {
+      val (f, dir) = (log.fs(spark), log.dir)
+      def move(): Unit = {
+        f.mkdirs(new Path(dir))
+        require(f.rename(part, new Path(dir, part.getName)),
+          s"cannot append $part to $dir")
+      }
+      log.ifHeld(spark) match {
+        case Some(s) => s.commit(part.getName, rows)(move())
+        case None => Compactor.swapLock.synchronized(move())
+      }
+    }
+
+    def discard(): Unit = DriverParquet.unstage(spark, stagingDir)
+  }
 
   /** A log of `T` facts, written as read, holding its own snapshot. */
   def apply[T](dir: String, root: String)(implicit enc: Encoder[T])
