@@ -355,8 +355,7 @@ object Cli {
         throw CliError(s"--dim $dim not divisible by --m $m")
       graft.ext.VectorIndex.rebuild(emb, store, nlist, m, ksub, dim,
         iters, ci)
-      val n = spark.read.parquet(s"$store/codes")
-        .select("vec_id").distinct().count()
+      val n = graft.ext.VectorIndex.indexedCount(spark, store)
       return s"rebuilt $store atomically: $n vectors indexed " +
         "(readers served the old model until the swap)"
     }
@@ -489,8 +488,7 @@ object Cli {
         throw CliError(s"--dim $dim not divisible by --m $m")
       graft.ext.VectorIndex.init(emb, store, nlist, m, ksub, dim,
         iters, ci)
-      val n = spark.read.parquet(s"$store/codes")
-        .select("vec_id").distinct().count()
+      val n = graft.ext.VectorIndex.indexedCount(spark, store)
       s"initialized $store: $n vectors indexed"
     } else if (update) {
       val emb = readEmbeddings(spark, required(opts, "embeddings"))
@@ -498,8 +496,7 @@ object Cli {
         throw CliError(s"no vector index store at $store " +
           "(run --init first)")
       graft.ext.VectorIndex.update(emb, store)
-      val n = spark.read.parquet(s"$store/codes")
-        .select("vec_id").distinct().count()
+      val n = graft.ext.VectorIndex.indexedCount(spark, store)
       s"updated $store: $n vectors indexed"
     } else {
       if (!querying)
@@ -1347,7 +1344,7 @@ object Cli {
       val docs = readDocs(spark, required(opts, "docs"))
       graft.ext.Retrieval.rebuildIndex(
         docs.select("doc_id", "text"), store)
-      val n = spark.read.parquet(s"$store/lengths").distinct().count()
+      val n = graft.ext.Retrieval.indexedCount(spark, store)
       return s"rebuilt $store atomically: $n documents indexed " +
         "(readers served the old store until the swap)"
     }
@@ -1455,13 +1452,13 @@ object Cli {
             throw CliError(s"index store already exists at $store " +
               "(drop it or update without --init)")
           graft.ext.Retrieval.updateIndex(docs, store)
-          val n = spark.read.parquet(s"$store/lengths").distinct().count()
+          val n = graft.ext.Retrieval.indexedCount(spark, store)
           s"initialized $store: $n documents indexed"
         } else {
           if (!storeExists)
             throw CliError(s"no index store at $store (run --init first)")
           graft.ext.Retrieval.updateIndex(docs, store)
-          val n = spark.read.parquet(s"$store/lengths").distinct().count()
+          val n = graft.ext.Retrieval.indexedCount(spark, store)
           s"updated $store: $n documents indexed"
         }
     }

@@ -317,12 +317,13 @@ final class BackupCatalog(spark: SparkSession, root: String,
     descriptorRows.filter(d => d.session_name == sessionName &&
       d.table_name == tableName).distinct.sortBy(_.ordinal)
 
-  /** [[CatalogOps.lastEndTimes]] as a map: each table's greatest
-    * recorded `end_time` over its non-error rows of `mode`.
+  /** [[CatalogOps.lastEndTimes]] as a map, by its fold
+    * ([[CatalogOps.lastEndTimesOf]]): each table's greatest recorded
+    * `end_time` over its non-error rows of `mode`.
     */
   def lastEndTimes(mode: String): Map[String, Long] =
-    tableRows.filter(t => t.mode == mode && !t.error)
-      .groupMapReduce(_.table_name)(_.end_time)(math.max)
+    CatalogOps.lastEndTimesOf(tableRows.iterator.map(t =>
+      (t.mode, t.error, t.table_name, t.end_time)), mode).toMap
 
   def lastEndTime(mode: String, tableName: String): Long =
     lastEndTimes(mode).getOrElse(tableName, 0L)

@@ -1,8 +1,10 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.DriverFold
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Pure DataFrame→DataFrame catalog query logic, shared by the
   * persistent [[BackupCatalog]] and the fixture-backed query surface.
@@ -10,9 +12,10 @@ import org.apache.spark.sql.functions._
   * Each op cites the reference behavior it reproduces
   * (/root/reference/lib/hbacker/mysql.rb). All of these run over
   * catalog *metadata* (thousands of rows at most, even for a
-  * 100 TB payload: one row per table per backup run), so every join
-  * here is a broadcast join by construction — sessions/descriptors
-  * never shuffle.
+  * 100 TB payload: one row per table per backup run). The joins of
+  * the listing ops broadcast their session side; the aggregate and
+  * join reads ([[lastEndTimes]], [[sessionDiff]]) fold the records on
+  * the driver, with their Spark plan kept for input past the fold cap.
   */
 object CatalogOps {
 
@@ -121,11 +124,38 @@ object CatalogOps {
   /** A2 — last recorded end_time per table: the incremental-backup
     * lower bound (docs/…HBASE-1684.txt:40-47). Error rows don't
     * advance the watermark.
+    *
+    * A [[graft.plans.DriverFold]] frame: its collect folds the records
+    * on the driver ([[lastEndTimesOf]]), which over a local relation
+    * such as `BackupCatalog.tables` runs no Spark job. Past the fold cap,
+    * on any null in a column it reads, or on columns not typed as a
+    * [[TableRecord]]'s, the aggregate plan runs; its schema is the
+    * frame's.
     */
-  def lastEndTimes(tables: DataFrame, mode: String): DataFrame =
-    tables.filter(col("mode") === mode && !col("error"))
+  def lastEndTimes(tables: DataFrame, mode: String): DataFrame = {
+    val plan = tables.filter(col("mode") === mode && !col("error"))
       .groupBy(col("table_name"))
       .agg(max(col("end_time")).as("last_end"))
+    foldOrPlan(tables, plan, "lastEndTimes",
+      "mode STRING, error BOOLEAN, table_name STRING, end_time BIGINT") {
+      rows =>
+        lastEndTimesOf(rows.iterator.map(r =>
+          (r.getString(0), r.getBoolean(1), r.getString(2), r.getLong(3))),
+          mode).map { case (t, end) => Row(t, end) }
+    }
+  }
+
+  /** The fold of [[lastEndTimes]] over (mode, error, table_name,
+    * end_time) records: each table's greatest end_time over its
+    * non-error records of `mode`, sorted by table_name. A null mode
+    * matches nothing and a null table_name is a group of its own, as
+    * in the plan.
+    */
+  def lastEndTimesOf(records: Iterator[(String, Boolean, String, Long)],
+                     mode: String): Seq[(String, Long)] =
+    records.filter { case (m, error, _, _) => m == mode && !error }
+      .map { case (_, _, t, end) => (t, end) }.toSeq
+      .groupMapReduce(_._1)(_._2)(math.max).toSeq.sortBy(_._1)(nullsFirst)
 
   /** A3 — largest max_versions per table over the descriptor schema
     * (docs/…HBASE-1684.txt:28-34).
@@ -139,8 +169,12 @@ object CatalogOps {
     * prints sessions side by side; the comparison is left to the
     * operator's eyeballs): a full-outer join of the two sessions'
     * table rows classifying each table as only_in_a / only_in_b /
-    * error / changed / unchanged by recorded row_count. Catalog-sized
-    * input — the join broadcasts at any payload scale.
+    * error / changed / unchanged by recorded row_count.
+    *
+    * A [[graft.plans.DriverFold]] frame, as [[lastEndTimes]] is: its
+    * collect folds the records on the driver ([[sessionDiffOf]]), and
+    * the join plan runs past the fold cap, on any null in a column the
+    * fold reads, or on columns not typed as a [[TableRecord]]'s.
     */
   def sessionDiff(tables: DataFrame, mode: String,
                   sessionA: String, sessionB: String): DataFrame = {
@@ -148,7 +182,7 @@ object CatalogOps {
       tables.filter(col("mode") === mode && col("session_name") === s)
         .select(col("table_name"), col("row_count").as(rc),
           col("error").as(err))
-    side(sessionA, "rows_a", "err_a")
+    val plan = side(sessionA, "rows_a", "err_a")
       .join(side(sessionB, "rows_b", "err_b"), Seq("table_name"),
         "full_outer")
       .withColumn("status",
@@ -159,6 +193,60 @@ object CatalogOps {
           .otherwise("changed"))
       .select(col("table_name"), col("rows_a"), col("rows_b"),
         col("status"))
+    foldOrPlan(tables, plan, "sessionDiff", "mode STRING, " +
+        "session_name STRING, table_name STRING, row_count BIGINT, " +
+        "error BOOLEAN") { rows =>
+      sessionDiffOf(rows.iterator.map(r => (r.getString(0), r.getString(1),
+        r.getString(2), r.getLong(3), r.getBoolean(4))), mode, sessionA,
+        sessionB).map { case (t, a, b, status) =>
+          Row(t, a.map(Long.box).orNull, b.map(Long.box).orNull, status)
+        }
+    }
+  }
+
+  /** The fold of [[sessionDiff]] over (mode, session_name, table_name,
+    * row_count, error) records, sorted by table_name: per table, every
+    * pair of a record of `sessionA` and one of `sessionB` (a full
+    * outer join's cross product per key), or each record of the one
+    * session that has the table alone, with the plan's status.
+    */
+  def sessionDiffOf(records: Iterator[(String, String, String, Long, Boolean)],
+                    mode: String, sessionA: String, sessionB: String)
+      : Seq[(String, Option[Long], Option[Long], String)] = {
+    val rs = records.filter(_._1 == mode).toSeq
+    def side(s: String) = rs.filter(_._2 == s)
+      .groupMap(_._3)(r => (r._4, r._5))
+    val (a, b) = (side(sessionA), side(sessionB))
+    (a.keySet ++ b.keySet).toSeq.sorted(nullsFirst).flatMap { t =>
+      (a.getOrElse(t, Nil), b.getOrElse(t, Nil)) match {
+        case (as, Nil) => as.map(r => (t, Some(r._1), None, "only_in_a"))
+        case (Nil, bs) => bs.map(r => (t, None, Some(r._1), "only_in_b"))
+        case (as, bs) =>
+          for ((ra, ea) <- as; (rb, eb) <- bs) yield (t, Some(ra), Some(rb),
+            if (ea || eb) "error" else if (ra == rb) "unchanged"
+            else "changed")
+      }
+    }
+  }
+
+  private val nullsFirst: Ordering[String] =
+    Ordering.Option[String].on(Option(_))
+
+  /** `plan` as a [[graft.plans.DriverFold]] frame over `tables`'
+    * `columns` (a DDL list), folded by `fold`, which sees no null; the
+    * plan itself when `tables` does not carry `columns` with their
+    * types.
+    */
+  private def foldOrPlan(tables: DataFrame, plan: DataFrame, name: String,
+                         columns: String)(
+      fold: IndexedSeq[Row] => Seq[Row]): DataFrame = {
+    val read = StructType.fromDDL(columns)
+    val types = tables.schema.map(f => f.name -> f.dataType).toMap
+    if (!read.forall(f => types.get(f.name).contains(f.dataType))) plan
+    else DriverFold.frame(tables.select(read.fieldNames.toSeq.map(col): _*),
+        plan.schema, name, DriverFold.cap) { rows =>
+      if (rows.exists(r => r.anyNull)) None else Some(fold(rows))
+    }(plan)
   }
 
   /** P10 — key canonicalization (helpers.rb:70-77): lowercase and

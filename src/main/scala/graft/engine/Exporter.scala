@@ -141,21 +141,26 @@ object Exporter {
     * any partial failure. Returns the outcome plus the discovered
     * descriptor rows for [[recordExportOutcome]].
     *
-    * The probe reads the source's parquet footers on the driver, and a
-    * parquet export takes its integrity counts from its own write
-    * ([[writeCounted]]), so a parquet export's only SQL execution is
-    * the write. csv/json/orc exports count a schema-pinned FAILFAST
-    * read-back of the written files instead: for them the parse is the
-    * check.
+    * The source's schema and the empty probe come from its parquet
+    * footers on the driver ([[TableOps.ParquetSource]]: the schema from
+    * the one footer Spark's inference would read, so no inference job
+    * runs), and a parquet export takes its integrity counts from its
+    * own write ([[writeCounted]]), so a parquet export's only Spark
+    * work is the write's one SQL execution. csv/json/orc exports count
+    * a schema-pinned FAILFAST read-back of the written files instead:
+    * for them the parse is the check.
     */
   def exportTableData(spark: SparkSession, spec: ExportSpec,
                       sessionName: String,
                       destRoot: String): (Outcome, Seq[ColumnDescriptor]) = {
-      val src = spark.read.parquet(spec.srcPath)
+      // one listing of the source: its schema from one footer, its
+      // emptiness from the footers' row counts, neither a Spark job
+      val source = TableOps.parquetSource(spark, spec.srcPath)
+      val src = source.read
       val descs = descriptorRows(src, sessionName, spec.table)
       // S5 empty-table short-circuit (worker.rb:89,95-99): the footers'
-      // row counts decide, up to the first non-empty file, without a job
-      if (TableOps.parquetIsEmpty(spark, spec.srcPath))
+      // row counts decide, up to the first non-empty file
+      if (source.isEmpty)
         (Empty(spec.table), descs.map(_.copy(n_nulls = 0L)))
       else {
         val windowed = spec.tsCol match {

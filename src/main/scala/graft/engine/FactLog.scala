@@ -37,13 +37,23 @@ final class FactLog[T] private (
   /** Restore a crashed swap of the root, then of the dir (a [[rewrite]]
     * that died between its renames); whether the dir exists. A warm
     * call makes one probe: the root holds the dir, so a dir that exists
-    * has no crashed root swap to restore.
+    * has no crashed root swap to restore. A missing dir takes
+    * [[Compactor.swapLock]] only when an `__old` copy is there, and
+    * re-checks under it; with none, a swap in flight has not begun (the
+    * dir is absent) or has published (the dir exists, probed again), so
+    * a log never written is read without the lock.
     */
   private def recovered(spark: SparkSession): Boolean = {
     val f = fs(spark)
-    f.exists(new Path(dir)) || Compactor.swapLock.synchronized {
-      (root == dir || Compactor.restoreOld(f, root)) &&
-        Compactor.restoreOld(f, dir)
+    def exists(d: String) = f.exists(new Path(d))
+    exists(dir) || {
+      val olds = (if (root == dir) Nil else Seq(root)) :+ dir
+      if (olds.exists(d => exists(d + "__old")))
+        Compactor.swapLock.synchronized {
+          (root == dir || Compactor.restoreOld(f, root)) &&
+            Compactor.restoreOld(f, dir)
+        }
+      else exists(dir)
     }
   }
 

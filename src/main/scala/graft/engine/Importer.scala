@@ -142,6 +142,9 @@ object Importer {
         case "csv" =>
           spark.read.format("csv").options(Exporter.textFormatOptions)
             .load(src).schema.fieldNames
+        // the schema from one footer, as the export takes its source's
+        case "parquet" =>
+          TableOps.parquetSource(spark, src).read.schema.fieldNames
         case _ => readSrc(None).schema.fieldNames
       }
       val df = if (descs.nonEmpty) {

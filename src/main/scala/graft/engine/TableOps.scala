@@ -1,7 +1,12 @@
 package graft.engine
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 
 /** Source/sink utility operators (SURVEY.md §2.1 S3/S4/S5/S7/S8).
   *
@@ -73,34 +78,99 @@ object TableOps {
     !((name.startsWith("_") && !name.contains("=")) ||
       name.startsWith(".") || name.endsWith("._COPYING_"))
 
-  /** The footer row count of each file `spark.read.parquet(path)`
-    * reads, listed and opened lazily. The roots resolve as the reader
-    * resolves them: `globStatus` expands a glob and returns a plain
-    * file or dir as itself. Below them every file [[sparkReads]] keeps
-    * is opened, whatever its extension (a Hive writer's `000000_0` is a
-    * part file too), except a zero-length one, which the reader skips
-    * as holding no row.
+  /** Whether Spark's file index lists a name that [[sparkReads]] drops:
+    * a name starting `_common_metadata` or `_metadata`, listed so that
+    * schema inference can read a parquet summary file.
     */
-  private def footerRowCounts(spark: SparkSession,
-                              path: String): Iterator[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val roots = Option(fs.globStatus(p)).filter(_.nonEmpty).getOrElse(
-      throw new java.io.FileNotFoundException(s"Path does not exist: $path"))
-    def files(p: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).iterator
-        .filter(s => sparkReads(s.getPath.getName))
-        .flatMap(s => if (s.isDirectory) files(s.getPath) else Iterator(s))
-    roots.iterator.flatMap(r => files(r.getPath)).filter(_.getLen > 0)
-      .map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(f, conf))
-        try rd.getRecordCount
-        finally rd.close()
+  private def summaryName(name: String): Boolean =
+    name.startsWith("_common_metadata") || name.startsWith("_metadata")
+
+  /** A parquet source as `spark.read.parquet(path)` sees it, from one
+    * listing of its files on the driver. The roots resolve as the
+    * reader resolves them: `globStatus` expands a glob and returns a
+    * plain file or dir as itself. Below them the listing keeps every
+    * name [[sparkReads]] keeps, whatever its extension (a Hive writer's
+    * `000000_0` is a part file too), plus the [[summaryName]]s the file
+    * index also lists for schema inference.
+    */
+  final class ParquetSource private[TableOps] (spark: SparkSession,
+                                               path: String) {
+    private val conf = spark.sessionState.newHadoopConf()
+    private val fs = new Path(path).getFileSystem(conf)
+
+    /** The listed files, or None when `path` resolves to nothing. */
+    private lazy val listed: Option[Seq[FileStatus]] =
+      Option(fs.globStatus(new Path(path))).filter(_.nonEmpty).map { roots =>
+        def files(p: Path): Iterator[FileStatus] =
+          fs.listStatus(p).iterator.flatMap { s =>
+            val n = s.getPath.getName
+            if (!sparkReads(n) && !summaryName(n)) Nil
+            else if (s.isDirectory) files(s.getPath)
+            else Iterator(s)
+          }
+        roots.iterator.flatMap(r => files(r.getPath)).toSeq
       }
+
+    private def footer(f: FileStatus) = {
+      val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try rd.getFooter finally rd.close()
+    }
+
+    /** The footer row count of each file the reader reads (not a
+      * summary file, and not a zero-length file, which the reader skips
+      * as holding no row), opened lazily.
+      */
+    def rowCounts: Iterator[Long] =
+      listed.getOrElse(throw new java.io.FileNotFoundException(
+          s"Path does not exist: $path")).iterator
+        .filter(f => sparkReads(f.getPath.getName) && f.getLen > 0)
+        .map(f => footer(f).getBlocks.asScala.map(_.getRowCount).sum)
+
+    /** Whether the reader reads no row, stopping at the first footer
+      * that holds one.
+      */
+    def isEmpty: Boolean = !rowCounts.exists(_ > 0L)
+
+    /** `spark.read.parquet(path)`, its schema taken on the driver from
+      * the one footer Spark's own non-merging inference reads when no
+      * summary file is listed: the first listed file by path. Spark's
+      * partition discovery, which lists on the driver, still appends the
+      * partition columns with their inferred types, so the frame's
+      * schema is the one inference gives, and no inference job runs. A
+      * merging read, a listed [[summaryName]] (inference reads a summary
+      * file first), a path that resolves to nothing or a zero-length
+      * pick is left to Spark's inference.
+      */
+    def read: DataFrame = {
+      val pick = listed
+        .filter(files => !files.exists(f => summaryName(f.getPath.getName)) &&
+          !spark.sessionState.conf.isParquetSchemaMergingEnabled)
+        .flatMap(_.sortBy(_.getPath.toString).headOption)
+        .filter(_.getLen > 0)
+      pick.fold(spark.read.parquet(path)) { f =>
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.getPath, footer(f)), schemaConverter)).parquet(path)
+      }
+    }
+
+    // the converter Spark's schema inference builds
+    // (ParquetFileFormat.mergeSchemasInParallel): five session confs,
+    // the rest at their defaults
+    private def schemaConverter = {
+      val c = spark.sessionState.conf
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = c.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+        nanosAsLong = c.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          c.parquetReaderRespectUnknownTypeAnnotation)
+    }
   }
+
+  /** The source `spark.read.parquet(path)` reads ([[ParquetSource]]). */
+  def parquetSource(spark: SparkSession, path: String): ParquetSource =
+    new ParquetSource(spark, path)
 
   /** Row count from parquet footers only — a driver-side metadata read,
     * no Spark job and no data scan: every parquet file already carries
@@ -110,19 +180,18 @@ object TableOps {
     * standalone query the footer sum is the same statistic at the same
     * (zero-job) cost. Recursive, so partitioned layouts count too, and
     * it counts exactly the files a reader of `path` reads
-    * ([[footerRowCounts]]): a crashed write's `_temporary` part files
-    * and hidden files are not rows of the table, and a part file is
-    * one whatever its name.
+    * ([[ParquetSource.rowCounts]]): a crashed write's `_temporary` part
+    * files and hidden files are not rows of the table, and a part file
+    * is one whatever its name.
     */
   def parquetRowCount(spark: SparkSession, path: String): Long =
-    footerRowCounts(spark, path).sum
+    parquetSource(spark, path).rowCounts.sum
 
-  /** Whether `spark.read.parquet(path)` reads no row, from the footers
-    * of [[parquetRowCount]]'s files, stopping at the first non-empty
-    * one.
+  /** Whether `spark.read.parquet(path)` reads no row
+    * ([[ParquetSource.isEmpty]]).
     */
   def parquetIsEmpty(spark: SparkSession, path: String): Boolean =
-    !footerRowCounts(spark, path).exists(_ > 0L)
+    parquetSource(spark, path).isEmpty
 
   /** Payload-plane takedown for a purged session ([EXT], r13 — the
     * disk half of BackupCatalog.purgeSession): delete the session's

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.engine.{Compactor, FactLog}
@@ -202,7 +202,7 @@ object Retrieval {
     * stores remain append-only fact logs ([[graft.engine.FactLog]]);
     * long-lived ones compact with [[compactIndex]].
     *
-    * A batch of at most [[Similarity.foldCap]] rows with no null id or
+    * A batch of at most [[DriverFold.cap]] rows with no null id or
     * text, whose postings fit the cap too, is folded on the driver
     * ([[updateIndexLocal]]): one bounded read of the batch, the id gate
     * from the held lengths and tombstone snapshots, one pushed
@@ -270,7 +270,7 @@ object Retrieval {
   private def updateIndexLocal(batch: DataFrame, indexStore: String)
       : Boolean = {
     val spark = batch.sparkSession
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     val got = DriverFold.collect(prepDocs(batch), cap)
       .filter(_.forall(r => !r.anyNull)).getOrElse(return false)
     val known = FactLog.ids(Seq(lengthsLog(indexStore), tombLog(indexStore))
@@ -353,7 +353,7 @@ object Retrieval {
     * root, read with their declared schemas (no inference job) and
     * appended with `written`, the schema of the Spark write an append
     * replaces. The lengths and tombstones are held on the driver while
-    * they fit the serving fold ([[Similarity.LocalFoldMaxQueryRows]]
+    * they fit the serving fold ([[DriverFold.MaxRows]]
     * rows).
     */
   private def postingsLog(store: String,
@@ -362,11 +362,18 @@ object Retrieval {
 
   private def lengthsLog(store: String, written: StructType = LengthsSchema) =
     FactLog.rows(s"$store/lengths", store, LengthsSchema, written,
-      Similarity.LocalFoldMaxQueryRows)
+      DriverFold.MaxRows)
+
+  /** The number of distinct (doc_id, dl) facts in `store`'s lengths,
+    * tombstoned documents included: the lengths log's raw facts, read
+    * with their declared schema after crash recovery.
+    */
+  private[graft] def indexedCount(spark: SparkSession, store: String): Long =
+    lengthsLog(store).scan(spark).distinct().count()
 
   private def tombLog(store: String) =
     FactLog.tombstones(s"$store/tombstones", store, "doc_id",
-      Similarity.LocalFoldMaxQueryRows)
+      DriverFold.MaxRows)
 
   /** Delete documents from the persisted index — the takedown path an
     * append-only store otherwise lacks (the [[graft.ext.VectorIndex
@@ -931,7 +938,7 @@ object Retrieval {
     * ([[lexRankFromStore]]) — so a warm read on unchanged stores runs
     * two SQL executions with one Spark job each, and the fuse folds on
     * the driver. A leg past a valve takes its distributed plan; a leg
-    * of more than [[Similarity.foldCap]] rows makes the fuse the
+    * of more than [[DriverFold.cap]] rows makes the fuse the
     * distributed [[rrfFuse]].
     */
   def hybridQueryStores(spark: org.apache.spark.sql.SparkSession,
@@ -963,7 +970,7 @@ object Retrieval {
   private def fused(spark: org.apache.spark.sql.SparkSession,
                     lex: DataFrame, dense: DataFrame, denseLeg: DataFrame,
                     k: Int, c: Int): DataFrame = {
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     def legRows(df: DataFrame) = DriverFold.collect(df, cap).map(
       _.toIndexedSeq.map(r => (optLong(r, 0), optLong(r, 1),
         r.getInt(r.length - 1))))
@@ -1000,12 +1007,12 @@ object Retrieval {
     * bottom-k rank. (query_id, doc_id, lex_rank) rows.
     *
     * Execution: while the lengths and tombstone dirs are held on the
-    * driver (each at most [[Similarity.LocalFoldMaxQueryRows]] rows;
+    * driver (each at most [[DriverFold.MaxRows]] rows;
     * a warm read lists them and reloads neither) the leg runs ONE Spark
     * job — the query terms' postings read with `limit(cap + 1)` and a
     * pushed `token IN` — and ranks on the driver ([[lexRankLocal]], op
     * for op the plan below), returning a local relation. Past the cap
-    * ([[Similarity.foldCap]] postings rows), a dir too large to hold, or
+    * ([[DriverFold.cap]] postings rows), a dir too large to hold, or
     * input the fold declines, it returns the distributed plan.
     */
   private[ext] def lexRankFromStore(spark: org.apache.spark.sql.SparkSession,
@@ -1025,7 +1032,7 @@ object Retrieval {
       read <- DriverFold.collect(
         postingsLog(indexStore).scan(spark)
           .filter(col("token").isin(allTerms: _*)).coalesce(1),
-        Similarity.foldCap).flatMap(rows => noNulls(rows.toSeq))
+        DriverFold.cap).flatMap(rows => noNulls(rows.toSeq))
       ranked <- lexRankLocal(
         read.map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))),
         lengths.map(r => (r.getLong(0), r.getLong(1))),
@@ -1210,7 +1217,7 @@ object Retrieval {
     * reads and the one corpus fetch — with every rank, the fuse, the
     * pool and the MMR greedy folded on the driver. The tail has no
     * distributed form: a leg, fetch or query frame of more than
-    * [[Similarity.foldCap]] rows fails with
+    * [[DriverFold.cap]] rows fails with
     * [[graft.plans.FoldCapExceeded]].
     */
   def hybridQueryStoresDiversify(spark: org.apache.spark.sql.SparkSession,
@@ -1241,7 +1248,7 @@ object Retrieval {
     // and replayed by the s28 oracle end-to-end. The tail has no
     // distributed form: a frame past the cap fails with
     // [[graft.plans.FoldCapExceeded]].
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     val lexRows = DriverFold.collectOrFail(
         lexRankFromStore(spark, indexStore, queries, depth, k1, b), cap,
         "hybridQueryStoresDiversify lexical leg").toIndexedSeq

@@ -333,40 +333,6 @@ object Similarity {
     Some(s)
   }
 
-  /** The ceiling on the rows a serving-path driver fold materializes,
-    * each read with `limit(cap + 1)`:
-    *
-    *  - [[graft.ext.VectorIndex.query]] collects at most this / (m·ksub)
-    *    query rows, since [[ivfPqDtableLocal]] builds |Q|·m·ksub rows
-    *    from them, and at most this many probed codes rows for
-    *    [[ivfPqRankLocal]];
-    *  - the store-fed lexical leg collects at most this many postings
-    *    rows, and holds the lengths and tombstone dirs only while each
-    *    has at most this many rows;
-    *  - every other serving-path collect (legs, candidates, fetches,
-    *    query vectors) is capped here too.
-    *
-    * Serving requests are small by contract. Past the cap a fold with a
-    * distributed form runs it (same values); one without fails with
-    * [[graft.plans.FoldCapExceeded]].
-    */
-  private[ext] val LocalFoldMaxQueryRows: Int = 1 << 16
-
-  private val foldCapOverride =
-    new scala.util.DynamicVariable[Option[Int]](None)
-
-  /** The serving-path fold cap in force: [[LocalFoldMaxQueryRows]],
-    * unless a spec runs under [[withFoldCap]].
-    */
-  private[ext] def foldCap: Int =
-    foldCapOverride.value.getOrElse(LocalFoldMaxQueryRows)
-
-  /** Run `body` with every serving-path fold capped at `cap` rows — the
-    * specs' way to force each fold both ways at the cap.
-    */
-  private[graft] def withFoldCap[T](cap: Int)(body: => T): T =
-    foldCapOverride.withValue(Some(cap))(body)
-
   /** [[ivfPqProbes]] folded driver-side over the COLLECTED query and
     * centroid tables (r15 — the mmrRerank fold discipline applied to
     * the serving path's other KB stages): the cross product, the

@@ -65,7 +65,7 @@ import Similarity.{optLong, optSeq}
   * MAP with the model in the task closure: no shuffle, no state, runs
   * unchanged on a `readStream` batch
   * ([[graft.streaming.StreamingVectorIndex]]). A serving-sized batch
-  * (at most [[Similarity.foldCap]] rows) runs the same per-row kernel
+  * (at most [[DriverFold.cap]] rows) runs the same per-row kernel
   * ([[Similarity.encodeRow]]) on the driver, gated against the held
   * tombstones, and the driver writes its appends: the write costs the
   * batch, not the store.
@@ -124,17 +124,24 @@ object VectorIndex {
   private def codesLog(store: String) =
     storeDir(store, "codes", CodesSchema, CodesWritten)
 
+  /** The number of distinct vectors with codes in `store`, replays and
+    * tombstoned vectors included: the codes log's raw facts, read with
+    * their declared schema after crash recovery.
+    */
+  private[graft] def indexedCount(spark: SparkSession, store: String): Long =
+    codesLog(store).scan(spark).select("vec_id").distinct().count()
+
   private def driftLog(store: String) =
     storeDir(store, "driftstats", DriftStatsSchema, DriftStatsWritten)
 
   /** The tombstones, held while they fit the serving fold
-    * ([[Similarity.LocalFoldMaxQueryRows]] rows; a held read's ids are
+    * ([[DriverFold.MaxRows]] rows; a held read's ids are
     * [[graft.engine.FactLog.ids]], which leaves out a null id, as the
     * read paths' anti-join never matches one).
     */
   private def tombLog(store: String) =
     FactLog.tombstones(s"$store/tombstones", store, "vec_id",
-      Similarity.LocalFoldMaxQueryRows)
+      DriverFold.MaxRows)
 
   /** Whether the frozen model (centroids + codebooks), sized from META
     * without a collect, fits the driver-side valve
@@ -606,7 +613,7 @@ object VectorIndex {
     *    whose first(qc) would go nondeterministic). Re-embedding an
     *    existing id is a model-drift event — re-init handles it.
     *
-    * A batch of at most [[Similarity.foldCap]] clean rows is folded on
+    * A batch of at most [[DriverFold.cap]] clean rows is folded on
     * the driver ([[updateLocal]]): one bounded read of the batch, the
     * id gate from the held tombstones plus one pushed `vec_id IN` codes
     * probe, and both appends written by the driver — a warm update of a
@@ -638,7 +645,7 @@ object VectorIndex {
                           centroids: Array[(Long, Array[Double])],
                           model: Map[(Int, Long), Array[Double]]): Boolean = {
     val spark = batch.sparkSession
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     val b0 = DriverFold.collect(prep(batch), cap)
       .flatMap(rows => cleanRows(rows.toSeq)).map(distinctRows)
       .getOrElse(return false)
@@ -872,7 +879,7 @@ object VectorIndex {
     *    same content-derived key, folded at read — tombstones-first
     *    would skip the replay's subtraction forever.
     *
-    * Up to [[Similarity.foldCap]] ids of clean vectors, the vectors
+    * Up to [[DriverFold.cap]] ids of clean vectors, the vectors
     * are read once and the statistics folded and written by the
     * driver ([[localDrift]]); otherwise by Spark jobs. Without the
     * vectors, the base [[delete]] applies and the stats keep counting
@@ -900,7 +907,7 @@ object VectorIndex {
     def wrongDim(mn: Int, mx: Int) = s"supplied vectors carry $mn..$mx" +
       s"-dim embeddings where the store at $store is trained on " +
       s"${meta.dim}-dim vectors"
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     val inHand = prep(vectors).filter(DriverFold.isIn(col("vec_id"), fresh))
     val local = (if (fresh.length > cap) None
       else DriverFold.collect(inHand, cap))
@@ -1212,7 +1219,7 @@ object VectorIndex {
                        lambda: Double = 0.7,
                        nprobe: Int = 4): DataFrame = {
     require(poolSize >= k, s"pool ($poolSize) must cover k ($k)")
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     val plan = rankPlan(spark, store, queries, nprobe)
     val local = for {
       l <- plan.local
@@ -1285,7 +1292,7 @@ object VectorIndex {
     * exact re-rank CTE replay end-to-end.
     *
     * The candidates, the fetched originals and the query vectors are
-    * each collected under the fold cap ([[Similarity.foldCap]]) and the
+    * each collected under the fold cap ([[DriverFold.cap]]) and the
     * re-rank folds on the driver ([[Similarity.exactRerankLocal]], the
     * one definition the hybrid dense legs share); the tail has no
     * distributed form, so a frame past the cap fails with
@@ -1296,7 +1303,7 @@ object VectorIndex {
                   nprobe: Int = 4): DataFrame = {
     require(rerank >= k,
       s"rerank pool ($rerank) must cover k ($k)")
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     val candRows = DriverFold.collectOrFail(
         query(spark, store, queries, rerank, nprobe), cap,
         "queryRerank candidates").toIndexedSeq
@@ -1352,7 +1359,7 @@ object VectorIndex {
                              lambda: Double = 0.7,
                              nprobe: Int = 4): DataFrame = {
     require(poolSize >= k, s"pool ($poolSize) must cover k ($k)")
-    val cap = Similarity.foldCap
+    val cap = DriverFold.cap
     val candRows = DriverFold.collectOrFail(
         query(spark, store, queries, poolSize, nprobe), cap,
         "diversifiedQueryRerank candidates").toIndexedSeq
@@ -1447,7 +1454,7 @@ object VectorIndex {
     val qidNullable = q.schema("query_id").nullable
     val qRows: Option[IndexedSeq[(Option[Long], Seq[Any])]] =
       if (!modelFitsDriver(meta)) None
-      else DriverFold.collect(q, Similarity.foldCap / (meta.m * meta.ksub))
+      else DriverFold.collect(q, DriverFold.cap / (meta.m * meta.ksub))
         .map(_.toIndexedSeq.map(r => (optLong(r, 0), optSeq(r, 1))))
     def inCells(cells: Seq[Long]): Column = col("coarse_id").isin(cells: _*)
     def rank(cells: Seq[Long], probes: DataFrame, dtable: DataFrame)(
@@ -1518,7 +1525,7 @@ object VectorIndex {
     * collecting it runs ONE — the probed cells' codes read with
     * `limit(cap + 1)` — then ranks on the driver with
     * [[Similarity.ivfPqRankLocal]], op for op the distributed rank.
-    * Past the cap ([[Similarity.foldCap]] codes rows) the same
+    * Past the cap ([[DriverFold.cap]] codes rows) the same
     * collect runs the distributed [[Similarity.ivfPqRank]] plan
     * instead. Past any other valve the frame is that plan.
     */
@@ -1529,7 +1536,7 @@ object VectorIndex {
       case Some(l) =>
         DriverFold.frame(plan.codes.coalesce(1),
             rankSchema(plan.qidNullable),
-            "ivfPqRankLocal", Similarity.foldCap) { read =>
+            "ivfPqRankLocal", DriverFold.cap) { read =>
           l.rank(liveCodeRows(read.toArray, l.dead), k).map(_.map(t =>
             Row(t._1, t._2, t._3.orNull, t._4)))
         }(plan.distributed(k))

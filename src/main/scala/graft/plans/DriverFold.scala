@@ -82,6 +82,41 @@ class DriverFoldStrategy extends SparkStrategy {
 
 object DriverFold {
 
+  /** The ceiling on the rows a driver fold materializes, each read with
+    * `limit(cap + 1)`:
+    *
+    *  - [[graft.ext.VectorIndex.query]] collects at most this / (m·ksub)
+    *    query rows, since its dtable fold builds |Q|·m·ksub rows from
+    *    them, and at most this many probed codes rows for its rank fold;
+    *  - the store-fed lexical leg collects at most this many postings
+    *    rows, and holds the lengths and tombstone dirs only while each
+    *    has at most this many rows;
+    *  - the catalog's aggregate and join reads
+    *    ([[graft.catalog.CatalogOps.lastEndTimes]],
+    *    [[graft.catalog.CatalogOps.sessionDiff]]) fold at most this many
+    *    table records;
+    *  - every other serving-path collect (legs, candidates, fetches,
+    *    query vectors) is capped here too.
+    *
+    * Serving requests and catalogs are small by contract. Past the cap
+    * a fold with a distributed form runs it (same values); one without
+    * fails with [[FoldCapExceeded]].
+    */
+  val MaxRows: Int = 1 << 16
+
+  private val capOverride = new scala.util.DynamicVariable[Option[Int]](None)
+
+  /** The fold cap in force: [[MaxRows]], unless a spec runs under
+    * [[withCap]].
+    */
+  def cap: Int = capOverride.value.getOrElse(MaxRows)
+
+  /** Run `body` with every driver fold capped at `cap` rows — the
+    * specs' way to force each fold both ways at the cap.
+    */
+  private[graft] def withCap[T](cap: Int)(body: => T): T =
+    capOverride.withValue(Some(cap))(body)
+
   /** A lazy frame of `schema` whose collect folds `child`'s rows on the
     * driver, or runs `fallback` past the cap (see [[DriverFoldPlan]]).
     * A `child` with one partition is read by one Spark job.

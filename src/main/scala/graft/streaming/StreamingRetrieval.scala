@@ -44,6 +44,6 @@ object StreamingRetrieval {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$indexStore/lengths").distinct().count()
+    Retrieval.indexedCount(spark, indexStore)
   }
 }

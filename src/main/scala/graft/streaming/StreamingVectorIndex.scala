@@ -37,8 +37,7 @@ object StreamingVectorIndex {
     require(VectorIndex.exists(spark, store),
       s"no vector index store at $store (run init first — the drain " +
         "encodes under the store's frozen model)")
-    def indexed(): Long = spark.read.parquet(s"$store/codes")
-      .select("vec_id").distinct().count()
+    def indexed(): Long = VectorIndex.indexedCount(spark, store)
     // a watched directory that exists but holds no parquet yet is the
     // NORMAL initial state of a file-source stream — the schema peek
     // fails there, and the right answer is a no-op drain, not an error

@@ -1,6 +1,9 @@
 package graft.catalog
 
 import graft.SparkTestBase
+import graft.incremental.Incremental
+import graft.plans.DriverFold
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Catalog round-trip contracts, mirroring the reference's "exact
   * args" spec style (/root/reference/spec/hbacker/db_spec.rb).
@@ -606,6 +609,144 @@ class CatalogSpec extends SparkTestBase {
         .collect().headOption.map(_.getLong(1)).getOrElse(0L)
       assert(cat.lastEndTime("export", t) == exp, t)
     }
+  }
+
+  test("a warm db pass runs no Spark job: the benchmark's five reads, " +
+    "the lastEndTimes and sessionDiff DataFrame forms included") {
+    val cat = freshCat()
+    for (s <- Seq("full", "incr1")) {
+      cat.startInfo(sess.copy(session_name = s))
+      for (t <- Seq("lineitem", "orders")) cat.exportedTableInfo(rec(t, s), Nil)
+    }
+    cat.exportedTableInfo(rec("nation", "full"), Nil)
+    // the reads of the `db` command, as the benchmark's timed pass makes
+    def pass(): Seq[Int] = Seq(
+      cat.sessionInfo("export", "%").collect().length,
+      cat.listTableInfo("export", "incr1", "%").collect().length,
+      cat.tableNames("export", "incr1", sess.dest_root).length,
+      Incremental.lastEndTimes(cat.tables.toDF()).collect().length,
+      CatalogOps.sessionDiff(cat.tables.toDF(), "export", "full", "incr1")
+        .collect().length)
+    assert(pass() == Seq(2, 2, 2, 3, 3))
+    var warm = Seq.empty[Int]
+    val jobs = jobsDuring { warm = pass() }
+    assert(warm == Seq(2, 2, 2, 3, 3))
+    assert(jobs.isEmpty, s"a warm db pass ran ${jobs.size} Spark jobs")
+  }
+
+  /** Export records of sessions s1 and s2: duplicate (session, table)
+    * rows, error rows on one side, tables in one session only, an
+    * all-error table and an import-mode row.
+    */
+  private val diffRecords: Seq[TableRecord] = Seq(
+    rec("dup", "s1").copy(row_count = 10L, end_time = 100L),
+    rec("dup", "s1").copy(row_count = 10L, end_time = 100L),
+    rec("dup", "s1").copy(row_count = 11L, end_time = 150L),
+    rec("dup", "s2").copy(row_count = 10L, end_time = 200L),
+    rec("dup", "s2").copy(row_count = 12L, end_time = 210L),
+    rec("same", "s1"), rec("same", "s2").copy(end_time = 2000L),
+    rec("grew", "s1"), rec("grew", "s2").copy(row_count = 43L),
+    rec("erred", "s1"),
+    rec("erred", "s2").copy(error = true, row_count = -1L, end_time = 9L),
+    rec("only_a", "s1"), rec("only_b", "s2").copy(end_time = 3000L),
+    rec("all_err", "s1").copy(error = true, end_time = 7L),
+    rec("all_err", "s2").copy(error = true, end_time = 8L),
+    rec("imported", "s1").copy(mode = "import", end_time = 5000L))
+
+  private val nullable = org.apache.spark.sql.types.StructType.fromDDL(
+    "mode STRING, table_name STRING, session_name STRING, " +
+      "end_time BIGINT, error BOOLEAN, row_count BIGINT")
+
+  /** The parity inputs, each with the column it nulls, if any. */
+  private def parityInputs: Seq[(String, DataFrame, Option[String])] = {
+    val s = spark
+    import s.implicits._
+    val clean = diffRecords.map(r => Row(r.mode, r.table_name,
+      r.session_name, r.end_time, r.error, r.row_count))
+    def withNull(c: String) = {
+      val i = nullable.fieldIndex(c)
+      val bad = Row.fromSeq(clean(7).toSeq.updated(i, null))
+      (s"a null $c", spark.createDataFrame(
+        java.util.List.of[Row](clean :+ bad: _*), nullable), Some(c))
+    }
+    Seq(("the records", diffRecords.toDF(), None),
+      ("no record", Seq.empty[TableRecord].toDF(), None)) ++
+      Seq("table_name", "error", "row_count", "end_time", "mode",
+        "session_name").map(withNull)
+  }
+
+  /** `op` over `input` forced both ways at the cap: the fold at a cap
+    * of the input's size, the plan one row under it. Their rows and
+    * StructType agree; the fold runs no Spark job unless it declines
+    * (a null in a column it reads), and the plan path does. A fold
+    * that runs returns its rows sorted by table_name.
+    */
+  private def foldEqualsPlan(what: String, input: DataFrame,
+                             declines: Boolean)(
+      op: DataFrame => DataFrame): Seq[String] = {
+    val n = input.collect().length
+    def run(cap: Int) = DriverFold.withCap(cap) {
+      val df = op(input)
+      var rows = Array.empty[Row]
+      val jobs = jobsDuring { rows = df.collect() }
+      (rows, df.schema, jobs)
+    }
+    def sorted(rows: Array[Row]) = rows.map(_.toString).toSeq.sorted
+    val (foldRows, foldedSchema, foldJobs) = run(n)
+    val (planRows, plannedSchema, planJobs) = run(n - 1)
+    val (folded, planned) = (sorted(foldRows), sorted(planRows))
+    assert(folded == planned, what)
+    assert(foldedSchema == plannedSchema, what)
+    if (!declines) {
+      val names = foldRows.map(_.getString(0)).toSeq
+      assert(names == names.sorted, s"$what: the fold's rows are unsorted")
+    }
+    // an empty local relation plans to an empty one: no job either way
+    if (n > 0) {
+      assert(planJobs.nonEmpty, s"$what: the plan ran no job")
+      if (declines) assert(foldJobs.nonEmpty, s"$what: the fold kept a null")
+      else assert(foldJobs.isEmpty, s"$what: the fold ran $foldJobs")
+    }
+    planned
+  }
+
+  test("lastEndTimes' fold == its plan forced both ways at the cap: " +
+    "rows, order-free, and StructType") {
+    val reads = Set("mode", "error", "table_name", "end_time")
+    for ((what, input, nulled) <- parityInputs) {
+      val rows = foldEqualsPlan(s"lastEndTimes over $what", input,
+        nulled.exists(reads))(CatalogOps.lastEndTimes(_, "export"))
+      if (what == "the records")
+        assert(rows == Seq("[dup,210]", "[erred,1000]", "[grew,1000]",
+          "[only_a,1000]", "[only_b,3000]", "[same,2000]"))
+    }
+  }
+
+  test("sessionDiff's fold == its plan forced both ways at the cap: " +
+    "rows, order-free, and StructType") {
+    val reads = Set("mode", "session_name", "table_name", "row_count", "error")
+    for ((what, input, nulled) <- parityInputs) {
+      val rows = foldEqualsPlan(s"sessionDiff over $what", input,
+        nulled.exists(reads))(CatalogOps.sessionDiff(_, "export", "s1", "s2"))
+      if (what == "the records")
+        assert(rows == Seq("[all_err,42,42,error]",
+          "[dup,10,10,unchanged]", "[dup,10,10,unchanged]",
+          "[dup,10,12,changed]", "[dup,10,12,changed]",
+          "[dup,11,10,changed]", "[dup,11,12,changed]",
+          "[erred,42,-1,error]", "[grew,42,43,changed]",
+          "[only_a,42,null,only_in_a]", "[only_b,null,42,only_in_b]",
+          "[same,42,42,unchanged]"))
+    }
+  }
+
+  test("the snapshot lastEndTimes and the DataFrame form share one fold") {
+    val cat = freshCat()
+    diffRecords.foreach(r => cat.exportedTableInfo(
+      r.copy(mode = "export"), Nil))
+    val df = CatalogOps.lastEndTimes(cat.tables.toDF(), "export").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(cat.lastEndTimes("export") == df)
+    assert(df("imported") == 5000L && !df.contains("all_err"))
   }
 
   test("purgeSessionData: payload takedown is staged (atomic rename, " +

@@ -177,13 +177,85 @@ class ExportImportSpec extends SparkTestBase {
     val sites = jobSitesDuring {
       Exporter.exportTableData(spark, spec, "s1", root)
     }
-    // the write's shuffle stages run as jobs of its one execution; the
-    // source read's schema inference is the only job outside it
+    // the write's shuffle stages run as jobs of its one execution, and
+    // the source's schema comes from a footer: no job runs outside it
     val executions = sites.flatMap(_._1).distinct
     assert(executions.size == 1, s"expected one SQL execution: $sites")
-    assert(sites.filter(_._1.isEmpty).forall(_._2.startsWith("parquet at")),
-      s"a job outside the write: $sites")
+    assert(sites.forall(_._1.nonEmpty), s"a job outside the write: $sites")
     assert(spark.read.parquet(s"$root/s1/capped").count() > 0L)
+  }
+
+  test("a parquet import's data half runs one SQL execution, the write") {
+    val cat = new BackupCatalog(spark, tmpDir("cat"))
+    val root = tmpDir("bk")
+    Exporter.exportTable(spark, cat, ExportSpec("parted", integritySource(200),
+      partitionBy = Seq("part")), "s1", root)
+    val target = tmpDir("restore") + "/parted"
+    var rows = 0L
+    val sites = jobSitesDuring {
+      rows = Importer.importTableData(spark, cat, "parted", "s1", root,
+        target).rows
+    }
+    // the catalog pins the read's schema and the column-name check
+    // reads one footer: the write is the only Spark work
+    val executions = sites.flatMap(_._1).distinct
+    assert(executions.size == 1, s"expected one SQL execution: $sites")
+    assert(sites.forall(_._1.nonEmpty), s"a job outside the write: $sites")
+    assert(rows == 200L && spark.read.parquet(target).count() == 200L)
+  }
+
+  test("a parquet source's footer-schema read == spark.read.parquet: " +
+    "StructType and rows on plain, partitioned, globbed, Hive-named, " +
+    "nested and timestamp_ntz sources, with no inference job; a summary " +
+    "file is left to inference") {
+    val plain = integritySource(60)
+    val parted = tmpDir("footer-parted") + "/t"
+    spark.range(0, 40, 1, 2).selectExpr("id",
+      "named_struct('a', id, 'b', array(id)) AS st",
+      "CASE WHEN id % 2 = 0 THEN NULL ELSE '0123' END AS p")
+      .write.partitionBy("p").parquet(parted)
+    val hive = integritySource(30)
+    new java.io.File(hive).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        assert(f.renameTo(new java.io.File(hive, f"$i%06d_0")))
+      }
+    val ntz = tmpDir("footer-ntz") + "/t"
+    spark.range(0, 20, 1, 2).selectExpr("id",
+      "CAST(timestamp_millis(1000000 + id * 1000) AS TIMESTAMP_NTZ) AS ts",
+      "map(CAST(id AS STRING), array(named_struct('x', id))) AS m")
+      .write.parquet(ntz)
+    // a summary file, which inference reads before any part file, here
+    // with a schema no part file has: the read leaves it to inference
+    val summarized = integritySource(20)
+    val other = tmpDir("footer-other") + "/t"
+    spark.range(0, 5, 1, 1).selectExpr("id", "'x' AS extra").write.parquet(other)
+    java.nio.file.Files.copy(new java.io.File(other).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath,
+      new java.io.File(summarized, "_common_metadata").toPath)
+    def same(what: String, path: String, footerRead: Boolean): Unit = {
+      var footer: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring {
+        footer = TableOps.parquetSource(spark, path).read
+        footer.schema
+      }
+      assert(jobs.isEmpty == footerRead, s"$what: ${jobs.size} jobs")
+      val inferred = spark.read.parquet(path)
+      assert(footer.schema == inferred.schema, what)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).toSeq.sorted
+      assert(rows(footer) == rows(inferred), what)
+    }
+    Seq("plain" -> plain, "partitioned" -> parted,
+      "globbed" -> (plain.dropRight(1) + "[t]"), "Hive-named" -> hive,
+      "timestamp_ntz" -> ntz).foreach { case (what, path) =>
+      same(what, path, footerRead = true)
+    }
+    same("summary file", summarized, footerRead = false)
+    assert(spark.read.parquet(summarized).schema.fieldNames.toSeq ==
+      Seq("id", "extra"), "inference reads the summary file's schema")
+    assert(spark.read.parquet(parted).schema("p").dataType.typeName ==
+      "integer", "the partition value is inferred as a number both ways")
   }
 
   test("failed export records an error row and returns Failed") {

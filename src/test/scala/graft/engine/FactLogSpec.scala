@@ -36,6 +36,25 @@ class FactLogSpec extends SparkTestBase {
     assert(!new File(s"$root/facts").exists(), "a scan created the dir")
   }
 
+  test("a read of a log never written takes no swap lock while no " +
+    "__old copy is there") {
+    val root = tmpDir("fl-unlocked")
+    val (held, release) = (new java.util.concurrent.CountDownLatch(1),
+      new java.util.concurrent.CountDownLatch(1))
+    val holder = new Thread(() => Compactor.swapLock.synchronized {
+      held.countDown(); release.await()
+    })
+    holder.start()
+    try {
+      assert(held.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      val read = scala.concurrent.Future(log(root).scan(spark).collect())(
+        scala.concurrent.ExecutionContext.global)
+      // blocks until `release` if the read waits for the lock
+      assert(scala.concurrent.Await.result(read,
+        scala.concurrent.duration.Duration(30, "s")).isEmpty)
+    } finally { release.countDown(); holder.join() }
+  }
+
   test("held past its bound is None, appends alone do not bring it " +
     "back, and a rewrite under the bound does") {
     val root = tmpDir("fl-bound")

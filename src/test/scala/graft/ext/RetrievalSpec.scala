@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{SparkTestBase, Tables}
+import graft.plans.DriverFold
 import graft.ext.Retrieval.Bm25Model
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -1112,7 +1113,7 @@ class RetrievalSpec extends SparkTestBase {
     val (st, queries, n) = foldStore("lexfold")
     def run(cap: Int): (Seq[Seq[Any]],
         org.apache.spark.sql.types.StructType, Int) =
-      Similarity.withFoldCap(cap) {
+      DriverFold.withCap(cap) {
         def leg() = Retrieval.lexRankFromStore(spark, st, queries, 20,
           1.2, 0.75)
         leg() // warm: the lengths and tombstone snapshots load once
@@ -1152,7 +1153,7 @@ class RetrievalSpec extends SparkTestBase {
     assert(jobs.size <= 2, s"a warm hybrid read ran ${jobs.size} jobs")
     // each leg holds |Q|·depth = 60 rows: one below, both legs take
     // their distributed plans and the fuse is rrfFuse's
-    assert(Similarity.withFoldCap(59)(hybrid()) == cold,
+    assert(DriverFold.withCap(59)(hybrid()) == cold,
       "the distributed fuse answered differently")
     // the rerank read's dense leg holds 2·20 rows while the lexical
     // leg holds 60: one row below the lexical leg, only the fuse
@@ -1164,11 +1165,11 @@ class RetrievalSpec extends SparkTestBase {
     val lexRows = Retrieval.lexRankFromStore(spark, bm, queries, 20, 1.2,
       0.75).count().toInt
     assert(lexRows > 40)
-    assert(Similarity.withFoldCap(lexRows - 1)(rerank()) == rerank(),
+    assert(DriverFold.withCap(lexRows - 1)(rerank()) == rerank(),
       "the rerank read's distributed fuse answered differently")
     // the diversify tail has no distributed form: it fails by name
     val ex = intercept[graft.plans.FoldCapExceeded] {
-      Similarity.withFoldCap(lexRows - 1) {
+      DriverFold.withCap(lexRows - 1) {
         Retrieval.hybridQueryStoresDiversify(spark, bm, vStore, e, queries,
           localVectors(e, 2), k = 4, poolSize = 12, depth = 20)
       }
@@ -1177,7 +1178,7 @@ class RetrievalSpec extends SparkTestBase {
       ex.getMessage.contains(s"more than ${lexRows - 1} rows"),
       ex.getMessage)
     val dense = intercept[graft.plans.FoldCapExceeded] {
-      Similarity.withFoldCap(59) {
+      DriverFold.withCap(59) {
         Retrieval.hybridQueryStoresDiversify(spark, bm, vStore, e,
           queries.take(2), qVecs, k = 4, poolSize = 12, depth = 20)
       }
@@ -1265,9 +1266,9 @@ class RetrievalSpec extends SparkTestBase {
     // the takedown's tombstones are driver-written at any id count:
     // only the updates fork
     def run(st: String, over: Int): Seq[Seq[(Option[String], String)]] = {
-      val jobs = Seq(Similarity.withFoldCap(multiPostings - over)(
+      val jobs = Seq(DriverFold.withCap(multiPostings - over)(
           jobSitesDuring(Retrieval.updateIndex(multi, st))),
-        Similarity.withFoldCap(3 - over)(
+        DriverFold.withCap(3 - over)(
           jobSitesDuring(Retrieval.updateIndex(single, st))))
       Retrieval.deleteFromIndex(spark, st, killed)
       jobs

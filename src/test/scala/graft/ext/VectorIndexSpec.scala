@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{SparkTestBase, Tables}
+import graft.plans.DriverFold
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -1124,7 +1125,7 @@ class VectorIndexSpec extends SparkTestBase {
     val e = Tables.embeddings(spark, sf0001)
     val st = store("vidx-qcap")
     VectorIndex.init(e, st, ksub = 64, coarseIters = 2)
-    val cap = Similarity.LocalFoldMaxQueryRows / (8 * 64)
+    val cap = DriverFold.MaxRows / (8 * 64)
     val (past, at, last) = (localVectors(e, cap + 1), localVectors(e, cap),
       localVectors(e, cap + 1).filter(col("vec_id") === cap))
     def plan(q: DataFrame): String =
@@ -1197,7 +1198,7 @@ class VectorIndexSpec extends SparkTestBase {
     val n = probedCodeRows(st, q).toInt
     assert(n - 1 >= 5 * 8 * 16, s"$n codes rows: |Q| would leave the fold")
     def run(cap: Int): (Seq[Seq[Any]], org.apache.spark.sql.types.StructType,
-        Int) = Similarity.withFoldCap(cap) {
+        Int) = DriverFold.withCap(cap) {
       val df = VectorIndex.query(spark, st, q, k = 6)
       var rows: Seq[Seq[Any]] = null
       val jobs = jobsDuring { rows = sortedRows(df) }
@@ -1209,7 +1210,7 @@ class VectorIndexSpec extends SparkTestBase {
     assert(pastJobs > 1, "one row past the cap should run the " +
       "distributed rank")
     assert(folded == past, "the fold ranked differently from the plan")
-    val distributed = Similarity.withFoldCap(0) {
+    val distributed = DriverFold.withCap(0) {
       VectorIndex.query(spark, st, q, k = 6)
     }
     assert(sortedRows(distributed) == folded)
@@ -1227,7 +1228,7 @@ class VectorIndexSpec extends SparkTestBase {
     "fold cap, == its distributed form one row past it, in one job") {
     val (st, q) = adversarialStore("vidx-fold-mmr")
     val n = probedCodeRows(st, q).toInt
-    def run(cap: Int): (Seq[Seq[Any]], Int) = Similarity.withFoldCap(cap) {
+    def run(cap: Int): (Seq[Seq[Any]], Int) = DriverFold.withCap(cap) {
       def read() = sortedRows(VectorIndex.diversifiedQuery(spark, st, q,
         k = 4, poolSize = 12, lambda = 0.7))
       read() // warm: the tombstone snapshot reloads once
@@ -1264,13 +1265,13 @@ class VectorIndexSpec extends SparkTestBase {
     val q = localVectors(e, 5)
     def fails(cap: Int, what: String)(body: => Any): Unit = {
       val ex = intercept[graft.plans.FoldCapExceeded] {
-        Similarity.withFoldCap(cap)(body)
+        DriverFold.withCap(cap)(body)
       }
       assert(ex.getMessage.contains(what) &&
         ex.getMessage.contains(s"more than $cap rows"), ex.getMessage)
     }
     // candidates: |Q|·rerank = 40 rows, pool: |Q|·poolSize = 60 rows
-    val rerank = Similarity.withFoldCap(40) {
+    val rerank = DriverFold.withCap(40) {
       sortedRows(VectorIndex.queryRerank(spark, st, e, q, k = 3))
     }
     assert(rerank == sortedRows(VectorIndex.queryRerank(spark, st, e, q,
@@ -1329,11 +1330,11 @@ class VectorIndexSpec extends SparkTestBase {
     // the plain delete's tombstones are driver-written at any id count,
     // so only the update and the reconciling delete's stats fork
     def run(st: String, over: Int): Seq[Jobs] = Seq(
-      Similarity.withFoldCap(batchRows - over)(
+      DriverFold.withCap(batchRows - over)(
         jobSitesDuring(VectorIndex.update(batch, st))),
       { VectorIndex.delete(spark, st, killed)
         // 3 is already tombstoned: two ids and two vectors are fresh
-        Similarity.withFoldCap(2 - over)(jobSitesDuring(
+        DriverFold.withCap(2 - over)(jobSitesDuring(
           VectorIndex.delete(spark, st, takenDown, corpus))) })
     val (onSt, offSt) = (copyStore(base, "vidx-writes-on"),
       copyStore(base, "vidx-writes-off"))
@@ -1368,8 +1369,8 @@ class VectorIndexSpec extends SparkTestBase {
     def files(st: String) = Seq("codes", "driftstats", "tombstones")
       .map(d => writtenDir(s"$st/$d")._4)
     val (fOn, fOff) = (files(onSt), files(offSt))
-    Similarity.withFoldCap(batchRows)(VectorIndex.update(batch, onSt))
-    Similarity.withFoldCap(batchRows - 1)(VectorIndex.update(batch, offSt))
+    DriverFold.withCap(batchRows)(VectorIndex.update(batch, onSt))
+    DriverFold.withCap(batchRows - 1)(VectorIndex.update(batch, offSt))
     VectorIndex.delete(spark, onSt, takenDown, corpus)
     assert(files(onSt) == fOn && files(offSt) == fOff,
       "a replayed batch appended to the store")
