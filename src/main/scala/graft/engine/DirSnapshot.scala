@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.plans.DriverFold
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -23,7 +24,8 @@ import org.apache.spark.sql.types.StructType
   * The whole dir is collected to the driver, so only dirs whose rows
   * the caller would collect anyway belong here. A dir that may outgrow
   * the driver takes a `maxRows` bound: a reload reads at most
-  * `maxRows + 1` rows, and a dir holding more is not held
+  * `maxRows + 1` rows ([[graft.plans.DriverFold.collect]]), and a dir
+  * holding more is not held
   * ([[bounded]] answers None until a file of it is replaced or
   * removed: appends alone cannot bring it back under). A caller
   * that writes the dir itself can apply its own appends and swaps
@@ -53,10 +55,8 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
               .as[T](enc)
             // a bounded dir is small by contract: one task reads it, so
             // the limit stops in one job
-            val read =
-              if (maxRows == Int.MaxValue) ds.collect()
-              else ds.coalesce(1).limit(maxRows + 1).collect()
-            Some(read.toVector).filter(_.length <= maxRows)
+            if (maxRows == Int.MaxValue) Some(ds.collect().toVector)
+            else DriverFold.collect(ds.coalesce(1), maxRows).map(_.toVector)
           }
         files = listed
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.engine.{Compactor, FactLog}
+import graft.plans.DriverFold
 
 /** Deduplication operators for a training-data pipeline [EXT]:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -550,21 +551,15 @@ object Dedup {
     * unreachable — at most edges + two label frames are referenced at
     * any point in the loop, and the frames are three longs per
     * doc-that-has-a-dup, far below corpus size by construction.
+    *
+    * A symmetric edge list of at most [[graft.plans.DriverFold.cap]]
+    * rows is read in one bounded collect and folded on the driver
+    * (union-find, the same cluster ids and StructType); a larger dup
+    * graph keeps the distributed min-label loop, which is the 100 TB
+    * path (the pair set grows with the corpus).
     */
-  /** The ceiling on [[clusters]]' driver union-find: a symmetric edge
-    * list at or under this many rows (≈ 4 MiB of (src, dst) longs —
-    * the LitAssignMaxBytes discipline) folds on the driver; a larger
-    * dup graph keeps the distributed min-label loop, which is the
-    * 100 TB path (the pair set grows with the corpus).
-    */
-  private[graft] val CcEdgeFoldMaxRows: Int = 1 << 18
-
   def clusters(pairs: DataFrame, aCol: String = "doc_a",
                bCol: String = "doc_b", maxIters: Int = 25): DataFrame = {
-    // eager lineage cut, reliable iff the session has a checkpoint dir
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint() else df.localCheckpoint(true)
     // eager: materializes the (possibly expensive) pair computation
     // once AND cuts its lineage out of every iteration's plan.
     // Partitioned by src so the per-round edges⨝labels join reuses
@@ -584,58 +579,60 @@ object Dedup {
     // (spec-pinned equal on randomized graphs). A null-keyed edge
     // falls back to the loop (its null algebra stays authoritative),
     // as does any graph past the valve — the 100 TB path.
-    val edgeRows = edges.limit(CcEdgeFoldMaxRows + 1).collect()
-    if (edgeRows.length <= CcEdgeFoldMaxRows &&
-        edgeRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-      val parent = new scala.collection.mutable.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var root = x
-        while (parent.getOrElse(root, root) != root)
-          root = parent.getOrElse(root, root)
-        var cur = x // path compression
-        while (parent.getOrElse(cur, cur) != root) {
-          val nxt = parent.getOrElse(cur, cur)
-          parent.update(cur, root); cur = nxt
+    DriverFold.collect(edges, DriverFold.cap)
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      .map { edgeRows =>
+        val parent = new scala.collection.mutable.HashMap[Long, Long]()
+        def find(x: Long): Long = {
+          var root = x
+          while (parent.getOrElse(root, root) != root)
+            root = parent.getOrElse(root, root)
+          var cur = x // path compression
+          while (parent.getOrElse(cur, cur) != root) {
+            val nxt = parent.getOrElse(cur, cur)
+            parent.update(cur, root); cur = nxt
+          }
+          root
         }
-        root
-      }
-      val nodes = scala.collection.mutable.TreeSet.empty[Long]
-      edgeRows.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        nodes += a; nodes += b
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { // attach the larger root under the smaller:
-          if (ra < rb) parent.update(rb, ra) // the root stays the
-          else parent.update(ra, rb)         // component's MIN id
+        val nodes = scala.collection.mutable.TreeSet.empty[Long]
+        edgeRows.foreach { r =>
+          val a = r.getLong(0); val b = r.getLong(1)
+          nodes += a; nodes += b
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) { // attach the larger root under the smaller:
+            if (ra < rb) parent.update(rb, ra) // the root stays the
+            else parent.update(ra, rb)         // component's MIN id
+          }
         }
+        import scala.jdk.CollectionConverters._
+        import org.apache.spark.sql.types._
+        val nullableIds = edges.schema("src").nullable
+        pairs.sparkSession.createDataFrame(
+          nodes.toSeq.map { id =>
+            val root = find(id)
+            org.apache.spark.sql.Row(id, root, id == root)
+          }.asJava,
+          // the loop's plan derives every column's nullability from the
+          // edge ids (a null-keyed edge keeps its nulls); the fold declares
+          // the same, so both paths return one StructType
+          StructType(Seq(StructField("doc_id", LongType, nullableIds),
+            StructField("cluster_id", LongType, nullableIds),
+            StructField("survivor", BooleanType, nullableIds))))
       }
-      import scala.jdk.CollectionConverters._
-      import org.apache.spark.sql.types._
-      val nullableIds = edges.schema("src").nullable
-      return pairs.sparkSession.createDataFrame(
-        nodes.toSeq.map { id =>
-          val root = find(id)
-          org.apache.spark.sql.Row(id, root, id == root)
-        }.asJava,
-        // the loop's plan derives every column's nullability from the
-        // edge ids (a null-keyed edge keeps its nulls); the fold declares
-        // the same, so both paths return one StructType
-        StructType(Seq(StructField("doc_id", LongType, nullableIds),
-          StructField("cluster_id", LongType, nullableIds),
-          StructField("survivor", BooleanType, nullableIds))))
-    }
-    clustersLoop(edges, maxIters)
+      .getOrElse(clustersLoop(edges, maxIters))
   }
 
-  /** The distributed min-label loop over an already-materialized
-    * SYMMETRIC edge list — [[clusters]]' past-the-valve path, split
-    * out so the spec can pin fold == loop on the same graphs.
+  /** An eager lineage cut, reliable iff the session has a checkpoint
+    * dir.
     */
-  private[ext] def clustersLoop(edges: DataFrame,
-                                maxIters: Int): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint() else df.localCheckpoint(true)
+  private def truncate(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint() else df.localCheckpoint(true)
+
+  /** The distributed min-label loop over an already-materialized
+    * SYMMETRIC edge list — [[clusters]]' past-the-cap path.
+    */
+  private def clustersLoop(edges: DataFrame, maxIters: Int): DataFrame = {
     // round 1 folded into the init: with identity labels, the min over
     // neighbors' labels IS the min neighbor id, which the symmetric
     // edge list yields in one agg — no join, and one fewer loop round

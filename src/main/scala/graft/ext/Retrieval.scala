@@ -1277,17 +1277,7 @@ object Retrieval {
       .map(r => (optLong(r, 0), optSeq(r, 1)))
     val pool = diversifyPoolLocal(lexRows, candRows, fetchedRows, qRows,
       depth, poolSize, c)
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    val poolDf = spark.createDataFrame(
-      pool.map(t => org.apache.spark.sql.Row(
-        t._1.orNull, t._2.orNull, t._3, t._4.orNull)).asJava,
-      StructType(Seq(
-        StructField("query_id", LongType),
-        StructField("vec_id", LongType),
-        StructField("emb", ArrayType(DoubleType)),
-        StructField("rel", DoubleType))))
-    Similarity.mmrRerank(poolDf, k, lambda)
+    Similarity.mmrRerankLocal(spark, pool, k, lambda)
   }
 
   /** The diversify tail folded driver-side — [[hybridQueryStoresDiversify]]'s

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.plans.DriverFold
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
@@ -99,16 +100,6 @@ object Similarity {
         col("sim"), col("rank"))
   }
 
-  /** The mechanical ceiling on [[mmrRerank]]'s one-job pool collect
-    * (r15, VERDICT r14 item 7): pools are |Q|·poolSize rows BY
-    * CONTRACT (KB at any corpus scale), so the bound exists only to
-    * turn "a caller handed us a corpus" from a silent driver OOM into
-    * an immediate, named failure. 65 536 rows is orders of magnitude
-    * above any serving request and, at the family's 64-dim
-    * embeddings, ~35 MB collected — far below driver heap.
-    */
-  private[graft] val MmrMaxPoolRows: Int = 1 << 16
-
   /** MMR diversified top-k [EXT] (Maximal Marginal Relevance,
     * Carbonell & Goldstein, SIGIR 1998 — public): greedy reranking
     * that trades relevance against redundancy — pick_t = argmax of
@@ -150,49 +141,49 @@ object Similarity {
     * reference on adversarial pools (ties, ±0.0, null rel/emb, short
     * pools) and the s14/s18/s19/s24/s28 oracles replay the rounds.
     *
-    * Pool contract: at most [[MmrMaxPoolRows]] rows, and no null
-    * `query_id` or `vec_id` — a pool breaking either fails with an
-    * `IllegalArgumentException` before any pick. (The r14 expression
-    * form ranked null-id rows; every engine pool generator derives its
-    * ids from non-null corpus and query ids, so only a malformed
-    * external pool can hit this.)
+    * Pool contract: at most [[DriverFold.cap]] rows — one bounded read
+    * ([[DriverFold.collectOrFail]]); a larger pool fails with
+    * [[graft.plans.FoldCapExceeded]] naming `mmrRerank pool` before the
+    * driver holds it — and no null `query_id` or `vec_id`, which fails
+    * with an `IllegalArgumentException` before any pick (see
+    * [[mmrRerankLocal]]). A caller already holding its pool on the
+    * driver calls [[mmrRerankLocal]] directly.
     */
-  def mmrRerank(pool: DataFrame, k: Int, lambda: Double): DataFrame = {
+  def mmrRerank(pool: DataFrame, k: Int, lambda: Double): DataFrame =
+    mmrRerankLocal(pool.sparkSession,
+      DriverFold.collectOrFail(pool.select(
+          col("query_id").cast("long").as("query_id"),
+          col("vec_id").cast("long").as("vec_id"),
+          col("emb").cast("array<double>").as("emb"),
+          col("rel").cast("double").as("rel")),
+        DriverFold.cap, "mmrRerank pool").toIndexedSeq
+        .map(r => (optLong(r, 0), optLong(r, 1), optSeq(r, 2),
+          if (r.isNullAt(3)) None else Some(r.getDouble(3)))),
+      k, lambda)
+
+  /** [[mmrRerank]]'s greedy over a pool already on the driver, as
+    * (query_id, vec_id, emb, rel) rows in pool order (a null emb is
+    * null): the serving paths that build their pool from bounded reads
+    * rank it here without a round trip through a frame. Null ids fail
+    * fast with a name, not an NPE mid-fold: every pool generator
+    * derives ids from non-null corpus and query ids, so a null here is
+    * a malformed pool, not a rankable candidate.
+    */
+  private[ext] def mmrRerankLocal(spark: SparkSession,
+      pool: Seq[(Option[Long], Option[Long], Seq[Any], Option[Double])],
+      k: Int, lambda: Double): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(lambda >= 0.0 && lambda <= 1.0,
       s"lambda must be in [0, 1], got $lambda")
-    val spark = pool.sparkSession
     import spark.implicits._
-    // ONE job: collect the KB-by-contract pool. The limit makes the
-    // KB contract MECHANICAL: an uncapped (corpus-sized) pool stops
-    // at MmrMaxPoolRows + 1 collected rows and fails the require
-    // below instead of OOMing the driver.
-    val rows = pool.select(col("query_id").cast("long").as("query_id"),
-        col("vec_id").cast("long").as("vec_id"),
-        col("emb").cast("array<double>").as("emb"),
-        col("rel").cast("double").as("rel"))
-      .limit(MmrMaxPoolRows + 1)
-      .collect()
-    require(rows.length <= MmrMaxPoolRows,
-      s"mmrRerank pool exceeds $MmrMaxPoolRows rows — pools are " +
-        "|Q|*poolSize by contract (an ANN index's bounded nomination, " +
-        "never a corpus); cap the pool before reranking")
-    // null ids fail fast with a name, not an NPE mid-fold: the
-    // expression-form greedy produced rows for null keys, but every
-    // pool generator derives ids from non-null corpus/query ids —
-    // a null here is a malformed pool, not a rankable candidate
-    require(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+    require(pool.forall(r => r._1.isDefined && r._2.isDefined),
       "mmrRerank pool has null query_id/vec_id rows — pool ids must " +
         "be non-null (they come from corpus vec_ids by contract)")
     final case class Cand(vec: Long, emb: Seq[Any], rel: Option[Double])
-    val byQuery = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+    val byQuery = pool.groupBy(_._1.get).toSeq.sortBy(_._1)
     val picks = Vector.newBuilder[(Long, Long, Int)]
     for ((qid, rs) <- byQuery) {
-      val cands = rs.toSeq.map { r =>
-        Cand(r.getLong(1),
-          if (r.isNullAt(2)) null else r.getSeq[Any](2),
-          if (r.isNullAt(3)) None else Some(r.getDouble(3)))
-      }
+      val cands = rs.map(r => Cand(r._2.get, r._3, r._4))
       // argmax by (key, −vec_id) under max_by's struct ordering:
       // a null first field is SMALLEST; doubles compare SQL-style
       def argmax(cs: Seq[Cand], key: Cand => Option[Double]): Cand =
@@ -1627,7 +1618,7 @@ object Similarity {
     * contract cannot drift). `e` is (vec_id long, emb array<double>).
     *
     * Two forms with identical rows and schemas: a corpus that
-    * [[driverCorpus]] admits (clean, within `maxBytes`) is collected
+    * [[driverCorpus]] admits (clean, within its row cap) is collected
     * ONCE and trained on the driver ([[ivfPqIndexLocal]]), and its
     * rows come back in `corpus` for the caller's statistics; any other
     * corpus runs the distributed trainer ([[ivfPqIndexDistributed]]).
@@ -1636,13 +1627,12 @@ object Similarity {
     */
   private[ext] def ivfPqIndex(e: DataFrame, nlist: Int, m: Int,
                               ksub: Int, dim: Int, iters: Int,
-                              coarseIters: Int, knownRows: Long = -1L,
-                              maxBytes: Long = LitAssignMaxBytes)
+                              coarseIters: Int, knownRows: Long = -1L)
       : IvfPqIndex = {
     require(dim % m == 0, s"dim $dim not divisible by m $m subspaces")
     val corpus =
       if (nlist >= 1 && iters >= 1 && coarseIters >= 1)
-        driverCorpus(e, dim, maxBytes, knownRows)
+        driverCorpus(e, dim, knownRows)
       else None
     corpus match {
       case Some(c) =>
@@ -1667,12 +1657,13 @@ object Similarity {
     val rows: IndexedSeq[(Long, Array[Double])] = parts.flatten
   }
 
-  /** Collect a prepped (vec_id, emb) corpus to the driver when it fits
-    * `maxBytes` — rows × (8 + 8·dim), the raw id + vector bytes, the
-    * measure [[LitAssignMaxBytes]] already bounds the centroid
-    * literal with (the corpus is an upper bound on any centroid
-    * table). The collect is bounded in code (`limit(capRows + 1)`).
-    * Only CLEAN input qualifies, the domain on which the driver
+  /** Collect a prepped (vec_id, emb) corpus to the driver when it has
+    * at most min([[DriverFold.cap]], [[LitAssignMaxBytes]] / (8 + 8·dim))
+    * rows: the fold cap, and the raw id + vector bytes the centroid
+    * literal is bounded by (the corpus is an upper bound on any
+    * centroid table) — 8,065 rows at dim 64. The collect is one
+    * bounded read ([[DriverFold.collect]]). Only CLEAN input
+    * qualifies, the domain on which the driver
     * trainer provably reproduces the engine bit for bit:
     *
     *  - every vec_id non-null and distinct (the distributed forms group
@@ -1687,15 +1678,16 @@ object Similarity {
     * None (the distributed path) for anything else: an empty, dirty,
     * huge-valued or past-the-cap corpus.
     */
-  private[ext] def driverCorpus(e: DataFrame, dim: Int, maxBytes: Long,
+  private[ext] def driverCorpus(e: DataFrame, dim: Int,
                                 knownRows: Long = -1L): Option[DriverCorpus] = {
-    val capRows = maxBytes / (8L + 8L * dim)
-    if (dim < 1 || capRows <= 0L || knownRows > capRows) None
+    val capRows = if (dim < 1) 0 else math.min(DriverFold.cap.toLong,
+      LitAssignMaxBytes / (8L + 8L * dim)).toInt
+    if (capRows <= 0 || knownRows > capRows) None
     else {
-      val got = e.select(spark_partition_id(), col("vec_id"), col("emb"))
-        .limit(math.min(capRows, Int.MaxValue - 1L).toInt + 1)
-        .collect()
-      val clean = got.nonEmpty && got.length <= capRows &&
+      val got = DriverFold.collect(
+        e.select(spark_partition_id(), col("vec_id"), col("emb")), capRows)
+        .getOrElse(Array.empty[Row])
+      val clean = got.nonEmpty &&
         got.forall(r => !r.isNullAt(1) && !r.isNullAt(2) && {
           val v = r.getSeq[Any](2)
           v.length == dim && v.forall(x =>

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.plans.DriverFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1630,6 +1631,11 @@ object TextAnalysis {
   final case class BpeMerge(rank: Int, pair: String, merged: String,
                             freq: Long)
 
+  /** How many merges [[bpeTrain]]'s distributed loop applies between
+    * re-persists of its working dictionary.
+    */
+  private[graft] val BpeRematerializeEvery = 16
+
   /** Byte-pair-encoding merge training (Sennrich, Haddow & Birch 2016,
     * "Neural Machine Translation of Rare Words with Subword Units" —
     * public): the subword tokenizer trainer a 100 TB pipeline runs
@@ -1653,30 +1659,16 @@ object TextAnalysis {
     * re-persisted (applied replaces collapse into the cached rows)
     * and the stale cache dropped, so each iteration evaluates a
     * bounded-length chain regardless of nMerges.
+    *
+    * The dictionary is vocab-bounded: one at or under
+    * [[graft.plans.DriverFold.cap]] rows is collected from the
+    * (already materialized) cache in one bounded read and merged by
+    * the driver loop — [[bpeTrainLocal]]'s spec-pinned merge-identical
+    * arithmetic — so no merge round costs a distributed aggregate, a
+    * one-row collect and a replan of a longer replace chain. A
+    * web-scale vocabulary past the cap keeps the distributed loop.
     */
-  private[graft] val BpeRematerializeEvery = 16
-
-  /** The ceiling on [[bpeTrain]]'s driver fold: a word-frequency
-    * dictionary at or under this many rows is collected from the
-    * (already materialized) cache and merged by the driver loop —
-    * [[bpeTrainLocal]]'s spec-pinned merge-identical arithmetic — so
-    * every merge round stops costing a distributed aggregate + a
-    * one-row collect + a replan of a longer replace chain. A
-    * web-scale vocabulary past the cap keeps the distributed loop
-    * (whose replace chain stays bounded via
-    * [[BpeRematerializeEvery]]).
-    */
-  private[graft] val BpeDictFoldMaxRows: Int = 1 << 17
-
-  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[BpeMerge] =
-    bpeTrain(docs, nMerges, BpeDictFoldMaxRows)
-
-  /** The valve-parameterized form — the spec forces each path
-    * (`foldMaxRows = 0` → distributed loop, `Int.MaxValue` → driver
-    * fold) to pin them merge-for-merge equal.
-    */
-  private[graft] def bpeTrain(docs: DataFrame, nMerges: Int,
-                              foldMaxRows: Int): Seq[BpeMerge] = {
+  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[BpeMerge] = {
     require(nMerges >= 1, "bpeTrain needs nMerges >= 1")
     val dict = docs
       .select(explode(tokens(col("text"))).as("word"))
@@ -1684,19 +1676,14 @@ object TextAnalysis {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(bpeInit(col("word")).as("s"), col("freq"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r15: the dictionary is vocab-bounded — when it fits the valve,
-    // collect it off the cache (one job) and run the driver merge
-    // loop, which is merge-for-merge identical by the bpeTrainLocal
-    // spec pin. Null-delimited rows cannot occur (bpeInit of a
-    // non-empty word), so no null guard is needed beyond the cap.
-    if (foldMaxRows > 0) {
-      val capped = math.min(foldMaxRows.toLong, Int.MaxValue - 1L).toInt
-      val head = dict.limit(capped + 1).collect()
-      if (head.length <= capped) {
+    // Null-delimited rows cannot occur (bpeInit of a non-empty word),
+    // so no null guard is needed beyond the cap.
+    DriverFold.collect(dict, DriverFold.cap) match {
+      case Some(head) =>
         dict.unpersist()
         return bpeMergeLoop(head.map(_.getString(0)),
           head.map(_.getLong(1)), nMerges)
-      }
+      case None =>
     }
     var cached = dict
     try {

@@ -278,25 +278,17 @@ object VectorIndex {
     * store at `store` (tombstones included — a rebuild starts clean);
     * meta lands last.
     *
-    * A small clean corpus is trained on the driver from one bounded
-    * collect, and the drift statistics, audit row and PCA axis come
-    * from the same rows ([[localStats]]); any other corpus runs the
-    * distributed trainer and statistics. Both write identical rows
-    * with identical schemas and file counts (spec-pinned).
+    * A small clean corpus — at most [[DriverFold.cap]] rows that also
+    * fit [[Similarity.LitAssignMaxBytes]] ([[Similarity.driverCorpus]])
+    * — is trained on the driver from one bounded collect, and the
+    * drift statistics, audit row and PCA axis come from the same rows
+    * ([[localStats]]); any other corpus runs the distributed trainer
+    * and statistics. Both write identical rows with identical schemas
+    * and file counts (spec-pinned under [[DriverFold.withCap]]).
     */
   def init(embeddings: DataFrame, store: String, nlist: Int = 0,
            m: Int = 8, ksub: Int = 16, dim: Int = 64, iters: Int = 1,
-           coarseIters: Int = 2): Unit =
-    init(embeddings, store, nlist, m, ksub, dim, iters, coarseIters,
-      Similarity.LitAssignMaxBytes)
-
-  /** [[init]] with the driver-training cap as a parameter: 0 forces
-    * the distributed trainer, `Long.MaxValue` admits any clean corpus.
-    */
-  private[graft] def init(embeddings: DataFrame, store: String,
-                          nlist: Int, m: Int, ksub: Int, dim: Int,
-                          iters: Int, coarseIters: Int,
-                          driverMaxBytes: Long): Unit = {
+           coarseIters: Int = 2): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = prep(embeddings)
@@ -305,7 +297,7 @@ object VectorIndex {
       val (n, s, es) = fingerprint(e)
       val nl = resolveNlist(nlist, n)
       val ix = Similarity.ivfPqIndex(e, nl, m, ksub, dim, iters,
-        coarseIters, n, driverMaxBytes)
+        coarseIters, n)
       ix.centroids.write.mode("overwrite").parquet(s"$store/centroids")
       ix.codebooks.write.mode("overwrite").parquet(s"$store/codebooks")
       ix.codes.write.mode("overwrite").parquet(s"$store/codes")
@@ -1253,26 +1245,7 @@ object VectorIndex {
       (qid, vid, rel) <- pool0
       emb <- vid.toSeq.flatMap(embById.getOrElse(_, Nil))
     } yield (qid, vid, emb, rel)
-    Similarity.mmrRerank(localPoolDf(spark, pool), k, lambda)
-  }
-
-  /** A collected (query_id, vec_id, emb, rel) pool as a LOCAL
-    * relation — the zero-job input [[Similarity.mmrRerank]]'s
-    * one-collect fold consumes.
-    */
-  private def localPoolDf(spark: SparkSession,
-      pool: Seq[(Option[Long], Option[Long], Seq[Any], Option[Double])])
-      : DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      pool.map(t => org.apache.spark.sql.Row(
-        t._1.orNull, t._2.orNull, t._3, t._4.orNull)).asJava,
-      StructType(Seq(
-        StructField("query_id", LongType),
-        StructField("vec_id", LongType),
-        StructField("emb", ArrayType(DoubleType)),
-        StructField("rel", DoubleType))))
+    Similarity.mmrRerankLocal(spark, pool, k, lambda)
   }
 
   /** Two-stage retrieval — the standard PQ serving tail: the store's
@@ -1382,7 +1355,7 @@ object VectorIndex {
     } yield (qid, vid, emb,
       Similarity.localCosine(emb, qEmb)
         .map(Similarity.localRound(_, 4)))
-    Similarity.mmrRerank(localPoolDf(spark, pool), k, lambda)
+    Similarity.mmrRerankLocal(spark, pool, k, lambda)
   }
 
   /** [[query]]'s output: [[Similarity.ivfPqRank]]'s exact schema, whose

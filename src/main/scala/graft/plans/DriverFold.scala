@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, InSet, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -83,7 +83,7 @@ class DriverFoldStrategy extends SparkStrategy {
 object DriverFold {
 
   /** The ceiling on the rows a driver fold materializes, each read with
-    * `limit(cap + 1)`:
+    * `limit(cap + 1)` by [[collect]] or a [[frame]]:
     *
     *  - [[graft.ext.VectorIndex.query]] collects at most this / (m·ksub)
     *    query rows, since its dtable fold builds |Q|·m·ksub rows from
@@ -95,12 +95,22 @@ object DriverFold {
     *    ([[graft.catalog.CatalogOps.lastEndTimes]],
     *    [[graft.catalog.CatalogOps.sessionDiff]]) fold at most this many
     *    table records;
+    *  - [[graft.ext.Similarity.mmrRerank]] holds a pool of at most this
+    *    many rows;
+    *  - [[graft.ext.TextAnalysis.bpeTrain]] merges a word-frequency
+    *    dictionary of at most this many words on the driver, and
+    *    [[graft.ext.Dedup.clusters]] a symmetric edge list of at most
+    *    this many rows;
+    *  - [[graft.ext.VectorIndex.init]] (through
+    *    [[graft.ext.Similarity.driverCorpus]]) trains on the driver a
+    *    corpus of at most this many rows that also fits
+    *    [[graft.ext.Similarity.LitAssignMaxBytes]];
     *  - every other serving-path collect (legs, candidates, fetches,
     *    query vectors) is capped here too.
     *
-    * Serving requests and catalogs are small by contract. Past the cap
-    * a fold with a distributed form runs it (same values); one without
-    * fails with [[FoldCapExceeded]].
+    * Serving requests, pools, dictionaries, dup graphs and catalogs are
+    * small by contract. Past the cap a fold with a distributed form
+    * runs it (same values); one without fails with [[FoldCapExceeded]].
     */
   val MaxRows: Int = 1 << 16
 
@@ -112,10 +122,17 @@ object DriverFold {
   def cap: Int = capOverride.value.getOrElse(MaxRows)
 
   /** Run `body` with every driver fold capped at `cap` rows — the
-    * specs' way to force each fold both ways at the cap.
+    * specs' way to force each fold both ways at the cap. The cap must
+    * leave room for the read's one extra row.
     */
   private[graft] def withCap[T](cap: Int)(body: => T): T =
-    capOverride.withValue(Some(cap))(body)
+    capOverride.withValue(Some(checked(cap)))(body)
+
+  private def checked(cap: Int): Int = {
+    require(cap >= 0 && cap < Int.MaxValue,
+      s"a driver-fold cap must be in [0, Int.MaxValue), got $cap")
+    cap
+  }
 
   /** A lazy frame of `schema` whose collect folds `child`'s rows on the
     * driver, or runs `fallback` past the cap (see [[DriverFoldPlan]]).
@@ -129,7 +146,7 @@ object DriverFold {
     org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
       DriverFoldPlan(child.queryExecution.analyzed,
         DataTypeUtils.toAttributes(schema),
-        new Fold(name, cap, run, () => fallback)))
+        new Fold(name, checked(cap), run, () => fallback)))
   }
 
   /** `c IN values` for BIGINT ids, as one set-membership expression:
@@ -144,19 +161,39 @@ object DriverFold {
       org.apache.spark.sql.GraftColumnBridge.expression(c.cast(LongType)),
       values.toSet[Any]))
 
-  /** `df`'s rows when there are at most `cap` of them, read with
+  /** `ds`'s rows when there are at most `cap` of them, read with
     * `limit(cap + 1)`; None past the cap.
     */
-  def collect(df: DataFrame, cap: Int): Option[Array[Row]] = {
-    val rows = df.limit(cap + 1).collect()
+  def collect[T](ds: Dataset[T], cap: Int): Option[Array[T]] = {
+    val read = ds.limit(checked(cap) + 1)
+    val rows = atCaller(ds.sparkSession)(read.collect())
     if (rows.length > cap) None else Some(rows)
   }
+
+  /** Run `body` with its jobs' call site set to the first frame outside
+    * this file, as Spark would name them had the caller collected
+    * directly: a fold's read is attributed to the code that asked for
+    * it, not to [[collect]].
+    */
+  private def atCaller[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = Thread.currentThread.getStackTrace.find(f =>
+        !Seq("java.", "scala.", "graft.plans.DriverFold$")
+          .exists(f.getClassName.startsWith))
+      .map(f => s"collect at ${f.getFileName}:${f.getLineNumber}")
+    val prev = sc.getLocalProperty(CallSiteShort)
+    sc.setLocalProperty(CallSiteShort, caller.orNull)
+    try body finally sc.setLocalProperty(CallSiteShort, prev)
+  }
+
+  /** The local property Spark names a job by, when it is set. */
+  private val CallSiteShort = "callSite.short"
 
   /** [[collect]] for a fold with no distributed form: past the cap it
     * fails with [[FoldCapExceeded]], naming `what`.
     */
-  def collectOrFail(df: DataFrame, cap: Int, what: String): Array[Row] =
-    collect(df, cap).getOrElse(throw new FoldCapExceeded(what, cap))
+  def collectOrFail[T](ds: Dataset[T], cap: Int, what: String): Array[T] =
+    collect(ds, cap).getOrElse(throw new FoldCapExceeded(what, cap))
 
   /** Ensure the planner knows the operator on sessions built without
     * [[graft.GraftExtensions]]; idempotent.

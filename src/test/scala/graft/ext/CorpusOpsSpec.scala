@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{SparkTestBase, Tables}
+import graft.plans.DriverFold
 import org.apache.spark.sql.functions._
 
 /** Contracts of the corpus-management operators added for the
@@ -781,19 +782,19 @@ class CorpusOpsSpec extends SparkTestBase {
     "without leaking cache or changing results") {
     import spark.implicits._
     // one 26-char word: 20 merges cross the remat boundary at 16.
-    // foldMaxRows = 0 forces the DISTRIBUTED loop (the r15 dictionary
-    // valve would otherwise fold this KB dict on the driver)
+    // withCap(0) forces the DISTRIBUTED loop (the dictionary fold
+    // would otherwise merge this KB dict on the driver)
     val docs = Seq((1L, "abcdefghijklmnopqrstuvwxyz"))
       .toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.size
-    val merges = TextAnalysis.bpeTrain(docs, 20, foldMaxRows = 0)
+    val merges = DriverFold.withCap(0)(TextAnalysis.bpeTrain(docs, 20))
     assert(merges.size == 20 && merges.map(_.rank) == (1 to 20),
       s"got ${merges.size} merges")
     assert(spark.sparkContext.getPersistentRDDs.size == before,
       "re-materialization leaked cached partitions")
     // determinism across the boundary: partitioning must not matter
-    assert(TextAnalysis.bpeTrain(docs.repartition(5), 20,
-      foldMaxRows = 0) == merges)
+    assert(DriverFold.withCap(0)(
+      TextAnalysis.bpeTrain(docs.repartition(5), 20)) == merges)
     // and the public (valved) entry folds to the same merges
     assert(TextAnalysis.bpeTrain(docs, 20) == merges)
   }
@@ -803,26 +804,51 @@ class CorpusOpsSpec extends SparkTestBase {
     import spark.implicits._
     // the 26-char word crosses the distributed trainer's remat
     // boundary; tie-heavy frequencies exercise the UTF-8 tie-break.
-    // foldMaxRows = 0 forces the distributed loop so this pin keeps
-    // covering BOTH paths of the r15 dictionary valve.
+    // withCap(0) forces the distributed loop so this pin keeps
+    // covering BOTH paths of the dictionary fold.
     val tiny = Seq((1L, "abcdefghijklmnopqrstuvwxyz ba ab ab ba"))
       .toDF("doc_id", "text")
     assert(TextAnalysis.bpeTrainLocal(tiny, 20)
-      == TextAnalysis.bpeTrain(tiny, 20, foldMaxRows = 0),
+      == DriverFold.withCap(0)(TextAnalysis.bpeTrain(tiny, 20)),
       "local trainer diverged from the distributed trainer")
     // exhaustion parity
     val short = Seq((1L, "ab ab")).toDF("doc_id", "text")
     assert(TextAnalysis.bpeTrainLocal(short, 5)
-      == TextAnalysis.bpeTrain(short, 5, foldMaxRows = 0))
+      == DriverFold.withCap(0)(TextAnalysis.bpeTrain(short, 5)))
     // the real gate corpus, past the remat boundary — distributed
     // loop vs the driver fold the public entry now takes
     val docs = graft.Tables.documents(spark, sf0001)
       .select("doc_id", "text")
-    val dist = TextAnalysis.bpeTrain(docs, 18, foldMaxRows = 0)
+    val dist = DriverFold.withCap(0)(TextAnalysis.bpeTrain(docs, 18))
     assert(TextAnalysis.bpeTrainLocal(docs, 18) == dist,
       "local trainer diverged on the gate corpus")
     assert(TextAnalysis.bpeTrain(docs, 18) == dist,
       "the valved public entry diverged from the distributed loop")
+  }
+
+  test("bpeTrain at the dictionary cap ±1: the driver fold at and " +
+    "above it, the distributed loop below, merge-for-merge equal") {
+    val docs = graft.Tables.documents(spark, sf0001)
+      .select("doc_id", "text")
+    val words = docs.select(explode(TextAnalysis.tokens(col("text")))
+      .as("w")).filter(length(col("w")) > 0).distinct().count().toInt
+    val nMerges = 18
+    def run(cap: Int): (Seq[TextAnalysis.BpeMerge], Int) = {
+      var merges = Seq.empty[TextAnalysis.BpeMerge]
+      val jobs = jobsDuring {
+        merges = DriverFold.withCap(cap)(TextAnalysis.bpeTrain(docs, nMerges))
+      }
+      (merges, jobs.size)
+    }
+    val (below, belowJobs) = run(words - 1)
+    assert(belowJobs > nMerges,
+      s"one word past the cap should run the loop: $belowJobs jobs")
+    for (cap <- Seq(words, words + 1)) {
+      val (at, atJobs) = run(cap)
+      assert(atJobs < nMerges,
+        s"a dictionary within cap $cap should fold: $atJobs jobs")
+      assert(at == below, s"cap $cap: the fold diverged from the loop")
+    }
   }
 
   test("bpe merge replace cannot cross a symbol boundary, and the " +

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{SparkTestBase, Tables}
+import graft.plans.DriverFold
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkTestBase {
@@ -248,7 +249,6 @@ class DedupSpec extends SparkTestBase {
   test("cc driver union-find == distributed min-label loop on " +
     "randomized graphs (the r15 valve's two paths)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(421)
     val graphs = (1 to 4).map { _ =>
       val n = 20 + rnd.nextInt(60)
@@ -258,28 +258,31 @@ class DedupSpec extends SparkTestBase {
     } :+ (0L until 40L).map(i => (i, i + 1)) // pathological chain
     // the first graph once more with nullable id columns: the schema
     // both paths return follows the input's nullability
-    val inputs = graphs.map(_.toDF("doc_a", "doc_b")) :+
-      graphs.head.map { case (a, b) => (Option(a), Option(b)) }
-        .toDF("doc_a", "doc_b")
-    for (df <- inputs) {
-      // public entry: under the edge valve, the driver union-find
-      val foldDf = Dedup.clusters(df)
-      val fold = foldDf.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      // the past-the-valve path, forced on the same symmetric edges
-      val edges = df.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(df.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(col("src"))
-        .localCheckpoint(true)
-      val loopDf = Dedup.clustersLoop(edges, maxIters = 25)
-      val loop = loopDf.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(foldDf.schema == loopDf.schema,
-        s"fold schema ${foldDf.schema} != loop schema ${loopDf.schema}")
-      assert(fold == loop,
-        s"cc fold diverged from the loop on ${df.take(8).toSeq}…:\n" +
-          s"  fold: ${fold.toSeq.sortBy(_._1).take(10)}\n" +
-          s"  loop: ${loop.toSeq.sortBy(_._1).take(10)}")
+    val inputs = graphs.map(g => (g.size, g.toDF("doc_a", "doc_b"))) :+
+      ((graphs.head.size, graphs.head
+        .map { case (a, b) => (Option(a), Option(b)) }
+        .toDF("doc_a", "doc_b")))
+    for ((nPairs, df) <- inputs) {
+      // clusters folds the symmetric edge list: two rows per pair
+      val edgeRows = 2 * nPairs
+      def run(cap: Int) = {
+        val out = DriverFold.withCap(cap)(Dedup.clusters(df))
+        (out.isLocal, out.schema, out.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet)
+      }
+      val (loopLocal, loopSchema, loop) = run(edgeRows - 1)
+      assert(!loopLocal, s"$edgeRows edges past cap ${edgeRows - 1} " +
+        "should run the distributed loop")
+      for (cap <- Seq(edgeRows, edgeRows + 1)) {
+        val (foldLocal, foldSchema, fold) = run(cap)
+        assert(foldLocal, s"$edgeRows edges within cap $cap should fold")
+        assert(foldSchema == loopSchema,
+          s"fold schema $foldSchema != loop schema $loopSchema")
+        assert(fold == loop,
+          s"cc fold diverged from the loop on ${df.take(8).toSeq}…:\n" +
+            s"  fold: ${fold.toSeq.sortBy(_._1).take(10)}\n" +
+            s"  loop: ${loop.toSeq.sortBy(_._1).take(10)}")
+      }
     }
   }
 

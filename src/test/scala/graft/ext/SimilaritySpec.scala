@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{SparkTestBase, Tables}
+import graft.plans.{DriverFold, FoldCapExceeded}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkTestBase {
@@ -1260,17 +1261,26 @@ class SimilaritySpec extends SparkTestBase {
 
   test("mmr rejects an uncapped (corpus-sized) pool instead of " +
     "collecting it") {
-    // one query, MmrMaxPoolRows + 1 candidates: the KB-by-contract
-    // bound must refuse before the driver holds the whole thing
-    val big = spark.range(Similarity.MmrMaxPoolRows + 1)
+    // one query, n candidates: one row past the cap must refuse by
+    // name before the driver holds the pool
+    val n = 40
+    val pool = spark.range(n)
       .select(lit(1L).as("query_id"), col("id").as("vec_id"),
-        array(lit(1.0), lit(0.0)).as("emb"),
-        lit(0.5).as("rel"))
-    val e = intercept[IllegalArgumentException] {
-      Similarity.mmrRerank(big, k = 2, lambda = 0.7)
+        array(cos(col("id")), sin(col("id"))).as("emb"),
+        (col("id") / n).as("rel"))
+    val e = intercept[FoldCapExceeded] {
+      DriverFold.withCap(n - 1)(Similarity.mmrRerank(pool, k = 4,
+        lambda = 0.7))
     }
-    assert(e.getMessage.contains("pool exceeds"),
+    assert(e.getMessage.contains("mmrRerank pool"),
       s"wrong failure: ${e.getMessage}")
+    def picks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    val atCap = picks(DriverFold.withCap(n)(
+      Similarity.mmrRerank(pool, k = 4, lambda = 0.7)))
+    assert(atCap.size == 4 && atCap ==
+      picks(Similarity.mmrRerank(pool, k = 4, lambda = 0.7)),
+      s"the pool at the cap ranked differently: $atCap")
   }
 
   test("mmr fails fast, by name, on null pool ids") {

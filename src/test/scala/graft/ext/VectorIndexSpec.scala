@@ -928,18 +928,19 @@ class VectorIndexSpec extends SparkTestBase {
 
   private type Jobs = Seq[(Option[String], String)]
 
-  /** Init `corpus` with the driver trainer forced on and off; returns
-    * the two stores and each init's jobs (execution id, call site).
+  /** Init `corpus` at the default fold cap (the driver trainer) and
+    * at cap 0 (the distributed one); returns the two stores and each
+    * init's jobs (execution id, call site).
     */
   private def initBothWays(corpus: DataFrame, prefix: String, nlist: Int,
                            m: Int, ksub: Int, dim: Int, iters: Int,
                            coarseIters: Int): (String, String, Jobs, Jobs) = {
     val (onSt, offSt) = (store(s"$prefix-on"), store(s"$prefix-off"))
-    def run(st: String, cap: Long): Jobs = jobSitesDuring {
-      VectorIndex.init(corpus, st, nlist, m, ksub, dim, iters, coarseIters,
-        cap)
+    def run(st: String, cap: Int): Jobs = jobSitesDuring {
+      DriverFold.withCap(cap)(VectorIndex.init(corpus, st, nlist, m, ksub,
+        dim, iters, coarseIters))
     }
-    (onSt, offSt, run(onSt, Long.MaxValue), run(offSt, 0L))
+    (onSt, offSt, run(onSt, DriverFold.MaxRows), run(offSt, 0))
   }
 
   private def assertSameStore(on: String, off: String, what: String): Unit =
@@ -1031,20 +1032,21 @@ class VectorIndexSpec extends SparkTestBase {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val e = Tables.embeddings(spark, sf0001)
-    val n = e.count()
-    val rowBytes = 8L + 8L * 64
+    val n = e.count().toInt
     val prepped = e.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding").cast("array<double>").as("emb"))
     // the collect itself bounds the corpus (no known row count)
-    assert(Similarity.driverCorpus(prepped, 64, n * rowBytes)
+    assert(DriverFold.withCap(n)(Similarity.driverCorpus(prepped, 64))
       .exists(_.rows.size == n))
-    assert(Similarity.driverCorpus(prepped, 64, n * rowBytes - 1).isEmpty)
+    assert(DriverFold.withCap(n - 1)(Similarity.driverCorpus(prepped, 64))
+      .isEmpty)
     val (atCap, pastCap) = (store("vidx-cap-at"), store("vidx-cap-past"))
     val atJobs = jobSitesDuring {
-      VectorIndex.init(e, atCap, 0, 8, 16, 64, 1, 2, n * rowBytes)
+      DriverFold.withCap(n)(VectorIndex.init(e, atCap, 0, 8, 16, 64, 1, 2))
     }
     val pastJobs = jobSitesDuring {
-      VectorIndex.init(e, pastCap, 0, 8, 16, 64, 1, 2, n * rowBytes - 1)
+      DriverFold.withCap(n - 1)(
+        VectorIndex.init(e, pastCap, 0, 8, 16, 64, 1, 2))
     }
     assert(trainingJobs(atJobs).isEmpty, s"at the cap: $atJobs")
     assert(trainingJobs(pastJobs).exists(_.contains("Pca.scala")),
@@ -1072,12 +1074,12 @@ class VectorIndexSpec extends SparkTestBase {
         ("null embedding", corpus(11, _ => null), None),
         ("duplicate id", dupIds, None))) {
       assert(Similarity.driverCorpus(dirty.select(col("vec_id"),
-          col("embedding").as("emb")), 64, Long.MaxValue).isEmpty,
+          col("embedding").as("emb")), 64).isEmpty,
         s"$what: a dirty corpus was admitted to the driver path")
       val (on, off) = (store("vidx-dirty-on"), store("vidx-dirty-off"))
-      def outcome(st: String, cap: Long): Either[String, Seq[Any]] =
-        scala.util.Try(
-          VectorIndex.init(dirty, st, 4, 8, 16, 64, 1, 2, cap)).toEither
+      def outcome(st: String, cap: Int): Either[String, Seq[Any]] =
+        scala.util.Try(DriverFold.withCap(cap)(
+          VectorIndex.init(dirty, st, 4, 8, 16, 64, 1, 2))).toEither
           .left.map {
             case t: org.apache.spark.SparkThrowable
                 if t.getCondition != null =>
@@ -1085,9 +1087,10 @@ class VectorIndexSpec extends SparkTestBase {
             case t => s"${t.getClass.getName}: ${t.getMessage}"
           }
           .map(_ => StoreDirs.map(d => dirState(s"$st/$d")))
-      val (onOut, offOut) = (outcome(on, Long.MaxValue), outcome(off, 0L))
+      val (onOut, offOut) =
+        (outcome(on, DriverFold.MaxRows), outcome(off, 0))
       assert(onOut == offOut,
-        s"$what: the uncapped init differs from today's distributed one")
+        s"$what: the default-cap init differs from the distributed one")
       for (id <- badId; out <- Seq(onOut, offOut))
         assert(out.left.exists(_.contains(nonFinite(id))), s"$what: $out")
     }
