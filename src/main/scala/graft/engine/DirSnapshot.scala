@@ -54,9 +54,10 @@ final class DirSnapshot[T](val dir: String, val maxRows: Int = Int.MaxValue)(
               .parquet(listed.toSeq.map(n => new Path(dir, n).toString): _*)
               .as[T](enc)
             // a bounded dir is small by contract: one task reads it, so
-            // the limit stops in one job
+            // the limit stops in one job, named for this reload
             if (maxRows == Int.MaxValue) Some(ds.collect().toVector)
-            else DriverFold.collect(ds.coalesce(1), maxRows).map(_.toVector)
+            else DirSnapshot.asReload(spark)(
+              DriverFold.collect(ds.coalesce(1), maxRows).map(_.toVector))
           }
         files = listed
       }
@@ -113,6 +114,19 @@ object DirSnapshot {
   private[engine] def held(spark: SparkSession,
                            dir: String): Option[DirSnapshot[Row]] =
     Option(snapshots.get(key(spark, dir)))
+
+  /** The call site a bounded reload's job is named by. */
+  private[engine] val ReloadSite = "collect at DirSnapshot.reload"
+
+  /** Run `body` with its jobs named [[ReloadSite]] rather than by the
+    * shared bounded read's frame in `DriverFold`.
+    */
+  private def asReload[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("callSite.short")
+    sc.setCallSite(ReloadSite)
+    try body finally sc.setLocalProperty("callSite.short", prev)
+  }
 
   private def key(spark: SparkSession, dir: String): String =
     Compactor.fs(spark, dir).makeQualified(new Path(dir)).toString

@@ -164,18 +164,21 @@ object Similarity {
   /** [[mmrRerank]]'s greedy over a pool already on the driver, as
     * (query_id, vec_id, emb, rel) rows in pool order (a null emb is
     * null): the serving paths that build their pool from bounded reads
-    * rank it here without a round trip through a frame. Null ids fail
-    * fast with a name, not an NPE mid-fold: every pool generator
-    * derives ids from non-null corpus and query ids, so a null here is
-    * a malformed pool, not a rankable candidate.
+    * rank it here without a round trip through a frame. `pool` is
+    * read only after `k` and `lambda` pass, so a bad argument fails by
+    * name before [[mmrRerank]]'s collect runs. Null ids fail fast with
+    * a name, not an NPE mid-fold: every pool generator derives ids from
+    * non-null corpus and query ids, so a null here is a malformed pool,
+    * not a rankable candidate.
     */
   private[ext] def mmrRerankLocal(spark: SparkSession,
-      pool: Seq[(Option[Long], Option[Long], Seq[Any], Option[Double])],
+      rows: => Seq[(Option[Long], Option[Long], Seq[Any], Option[Double])],
       k: Int, lambda: Double): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(lambda >= 0.0 && lambda <= 1.0,
       s"lambda must be in [0, 1], got $lambda")
     import spark.implicits._
+    val pool = rows
     require(pool.forall(r => r._1.isDefined && r._2.isDefined),
       "mmrRerank pool has null query_id/vec_id rows — pool ids must " +
         "be non-null (they come from corpus vec_ids by contract)")

@@ -165,29 +165,9 @@ object DriverFold {
     * `limit(cap + 1)`; None past the cap.
     */
   def collect[T](ds: Dataset[T], cap: Int): Option[Array[T]] = {
-    val read = ds.limit(checked(cap) + 1)
-    val rows = atCaller(ds.sparkSession)(read.collect())
+    val rows = ds.limit(checked(cap) + 1).collect()
     if (rows.length > cap) None else Some(rows)
   }
-
-  /** Run `body` with its jobs' call site set to the first frame outside
-    * this file, as Spark would name them had the caller collected
-    * directly: a fold's read is attributed to the code that asked for
-    * it, not to [[collect]].
-    */
-  private def atCaller[T](spark: SparkSession)(body: => T): T = {
-    val sc = spark.sparkContext
-    val caller = Thread.currentThread.getStackTrace.find(f =>
-        !Seq("java.", "scala.", "graft.plans.DriverFold$")
-          .exists(f.getClassName.startsWith))
-      .map(f => s"collect at ${f.getFileName}:${f.getLineNumber}")
-    val prev = sc.getLocalProperty(CallSiteShort)
-    sc.setLocalProperty(CallSiteShort, caller.orNull)
-    try body finally sc.setLocalProperty(CallSiteShort, prev)
-  }
-
-  /** The local property Spark names a job by, when it is set. */
-  private val CallSiteShort = "callSite.short"
 
   /** [[collect]] for a fold with no distributed form: past the cap it
     * fails with [[FoldCapExceeded]], naming `what`.

@@ -27,6 +27,17 @@ class DirSnapshotSpec extends SparkTestBase {
     assert(held(dir) == Some(Seq(0L, 1L)))
   }
 
+  test("a bounded reload runs one job, named for the reload; an " +
+    "unchanged dir runs none") {
+    val dir = tmpDir("snap-site") + "/d"
+    spark.range(0, 2).coalesce(1).write.parquet(dir)
+    val sites = jobSitesDuring(assert(held(dir) == Some(Seq(0L, 1L))))
+      .map(_._2)
+    assert(sites == Seq(DirSnapshot.ReloadSite), s"reload jobs: $sites")
+    val again = jobSitesDuring(assert(held(dir) == Some(Seq(0L, 1L))))
+    assert(again.isEmpty, s"an unchanged dir reloaded: $again")
+  }
+
   test("appendPart writes one part file, restores a crashed swap's " +
     "__old first, commits its rows into the held snapshot and leaves " +
     "no staged file") {

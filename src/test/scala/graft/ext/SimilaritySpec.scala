@@ -1281,6 +1281,19 @@ class SimilaritySpec extends SparkTestBase {
     assert(atCap.size == 4 && atCap ==
       picks(Similarity.mmrRerank(pool, k = 4, lambda = 0.7)),
       s"the pool at the cap ranked differently: $atCap")
+    // a bad k or lambda names itself before the pool is read, even
+    // over a pool past the cap
+    for ((k, lambda, named) <- Seq((0, 0.7, "k must be positive"),
+        (4, 1.5, "lambda must be in [0, 1]"))) {
+      val jobs = jobsDuring {
+        val bad = intercept[IllegalArgumentException] {
+          DriverFold.withCap(n - 1)(Similarity.mmrRerank(pool, k, lambda))
+        }
+        assert(bad.getMessage.contains(named),
+          s"wrong failure: ${bad.getMessage}")
+      }
+      assert(jobs.isEmpty, s"a bad argument still read the pool: $jobs")
+    }
   }
 
   test("mmr fails fast, by name, on null pool ids") {

@@ -1026,6 +1026,24 @@ class VectorIndexSpec extends SparkTestBase {
       s"the forced distributed init should train with Spark: $offJobs")
   }
 
+  test("at the default cap the byte term binds a wide corpus: at dim " +
+    "4096 the driver path holds 127 rows and refuses 128") {
+    import spark.implicits._
+    val dim = 4096
+    // 4 MiB / (8 + 8·4096) bytes per row = 127.97 rows
+    val wide = (0L until 128L).map(id =>
+      (id, Seq.tabulate(dim)(j => math.sin(id.toDouble * dim + j))))
+      .toDF("vec_id", "emb")
+    assert(DriverFold.cap > 128)
+    assert(Similarity.driverCorpus(wide.limit(127), dim)
+      .exists(_.rows.map(_._1) == (0L until 127L)))
+    assert(Similarity.driverCorpus(wide, dim).isEmpty,
+      "a 128-row corpus at dim 4096 was admitted past the byte term")
+    // and the fold cap binds once it is the smaller term
+    assert(DriverFold.withCap(126)(
+      Similarity.driverCorpus(wide.limit(127), dim)).isEmpty)
+  }
+
   test("a corpus one row past the cap, or a dirty one, takes the " +
     "distributed path and gives today's result") {
     import scala.jdk.CollectionConverters._

@@ -45,14 +45,6 @@ class DriverFoldSpec extends SparkTestBase {
       .exists(_.isEmpty))
   }
 
-  test("a bounded read's job is named for its caller, not DriverFold") {
-    val sites = jobSitesDuring(DriverFold.collect(spark.range(50), 50))
-      .map(_._2)
-    assert(sites.nonEmpty &&
-      sites.forall(_.startsWith("collect at DriverFoldSpec.scala:")),
-      s"job sites: $sites")
-  }
-
   /** A `limit(<expr> + 1)` read — the bounded-collect idiom — in code
     * (comments are stripped first); one level of nested parentheses.
     */
